@@ -46,7 +46,7 @@ object Explain {
           date_format(col("o_orderdate"), "yyyy-MM").as("o_ym_p"))
       val txt = Seq("true", "false").map { aqe =>
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        val p = graft.operators.SourceQueries
+        val p = graft.sources.SnapshotTxn
           .distributeByLayout(frame, Seq("o_ym_p"))
           .queryExecution.optimizedPlan.toString
         s"== adaptive.enabled=$aqe ==\n$p"

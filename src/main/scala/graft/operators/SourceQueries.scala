@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.core.Tables
 import graft.functions._
+import graft.sources.SnapshotTxn._
 
 /** Source/sink breadth (SURVEY.md §2.3): the reference engine reads whole
   * text files and writes `"key value"` text lines plus JSON-lines
@@ -1121,43 +1122,6 @@ object SourceQueries {
            dsum(col("o_totalprice")).as("sum_price"))
   }
 
-  /** Hash-distribute rows on their layout columns before a dynamic-
-    * partition write (guide §6 / the Iceberg `write.distribution-mode
-    * = hash` discipline, and what the SQL door's
-    * `RequiresDistributionAndOrdering` already declares —
-    * [[graft.sources.SnapshotRowLevel]]): without it every input task
-    * opens a writer per partition value it sees, committing
-    * tasks × partitions tiny files per version. The round-16 baseline
-    * measured exactly that — ~1,250-task scan floods on the snapshot
-    * fixtures (`source_scd2_history`, `streaming_snapshot_cdf`) whose
-    * bytes are <15 MB. REBALANCE rather than a hard `repartition` so
-    * AQE both coalesces tiny layout partitions and SPLITS a skewed one
-    * by advisory size at 100 TB (file count O(data / target-size),
-    * never O(tasks × partitions)). The REBALANCE hint only RESOLVES
-    * under AQE (ResolveCoalesceHints guards on
-    * `adaptiveExecutionEnabled`; without it the hint logs
-    * "Unrecognized" and silently no-ops — observed in the AQE-off
-    * specs), so the AQE-off path takes an explicit hash repartition:
-    * same leaf-per-task clustering, no adaptive splitting.
-    *
-    * Do NOT wrap the consuming write in per-write session-conf
-    * overrides (round 17 bisect): toggling
-    * `advisoryPartitionSizeInBytes` + `coalescePartitions.enabled`
-    * around every commit's write measured the 15-entry SQL-door
-    * subset at 41.1 s vs 33.0 s with the bare hint (baseline 33.4 s)
-    * — RuntimeConfig churn around every action costs far more than
-    * the stock 64m advisory's write-side coalescing, which is FLAT
-    * at harness scale and exactly the Iceberg target-file-size
-    * behavior at 100 TB.
-    */
-  private[graft] def distributeByLayout(df: DataFrame,
-      layoutCols: Seq[String]): DataFrame =
-    if (df.sparkSession.conf
-          .get("spark.sql.adaptive.enabled", "true").toBoolean)
-      df.hint("rebalance", layoutCols.map(col): _*)
-    else df.repartition(layoutCols.map(col): _*)
-
-
   /** Copy-on-write MERGE (upsert) into a month-partitioned parquet
     * warehouse table — the Delta-less incremental-ingest primitive:
     *
@@ -1316,34 +1280,6 @@ object SourceQueries {
         dsum(col("l_extendedprice")).as("sum_price"))
   }
 
-  /** Morton (Z-order) address of two 16-bit-scaled dimensions: bit i of
-    * `a` lands at bit 2i, bit i of `b` at 2i+1. Pure `Column`
-    * composition over shift/and/or — whole-stage-codegen'd, no UDF.
-    * Inputs must already be scaled to [0, 65535].
-    */
-  private[operators] def zvalue16(a: Column, b: Column): Column =
-    (0 until 16).map { i =>
-      shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i)
-        .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }.reduce(_ bitwiseOR _)
-
-  /** Overflow-safe 16-bit scaling for [[zvalue16]] inputs: SHIFT the
-    * zero-based value down to ≤16 bits instead of multiplying by
-    * 65535 — `(c-lo)*65535` wraps Long for ranges past ~1.4e14
-    * (nanosecond epochs), silently garbling every z-address while the
-    * rewrite reports success; a shift is exact at any range (double
-    * division would round past 2^53). A narrow range lands in fewer
-    * low bits instead of stretching to 16; interleaving low bits
-    * clusters identically, so nothing is lost.
-    */
-  private[operators] def scaled16(c: Column, lo: Long, hi: Long): Column = {
-    val range = math.max(0L, hi - lo)
-    val shift =
-      if (range <= 65535L) 0
-      else 64 - java.lang.Long.numberOfLeadingZeros(range >>> 16)
-    shiftright(c.cast("long") - lit(lo), shift)
-  }
-
   /** Rewrite lineitem Z-ORDERED on (ship day, partkey): scale both dims
     * to 16 bits, interleave, `repartitionByRange` on the z-address (each
     * output FILE covers a contiguous z-range = a small set of compact
@@ -1455,2224 +1391,6 @@ object SourceQueries {
       .agg(count(lit(1)).as("n_docs"),
         count(col("lang")).as("n_with_lang"),
         sum(col("n_chars")).cast("bigint").as("sum_chars"))
-  }
-
-  // ---- Manifest-based snapshot store (time travel + changefeed) ----
-  //
-  // The missing lakehouse piece after MERGE/DELETE/COMPACT: those entries
-  // swap rewritten partitions IN PLACE, so history is gone the moment a
-  // commit lands. Here every commit instead writes NEW partition dirs and
-  // publishes an immutable manifest (version -> {month -> dir}); old data
-  // files are never touched, so any past version stays readable forever —
-  // the reproducibility contract a training run needs ("the corpus as of
-  // snapshot v1"), and the diff of two manifests IS the changefeed. This
-  // is the core idea of Iceberg/Delta snapshot isolation, reduced to its
-  // Spark-native minimum: metadata cost is O(partitions) lines per
-  // version, commit atomicity is the same temp+rename discipline as
-  // `MrOutSource`, and storage growth is O(touched partitions) per
-  // commit, reclaimable by dropping manifests older than a retention
-  // horizon and sweeping unreferenced dirs.
-
-  /** Two concurrent committers tried to publish the same version: the
-    * loser's commit did NOT land (its data dirs are unreferenced and a
-    * later vacuum sweeps them). Retry = re-read the new head, rebase
-    * the delta, commit again — the Iceberg/Delta optimistic-concurrency
-    * loop.
-    */
-  final class SnapshotConflictException(version: Int)
-    extends RuntimeException(
-      s"v$version already published by a concurrent committer")
-
-  /** Atomically publish `version -> entries` (month -> data dir).
-    *
-    * The publish is a true compare-and-swap on the version number: the
-    * content is fully written to a committer-private temp file, then
-    * hard-LINKED to `v<N>.manifest`. `link(2)` atomically fails with
-    * EEXIST if the target exists — unlike `rename(2)`, which silently
-    * REPLACES it (the r8 bug: REPLACE_EXISTING meant the second of two
-    * racing committers overwrote the first's manifest, losing its
-    * commit with no error). Of N racers publishing the same version,
-    * exactly one link succeeds; the rest get
-    * [[SnapshotConflictException]] and their data dirs stay orphaned
-    * for vacuum.
-    */
-  private[operators] def writeManifest(root: java.nio.file.Path, version: Int,
-                                       entries: Map[String, String],
-                                       txn: Option[(String, Long)] = None,
-                                       schemaJson: Option[String] = None,
-                                       extraMeta: Seq[String] = Nil,
-                                       deleteCarryFrom: Option[Int] = None)
-      : Unit = {
-    val mdir = root.resolve("manifests")
-    java.nio.file.Files.createDirectories(mdir)
-    // MERGE-ON-READ delete records CARRY: each manifest is
-    // self-contained on the delete plane (pinned reads serve exactly
-    // their version's delete state), so every publish copies forward
-    // the parent's `#delete` records still in force — those whose
-    // partition maps to the SAME data dir in the new entries. A
-    // rewritten partition (new dir) drops its records: the rewriting
-    // read applied the anti-filter, materializing the deletes into
-    // its output; a partition dropped from the manifest has nothing
-    // left to filter. `deleteCarryFrom` overrides the parent (RESTORE
-    // carries the restored version's records — whole-state rollback
-    // resurrects rows a later MoR delete doomed, by design).
-    val carryV = deleteCarryFrom.orElse(graft.sources.SnapshotManifest
-      .versionsWithMtime(root).map(_._1).filter(_ < version)
-      .maxOption)
-    val carried: Seq[String] = carryV.toSeq.flatMap { pv =>
-      val parentEntries = graft.sources.SnapshotManifest.read(root, pv)
-      // records carry iff the partition's BASE entry is unchanged —
-      // including partitions with NO base entry on either side (an
-      // upsert-delta-only partition, whose rows live entirely under
-      // `#upsert` dirs): a rewrite (new or dropped dir) materialized
-      // the records into its output, an untouched entry did not
-      def sameDir(p: String): Boolean =
-        entries.get(p).map(e =>
-          graft.sources.SnapshotManifest.resolvePath(root, e)) ==
-          parentEntries.get(p)
-      def carryOf(tag: String,
-                  recs: Map[String, Seq[(String, Long)]]): Seq[String] =
-        recs.toSeq.sortBy(_._1).flatMap { case (p, rs) =>
-          if (sameDir(p)) rs.map { case (path, n) => s"$tag\t$p\t$n\t$path" }
-          else Nil
-        }
-      carryOf("#delete", graft.sources.SnapshotManifest
-        .deleteRecordsWithCounts(root, pv)) ++
-        carryOf("#upsert", graft.sources.SnapshotManifest
-          .upsertRecordsWithCounts(root, pv))
-    }
-    // `#`-prefixed metadata records ride FIRST inside the same atomic
-    // publish (see graft.sources.SnapshotManifest): a streaming
-    // micro-batch's exactly-once marker and a widening commit's
-    // evolved schema commit as ONE unit with the version — atomic and
-    // CAS-serialized, where a sidecar written before or after the
-    // link would leave a crash window or a last-writer-wins race
-    val lines = txn.map { case (app, b) => s"#txn\t$app:$b" }.toSeq ++
-      schemaJson.map(j => s"#schema\t$j").toSeq ++
-      // `#delete`/`#upsert` record paths store relative like the data
-      // dirs (the table root stays one movable unit); carried records
-      // re-encode through the same rule
-      (carried ++ extraMeta).map { l =>
-        if (!l.startsWith("#delete\t") && !l.startsWith("#upsert\t")) l
-        else {
-          val i = l.lastIndexOf('\t')
-          l.substring(0, i + 1) + graft.sources.SnapshotManifest
-            .relativizePath(root, l.substring(i + 1))
-        }
-      } ++
-      // dirs under the TABLE root store RELATIVE (round 13): the root
-      // becomes one movable unit — RENAME TABLE and the staged-CTAS
-      // publish are a single directory rename, no metadata rewrites
-      entries.toSeq.sorted.map { case (ym, p) =>
-        s"$ym\t${graft.sources.SnapshotManifest.relativizePath(root, p)}"
-      }
-    val tmp = mdir.resolve(
-      s"v$version.tmp.${java.util.UUID.randomUUID.toString.take(8)}")
-    java.nio.file.Files.write(tmp, lines.asJava)
-    try java.nio.file.Files.createLink(
-      mdir.resolve(s"v$version.manifest"), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new SnapshotConflictException(version)
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
-
-  /** Highest published version, or 0 if none. (Read half shared with
-    * the [[graft.sources.SnapshotFileIndex]] connector.)
-    */
-  private[operators] def headVersion(root: java.nio.file.Path): Int =
-    graft.sources.SnapshotManifest.head(root)
-
-  private[operators] def readManifest(root: java.nio.file.Path,
-                                      version: Int): Map[String, String] =
-    graft.sources.SnapshotManifest.read(root, version)
-
-  /** Roll the table back to `toVersion` by publishing a NEW head whose
-    * manifest is a verbatim copy of `toVersion`'s partition map — the
-    * Delta `RESTORE` shape: restore is a COMMIT, not a rewrite of
-    * history, so every interim version stays time-travelable and the
-    * operation is O(manifest), touching zero data bytes (data dirs are
-    * write-once and shared across versions by construction). The
-    * restored version's stats sidecar is carried verbatim (same files
-    * ⇒ same stats), and the Bloom index needs no maintenance (it is
-    * keyed by data file, and restore introduces none).
-    *
-    * Two deliberate semantics:
-    *  - schema stays CURRENT: `#schema` widening records resolve by
-    *    highest-version-wins across all manifests, so restoring past a
-    *    widening keeps the widened read schema — sound because evolved
-    *    reads declare missing columns nullable (Delta's RESTORE stance);
-    *  - no rebase on CAS conflict: restore is a whole-state
-    *    replacement, not a key delta — if a concurrent commit wins the
-    *    version, silently re-publishing would erase that commit from
-    *    the head, so the loser throws [[SnapshotConflictException]]
-    *    and the caller re-decides against the new head.
-    */
-  /** Guard for metadata planes that re-home or re-interpret data dirs
-    * without a delete-aware read behind them (clone's link plane,
-    * branch forks, spec evolution's union-of-specs arms): live
-    * merge-on-read records would silently resurrect doomed rows
-    * there, so these operations require a compact first — an honest
-    * O(record partitions) materialization, not a correctness gamble.
-    */
-  private def refuseLiveDeletes(root: java.nio.file.Path,
-                                op: String,
-                                version: Option[Int] = None): Unit = {
-    val v = version.getOrElse(headVersion(root))
-    require(v == 0 || !graft.sources.SnapshotManifest
-        .hasLiveMorRecords(root, v),
-      s"$op on a store version with live merge-on-read records: " +
-        "materialize them with CALL snap.compact first")
-  }
-
-  private[graft] def snapshotRestore(root: java.nio.file.Path,
-                                     toVersion: Int): (Int, Int) = {
-    val mf = root.resolve("manifests").resolve(s"v$toVersion.manifest")
-    require(java.nio.file.Files.exists(mf),
-      s"version $toVersion is not published (or was vacuumed) — " +
-        "cannot restore to it")
-    val entries = readManifest(root, toVersion)
-    val newV = headVersion(root) + 1
-    // delete records carry from the RESTORED version, not the parent:
-    // restore is whole-state rollback — a later MoR delete's records
-    // must not survive into the restored head (its rows come back),
-    // and the restored version's own records must (its deletes hold)
-    writeManifest(root, newV, entries, deleteCarryFrom = Some(toVersion))
-    graft.sources.SnapshotFiles.read(root, toVersion).foreach { fm =>
-      graft.sources.SnapshotFiles.write(root, newV,
-        fm.toSeq.sortBy(_._1).flatMap(_._2))
-    }
-    (newV, entries.size)
-  }
-
-  /** Clone a snapshot version into a brand-new table — the Delta/
-    * Iceberg `CLONE` primitive, done as a HARD-LINK clone so it is
-    * zero-copy AND vacuum-safe on both sides. Delta's shallow clone
-    * shares data files by manifest pointer, which makes `VACUUM` on
-    * the source silently break every clone (their documented caveat);
-    * linking instead shares the INODES — each leaf file gets a second
-    * name under the clone's own root, zero data bytes move, and
-    * either table's vacuum only unlinks names under its own root, so
-    * the bytes live until the LAST referencing table releases them.
-    * Cost is O(files) metadata operations, never O(bytes); on a
-    * filesystem without cross-link support the per-file fallback is a
-    * real copy (correct, just not free).
-    *
-    * What carries: the cloned version's partition map (as the clone's
-    * v1), its stats sidecar (same bytes ⇒ same stats, paths rewritten
-    * to the linked names), the CURRENT effective schema folded into
-    * the clone's `table.meta` (the restore/evolution stance: evolved
-    * reads declare missing columns nullable), `keyCol`, and the
-    * table's live CHECK constraints (re-published as `#check` records
-    * in the clone's v1 manifest — a clone that silently dropped its
-    * source's data-quality gates would admit rows the source refuses).
-    * The Bloom index carries too (round 15): its rows + column marker
-    * hard-link, and the clone's relative-layout leaf placement keeps
-    * the stored keys matching through their root-relative form, so
-    * the clone's point lookups skip with zero re-indexing.
-    * What doesn't: version history (the clone starts at v1 — history
-    * belongs to the source) and tags (they name source versions).
-    * Returns (sourceVersion, nPartitions, nFiles).
-    */
-  private[graft] def snapshotClone(srcRoot: java.nio.file.Path,
-      dstRoot: java.nio.file.Path,
-      version: Option[Int] = None): (Int, Int, Int) = {
-    import java.nio.file.{Files => JF}
-    val head = headVersion(srcRoot)
-    require(head > 0, s"$srcRoot has no published versions to clone")
-    val v = version.getOrElse(head)
-    require(JF.exists(
-      srcRoot.resolve("manifests").resolve(s"v$v.manifest")),
-      s"version $v is not published (or was vacuumed) — cannot clone it")
-    require(srcRoot.toAbsolutePath != dstRoot.toAbsolutePath,
-      "clone target must be a different table")
-    require(!JF.exists(dstRoot.resolve("manifests")),
-      s"clone target $dstRoot already exists — refusing to overwrite")
-    val meta = graft.sources.SnapshotMeta.read(srcRoot).getOrElse(
-      throw new UnsupportedOperationException(
-        "clone needs a table.meta layout declaration"))
-    val mirrors = meta.partitionSchema.fields.map(_.name).toSeq
-    val effective = org.apache.spark.sql.types.StructType(
-      graft.sources.SnapshotManifest
-        .effectiveDataSchema(srcRoot, meta.dataSchema)
-        .fields.map(_.copy(nullable = true)))
-    val manifest = readManifest(srcRoot, v)
-    JF.createDirectories(dstRoot)
-    graft.sources.SnapshotMeta.write(dstRoot,
-      meta.copy(dataSchema = effective))
-    // under spec evolution a manifest mixes arities: each entry's leaf
-    // name derives from ITS spec's mirror names (specs prefix-extend,
-    // so the entry's segment count picks the spec)
-    val cloneSpecs = graft.sources.SnapshotManifest.partitionSpecs(
-      srcRoot, meta.partitionSchema)
-    def mirrorsOf(pv: String): Seq[String] =
-      graft.sources.SnapshotManifest.specFor(pv, cloneSpecs)
-        .map(_.fieldNames.toSeq).getOrElse(mirrors)
-    // leaf placement PRESERVES the source's root-relative dir layout
-    // (round 15): the Bloom index's stored keys survive any root move
-    // through their root-RELATIVE form ([[graft.sources.SnapshotBloom
-    // .load]]'s rename contract), so a clone that keeps `d3-ab12/...`
-    // relative dirs gets the carried index's skipping for free —
-    // the same trick RENAME TABLE relies on. Dirs outside the source
-    // base (fork-shared branch data) fall back to a clone-owned `d1`.
-    val srcBase = srcRoot.toAbsolutePath.normalize
-    def leafOf(pv: String): java.nio.file.Path = {
-      val dir = java.nio.file.Paths.get(manifest(pv))
-        .toAbsolutePath.normalize
-      if (dir.startsWith(srcBase))
-        dstRoot.resolve(srcBase.relativize(dir).toString)
-      else dstRoot.resolve("d1").resolve(graft.sources
-        .SnapshotPartitionValues.leafSuffix(mirrorsOf(pv), pv))
-    }
-    var linked = 0
-    def linkFilesInto(srcDir: String, dst: java.nio.file.Path): Unit = {
-      JF.createDirectories(dst)
-      Option(new java.io.File(srcDir).listFiles()).getOrElse(Array.empty)
-        .filter(_.isFile).foreach { f =>
-          val target = dst.resolve(f.getName)
-          try JF.createLink(target, f.toPath)
-          catch {
-            // a crashed clone's retry: the link from the previous
-            // attempt is already there (same inode) — resume, don't die
-            case _: java.nio.file.FileAlreadyExistsException
-              if JF.isSameFile(target, f.toPath) => ()
-            // cross-filesystem target: pay the copy, stay correct
-            case _: UnsupportedOperationException | _: java.io.IOException
-              if !JF.exists(target) => JF.copy(f.toPath, target)
-          }
-          linked += 1
-        }
-    }
-    val entries = manifest.map { case (pv, dir) =>
-      val dst = leafOf(pv)
-      linkFilesInto(dir, dst)
-      pv -> dst.toAbsolutePath.toString
-    }
-    // LIVE MERGE-ON-READ RECORDS CARRY (round 16 — VERDICT r15 #2,
-    // lifting the round-15 "compact first" refusal): the delete-key
-    // sidecars and `#upsert` delta dirs hard-link exactly like data
-    // dirs — relative-layout-preserving, which also preserves their
-    // `d<V>`/`u<V>` version STAMPS, so the record-scoping order
-    // ([[graft.sources.SnapshotDeletes.scopeDirs]]) survives the
-    // clone verbatim — and their record lines re-publish (with
-    // counts) in the clone's base manifest. Dirs outside the source
-    // base (a cloned BRANCH's fork-shared sidecars) fall back to a
-    // clone-owned stamp-preserving root: the stamp is load-bearing
-    // there, a plain `d1` placement would mis-scope them as base
-    // files.
-    def linkPlane(tag: String,
-        recs: Map[String, Seq[(String, Long)]]): Seq[String] =
-      recs.toSeq.sortBy(_._1).flatMap { case (pv, rs) =>
-        rs.sortBy(_._1).map { case (dir, n) =>
-          val src = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
-          val dst =
-            if (src.startsWith(srcBase))
-              dstRoot.resolve(srcBase.relativize(src).toString)
-            else {
-              val stamp =
-                if (tag == "#upsert") graft.sources.SnapshotDeletes
-                  .publishVersionOf(dir)
-                else graft.sources.SnapshotDeletes.recordVersionOf(dir)
-              val h = f"${dir.hashCode.toLong & 0xffffffffL}%08x"
-              dstRoot.resolve(s"${tag.charAt(1)}$stamp-$h")
-                .resolve(graft.sources.SnapshotPartitionValues
-                  .leafSuffix(mirrorsOf(pv), pv))
-            }
-          linkFilesInto(dir, dst)
-          s"$tag\t$pv\t$n\t${dst.toAbsolutePath}"
-        }
-      }
-    val carriedDeletes = linkPlane("#delete", graft.sources
-      .SnapshotManifest.deleteRecordsWithCounts(srcRoot, v))
-    val carriedUpserts = linkPlane("#upsert", graft.sources
-      .SnapshotManifest.upsertRecordsWithCounts(srcRoot, v))
-    // a record-carrying clone publishes its base manifest AT THE
-    // SOURCE VERSION NUMBER (not 1): the clone's next commit then
-    // stamps v+1 — strictly above every carried `d<V>`/`u<V>` stamp,
-    // keeping the scoping order total. (Version gaps below the base
-    // are the vacuumed-store shape — always supported.) Record-free
-    // clones keep the historical v1 base.
-    val baseV =
-      if (carriedDeletes.isEmpty && carriedUpserts.isEmpty) 1 else v
-    // the Bloom index carries (round 15, VERDICT r14 #6): hard-link
-    // its parquet rows + column marker — O(index files) metadata. The
-    // stored keys are SOURCE-root paths, but the relative-layout
-    // placement above means every cloned file's root-relative form
-    // matches its index row, so the clone's point lookups skip without
-    // a manual build_bloom re-run. Dropped rows for files the clone
-    // didn't take (older versions) are dead weight, never wrong.
-    val srcIdx = srcRoot.resolve("bloomidx")
-    if (JF.isDirectory(srcIdx)) {
-      val dstIdx = dstRoot.resolve("bloomidx")
-      JF.createDirectories(dstIdx)
-      Option(srcIdx.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.isFile).foreach { f =>
-          val target = dstIdx.resolve(f.getName)
-          try JF.createLink(target, f.toPath)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException
-              if JF.isSameFile(target, f.toPath) => ()
-            case _: UnsupportedOperationException | _: java.io.IOException
-              if !JF.exists(target) => JF.copy(f.toPath, target)
-          }
-        }
-      val marker = srcRoot.resolve("bloomidx.key")
-      if (JF.isRegularFile(marker))
-        JF.copy(marker, dstRoot.resolve("bloomidx.key"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    // rename chains re-publish alongside the checks: the clone's linked
-    // files keep their written-time footer names, so the clone's own
-    // readers need the same name mapping the source folded
-    val cloneMeta = cloneSpecs.drop(1)
-        .map(sp => s"#partspec\t${sp.json}") ++
-      graft.sources.SnapshotRename.renameLines(
-        graft.sources.SnapshotManifest.renameChains(srcRoot)) ++
-      // linked files keep dropped columns' footer bytes: the clone
-      // carries the tombstones so its own re-add refusals hold
-      graft.sources.SnapshotManifest.droppedColumns(srcRoot).toSeq
-        .sorted.map(n => s"#drop\t$n") ++
-      graft.sources.SnapshotManifest.effectiveChecks(srcRoot)
-        .map { case (n, sql) => s"#check\t$n\t$sql" }
-    writeManifest(dstRoot, baseV, entries,
-      extraMeta = cloneMeta ++ carriedDeletes ++ carriedUpserts)
-    graft.sources.SnapshotFiles.read(srcRoot, v).foreach { fm =>
-      val rewritten = fm.toSeq.sortBy(_._1).flatMap(_._2).map { e =>
-        e.copy(path = entries(e.pv) + "/" + new java.io.File(e.path).getName)
-      }
-      graft.sources.SnapshotFiles.write(dstRoot, baseV, rewritten)
-    }
-    (v, entries.size, linked)
-  }
-
-  /** Create a branch — the fork half of write-audit-publish. The
-    * branch root becomes a complete store whose base manifest is a
-    * RE-PUBLISHED copy of the fork version's partition map (not a hard
-    * link of the manifest file: the fork version's manifest carries
-    * only ITS OWN metadata lines, while the table's effective schema
-    * and live checks fold over every manifest — a linked file would
-    * silently drop constraints and evolution published in other
-    * versions). Data is fully shared: the base manifest points at the
-    * main table's dirs, zero bytes move, and branch numbering
-    * continues from the fork version so `VERSION AS OF` on the branch
-    * reads naturally. The base-manifest publish is the same link(2)
-    * CAS as every commit — racing creators of one name get one winner.
-    */
-  private[graft] def snapshotBranchCreate(root: java.nio.file.Path,
-      name: String, version: Option[Int] = None): (Int, Int) = {
-    import graft.sources.{SnapshotBranches, SnapshotMeta, SnapshotManifest}
-    SnapshotBranches.validate(name)
-    require(graft.sources.SnapshotTags.resolve(root, name).isEmpty,
-      s"a tag named '$name' exists — branches and tags share the " +
-        "VERSION AS OF namespace")
-    require(!SnapshotBranches.exists(root, name),
-      s"branch '$name' already exists — re-creating it would silently " +
-        "discard its staged commits; drop_branch first")
-    val head = headVersion(root)
-    require(head > 0, s"$root has no published versions to branch from")
-    val base = version.getOrElse(head)
-    require(java.nio.file.Files.exists(
-      root.resolve("manifests").resolve(s"v$base.manifest")),
-      s"version $base is not published (or was vacuumed) — cannot " +
-        "branch from it")
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "branching needs a table.meta layout declaration"))
-    val broot = SnapshotBranches.root(root, name)
-    java.nio.file.Files.createDirectories(broot)
-    val effective = org.apache.spark.sql.types.StructType(
-      SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
-        .fields.map(_.copy(nullable = true)))
-    SnapshotMeta.write(broot, meta.copy(dataSchema = effective))
-    val entries = readManifest(root, base)
-    // rename chains re-publish with the checks: fork-shared files keep
-    // their written-time footer names, so the branch's readers need the
-    // same name mapping main folded (and [[snapshotFastForward]] keys
-    // its staged-rename delta off these base-version lines)
-    val checkLines = SnapshotManifest
-        .partitionSpecs(root, meta.partitionSchema).drop(1)
-        .map(sp => s"#partspec\t${sp.json}") ++
-      graft.sources.SnapshotRename.renameLines(
-        SnapshotManifest.renameChains(root)) ++
-      SnapshotManifest.droppedColumns(root).toSeq
-        .sorted.map(n => s"#drop\t$n") ++
-      SnapshotManifest.effectiveChecks(root)
-        .map { case (n, sql) => s"#check\t$n\t$sql" }
-    // LIVE MERGE-ON-READ RECORDS CARRY (round 16 — VERDICT r15 #2):
-    // the fork version's `#delete`/`#upsert` records re-publish in
-    // the branch base manifest, pointing at the PARENT's sidecar dirs
-    // exactly like the fork-shared data dirs (`../../d<V>-…` after
-    // relativization — vacuum's branch sweep pins them). The stamps
-    // carry verbatim and branch numbering continues from the fork
-    // version, so every branch commit stamps strictly above them —
-    // the scoping order stays total with zero re-homing.
-    def carryPlane(tag: String,
-        recs: Map[String, Seq[(String, Long)]]): Seq[String] =
-      recs.toSeq.sortBy(_._1).flatMap { case (pv, rs) =>
-        rs.sortBy(_._1).map { case (dir, n) => s"$tag\t$pv\t$n\t$dir" }
-      }
-    val morLines =
-      carryPlane("#delete",
-        SnapshotManifest.deleteRecordsWithCounts(root, base)) ++
-      carryPlane("#upsert",
-        SnapshotManifest.upsertRecordsWithCounts(root, base))
-    writeManifest(broot, base, entries, extraMeta = checkLines ++ morLines)
-    graft.sources.SnapshotFiles.read(root, base).foreach { fm =>
-      graft.sources.SnapshotFiles.write(broot, base,
-        fm.toSeq.sortBy(_._1).flatMap(_._2))
-    }
-    SnapshotBranches.writeBase(root, name, base)
-    (base, entries.size)
-  }
-
-  /** Fast-forward: the publish half of write-audit-publish. Publishes
-    * the branch head's partition map as the main table's next version
-    * in ONE CAS commit — the staged, audited state becomes visible
-    * atomically, and the branch's intermediate versions stay on the
-    * branch (audit history, reclaimed with it). Refuses if main moved
-    * past the fork point: a diverged fast-forward would silently erase
-    * the interleaved commits (the caller re-branches and re-applies —
-    * the Iceberg `fast_forward` ancestor rule).
-    *
-    * Branch-RESIDENT partitions (dirs the branch's own commits wrote,
-    * living under the branch root) are hard-linked under a main-owned
-    * root first — zero bytes, O(files) — so `drop_branch` after a
-    * publish can never strand data main now references; fork-shared
-    * partitions keep their main dirs verbatim. Branch-side schema
-    * widening rides the published manifest as its `#schema` record,
-    * and branch-side constraint adds/drops ride as `#check`/
-    * `#checkdrop` — main cannot have moved its own (that would have
-    * bumped main's head and refused above).
-    */
-  private[graft] def snapshotFastForward(root: java.nio.file.Path,
-      name: String): (Int, Int, Int) = {
-    import graft.sources.{SnapshotBranches, SnapshotManifest, SnapshotMeta}
-    require(SnapshotBranches.exists(root, name), s"no branch named '$name'")
-    val broot = SnapshotBranches.root(root, name)
-    refuseLiveDeletes(broot, "fast_forward")
-    val base = SnapshotBranches.base(root, name).getOrElse(
-      throw new IllegalStateException(
-        s"branch $name has no recorded fork point (half-created? " +
-          "drop_branch and re-create)"))
-    val mainHead = headVersion(root)
-    require(mainHead == base,
-      s"main advanced past the fork (head $mainHead, forked at $base) " +
-        "— a fast-forward would erase the interleaved commits; " +
-        "re-branch from the new head and re-apply")
-    val bHead = headVersion(broot)
-    if (bHead == base) return (mainHead, 0, 0) // nothing staged
-    val entries = readManifest(broot, bHead)
-    val ffMeta = SnapshotMeta.read(root).get
-    val ffSpecs = SnapshotManifest.partitionSpecs(
-      broot, ffMeta.partitionSchema)
-    def mirrorsOf(pv: String): Seq[String] =
-      SnapshotManifest.specFor(pv, ffSpecs).map(_.fieldNames.toSeq)
-        .getOrElse(ffMeta.partitionSchema.fieldNames.toSeq)
-    def canon(p: String): String = new java.io.File(p).getCanonicalPath
-    val brootCanon = canon(broot.toString) + "/"
-    val ffRoot = root.resolve(
-      s"d${mainHead + 1}-ff${java.util.UUID.randomUUID.toString.take(8)}")
-    var linked = 0
-    val rewritten = entries.map { case (pv, dirPath) =>
-      if (!canon(dirPath).startsWith(brootCanon)) pv -> dirPath
-      else {
-        val dst = ffRoot.resolve(graft.sources.SnapshotPartitionValues
-          .leafSuffix(mirrorsOf(pv), pv))
-        java.nio.file.Files.createDirectories(dst)
-        Option(new java.io.File(dirPath).listFiles()).getOrElse(Array.empty)
-          .filter(_.isFile).foreach { f =>
-            java.nio.file.Files.createLink(dst.resolve(f.getName), f.toPath)
-            linked += 1
-          }
-        pv -> dst.toAbsolutePath.toString
-      }
-    }
-    // branch-side metadata deltas ride the published manifest
-    val mainChecks = SnapshotManifest.effectiveChecks(root)
-    val brChecks = SnapshotManifest.effectiveChecks(broot)
-    // drops FIRST (same manifest, folded in line order): a branch-side
-    // MODIFICATION (drop + re-add under one name) must retire the old
-    // text before the new one lands, or main would enforce both
-    val checkDelta =
-      mainChecks.filterNot(brChecks.contains)
-        .map { case (n, _) => s"#checkdrop\t$n" } ++
-      brChecks.filterNot(mainChecks.contains)
-        .map { case (n, sql) => s"#check\t$n\t$sql" }
-    val mainEff = SnapshotManifest.effectiveDataSchema(root,
-      SnapshotMeta.read(root).get.dataSchema)
-    val brEff = SnapshotManifest.effectiveDataSchema(broot,
-      SnapshotMeta.read(broot).get.dataSchema)
-    val schemaJson =
-      if (brEff.fieldNames.sameElements(mainEff.fieldNames)) None
-      else Some(org.apache.spark.sql.types.StructType(
-        brEff.fields.map(_.copy(nullable = true))).json)
-    // branch-staged RENAMES (events beyond the fork version — the base
-    // manifest re-publishes main's chains at version `base`) ride the
-    // published manifest too: a published schema record lands in the
-    // SAME version, so the record is already post-rename (logical) and
-    // the rename lines exist for the reader's coalesce fold
-    val renameDelta = SnapshotManifest.renameEvents(broot)
-      .filter(_._1 > base).map { case (_, o, n) => s"#rename\t$o\t$n" }
-    // branch-staged DROP COLUMN tombstones publish the same way
-    val dropDelta = SnapshotManifest.dropEvents(broot)
-      .filter(_._1 > base).map { case (_, n) => s"#drop\t$n" }
-    // branch-staged partition-spec evolutions publish the same way
-    val specDelta = SnapshotManifest.partSpecEvents(broot)
-      .filter(_._1 > base).map { case (_, sp) => s"#partspec\t${sp.json}" }
-    writeManifest(root, mainHead + 1, rewritten,
-      schemaJson = schemaJson,
-      extraMeta = specDelta ++ renameDelta ++ dropDelta ++ checkDelta)
-    graft.sources.SnapshotFiles.read(broot, bHead).foreach { fm =>
-      val rows = fm.toSeq.sortBy(_._1).flatMap(_._2).map { e =>
-        val newDir = rewritten(e.pv)
-        if (newDir == entries(e.pv)) e
-        else e.copy(path = newDir + "/" + new java.io.File(e.path).getName)
-      }
-      graft.sources.SnapshotFiles.write(root, mainHead + 1, rows)
-    }
-    (mainHead + 1, rewritten.size, linked)
-  }
-
-  /** Read one snapshot: the union of its manifest's partition dirs. The
-    * month lives IN the data (`o_ym`); the `o_ym_p=` dir name is layout
-    * only, so leaf dirs from different commit roots mix freely. A store
-    * with rename history reads through the declared name-mapping fold
-    * ([[graft.sources.SnapshotRename.readDirs]]); rename-free stores
-    * keep the historical inference read.
-    */
-  private[graft] def snapshotRead(s: SparkSession,
-      root: java.nio.file.Path, version: Int): DataFrame = {
-    val (base, ups, recs) =
-      graft.sources.SnapshotDeletes.versionDirs(root, version)
-    val logical = graft.sources.SnapshotMeta.read(root)
-      .map(m => graft.sources.SnapshotManifest.effectiveDataSchema(
-        root, m.dataSchema))
-    def read(dirs: Seq[String]): DataFrame = logical
-      .filter(l =>
-        graft.sources.SnapshotRename.chainsFor(root, l).nonEmpty ||
-          // upsert-delta dirs may carry columns in a different order
-          // than older base files; the declared read normalizes
-          ups.nonEmpty)
-      .map(l => graft.sources.SnapshotRename.readDirs(s, root, dirs, l))
-      .getOrElse(s.read.parquet(dirs: _*))
-    if (recs.isEmpty && ups.isEmpty) read(base)
-    else {
-      // merge-on-read records: base dirs anti-join ALL doomed keys,
-      // each upsert-delta group only the records newer than its stamp
-      // (broadcast, delta-sized both sides)
-      val keyCol = graft.sources.SnapshotMeta.read(root)
-        .flatMap(_.keyCol).getOrElse(throw new IllegalStateException(
-          s"$root carries merge-on-read records but table.meta " +
-            "declares no key_column"))
-      graft.sources.SnapshotDeletes.scopedUnion(s, keyCol, read,
-        base, ups, recs).getOrElse(read(base))
-    }
-  }
-
-  /** Publish the [[graft.sources.SnapshotFiles]] sidecar for a freshly
-    * CAS-won version: per-file stats rows are COLLECTED (one
-    * distributed pass) for the commit's new dirs only, and copied
-    * verbatim from the parent's sidecar for every untouched partition
-    * — O(touched) maintenance, the commit's own bound. If the parent
-    * has carried partitions but no sidecar (a legacy store), no
-    * sidecar is written: profiling the carried dirs would be O(table),
-    * and the reader's lazy-listing fallback is sound.
-    */
-  private def publishFilesSidecar(s: SparkSession, root: java.nio.file.Path,
-      version: Int, parentV: Option[Int], entries: Map[String, String],
-      touched: Set[String], dataSchema: org.apache.spark.sql.types.StructType)
-      : Unit = {
-    val carried = entries.keySet -- touched
-    val carriedRows: Option[Seq[graft.sources.SnapshotFiles.FileEntry]] =
-      if (carried.isEmpty) Some(Nil)
-      else parentV.flatMap(pv => graft.sources.SnapshotFiles.read(root, pv))
-        .map(parent => carried.toSeq.sorted.flatMap(p =>
-          parent.getOrElse(p, Nil)))
-    carriedRows.foreach { cr =>
-      val fresh = graft.sources.SnapshotFiles.collect(s,
-        touched.toSeq.sorted.flatMap(p => entries.get(p).map(p -> _)),
-        dataSchema)
-      graft.sources.SnapshotFiles.write(root, version, cr ++ fresh)
-    }
-  }
-
-  /** Copy-on-write snapshot commit: anti-join the delta's keys out of
-    * the TOUCHED months only (read via the parent manifest), write the
-    * rewritten months under a fresh `d<toV>` root, publish manifest
-    * `toV` = parent entries with touched months repointed (months left
-    * with zero rows drop out). Untouched months keep their exact parent
-    * dirs — shared, never rewritten, which is both the scale property
-    * (a daily commit costs O(touched), not O(table)) and what makes
-    * time travel free. Cross-version isolation needs no locking beyond
-    * the manifest publish — data dirs are write-once, and concurrent
-    * committers are serialized by the manifest CAS: each attempt writes
-    * its rewritten months under a committer-PRIVATE attempt root (two
-    * racers must never interleave files in one dir), checks its parent
-    * is still the head (fail-fast, before any data is written), and
-    * publishes via [[writeManifest]]'s atomic create. Exactly one of N
-    * racers wins; each loser throws [[SnapshotConflictException]],
-    * its attempt dirs referenced by no manifest, reclaimed by
-    * [[snapshotVacuum]]. `SnapshotStoreSpec` races two commits off the
-    * same parent and pins all three properties.
-    */
-  private[graft] def snapshotCommit(s: SparkSession,
-      root: java.nio.file.Path, fromV: Int, toV: Int, delta: DataFrame,
-      insertDelta: Boolean, keyCol: String = "o_orderkey",
-      partCols: Seq[String] = Seq("o_ym"),
-      bloomIndexKey: Option[String] = None,
-      txn: Option[(String, Long)] = None,
-      distribute: Boolean = true): Unit = {
-    val head = headVersion(root)
-    if (head != fromV) throw new SnapshotConflictException(toV)
-    val parent = readManifest(root, fromV)
-    // PARTITION-SPEC EVOLUTION: commits always lay out under the
-    // CURRENT spec — the caller's partCols are the bootstrap-time
-    // declaration, superseded once `#partspec` records exist. An
-    // old-spec parent entry whose prefix overlaps a touched partition
-    // MIGRATES: its kept rows rewrite under the current spec (the
-    // store's usual touched-partition rewrite granularity).
-    val specs = graft.sources.SnapshotMeta.read(root).map(m =>
-      graft.sources.SnapshotManifest.partitionSpecs(root, m.partitionSchema))
-      .getOrElse(Seq.empty)
-    val multiSpec = specs.lengthCompare(1) > 0
-    // the CURRENT spec is the layout authority whenever the store
-    // declares one — it also carries the hidden-partitioning transform
-    // tags (days/bucket mirrors derive f(source), not source); the
-    // caller's `partCols` only drives meta-less legacy stores
-    val curSpec: Option[Seq[org.apache.spark.sql.types.StructField]] =
-      specs.lastOption.map(_.fields.toSeq)
-    val effPartCols: Seq[String] =
-      curSpec.map(_.map(_.name.stripSuffix("_p"))).getOrElse(partCols)
-    def mirrorExpr(frame: DataFrame, c: String)
-        : org.apache.spark.sql.Column =
-      curSpec.flatMap(_.find(_.name == s"${c}_p")) match {
-        case Some(f)
-          if graft.sources.SnapshotTransforms.of(f) !=
-            graft.sources.SnapshotTransforms.Identity =>
-          graft.sources.SnapshotTransforms.deriveCol(
-            f, col(c), frame.schema(c).dataType)
-        case _ => col(c)
-      }
-    // manifest pv = the partition values joined by '/' in
-    // partition-schema order. Each value is HIVE-ESCAPED
-    // (ExternalCatalogUtils.escapePathName — the same escaping
-    // partitionBy applies to dir names), so the commit-side pv matches
-    // snapshotInit's dir-walk form for values containing ':', '%',
-    // '=', '/', ... — an unescaped pv would miss the parent entry and
-    // silently orphan the rewritten partition. NULL partition values
-    // are rejected loudly (the store's partition columns are keys).
-    // BOOTSTRAP INSERT (parent has no entries, single spec): nothing
-    // can be kept, migrated, or recorded, so the delta's touched-
-    // partition set decides nothing — skip the distinct+collect pre-
-    // pass (two Spark jobs per CREATE+INSERT chain) and let the write
-    // itself discover the leafs (walkLeafDirs below). The null-
-    // partition-value refusal moves to a post-write dir-name check,
-    // same message, same loud failure.
-    val bootstrapInsert =
-      parent.isEmpty && !multiSpec && insertDelta
-    val touched: Seq[String] =
-      if (bootstrapInsert) Seq.empty
-      else delta
-        .select(effPartCols.map(c => mirrorExpr(delta, c).as(c)): _*)
-        .distinct()
-        .collect()
-        .map { r =>
-          effPartCols.indices.map { i =>
-            if (r.isNullAt(i)) throw new IllegalArgumentException(
-              s"null value in partition column ${effPartCols(i)} — the " +
-                "snapshot store requires non-null partition values")
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .escapePathName(String.valueOf(r.get(i)))
-          }.mkString("/")
-        }.toSeq.sorted
-    if (touched.isEmpty && !bootstrapInsert) {
-      // legal no-change commit (e.g. an ingest batch that filtered to
-      // zero rows): republish the parent entries as the new version
-      writeManifest(root, toV, parent, txn)
-      publishFilesSidecar(s, root, toV, Some(fromV), parent,
-        Set.empty, delta.schema)
-      return
-    }
-    // a touched partition may be NEW (first rows of a month the parent
-    // has never seen) — only parent-known partitions have rows to keep.
-    // Under spec evolution, an OLD-SPEC parent entry whose segments
-    // prefix a touched partition also has rows to keep: it migrates
-    // (read whole, doomed keys dropped, rewritten under the current
-    // spec) — skipping it would leave the upserted keys' old rows
-    // alive in the old layout, i.e. duplicates.
-    val migrating: Map[String, String] =
-      if (!multiSpec) Map.empty
-      else {
-        val curArity = effPartCols.length
-        parent.filter { case (pv, _) =>
-          val segs = pv.split("/", -1).toSeq
-          segs.length < curArity &&
-            touched.exists(_.split("/", -1).toSeq.startsWith(segs))
-        }
-      }
-    val existing = touched.flatMap(parent.get) ++ migrating.values
-    // effective table schema = bootstrap meta overlaid with the latest
-    // `#schema` manifest record (a prior widening commit). The kept
-    // read DECLARES it rather than inferring from a footer: `existing`
-    // can mix pre- and post-evolution dirs, and inference would take
-    // whichever file lists first — a pre-evolution winner would
-    // silently NULL the evolved columns of every kept row it rewrites.
-    val tableSchema: Option[org.apache.spark.sql.types.StructType] =
-      graft.sources.SnapshotMeta.read(root).map(m =>
-        graft.sources.SnapshotManifest.effectiveDataSchema(
-          root, m.dataSchema))
-    // the kept read maps former footer names through the rename fold
-    // (readDirs) — `existing` can mix pre- and post-rename dirs, and a
-    // plain declared read would NULL a renamed column on every
-    // pre-rename row this rewrite carries forward
-    // merge-on-read records on the partitions THIS commit rewrites
-    // must fold into the kept read (the rewrite materializes them —
-    // they drop with the dir change): `#delete` records anti-filter
-    // the kept rows (skipping would resurrect every doomed key the
-    // rewrite carries forward), `#upsert` delta dirs CONTRIBUTE kept
-    // rows (skipping would silently drop every delta row), each delta
-    // dir filtered only by records newer than its stamp. Untouched
-    // partitions' records carry in the manifest publish and keep
-    // applying at read time.
-    val touchedPvs = (touched ++ migrating.keys).toSet
-    val morDeleteDirs: Seq[String] = {
-      val recs = graft.sources.SnapshotManifest.deleteRecords(root, fromV)
-      // under spec evolution a record's pv (current-spec derivation)
-      // need not match the OLD-SPEC entry its doomed rows live in —
-      // a migrating commit therefore filters by ALL records (global
-      // is exact: the key is table-unique; partition scoping is the
-      // single-spec load optimization)
-      if (migrating.nonEmpty)
-        recs.valuesIterator.flatten.toSeq.distinct.sorted
-      else touchedPvs.toSeq.flatMap(pv => recs.getOrElse(pv, Nil))
-        .distinct.sorted
-    }
-    val morUpsertDirs: Seq[String] = {
-      val recs = graft.sources.SnapshotManifest.upsertRecords(root, fromV)
-      touchedPvs.toSeq.flatMap(pv => recs.getOrElse(pv, Nil))
-        .distinct.sorted
-    }
-    def keptRead(dirs: Seq[String]): DataFrame = tableSchema
-      .map(ts => graft.sources.SnapshotRename.readDirs(s, root, dirs, ts))
-      .getOrElse(s.read.parquet(dirs: _*))
-    // the bootstrap fast path has nothing to keep — skip the anti-join
-    // so the plan carries no pointless broadcast build of the delta's
-    // keys over an empty left side
-    val kept =
-      if (bootstrapInsert) delta.limit(0)
-      else graft.sources.SnapshotDeletes.scopedUnion(s, keyCol, keptRead,
-          existing, morUpsertDirs, morDeleteDirs)
-        .getOrElse(delta.limit(0))
-        .join(broadcast(delta.select(col(keyCol).as("d_key"))),
-          col(keyCol) === col("d_key"), "left_anti")
-    // SCHEMA EVOLUTION (add-column): a delta carrying columns the table
-    // has never seen WIDENS the table — kept rows surface the new
-    // columns as NULL in the rewritten partitions, untouched
-    // partitions' files stay missing them (the declared read schema
-    // fills NULLs at scan time), and the widened schema publishes as a
-    // `#schema` record INSIDE this commit's manifest — atomic with the
-    // CAS, so there is no crash window between data and schema, and
-    // racing wideners serialize through the version CAS (the rebased
-    // loser re-reads the effective schema and republishes a superset).
-    // The delta DROPPING a table column is refused loudly: with
-    // allowMissingColumns it would silently null that column on every
-    // kept row it rewrites — data loss wearing an upsert's clothes.
-    // Both checks compare against the TABLE schema, not `kept`: a
-    // commit touching only brand-new partitions has
-    // kept = delta.limit(0), whose schema is the delta's own and would
-    // mask both the widening and the drop.
-    val tableCols: Set[String] = tableSchema.map(_.fieldNames.toSet)
-      .getOrElse(kept.columns.toSet)
-    val dropped = tableCols -- delta.columns.toSet
-    require(dropped.isEmpty || !insertDelta,
-      s"upsert delta is missing table column(s) ${dropped.mkString(", ")}" +
-        " — an evolving commit may ADD columns, never drop them")
-    // added columns are forced NULLABLE whatever the delta says: every
-    // pre-evolution file fills them with NULL, and a non-nullable
-    // declaration would make readers refuse those files
-    val addedCols =
-      if (insertDelta)
-        delta.schema.fields.filterNot(f => tableCols(f.name))
-          .map(_.copy(nullable = true)).toSeq
-      else Seq.empty
-    // same former-name guard as ALTER ADD COLUMN: a widening delta
-    // must not re-introduce a renamed column's old footer name
-    if (addedCols.nonEmpty) {
-      val formers = graft.sources.SnapshotManifest.renameChains(root)
-        .valuesIterator.flatten.toSet
-      val formerDup = addedCols.map(_.name).filter(formers)
-      require(formerDup.isEmpty,
-        s"widening column(s) ${formerDup.mkString(", ")} are former " +
-          "names of renamed columns — footer names must stay unambiguous")
-      // same dropped-name guard as ALTER ADD COLUMN: a widening delta
-      // must not resurrect a dropped column's footer values
-      val droppedNames =
-        graft.sources.SnapshotManifest.droppedFooterNames(root)
-      val dropDup = addedCols.map(_.name).filter(droppedNames)
-      require(dropDup.isEmpty,
-        s"widening column(s) ${dropDup.mkString(", ")} were DROPPED — " +
-          "pre-drop files still carry their values; use a fresh name")
-      // a layout MIRROR name (`<col>_p`, any spec) is derived, never a
-      // data column: tableCols is the DATA schema so a delta carrying
-      // one (e.g. round-tripped from a read) would otherwise publish a
-      // #schema declaring it as data — a permanent collision with the
-      // partition schema that no later commit can retract
-      val mirrorNames = effPartCols.map(c => s"${c}_p").toSet
-      val mirrorDup = addedCols.map(_.name).filter(mirrorNames)
-      require(mirrorDup.isEmpty,
-        s"column(s) ${mirrorDup.mkString(", ")} are layout MIRROR " +
-          "columns — they derive from their source columns at commit " +
-          "time and cannot widen the data schema; drop them from the " +
-          "delta")
-    }
-    val widenedJson: Option[String] = tableSchema match {
-      case Some(ts) if addedCols.nonEmpty =>
-        Some(org.apache.spark.sql.types.StructType(ts.fields ++ addedCols).json)
-      case _ => None // legacy store (no meta): evolution not supported
-    }
-    val out = root.resolve(
-      s"d$toV-${java.util.UUID.randomUUID.toString.take(8)}").toString
-    val pcols = effPartCols.map(c => s"${c}_p")
-    def leafDir(pv: String): String = {
-      val vals =
-        if (effPartCols.length == 1) Array(pv) else pv.split("/", -1)
-      out + "/" + pcols.zip(vals).map { case (c, v) => s"$c=$v" }
-        .mkString("/")
-    }
-    // `kept` may lack delta columns even when the TABLE already has
-    // them: a post-evolution commit touching a pre-evolution partition
-    // reads files that predate the column. The drop `require` above is
-    // the data-loss guard; here missing-on-the-kept-side is always the
-    // legal fill-NULL direction.
-    val keptLacks = (delta.columns.toSet -- kept.columns.toSet).nonEmpty
-    val unionedOut =
-      if (insertDelta)
-        kept.unionByName(delta, allowMissingColumns = keptLacks)
-      else kept
-    val mirrored = effPartCols.foldLeft(unionedOut)(
-      (df, c) => df.withColumn(s"${c}_p", mirrorExpr(unionedOut, c)))
-    (if (distribute) distributeByLayout(mirrored, pcols) else mirrored)
-      .write.mode("overwrite").partitionBy(pcols: _*).parquet(out)
-    // a MIGRATING commit's kept rows fan out to current-spec leafs the
-    // delta alone can't predict (every value of the appended column in
-    // the old partition) — discover entries by walking the output; the
-    // non-migrating path keeps the cheap touched-pv check
-    val walked: Seq[(String, String)] =
-      if (migrating.nonEmpty || bootstrapInsert)
-        walkLeafDirs(new java.io.File(out), pcols)
-      else touched.filter(pv => new java.io.File(leafDir(pv)).isDirectory)
-        .map(pv => pv -> leafDir(pv))
-    // the bootstrap fast path skipped the pre-write null check — a NULL
-    // partition value surfaces as Hive's default leaf name in the walk;
-    // refuse with the same message (the attempt dir stays orphaned for
-    // vacuum, like a CAS loser's)
-    if (bootstrapInsert) {
-      val defaultLeaf = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-      walked.map(_._1).foreach { pv =>
-        val i = pv.split("/", -1).indexOf(defaultLeaf)
-        if (i >= 0) throw new IllegalArgumentException(
-          s"null value in partition column ${effPartCols(i)} — the " +
-            "snapshot store requires non-null partition values")
-      }
-    }
-    val presentSet = walked.map(_._1).toSet
-    val emptied = touched.filterNot(presentSet)
-    val entries =
-      (parent -- emptied -- migrating.keys) ++ walked
-    writeManifest(root, toV, entries, txn, widenedJson)
-    // publish the file-stats sidecar (new dirs profiled, the
-    // rest copied from the parent's sidecar — O(touched) maintenance).
-    // The profile declares the schema of the frame the commit WROTE
-    // (kept ∪ delta, which may be wider than the delta after an
-    // evolution) so the collect's declared read matches the files.
-    publishFilesSidecar(s, root, toV, Some(fromV), entries,
-      presentSet, unionedOut.schema)
-    // incremental Bloom maintenance: index only this commit's new dirs
-    // (append — parent files are write-once, their rows stay valid)
-    bloomIndexKey.foreach { k =>
-      if (walked.nonEmpty)
-        graft.sources.SnapshotBloom.build(s, walked.map(_._2), k,
-          root.resolve("bloomidx").toString, append = true,
-          dataSchema = Some(unionedOut.schema))
-    }
-  }
-
-  /** Group-replacement commit for the SQL row-level DML door
-    * ([[graft.sources.SnapshotRowLevelOperation]]): publish
-    * `parent − replaced ∪ newEntries` as the next version through the
-    * same CAS manifest plane as every other commit, with the
-    * file-stats sidecar profiled for the new dirs only (O(touched)).
-    * No rebase on conflict — a group replacement computed against a
-    * stale head is not a key-based delta, so a racer means the caller
-    * must re-run the statement.
-    */
-  private[graft] def snapshotReplacePartitions(s: SparkSession,
-      root: java.nio.file.Path, fromV: Int, replaced: Set[String],
-      newEntries: Map[String, String],
-      dataSchema: org.apache.spark.sql.types.StructType): Unit = {
-    val head = headVersion(root)
-    if (head != fromV) throw new SnapshotConflictException(fromV + 1)
-    val parent = readManifest(root, fromV)
-    val entries = (parent -- replaced) ++ newEntries
-    writeManifest(root, fromV + 1, entries, None)
-    publishFilesSidecar(s, root, fromV + 1, Some(fromV), entries,
-      newEntries.keySet, dataSchema)
-  }
-
-  /** MERGE-ON-READ DELETE commit ([[graft.sources.SnapshotDeletes]]
-    * is the read half): the doomed KEYS — never the surviving rows —
-    * write as per-partition parquet sidecars under a fresh attempt
-    * root, and the commit publishes the PARENT's partition map
-    * verbatim plus one `#delete\t<pv>\t<dir>` record per touched
-    * partition. O(delta) bytes and zero partition rewrites: the
-    * GDPR-takedown shape where copy-on-write rewrites every partition
-    * a matching row lives in. Readers anti-filter on the upsert key;
-    * `CALL snap.compact` materializes the records away. The doomed
-    * scan runs against the delete-aware head read, so stacked deletes
-    * record only newly-doomed keys. CAS-retried like the door's
-    * commits (a delete recomputes trivially against a new head).
-    *
-    * Reference scope note: the reference engine has no DML at all
-    * (`/root/reference/mr/worker.go` — append-only outputs); this is
-    * north-star lakehouse surface, the Iceberg equality-delete /
-    * Delta deletion-vector trade rebuilt on the manifest plane.
-    */
-  private[graft] def snapshotMorDelete(s: SparkSession,
-      root: java.nio.file.Path,
-      pred: org.apache.spark.sql.Column): (Int, Long) =
-    snapshotMorDeleteBy(s, root, _.filter(pred))
-
-  /** One delta-sized counting pass over freshly-written leaf dirs:
-    * rows per leaf, keyed by the canonicalization pair every
-    * manifest-plane consumer uses (URI-decode the `_metadata` path,
-    * fileKey the on-disk dir — escaped-value partition names must
-    * meet on one form). Shared by the MoR DELETE door and the
-    * UPDATE/MERGE delta commit, whose records both carry the counts
-    * so plan-time statistics stay exact without opening sidecars.
-    */
-  private def leafRowCounts(s: SparkSession, dirs: Seq[String])
-      : (Map[String, Long], String => Long) = {
-    // Row counts come from the parquet FOOTERS, driver-side: the dirs
-    // are this commit's own freshly-written delta (delta-sized by the
-    // door's contract), and the prior distributed count here was two
-    // Spark jobs plus a schema-inference pre-job PER commit — pure
-    // job-launch overhead around numbers every footer already carries
-    // exactly (round 16; same trade as SnapshotDeletes.readKeys).
-    val conf = s.sessionState.newHadoopConf()
-    val perLeaf: Map[String, Long] = dirs.map { d =>
-      val key = graft.sources.SnapshotBloom.fileKey(
-        new org.apache.hadoop.fs.Path(
-          new java.io.File(d).getAbsolutePath).toString)
-      val rows = graft.sources.SnapshotFiles.listDataFiles(conf, d)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map { st =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(st.getPath, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
-      key -> rows
-    }.toMap
-    (perLeaf, dir => perLeaf.getOrElse(
-      graft.sources.SnapshotBloom.fileKey(new org.apache.hadoop.fs.Path(
-        new java.io.File(dir).getAbsolutePath).toString), 0L))
-  }
-
-  /** Doomed-row selection generalized over both DELETE doors: the SQL
-    * door dooms by predicate, the DataFrame door
-    * (`commitMode=delete`) by key list — a broadcast semi-join against
-    * the head read, which scopes records to rows that EXIST (a
-    * phantom key must not mint a record: its count would under-report
-    * the scan statistics and its partition would compact for
-    * nothing).
-    */
-  private[graft] def snapshotMorDeleteBy(s: SparkSession,
-      root: java.nio.file.Path,
-      doom: DataFrame => DataFrame,
-      txn: Option[(String, Long)] = None): (Int, Long) = {
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "merge-on-read delete needs a table.meta layout declaration"))
-    val keyCol = meta.keyCol.getOrElse(
-      throw new UnsupportedOperationException(
-        "merge-on-read delete needs a declared key_column — the " +
-          "delete records are keyed on the upsert key"))
-    val MaxAttempts = 5
-    var attempt = 0
-    while (true) {
-      val head = headVersion(root)
-      // an UNMIGRATED evolved head is fine (round 16 — VERDICT r15
-      // #5): records mint under the CURRENT spec's pv derivation and
-      // both evolved readers apply them GLOBALLY on the key (exact —
-      // the key is table-unique; arm scoping is a load optimization
-      // the delta-sized records don't need)
-      val df = graft.sources.SnapshotTable.read(s, root, head)
-      val keyType = df.schema(keyCol).dataType
-      require(graft.sources.SnapshotDeletes.supportedKeyType(keyType),
-        s"merge-on-read needs a LONG/INT/STRING key; $keyCol is " +
-          keyType.simpleString)
-      val spec = graft.sources.SnapshotManifest
-        .partitionSpecs(root, meta.partitionSchema).last
-      val mirrors = spec.fieldNames.toSeq
-      // the doomed keys land under the SAME leaf layout as data (pv =
-      // transform of the row's source columns), so compaction and
-      // pruning reason about them partition-by-partition
-      val mirrorCols = spec.fields.toSeq.map { f =>
-        val src = f.name.stripSuffix("_p")
-        graft.sources.SnapshotTransforms
-          .deriveCol(f, col(src), df.schema(src).dataType)
-          .cast(f.dataType).as(f.name)
-      }
-      val out = root.resolve(
-        s"d${head + 1}-${java.util.UUID.randomUUID.toString.take(8)}")
-      distributeByLayout(
-          doom(df).select(mirrorCols :+ col(keyCol): _*), mirrors)
-        .write.partitionBy(mirrors: _*).parquet(out.toString)
-      val walked = walkLeafDirs(out.toFile, mirrors)
-      if (walked.isEmpty) { // predicate matched nothing: legal no-op
-        org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
-        // a STREAMING no-op batch still publishes its exactly-once
-        // `#txn` marker (the upsert door's touched-empty parity) —
-        // otherwise a restart would replay the batch forever
-        txn match {
-          case Some(_) =>
-            val parent = readManifest(root, head)
-            try {
-              writeManifest(root, head + 1, parent, txn)
-              publishFilesSidecar(s, root, head + 1, Some(head), parent,
-                Set.empty, org.apache.spark.sql.types.StructType(
-                  graft.sources.SnapshotManifest
-                    .effectiveDataSchema(root, meta.dataSchema)
-                    .fields.map(_.copy(nullable = true))))
-              return (head + 1, 0L)
-            } catch {
-              case _: SnapshotConflictException =>
-                attempt += 1
-                if (attempt >= MaxAttempts) throw
-                  new SnapshotConflictException(head + 1)
-            }
-          case None => return (head, 0L)
-        }
-      } else {
-      // per-leaf doomed counts ride in the records so plan-time
-      // statistics report exact post-delete cardinality without
-      // opening the sidecars — one delta-sized counting pass
-      val (perLeaf, countOf) = leafRowCounts(s, walked.map(_._2))
-      val doomedCount = perLeaf.valuesIterator.sum
-      // a FULLY-doomed partition (this statement's doomed rows == its
-      // live rows, provable from the sidecar row counts minus prior
-      // record counts) DROPS from the manifest instead of minting a
-      // record — O(1) metadata, no read-amplification, the Delta
-      // partition-delete shape; `DELETE FROM t` (truncate) collapses
-      // to an empty manifest with zero records this way. Unknowable
-      // cases (no sidecar, count-less legacy records) keep records —
-      // sound, never wrong.
-      val sidecarRows: Map[String, Long] =
-        graft.sources.SnapshotFiles.read(root, head)
-          .map(_.view.mapValues(_.map(_.rows).sum).toMap)
-          .getOrElse(Map.empty)
-      val prior =
-        graft.sources.SnapshotManifest.deleteRecordsWithCounts(root, head)
-      // a partition carrying upsert-delta dirs can never prove fully
-      // doomed from the sidecar alone (delta rows aren't in it), and
-      // on an UNMIGRATED evolved head a leaf's doomed count can
-      // include keys whose rows live in OLD-SPEC entries (the leaf pv
-      // is the current-spec derivation) — in both cases the proof is
-      // void: keep records and let compact/migrate materialize
-      val upsertPvs =
-        graft.sources.SnapshotManifest.upsertRecords(root, head).keySet
-      val evolvedHead =
-        graft.sources.SnapshotTable.hasOldSpecEntries(root, head)
-      def fullyDoomed(pv: String, n: Long): Boolean =
-        !evolvedHead && !upsertPvs.contains(pv) &&
-          sidecarRows.get(pv).exists { total =>
-            val pd = prior.getOrElse(pv, Nil).map(_._2)
-            pd.forall(_ >= 0) && n == total - pd.sum
-          }
-      val (droppedPvs, recordedPvs) = walked.partition {
-        case (pv, dir) => fullyDoomed(pv, countOf(dir))
-      }
-      val records = recordedPvs.sortBy(_._1)
-        .map { case (pv, dir) => s"#delete\t$pv\t${countOf(dir)}\t$dir" }
-      val entries = readManifest(root, head) -- droppedPvs.map(_._1)
-      try {
-        // parent entries verbatim + new records; the carry rule folds
-        // in the parent's still-live records (dirs unchanged here).
-        // A streaming micro-batch's exactly-once `#txn` marker rides
-        // the records-only manifest like any other commit's.
-        writeManifest(root, head + 1, entries, txn, extraMeta = records)
-        publishFilesSidecar(s, root, head + 1, Some(head), entries,
-          Set.empty, org.apache.spark.sql.types.StructType(
-            graft.sources.SnapshotManifest
-              .effectiveDataSchema(root, meta.dataSchema)
-              .fields.map(_.copy(nullable = true))))
-        return (head + 1, doomedCount)
-      } catch {
-        case e: SnapshotConflictException =>
-          org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-      }
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** MERGE-ON-READ UPSERT through the DataFrame/streaming door
-    * (round 16, `commitMode=upsert-mor` — the Hudi MERGE_ON_READ
-    * ingest shape, opt-in so the copy-on-write door's materialization
-    * semantics stay the default): a key-delta commits as `#delete`
-    * records for the keys that EXIST (phantom/new keys doom nothing —
-    * their counts would corrupt statistics and their partitions would
-    * compact for nothing) plus `#upsert` delta dirs holding the
-    * batch's rows — ONE CAS version, zero partition rewrites. A
-    * streaming micro-batch into a hot 50-partition table commits
-    * O(batch) bytes instead of rewriting every touched partition;
-    * compact materializes when read-amplification warrants. The
-    * existence check is a broadcast semi-join of the head read
-    * (record-aware, delta-sized broadcast side); widening deltas
-    * refuse loudly (schema evolution stays on the copy-on-write
-    * door); spec-evolved stores refuse (no `#upsert` plane on the
-    * union read). CAS losers rebase and retry like the delete door.
-    */
-  private[graft] def snapshotMorUpsert(s: SparkSession,
-      root: java.nio.file.Path, delta: DataFrame, keyCol: String,
-      txn: Option[(String, Long)] = None): (Int, Long) = {
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "merge-on-read upsert needs a table.meta layout declaration"))
-    require(meta.keyCol.contains(keyCol) || meta.keyCol.isEmpty,
-      s"upsert-mor key '$keyCol' disagrees with the declared key " +
-        s"'${meta.keyCol.getOrElse("")}'")
-    val tableSchema = graft.sources.SnapshotManifest
-      .effectiveDataSchema(root, meta.dataSchema)
-    val extra = delta.columns.toSet -- tableSchema.fieldNames.toSet --
-      meta.partitionSchema.fieldNames.toSet
-    require(extra.isEmpty,
-      s"upsert-mor delta carries unknown column(s) ${extra.mkString(", ")}" +
-        " — schema widening goes through the copy-on-write door")
-    // mirrors are derivable from their sources — a door delta may
-    // legitimately omit them (the sink's frames do)
-    val missing = tableSchema.fieldNames.toSet --
-      meta.partitionSchema.fieldNames.toSet -- delta.columns.toSet
-    require(missing.isEmpty,
-      s"upsert-mor delta is missing table column(s) " +
-        s"${missing.mkString(", ")}")
-    val MaxAttempts = 5
-    var attempt = 0
-    while (true) {
-      val head = headVersion(root)
-      require(head > 0, "upsert-mor needs a bootstrapped store")
-      require(!graft.sources.SnapshotTable.hasOldSpecEntries(root, head),
-        "merge-on-read upsert on a spec-evolved store: converge the " +
-          "layout with CALL migrate_layout first")
-      val headDf = graft.sources.SnapshotTable.read(s, root, head)
-      val keyType = headDf.schema(keyCol).dataType
-      require(graft.sources.SnapshotDeletes.supportedKeyType(keyType),
-        s"merge-on-read needs a LONG/INT/STRING key; $keyCol is " +
-          keyType.simpleString)
-      val spec = graft.sources.SnapshotManifest
-        .partitionSpecs(root, meta.partitionSchema).last
-      val mirrors = spec.fieldNames.toSeq
-      def mirrorCols(df: DataFrame) = spec.fields.toSeq.map { f =>
-        val src = f.name.stripSuffix("_p")
-        graft.sources.SnapshotTransforms
-          .deriveCol(f, col(src), df.schema(src).dataType)
-          .cast(f.dataType).as(f.name)
-      }
-      val stamp = java.util.UUID.randomUUID.toString.take(8)
-      // doomed keys = delta keys whose row EXISTS at the head, routed
-      // to the OLD row's partition (broadcast semi-join; the delta is
-      // batch-sized by contract)
-      val dOut = root.resolve(s"d${head + 1}-$stamp")
-      headDf.join(broadcast(delta.select(col(keyCol).as("__graft_uk"))
-          .distinct()),
-          col(keyCol) === col("__graft_uk"), "left_semi")
-        .transform(df => df.select(mirrorCols(df) :+ col(keyCol): _*))
-        .transform(distributeByLayout(_, mirrors))
-        .write.partitionBy(mirrors: _*).parquet(dOut.toString)
-      // the batch's rows land as `#upsert` delta dirs under the NEW
-      // rows' partitions (mirrors derive from sources, never trusted)
-      val uOut = root.resolve(s"u${head + 1}-$stamp")
-      delta
-        .transform(df => df.select(
-          df.columns.filterNot(mirrors.contains).map(col).toSeq ++
-            mirrorCols(df): _*))
-        .transform(distributeByLayout(_, mirrors))
-        .write.partitionBy(mirrors: _*).parquet(uOut.toString)
-      val dWalked = walkLeafDirs(dOut.toFile, mirrors)
-      val uWalked = walkLeafDirs(uOut.toFile, mirrors)
-      if (uWalked.isEmpty && dWalked.isEmpty) {
-        org.apache.commons.io.FileUtils.deleteQuietly(dOut.toFile)
-        org.apache.commons.io.FileUtils.deleteQuietly(uOut.toFile)
-        // empty batch: streaming parity — publish the txn marker
-        txn match {
-          case Some(_) =>
-            val parent = readManifest(root, head)
-            try {
-              writeManifest(root, head + 1, parent, txn)
-              publishFilesSidecar(s, root, head + 1, Some(head), parent,
-                Set.empty, org.apache.spark.sql.types.StructType(
-                  tableSchema.fields.map(_.copy(nullable = true))))
-              return (head + 1, 0L)
-            } catch {
-              case _: SnapshotConflictException =>
-                attempt += 1
-                if (attempt >= MaxAttempts)
-                  throw new SnapshotConflictException(head + 1)
-            }
-          case None => return (head, 0L)
-        }
-      } else {
-        val (dCounts, dOf) = leafRowCounts(s, dWalked.map(_._2))
-        val (uCounts, uOf) = leafRowCounts(s, uWalked.map(_._2))
-        val records =
-          dWalked.sortBy(_._1).map { case (pv, dir) =>
-            s"#delete\t$pv\t${dOf(dir)}\t$dir" } ++
-          uWalked.sortBy(_._1).map { case (pv, dir) =>
-            s"#upsert\t$pv\t${uOf(dir)}\t$dir" }
-        val entries = readManifest(root, head)
-        try {
-          writeManifest(root, head + 1, entries, txn,
-            extraMeta = records)
-          publishFilesSidecar(s, root, head + 1, Some(head), entries,
-            Set.empty, org.apache.spark.sql.types.StructType(
-              tableSchema.fields.map(_.copy(nullable = true))))
-          return (head + 1, uCounts.valuesIterator.sum)
-        } catch {
-          case e: SnapshotConflictException =>
-            org.apache.commons.io.FileUtils.deleteQuietly(dOut.toFile)
-            org.apache.commons.io.FileUtils.deleteQuietly(uOut.toFile)
-            attempt += 1
-            if (attempt >= MaxAttempts) throw e
-        }
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** MERGE-ON-READ UPDATE/MERGE commit half
-    * ([[graft.sources.SnapshotDeltaWrite]] hands the task-written dirs
-    * here): publish parent entries VERBATIM plus `#delete` records
-    * (matched keys, per old-row partition) and `#upsert` records
-    * (updated/inserted rows, per new-row partition) — one CAS version,
-    * zero data files touched. Per-leaf row counts ride in the records
-    * (one delta-sized counting pass per plane) so plan-time statistics
-    * stay exact without opening sidecars. CAS conflicts propagate: a
-    * delta computed against a stale head cannot be rebased safely.
-    */
-  private[graft] def snapshotMorDeltaCommit(s: SparkSession,
-      root: java.nio.file.Path, fromVersion: Int,
-      uDirs: Seq[(String, String)], dDirs: Seq[(String, String)]): Int = {
-    val head = headVersion(root)
-    if (head != fromVersion) throw new SnapshotConflictException(
-      fromVersion + 1)
-    // rows-per-leaf counting pass ([[leafRowCounts]], the MoR DELETE
-    // door's pair) — planes counted separately (different schemas)
-    def records(tag: String, pvDirs: Seq[(String, String)]): Seq[String] = {
-      val (_, countOf) = leafRowCounts(s, pvDirs.map(_._2).distinct)
-      pvDirs.map { case (pv, dir) => s"$tag\t$pv\t${countOf(dir)}\t$dir" }
-    }
-    val entries = readManifest(root, fromVersion)
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
-      throw new IllegalStateException(
-        "merge-on-read delta commit on a meta-less store"))
-    writeManifest(root, fromVersion + 1, entries,
-      extraMeta = records("#delete", dDirs) ++ records("#upsert", uDirs))
-    publishFilesSidecar(s, root, fromVersion + 1, Some(fromVersion),
-      entries, Set.empty, org.apache.spark.sql.types.StructType(
-        graft.sources.SnapshotManifest
-          .effectiveDataSchema(root, meta.dataSchema)
-          .fields.map(_.copy(nullable = true))))
-    fromVersion + 1
-  }
-
-  /** Schema-only widening commit for SQL `ALTER TABLE ADD COLUMN`
-    * ([[graft.sources.GraftSnapshotCatalog.alterTable]]): publish the
-    * parent's entries unchanged as the next version with the widened
-    * schema riding as its `#schema` manifest record — the SAME atomic
-    * in-manifest evolution the write door's widening upsert uses
-    * (CAS-serialized, no sidecar crash window), just with zero data
-    * movement. Every file ever written stays valid: readers fill the
-    * new columns with NULL through the declared schema. Retries the
-    * CAS on a racing commit (a schema publish composes with any
-    * parent, so rebasing is just re-reading the head).
-    */
-  /** `CALL snap.compute_stats('t')` — BACKFILL the head version's
-    * `v<N>.files` stats sidecar (bytes, rows, per-column min/max) for
-    * stores that predate the sidecar plane or whose sidecar publish
-    * crashed: one scan of the head's files, one link(2) publish. With
-    * it, planning gets zero-`listStatus` listings and min/max range
-    * skipping on a store that never had them — the ANALYZE TABLE
-    * analog for the store's own metadata plane. A version that
-    * already HAS a sidecar is left verbatim (the sidecar is
-    * commit-published and immutable; -1 files reported). Columns with
-    * rename history are excluded from stats (pre-rename footers would
-    * contribute all-NULL min/max — sound but useless; their skipping
-    * recovers as rewrites re-write files under the current name).
-    */
-  private[graft] def snapshotComputeStats(s: SparkSession,
-      root: java.nio.file.Path): (Int, Int) = {
-    val head = headVersion(root)
-    require(head >= 1, s"$root has no published versions")
-    if (graft.sources.SnapshotFiles.exists(root, head)) return (head, -1)
-    val entries = readManifest(root, head)
-    val declared = graft.sources.SnapshotMeta.read(root)
-      .map(m => org.apache.spark.sql.types.StructType(
-        graft.sources.SnapshotManifest
-          .effectiveDataSchema(root, m.dataSchema)
-          .fields.map(_.copy(nullable = true))))
-      .getOrElse {
-        val first = entries.values.toSeq.sorted.headOption.getOrElse(
-          throw new IllegalArgumentException(
-            s"head version $head has no partitions to infer a schema " +
-              "from"))
-        s.read.parquet(first).schema
-      }
-    val chains = graft.sources.SnapshotRename.chainsFor(root, declared)
-    val statSchema = org.apache.spark.sql.types.StructType(
-      declared.fields.filterNot(f => chains.contains(f.name)))
-    val rows = graft.sources.SnapshotFiles.collect(
-      s, entries.toSeq.sorted, statSchema)
-    graft.sources.SnapshotFiles.write(root, head, rows)
-    (head, rows.size)
-  }
-
-  /** `CALL snap.build_bloom('t', 'col')` — RETROFIT the per-file
-    * Bloom point-lookup index over an existing store's head files
-    * (the write door maintains one incrementally only when the
-    * bootstrap passed `bloomKey`; stores created before that option,
-    * through SQL CREATE, or with a different lookup key had no door
-    * to gain one without a rewrite). One scan building the
-    * fixed-size bitsets, published under `bloomidx/`; readers opt in
-    * per read with the `bloomKey` option, exactly as before — an
-    * index for files since vacuumed is dead weight, never a
-    * correctness issue, and unindexed files are never skipped.
-    */
-  private[graft] def snapshotBuildBloom(s: SparkSession,
-      root: java.nio.file.Path, keyCol: String): (Int, Int) = {
-    val head = headVersion(root)
-    require(head >= 1, s"$root has no published versions")
-    val meta = graft.sources.SnapshotMeta.read(root)
-    val eff: Option[org.apache.spark.sql.types.StructType] = meta.map { m =>
-      val e = graft.sources.SnapshotManifest
-        .effectiveDataSchema(root, m.dataSchema)
-      require(e.fieldNames.contains(keyCol),
-        s"column $keyCol does not exist")
-      val hot = graft.sources.SnapshotRename.chainsFor(root, e)
-      require(!hot.contains(keyCol),
-        s"cannot index $keyCol: it has rename history — pre-rename " +
-          "files carry it under a former name and would index as NULL; " +
-          "compact/rewrite first")
-      e
-    }
-    val dirs = readManifest(root, head).values.toSeq.sorted
-    require(dirs.nonEmpty, s"head version $head has no partitions")
-    graft.sources.SnapshotBloom.build(s, dirs, keyCol,
-      root.resolve("bloomidx").toString,
-      dataSchema = eff)
-    (head, dirs.size)
-  }
-
-  /** SAFE TYPE WIDENING (`ALTER TABLE … ALTER COLUMN c TYPE t`) — a
-    * `#schema` overlay exactly like ADD COLUMN: one metadata-only CAS
-    * version publishing the effective schema with `c` at its widened
-    * type, zero files rewritten. Pre-widening files keep their
-    * written-time physical type and readers CAST UP at scan time
-    * (Spark's parquet readers serve int32 under a declared LONG and
-    * float under a declared DOUBLE — the Iceberg/Delta safe-promotion
-    * set); DML doors accept the widened type immediately; narrowing
-    * and unrelated retypes are refused by the caller
-    * ([[graft.sources.GraftSnapshotCatalog]] gate). Everything
-    * re-validates inside the CAS retry loop (the migrate_layout
-    * lesson): a racing rename/drop/widen re-reads the effective
-    * schema, so the published record is a superset of whatever won.
-    */
-  /** `CREATE TABLE` bootstrap (round 12): an EMPTY store with its
-    * layout declared up front — `table.meta` (data schema, mirror
-    * partition schema, upsert key) plus an empty v1 manifest through
-    * the same link(2) CAS as every commit (of N racing creators
-    * exactly one publishes v1; the rest see the conflict and the
-    * catalog's existence check). The first INSERT/append then commits
-    * v2 through the ordinary door — CTAS is exactly this plus Spark's
-    * append. An empty sidecar rides along so v1 reads list zero files
-    * without falling back to directory listing.
-    */
-  private[graft] def snapshotCreateTable(root: java.nio.file.Path,
-      dataSchema: org.apache.spark.sql.types.StructType,
-      partitionSchema: org.apache.spark.sql.types.StructType,
-      keyCol: String, deleteMode: Option[String] = None): Unit = {
-    java.nio.file.Files.createDirectories(root)
-    // if-absent meta publish arbitrates racing CREATEs (and a CREATE
-    // racing a df.write bootstrap): of two creators with DIFFERENT
-    // schemas, exactly one places table.meta — a replace-existing
-    // write here would let the LOSER clobber the winner's declared
-    // schema and key after both reported success
-    val wanted = graft.sources.SnapshotMeta.Meta(partitionSchema,
-      dataSchema, Some(keyCol), deleteMode)
-    try graft.sources.SnapshotMeta.writeIfAbsent(root, wanted)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // a crash between the meta publish and the v1 manifest link
-        // leaves a WEDGED half-table: table.meta exists (CREATE throws
-        // AlreadyExists) but no manifest does (loadTable throws
-        // NoSuchTable) — with no SQL-level way out. A re-run of the
-        // SAME declaration completes the bootstrap below; a DIFFERENT
-        // declaration refuses (the first creator's schema won the CAS)
-        val noManifest = headVersion(root) == 0
-        val sameDecl = graft.sources.SnapshotMeta.read(root)
-          .contains(wanted)
-        if (!(noManifest && sameDecl))
-          throw new org.apache.spark.sql.catalyst.analysis
-            .TableAlreadyExistsException(Seq(root.getFileName.toString))
-    }
-    try writeManifest(root, 1, Map.empty)
-    catch {
-      // someone published v1 between our meta write and this link — a
-      // racing bootstrap committed real data; refuse loudly rather
-      // than report a CREATE that didn't happen
-      case _: SnapshotConflictException =>
-        throw new org.apache.spark.sql.catalyst.analysis
-          .TableAlreadyExistsException(Seq(root.getFileName.toString))
-    }
-    graft.sources.SnapshotFiles.write(root, 1, Nil)
-  }
-
-  private[graft] def snapshotWidenColumn(s: SparkSession,
-      root: java.nio.file.Path, name: String,
-      to: org.apache.spark.sql.types.DataType): Unit = {
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "legacy store without table.meta: type widening needs the " +
-          "declared-schema plane"))
-    val MaxAttempts = 5
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      // the FULL gate re-runs inside the retry loop, not just
-      // existence: a losing racer's retry sees whatever won between
-      // attempts — another widening (this retype could now be a
-      // NARROWING over already-written wide values), a rename, a drop,
-      // or an evolve_partitioning that just made the column a layout
-      // source. Validating once outside the loop and republishing is
-      // exactly the migrate_layout stale-spec bug.
-      val effective = graft.sources.SnapshotManifest
-        .effectiveDataSchema(root, meta.dataSchema)
-      val field = effective.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(s"column $name does not exist"))
-      require(graft.sources.SnapshotWiden.safe(field.dataType, to),
-        s"unsafe type change ${field.dataType.simpleString} -> " +
-          s"${to.simpleString}: only widening promotions are " +
-          "metadata-only (int->bigint, float->double, decimal " +
-          "precision growth)")
-      val mirrors = graft.sources.SnapshotManifest
-        .partitionSpecs(root, meta.partitionSchema).last.fieldNames.toSet
-      require(!mirrors(name) && !mirrors.map(_.stripSuffix("_p"))(name),
-        s"cannot widen $name: partition values parse under the " +
-          "layout's declared types")
-      meta.keyCol.foreach(key => require(name != key,
-        s"cannot widen the key column $name: the Bloom index hashes " +
-          "key BYTES"))
-      val widened = org.apache.spark.sql.types.StructType(
-        effective.fields.map(f =>
-          if (f.name == name) f.copy(dataType = to, nullable = true)
-          else f))
-      val head = headVersion(root)
-      require(head >= 1, "cannot ALTER an unbootstrapped store")
-      val parent = readManifest(root, head)
-      try {
-        writeManifest(root, head + 1, parent, None, Some(widened.json))
-        publishFilesSidecar(s, root, head + 1, Some(head), parent,
-          Set.empty, widened)
-        committed = true
-      } catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-      }
-    }
-  }
-
-  private[graft] def snapshotAddColumns(s: SparkSession,
-      root: java.nio.file.Path,
-      newCols: Seq[org.apache.spark.sql.types.StructField]): Unit = {
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "legacy store without table.meta: schema evolution needs the " +
-          "declared-schema plane"))
-    val MaxAttempts = 5
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val effective = graft.sources.SnapshotManifest
-        .effectiveDataSchema(root, meta.dataSchema)
-      val dup = newCols.map(_.name).filter(effective.fieldNames.contains)
-      require(dup.isEmpty,
-        s"column(s) ${dup.mkString(", ")} already exist")
-      // a FORMER name of a renamed column still lives in old footers:
-      // adding it back would make the physical read schema carry two
-      // fields of one name (store unreadable) and resurrect pre-rename
-      // values into the supposedly-NULL new column
-      val formers = graft.sources.SnapshotManifest.renameChains(root)
-        .valuesIterator.flatten.toSet
-      val formerDup = newCols.map(_.name).filter(formers)
-      require(formerDup.isEmpty,
-        s"column(s) ${formerDup.mkString(", ")} are former names of " +
-          "renamed columns — footer names must stay unambiguous")
-      // a DROPPED name's values still live in pre-drop footers: a new
-      // column under that name would resurrect them on every old-file
-      // read — revival must be spelled as a rewrite into a fresh name
-      val droppedNames =
-        graft.sources.SnapshotManifest.droppedFooterNames(root)
-      val dropDup = newCols.map(_.name).filter(droppedNames)
-      require(dropDup.isEmpty,
-        s"column(s) ${dropDup.mkString(", ")} were DROPPED — pre-drop " +
-          "files still carry their values, and re-adding the name " +
-          "would silently resurrect them")
-      val widened = org.apache.spark.sql.types.StructType(
-        effective.fields ++ newCols.map(_.copy(nullable = true)))
-      val head = headVersion(root)
-      require(head >= 1, "cannot ALTER an unbootstrapped store")
-      val parent = readManifest(root, head)
-      try {
-        writeManifest(root, head + 1, parent, None, Some(widened.json))
-        publishFilesSidecar(s, root, head + 1, Some(head), parent,
-          Set.empty, widened)
-        committed = true
-      } catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-      }
-    }
-  }
-
-  /** Publish a CHECK-constraint add or drop as a metadata-only version
-    * — parent partition dirs verbatim plus the `#check`/`#checkdrop`
-    * record, CAS-serialized like [[snapshotAddColumns]] so a racing
-    * data commit can never slip unvalidated rows past a
-    * just-added constraint (the loser of the CAS re-reads and
-    * re-applies). Validation of EXISTING data is the caller's job:
-    * Spark's `AddCheckConstraintExec` scans the table for violations
-    * before `alterTable` ever reaches us.
-    */
-  private[graft] def snapshotCheckEvent(s: SparkSession,
-      root: java.nio.file.Path, record: String,
-      validatedHead: Option[Int] = None): Unit = {
-    val MaxAttempts = 5
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val head = headVersion(root)
-      require(head >= 1, "cannot ALTER an unbootstrapped store")
-      // an ADD CONSTRAINT validated a SPECIFIC version's data: if a
-      // data commit raced in after that scan, publishing would bless
-      // rows the validation never saw — refuse, caller re-validates
-      validatedHead.foreach(v => if (head != v)
-        throw new IllegalStateException(
-          s"table advanced from v$v to v$head during validation — " +
-            "re-run the statement"))
-      val parent = readManifest(root, head)
-      val dataSchema = graft.sources.SnapshotManifest.evolvedDataSchema(root)
-        .orElse(graft.sources.SnapshotMeta.read(root).map(_.dataSchema))
-        .getOrElse(org.apache.spark.sql.types.StructType(Nil))
-      try {
-        writeManifest(root, head + 1, parent, extraMeta = Seq(record))
-        publishFilesSidecar(s, root, head + 1, Some(head), parent,
-          Set.empty, dataSchema)
-        committed = true
-      } catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-      }
-    }
-  }
-
-  /** Layout-generic incremental compaction for ANY snapshot store —
-    * the `CALL snap.compact(...)` engine. Hot partitions (≥ threshold
-    * parquet files, counted by one listing per manifest entry) are
-    * rewritten in ONE Spark job: each hot leaf dir is read under the
-    * DECLARED effective data schema (never footer inference — a
-    * compaction spanning pre/post-evolution partitions must not lose
-    * columns), its mirror columns are re-attached as the verbatim
-    * dir-name strings (so `partitionBy` reproduces byte-identical
-    * leaf names whatever the mirror's declared type renders like),
-    * and the union is range-repartitioned on (mirrors…, keyCol) with
-    * an in-file sort — or, with `zorderCols`, on (mirrors…, Morton
-    * z-address of the two named columns), the `OPTIMIZE ZORDER BY`
-    * shape: the same incremental pass converges hot partitions to the
-    * 2-D-prunable layout — compaction REGAINS key clustering, it doesn't
-    * just glue files. A partition is only rewritten when the rewrite
-    * would strictly REDUCE its file count (target = explicit
-    * `filesPerPartition` or ~256 MB auto-sizing) — so repeated CALLs
-    * converge to a no-op instead of churning versions forever when
-    * the threshold and the target overlap. Quiet partitions keep
-    * their exact dirs; a fully quiet table costs listings and
-    * publishes nothing. The winner
-    * publishes one CAS version + the stats sidecar at O(touched); a
-    * conflict re-detects hot partitions against the new head and
-    * retries. Compacted old dirs stay referenced by old versions
-    * (time travel intact) until vacuum reclaims them.
-    */
-  private[graft] def snapshotCompact(s: SparkSession,
-      root: java.nio.file.Path, threshold: Int,
-      filesPerPartition: Option[Int] = None,
-      zorderCols: Option[(String, String)] = None): (Int, Int, Int, Int) = {
-    require(threshold >= 2, s"threshold must be >= 2, got $threshold")
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "compact needs a table.meta layout declaration"))
-    // on a spec-evolved store compact operates on CURRENT-spec
-    // partitions only (old-spec entries migrate through upserts);
-    // mirrors therefore come from the current spec
-    val compactSpecs = graft.sources.SnapshotManifest.partitionSpecs(
-      root, meta.partitionSchema)
-    val mirrors = compactSpecs.last.fields.map(_.name).toSeq
-    val dataSchema = graft.sources.SnapshotManifest
-      .effectiveDataSchema(root, meta.dataSchema)
-    val declared = org.apache.spark.sql.types.StructType(
-      dataSchema.fields.map(_.copy(nullable = true)))
-    def parquetCount(p: String): Int =
-      Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    val MaxAttempts = 5
-    var attempt = 0
-    while (true) {
-      val head = headVersion(root)
-      val manifestFull = readManifest(root, head)
-      // hot-partition detection over current-spec entries only; the
-      // publish below still carries EVERY entry (old-spec included)
-      val manifest = manifestFull
-        .filter(_._1.split("/", -1).length == mirrors.length)
-      val counts = manifest.map { case (pv, p) => pv -> parquetCount(p) }
-      // merge-on-read records make their partition HOT regardless of
-      // file count: compact is the operation that MATERIALIZES the
-      // record planes back into clean files — `#delete` anti-filters
-      // apply, `#upsert` delta rows fold in, and both record kinds
-      // drop with the rewrite (the dir changes). A pv may live ONLY
-      // in `#upsert` records (an UPDATE moved rows into a month the
-      // base manifest never saw) — hot too, compacting it mints its
-      // first base entry.
-      val morRecords = graft.sources.SnapshotManifest
-        .deleteRecords(root, head)
-      val morUpserts = graft.sources.SnapshotManifest
-        .upsertRecords(root, head)
-        .filter(_._1.split("/", -1).length == mirrors.length)
-      // on an UNMIGRATED evolved head a record's doomed rows may live
-      // in an OLD-SPEC entry, not under the record's own pv — a
-      // current-spec rewrite that dropped the record would resurrect
-      // them. Compact therefore leaves record-bearing pvs alone until
-      // migrate_layout converges the head (which materializes the
-      // records for the rows it rewrites).
-      val evolvedHead =
-        graft.sources.SnapshotTable.hasOldSpecEntries(root, head)
-      val recordPvs =
-        if (evolvedHead) Set.empty[String]
-        else (morRecords.keySet.intersect(
-          manifest.keySet ++ morUpserts.keySet) ++ morUpserts.keySet)
-          .filter(_.split("/", -1).length == mirrors.length)
-      val overThreshold = (counts.filter(_._2 >= threshold).keys ++
-        recordPvs).toSeq.distinct.sorted
-      if (overThreshold.isEmpty) return (0, head, 0, 0)
-      val perPart = filesPerPartition.getOrElse {
-        val maxBytes = overThreshold.map(pv =>
-          (manifest.get(pv).toSeq ++ morUpserts.getOrElse(pv, Nil))
-            .map(d => org.apache.commons.io.FileUtils
-              .sizeOf(new java.io.File(d))).sum).max
-        (maxBytes / (256L << 20) + 1).toInt
-      }
-      // idempotence: rewriting a partition already at (or below) the
-      // target file count can't reduce it — leave it alone (unless it
-      // carries merge-on-read records to materialize)
-      val hot = overThreshold.filter(pv =>
-        (counts.getOrElse(pv, 0) > perPart || recordPvs(pv)) &&
-          !(evolvedHead &&
-            (morRecords.contains(pv) || morUpserts.contains(pv))))
-      if (hot.isEmpty) return (0, head, 0, 0)
-      val filesBefore = hot.map(pv => counts.getOrElse(pv, 0) +
-        morUpserts.getOrElse(pv, Nil).map(parquetCount).sum).sum
-      val out = root.resolve(
-        s"d${head + 1}-${java.util.UUID.randomUUID.toString.take(8)}")
-        .toString
-      // ONE scopedUnion across every hot partition (round 16): the
-      // per-pv loop this replaces ran a broadcast anti-join — plus a
-      // schema-inference job on the record dirs — PER hot partition
-      // (~24 single-digit-task jobs on the sql_update_mor fixture),
-      // where the whole-version read (snapshotRead / the catalog scan)
-      // already applies records GLOBALLY on the table-unique key. One
-      // global composition is exactly that read's semantics restricted
-      // to the hot dirs: a base row's doomed record always lives under
-      // the row's own partition (the delete doors route records to the
-      // matched row's pv), so widening the anti-join key set cannot
-      // drop a live row, and upsert-delta stamp scoping is unchanged
-      // (scopedUnion groups delta dirs by publish version either way).
-      // The rewrite still MATERIALIZES the merge-on-read state: records
-      // anti-filter, delta rows fold in, and both record kinds drop
-      // with the dir change. readDirs maps former footer names through
-      // the rename fold — a hot pre-rename partition must not NULL its
-      // renamed column.
-      val hotBase = hot.flatMap(manifest.get)
-      val hotUps = hot.flatMap(pv => morUpserts.getOrElse(pv, Nil))
-      val allRecDirs = morRecords.valuesIterator.flatten.toSeq
-        .distinct.sorted
-      val rows = graft.sources.SnapshotDeletes.scopedUnion(s,
-        meta.keyCol.getOrElse("__graft_keyless"),
-        dirs => graft.sources.SnapshotRename.readDirs(
-          s, root, dirs, declared),
-        hotBase, hotUps, allRecDirs).getOrElse(
-          throw new IllegalStateException("hot partitions have " +
-            "neither base dirs nor upsert records"))
-      // mirrors re-derive from each row's own source columns through
-      // the current spec's transforms — the commit doors' own write
-      // discipline (snapshotCommit's mirrorExpr, the MoR delta
-      // writes), so `partitionBy` reproduces the leaf name exactly as
-      // the write that placed the row there did; hot pvs are
-      // current-spec by construction (old-spec entries migrate through
-      // the door, never compact)
-      val unioned = compactSpecs.last.fields.foldLeft(rows) { (df, f) =>
-        val src = f.name.stripSuffix("_p")
-        df.withColumn(f.name, graft.sources.SnapshotTransforms
-          .deriveCol(f, col(src), df.schema(src).dataType)
-          .cast(f.dataType))
-      }
-      // clustering strategy: key-sorted (compact) or 2-D Morton
-      // (zorder — both dims scaled to 16 bits from the HOT partitions'
-      // own bounds, one scalar agg; files then cover compact 2-D
-      // boxes and row-group stats prune on BOTH predicate columns)
-      val clustered = zorderCols match {
-        case None =>
-          val sortCols = (mirrors ++ meta.keyCol.toSeq).map(col)
-          unioned.repartitionByRange(hot.length * perPart, sortCols: _*)
-            .sortWithinPartitions(sortCols: _*)
-        case Some((a, b)) =>
-          // the scratch column must not shadow USER data (the engine is
-          // layout-generic): overwriting-then-dropping a real column
-          // would silently null it out of every rewritten file
-          val zc = "__graft_zaddr"
-          require(!unioned.columns.contains(zc),
-            s"table has a column named $zc — rename it before zorder")
-          val bd = unioned.agg(
-            min(col(a).cast("long")), max(col(a).cast("long")),
-            min(col(b).cast("long")), max(col(b).cast("long"))).head()
-          require(!bd.anyNull,
-            s"zorder columns $a, $b must be non-null and castable to " +
-              "long (for DATE columns, z-order the epoch-day column)")
-          val sortCols = mirrors.map(col) :+ col(zc)
-          unioned
-            .withColumn(zc, zvalue16(
-              scaled16(col(a), bd.getLong(0), bd.getLong(1)),
-              scaled16(col(b), bd.getLong(2), bd.getLong(3))))
-            .repartitionByRange(hot.length * perPart, sortCols: _*)
-            .sortWithinPartitions(sortCols: _*)
-            .drop(zc)
-      }
-      clustered.write.partitionBy(mirrors: _*).parquet(out)
-      def leafOf(pv: String): String =
-        s"$out/${graft.sources.SnapshotPartitionValues
-          .leafSuffix(mirrors, pv)}"
-      // a hot partition whose every row was merge-on-read-doomed
-      // rewrites to NOTHING — it drops from the manifest (the
-      // snapshotCommit emptied-partition rule), never publishes a
-      // dangling dir
-      val survived = hot.filter(pv =>
-        new java.io.File(leafOf(pv)).isDirectory)
-      val entries = (manifestFull -- hot) ++
-        survived.map(pv => pv -> leafOf(pv))
-      try {
-        writeManifest(root, head + 1, entries)
-        publishFilesSidecar(s, root, head + 1, Some(head), entries,
-          survived.toSet, declared)
-        return (hot.size, head + 1, filesBefore, survived.map(pv =>
-          parquetCount(leafOf(pv))).sum)
-      } catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-        // the attempt root stays orphaned for vacuum, like any loser
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Bootstrap a snapshot store: the whole frame becomes v1, laid out
-    * one leaf dir per (multi-column) partition value, published
-    * through the same CAS manifest write (a racing bootstrap loses
-    * like any other commit). The CAS winner also persists the
-    * `table.meta` sidecar (typed partition schema + data schema — so
-    * the store's layout is declared, not hardcoded, and a zero-row
-    * bootstrap stays readable) and the v1 file-stats sidecar.
-    */
-  private[graft] def snapshotInit(s: SparkSession,
-      root: java.nio.file.Path, data: DataFrame,
-      partCols: Seq[String] = Seq("o_ym"),
-      bloomIndexKey: Option[String] = None,
-      txn: Option[(String, Long)] = None,
-      keyCol: String = "o_orderkey",
-      distribute: Boolean = true): Unit = {
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val pcols = partCols.map(c => s"${c}_p")
-    val d1 = root.resolve(
-      s"d1-${java.util.UUID.randomUUID.toString.take(8)}").toString
-    val mirrored = partCols.foldLeft(data)(
-      (df, c) => df.withColumn(s"${c}_p", col(c)))
-    (if (distribute) distributeByLayout(mirrored, pcols) else mirrored)
-      .write.mode("overwrite").partitionBy(pcols: _*).parquet(d1)
-    val parts = walkLeafDirs(new java.io.File(d1), pcols)
-    writeManifest(root, 1, parts.toMap, txn)
-    graft.sources.SnapshotMeta.write(root, graft.sources.SnapshotMeta.Meta(
-      StructType(partCols.map(c =>
-        StructField(s"${c}_p", data.schema(c).dataType, nullable = true))),
-      data.schema,
-      // recorded so the SQL DML door can upsert/delete without the
-      // caller re-declaring the key (absent ⇒ the door's default)
-      Some(keyCol)))
-    publishFilesSidecar(s, root, 1, None, parts.toMap,
-      parts.map(_._1).toSet, data.schema)
-    // commit-path Bloom maintenance (the write door's `bloomKey`
-    // option): one map-side pass over the dirs this commit wrote
-    bloomIndexKey.foreach { k =>
-      if (parts.nonEmpty)
-        graft.sources.SnapshotBloom.build(s, parts.map(_._2).toSeq, k,
-          root.resolve("bloomidx").toString,
-          dataSchema = Some(data.schema))
-    }
-  }
-
-  /** Walk a hive-style nested commit root: one (pv, leafDir) per leaf,
-    * pv = dir-name values joined by '/' in `pcols` order (still
-    * escaped — exactly the manifest form). Shared by the bootstrap and
-    * by spec-migrating commits, whose output leafs aren't knowable
-    * from the delta alone.
-    */
-  private def walkLeafDirs(rootDir: java.io.File,
-      pcols: Seq[String]): Seq[(String, String)] = {
-    def walk(dir: java.io.File, rest: Seq[String],
-             acc: List[String]): Seq[(String, String)] = rest match {
-      case Nil => Seq((acc.reverse.mkString("/"), dir.getAbsolutePath))
-      case c +: tail =>
-        Option(dir.listFiles()).getOrElse(Array.empty).toSeq
-          .filter(f => f.isDirectory && f.getName.startsWith(s"$c="))
-          .flatMap(f => walk(f, tail, f.getName.stripPrefix(s"$c=") :: acc))
-    }
-    walk(rootDir, pcols, Nil)
-  }
-
-  /** PARTITION-SPEC EVOLUTION publish (`CALL snap.evolve_partitioning`):
-    * append one layout column to the current spec as a metadata-only
-    * `#partspec` version — zero files move, old entries keep reading
-    * and pruning under their own spec (the union read), new commits
-    * lay out under the new one, and a commit touching an old-spec
-    * partition MIGRATES it ([[snapshotCommit]]). The new spec must
-    * strictly prefix-extend the current one — in-place relayout,
-    * dropping or reordering layout columns is a rewrite wearing DDL's
-    * clothes and refuses loudly.
-    *
-    * The appended column is a bare source name (identity mirror) or
-    * TRANSFORM syntax — `days(ts)`, `months(ts)`, `years(ts)`,
-    * `hours(ts)`, `bucket(16, id)`, `truncate(8, s)` — the Iceberg
-    * spec-v2 headline: re-layout a LIVE table (`days(ts)` →
-    * `bucket(n, id)` appended) without CREATE-time foresight and
-    * without a rewrite; the transform rides the `#partspec` record as
-    * field metadata exactly like a CREATE-time declaration
-    * ([[graft.sources.SnapshotTransforms]]).
-    */
-  private[graft] def snapshotEvolvePartitioning(s: SparkSession,
-      root: java.nio.file.Path, sourceSpec: String): (Int, Int) = {
-    refuseLiveDeletes(root, "evolve_partitioning")
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "legacy store without table.meta: partition-spec evolution " +
-          "needs the declared-layout plane"))
-    val specs = graft.sources.SnapshotManifest.partitionSpecs(
-      root, meta.partitionSchema)
-    val current = specs.last
-    val dataSchema = graft.sources.SnapshotManifest.effectiveDataSchema(
-      root, meta.dataSchema)
-    // bare name = identity; f(col) / f(n, col) = hidden transform
-    val unary = "(days|months|years|hours)\\(\\s*([^\\s(),]+)\\s*\\)".r
-    val binary = "(bucket|truncate)\\(\\s*(\\d+)\\s*,\\s*([^\\s(),]+)\\s*\\)".r
-    val (sourceCol, transform):
-        (String, Option[graft.sources.SnapshotTransforms.T]) =
-      sourceSpec.trim match {
-        case unary("days", c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Days))
-        case unary("months", c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Months))
-        case unary("years", c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Years))
-        case unary("hours", c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Hours))
-        case binary("bucket", n, c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Bucket(n.toInt)))
-        case binary("truncate", w, c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Truncate(w.toInt)))
-        case bare if bare.nonEmpty && !bare.contains("(") => (bare, None)
-        case other => throw new IllegalArgumentException(
-          s"unsupported partition transform '$other': a bare source " +
-            "column (identity), days/months/years/hours(<col>), " +
-            "bucket(<n>, <col>) or truncate(<w>, <col>)")
-      }
-    val field = dataSchema.fields.find(_.name == sourceCol).getOrElse(
-      throw new IllegalArgumentException(
-        s"partition source column $sourceCol does not exist"))
-    import org.apache.spark.sql.types._
-    if (transform.isEmpty)
-      require(field.dataType == StringType || field.dataType == DateType ||
-        field.dataType == IntegerType || field.dataType == LongType,
-        s"unsupported partition column type ${field.dataType}")
-    val mirror = s"${sourceCol}_p"
-    require(!current.fieldNames.contains(mirror),
-      s"$sourceCol already partitions this table")
-    require(!dataSchema.fieldNames.contains(mirror),
-      s"mirror name $mirror collides with a data column")
-    require(graft.sources.SnapshotRename.chainsFor(root, dataSchema)
-      .valuesIterator.flatten.forall(_ != mirror),
-      s"mirror name $mirror collides with a former column name")
-    val appended = transform match {
-      case None => StructField(mirror, field.dataType, nullable = true)
-      // mirrorField validates the (transform, source-type) pairing —
-      // the same refusal matrix CREATE TABLE applies — and records the
-      // transform as field METADATA so it rides the #partspec JSON
-      case Some(t) => graft.sources.SnapshotTransforms.mirrorField(t, field)
-    }
-    val newSpec = org.apache.spark.sql.types.StructType(
-      current.fields :+ appended)
-    val validatedAt = headVersion(root)
-    require(validatedAt >= 1, "cannot evolve an unbootstrapped store")
-    // DDL-time NULL audit (the ADD CONSTRAINT discipline — one scan of
-    // one column, at the moment the user asks for the layout change):
-    // kept-row MIGRATION feeds this column to partitionBy, and the
-    // store refuses null partition values; post-evolution deltas are
-    // checked per commit, but pre-evolution rows can only be checked
-    // here — without this, a migrating rewrite would silently write a
-    // __HIVE_DEFAULT_PARTITION__ leaf and break mirror == source
-    val nulls = graft.sources.SnapshotTable
-      .read(s, root, validatedAt)
-      .filter(col(sourceCol).isNull).limit(1).count()
-    require(nulls == 0L,
-      s"$sourceCol has NULL values — a partition column must be " +
-        "non-null everywhere; backfill before evolving the layout")
-    // validated-head pin: a data commit racing this validation would
-    // otherwise be blessed unaudited by the CAS retry (and two racing
-    // evolutions could publish conflicting same-arity specs)
-    snapshotCheckEvent(s, root, s"#partspec\t${newSpec.json}",
-      validatedHead = Some(validatedAt))
-    (headVersion(root), newSpec.length)
-  }
-
-  /** `CALL snap.migrate_layout('t'[, max_partitions])` — converge a
-    * spec-evolved table to its CURRENT partition spec: rewrite up to
-    * `maxPartitions` old-spec partitions under the current layout in
-    * ONE job and one CAS version. Upserts migrate the partitions they
-    * touch; this is the maintenance pass for the COLD remainder — and
-    * once no old-spec entries remain in the head, the SQL door serves
-    * the table again (its refusal is per-version mixed-arity, not
-    * spec-history). Mirrors re-derive from their SOURCE columns (the
-    * door's own write discipline — no pv string round-trip), old dirs
-    * read through the rename fold, and a NULL in an appended source
-    * column refuses loudly before any write (the evolve-time audit
-    * covers pre-evolution rows; this guards rows that arrived through
-    * doors that predate the audit). Incremental and idempotent:
-    * repeated CALLs walk the old-spec set down to zero, then no-op.
-    * At 100 TB: O(migrated partitions) per call, caller-bounded.
-    */
-  private[graft] def snapshotMigrateLayout(s: SparkSession,
-      root: java.nio.file.Path, maxPartitions: Int): (Int, Int) = {
-    require(maxPartitions >= 1, "max_partitions must be >= 1")
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "migrate_layout needs a table.meta layout declaration"))
-    val MaxAttempts = 5
-    var attempt = 0
-    while (true) {
-      val head = headVersion(root)
-      val manifest = readManifest(root, head)
-      // spec/schema resolution lives INSIDE the retry loop, like the
-      // head/manifest reads above: a concurrent evolve_partitioning
-      // winning a version between attempts would otherwise have this
-      // retry rewrite old-spec partitions under a stale spec and
-      // report them migrated while they stay old-spec relative to
-      // the new current layout
-      val current = graft.sources.SnapshotManifest.partitionSpecs(
-        root, meta.partitionSchema).last
-      val pcols = current.fieldNames.toSeq
-      val declared = org.apache.spark.sql.types.StructType(
-        graft.sources.SnapshotManifest.effectiveDataSchema(
-          root, meta.dataSchema).fields.map(_.copy(nullable = true)))
-      val old = manifest.toSeq
-        .filter(_._1.split("/", -1).length < current.length)
-        .sortBy(_._1).take(maxPartitions)
-      if (old.isEmpty) return (0, head)
-      // live `#delete` records apply GLOBALLY to the migrating read
-      // (round 16): migration MATERIALIZES them for the rows it
-      // rewrites — the rewritten pvs' records drop via the carry
-      // rule, and an unfiltered rewrite would resurrect every doomed
-      // key it carries forward. (`#upsert` deltas cannot exist on an
-      // evolved store — UPDATE refuses evolved heads, evolve refuses
-      // live records.)
-      val migRecDirs = graft.sources.SnapshotManifest
-        .deleteRecords(root, head).valuesIterator.flatten
-        .toSeq.distinct.sorted
-      val unioned = graft.sources.SnapshotDeletes.antiJoin(s,
-        graft.sources.SnapshotRename.readDirs(
-          s, root, old.map(_._2), declared),
-        meta.keyCol.getOrElse(if (migRecDirs.isEmpty) "__nokey" else
-          throw new IllegalStateException(
-            "delete records on a keyless store")), migRecDirs)
-      val srcCols = pcols.map(_.stripSuffix("_p"))
-      val nullRow = unioned
-        .filter(srcCols.map(c => col(c).isNull).reduce(_ || _))
-        .limit(1).count()
-      require(nullRow == 0L,
-        s"NULL value(s) in partition source column(s) " +
-          s"${srcCols.mkString(", ")} — backfill before migrating")
-      val out = root.resolve(
-        s"d${head + 1}-mig${java.util.UUID.randomUUID.toString.take(8)}")
-        .toString
-      // mirrors re-derive through their declared transform (identity
-      // verbatim, days/bucket compute f(source) — the door's own
-      // write discipline). NO re-distribution here: the new spec
-      // strictly prefix-extends the old one (the evolve refusal
-      // above), so the migrating read is already clustered by the new
-      // layout's prefix — each input split covers whole old leaves and
-      // fans out only by the appended column, bounding files at
-      // (input splits × appended fan) with zero shuffle; a hash
-      // shuffle would move every row for the same file count.
-      current.fields.foldLeft(unioned)((df, f) =>
-          df.withColumn(f.name, graft.sources.SnapshotTransforms
-            .deriveCol(f, col(f.name.stripSuffix("_p")),
-              unioned.schema(f.name.stripSuffix("_p")).dataType)))
-        .write.partitionBy(pcols: _*).parquet(out)
-      val walked = walkLeafDirs(new java.io.File(out), pcols)
-      // INVARIANT, made loud: a migrated pv may never collide with an
-      // existing current-spec entry — the door migrates prefix-
-      // overlapping old entries on every touch, so coexistence is
-      // impossible through supported paths; a silent `++` overwrite
-      // here would lose the existing entry's rows
-      val clobbered = walked.map(_._1)
-        .filter((manifest -- old.map(_._1)).contains)
-      require(clobbered.isEmpty,
-        s"migration derived pv(s) ${clobbered.mkString(", ")} that " +
-          "already exist as current-spec entries — store invariant " +
-          "violated, refusing to overwrite")
-      val entries = (manifest -- old.map(_._1)) ++ walked
-      try {
-        writeManifest(root, head + 1, entries)
-        publishFilesSidecar(s, root, head + 1, Some(head), entries,
-          walked.map(_._1).toSet, declared)
-        return (old.size, head + 1)
-      } catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-        // the attempt root stays orphaned for vacuum, like any loser
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Change rows between two adjacent snapshot versions, scoped to the
-    * MANIFEST diff (the `tableDiff` discipline: unmoved partition
-    * pointers are the same files, provably identical, never read).
-    * Emits one row per changed key with BOTH images — the Delta-CDF
-    * row shape a downstream consumer needs to maintain anything
-    * incrementally: `k`, `price` (the post-image; null for a delete),
-    * `old_price` (the pre-image; null for an insert), `change_type`
-    * (`insert` / `update` / `delete`), and `alive` (0 for a delete).
-    */
-  private[graft] def changeRows(s: SparkSession, root: java.nio.file.Path,
-                                vFrom: Int, vTo: Int,
-                                keyCol: String = "o_orderkey",
-                                valCol: String = "o_totalprice"): DataFrame = {
-    val m1 = readManifest(root, vFrom)
-    val m2 = readManifest(root, vTo)
-    // a merge-on-read DELETE changes a partition's ROWS without
-    // touching its dir — the records diff makes those partitions
-    // changefeed-visible (their doomed keys surface as delete events)
-    val d1 = graft.sources.SnapshotManifest.deleteRecords(root, vFrom)
-    val d2 = graft.sources.SnapshotManifest.deleteRecords(root, vTo)
-    // `#upsert` records diff like dirs: a merge-on-read UPDATE commit
-    // changes a partition's rows purely on the record planes, and its
-    // delta rows must surface as update/insert events
-    val u1 = graft.sources.SnapshotManifest.upsertRecords(root, vFrom)
-    val u2 = graft.sources.SnapshotManifest.upsertRecords(root, vTo)
-    // on an UNMIGRATED evolved head a record's pv is the CURRENT-spec
-    // derivation while its doomed rows may live in OLD-SPEC entries
-    // whose dir never moved — any record-state diff therefore pulls
-    // every old-spec entry into the diff (both sides read them under
-    // their own record state; unchanged rows cancel in the full-outer
-    // join). Costed honestly: evolved stores only, until migration
-    // converges.
-    val recordDiff = d1 != d2 || u1 != u2
-    val oldSpecPvs: Set[String] =
-      if (!recordDiff) Set.empty
-      else graft.sources.SnapshotMeta.read(root).map { m =>
-        val curLen = graft.sources.SnapshotManifest
-          .partitionSpecs(root, m.partitionSchema).last.length
-        (m1.keySet ++ m2.keySet)
-          .filter(_.split("/", -1).length < curLen)
-      }.getOrElse(Set.empty)
-    // the candidate pool includes RECORD pvs too: a record may name a
-    // pv with no manifest entry at all (an evolved-head delete whose
-    // doomed rows live in old-spec entries, or a delta-only pv) — its
-    // sidecar dirs must still reach the sides' anti-filters
-    val changed = (m1.keySet ++ m2.keySet ++ d1.keySet ++ d2.keySet ++
-        u1.keySet ++ u2.keySet)
-      .toSeq.sorted
-      .filter(ym => m1.get(ym) != m2.get(ym) || d1.get(ym) != d2.get(ym)
-        || u1.get(ym) != u2.get(ym) || oldSpecPvs(ym))
-    // either side may reference NO dirs (insert-only diff: brand-new
-    // partitions have no old side; delete-to-empty has no new side;
-    // an unchanged pair has neither) — degrade to an empty frame
-    // instead of an empty-path parquet read, which throws.
-    // Both sides read under the DECLARED effective schema whenever the
-    // store has one (readDirs also folds rename history): either side
-    // can mix pre- and post-evolution dirs — including mixed partition
-    // ARITIES across an evolve_partitioning boundary — and schema
-    // INFERENCE would take whichever file lists first, silently
-    // nulling a widened column (or crashing on a renamed one) out of
-    // the changefeed. Mirrors never ride in data files, so flat dir
-    // reads are arity-agnostic by construction.
-    val declaredLogical = graft.sources.SnapshotMeta.read(root)
-      .map(m => graft.sources.SnapshotManifest.effectiveDataSchema(
-        root, m.dataSchema))
-    def scoped(d: Map[String, Seq[String]]): Seq[String] =
-      changed.flatMap(d.get).flatten.distinct.sorted
-    // each side serves ITS version's merge-on-read state: base dirs
-    // anti-filtered by its records, `#upsert` delta dirs folded in
-    // scoped by stamp — which is what turns a records-only commit
-    // into insert/update/delete events
-    def side(base: Seq[String], keyAs: String, priceAs: String,
-             upsertDirs: Seq[String], doomDirs: Seq[String]): DataFrame = {
-      def read(dirs: Seq[String]): DataFrame = declaredLogical.map(l =>
-          graft.sources.SnapshotRename.readDirs(s, root, dirs, l))
-        .getOrElse(s.read.parquet(dirs: _*))
-      graft.sources.SnapshotDeletes.scopedUnion(s, keyCol, read,
-          base, upsertDirs, doomDirs)
-        .map(_.select(col(keyCol).as(keyAs), col(valCol).as(priceAs)))
-        .getOrElse(s.range(0).select(col("id").as(keyAs),
-          lit(null).cast("double").as(priceAs)))
-    }
-    val oldSide = side(changed.flatMap(m1.get), "old_key", "old_price",
-      scoped(u1), scoped(d1))
-    val newSide = side(changed.flatMap(m2.get), "new_key", "new_price",
-      scoped(u2), scoped(d2))
-    oldSide.join(newSide, col("old_key") === col("new_key"), "full_outer")
-      .filter(col("old_key").isNull || col("new_key").isNull ||
-        // NULL-SAFE change test: a plain =!= evaluates to NULL (and the
-        // row is dropped) when exactly one side is NULL — i.e. a
-        // NULL-to-value or value-to-NULL update would silently vanish
-        // from the changefeed and any MV maintained from it
-        !(col("old_price") <=> col("new_price")))
-      .select(coalesce(col("old_key"), col("new_key")).as("k"),
-        col("new_price").as("price"),
-        col("old_price"),
-        when(col("old_key").isNull, lit("insert"))
-          .when(col("new_key").isNull, lit("delete"))
-          .otherwise(lit("update")).as("change_type"),
-        when(col("new_key").isNull, lit(0)).otherwise(lit(1)).as("alive"))
   }
 
   /** Type-2 slowly-changing-dimension history assembled from the
@@ -6194,193 +3912,6 @@ object SourceQueries {
     else
       s.read.parquet(matched.toIndexedSeq: _*)
         .filter(keyPred).select(cols: _*)
-  }
-
-  /** Retention sweep for the snapshot store: drop every manifest not
-    * in `keep`, then delete each leaf partition dir referenced by NO
-    * kept manifest. Order makes it safe — the referenced set is
-    * computed from the kept manifests first, and data dirs are
-    * write-once, so a concurrent reader of a kept version never loses
-    * a file. Storage returns to O(live versions' touched partitions);
-    * the sweep itself is metadata-only work (list + delete),
-    * proportional to partition count, not data size. Returns the
-    * number of leaf dirs removed.
-    */
-  private[graft] def snapshotVacuum(root: java.nio.file.Path,
-                                    keep: Set[Int],
-                                    minAgeMs: Long = 0L): Int = {
-    def canon(p: String): String = new java.io.File(p).getCanonicalPath
-    val mdir = root.resolve("manifests")
-    val versions = Option(mdir.toFile.listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(_.matches("v\\d+\\.manifest"))
-      .map(_.stripPrefix("v").stripSuffix(".manifest").toInt).toSeq
-    // every branch manifest pins its dirs — a branch may still read
-    // fork-shared partitions whose main versions have expired. Scan
-    // raw .branch dirs, not the valid-branch listing: a half-created
-    // branch (manifest linked, crash before branch.meta) must still
-    // protect what it references
-    val branchRefs = Option(graft.sources.SnapshotBranches.dir(root)
-        .toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory).toSeq.flatMap { bd =>
-        val broot = bd.toPath
-        graft.sources.SnapshotManifest.versionsWithMtime(broot).map(_._1)
-          .flatMap(v => graft.sources.SnapshotManifest.read(broot, v).values
-            ++ graft.sources.SnapshotManifest.deleteRecords(broot, v)
-              .values.flatten
-            ++ graft.sources.SnapshotManifest.upsertRecords(broot, v)
-              .values.flatten)
-      }
-    // `#delete`/`#upsert` record dirs pin like data dirs: a kept
-    // version's merge-on-read sidecars ARE its read state — sweeping
-    // one would silently resurrect doomed keys or drop delta rows
-    val referenced = (versions.filter(keep)
-      .flatMap(v => readManifest(root, v).values ++
-        graft.sources.SnapshotManifest.deleteRecords(root, v)
-          .values.flatten ++
-        graft.sources.SnapshotManifest.upsertRecords(root, v)
-          .values.flatten) ++ branchRefs)
-      .map(canon).toSet
-    // the grace window protecting IN-FLIGHT commits: an attempt root
-    // being written is referenced by no manifest YET, and its leaves
-    // would otherwise read as garbage to collect — only dirs whose
-    // mtime is older than the retention are eligible (the Delta
-    // retention-check shape; a dir's mtime moves with every file
-    // created in it, so active writers stay protected)
-    val cutoff = System.currentTimeMillis() - minAgeMs
-    def oldEnough(f: java.io.File): Boolean = f.lastModified() <= cutoff
-    var removed = 0
-    // descend to the LEAF dirs: a multi-column layout nests mirror
-    // levels (`a_p=x/b_p=y`) and manifests reference only the leaves —
-    // a one-level sweep would read the intermediate `a_p=x` as
-    // unreferenced and delete it WITH its referenced children (data
-    // loss; caught by SnapshotPartSpecEvolutionSpec's vacuum arm).
-    // A referenced dir prunes the whole descent; an unreferenced dir
-    // with subdirs recurses and is itself removed only once emptied.
-    def sweep(dir: java.io.File): Unit = {
-      if (!referenced.contains(canon(dir.getAbsolutePath))) {
-        val subdirs = Option(dir.listFiles()).getOrElse(Array.empty)
-          .filter(_.isDirectory)
-        if (subdirs.isEmpty) {
-          if (oldEnough(dir)) {
-            org.apache.commons.io.FileUtils.deleteQuietly(dir)
-            removed += 1
-          }
-        } else {
-          subdirs.foreach(sweep)
-          val remaining = Option(dir.listFiles()).getOrElse(Array.empty)
-          if (remaining.isEmpty && oldEnough(dir))
-            org.apache.commons.io.FileUtils.deleteQuietly(dir)
-        }
-      }
-    }
-    Option(root.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory &&
-        f.getName.matches("[du]\\d+(-[0-9a-f]+)?"))
-      .foreach { droot =>
-        Option(droot.listFiles()).getOrElse(Array.empty)
-          .filter(_.isDirectory).foreach(sweep)
-      }
-    // crash-orphaned INSERT staging dirs (SnapshotAppendWrite): never
-    // referenced by any manifest, hidden from readers, swept here
-    Option(root.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(".staging-") &&
-        oldEnough(f))
-      .foreach { st =>
-        org.apache.commons.io.FileUtils.deleteQuietly(st)
-        removed += 1
-      }
-    // an expired manifest may carry the table's winning `#schema`
-    // record: fold the EFFECTIVE schema into table.meta before the
-    // deletion, or the evolution would silently revert (evolved
-    // columns vanishing from reads — data invisible, not deleted).
-    // A racing widener publishes its superset record in a NEW (kept)
-    // manifest, which continues to overlay this floor.
-    for {
-      meta <- graft.sources.SnapshotMeta.read(root)
-      evolved <- graft.sources.SnapshotManifest.evolvedDataSchema(root)
-    } graft.sources.SnapshotMeta.write(root,
-      meta.copy(dataSchema = evolved))
-    // Expiring manifests may ALSO carry commit-coupled metadata whose
-    // fold goes dark when the records vanish: live CHECK constraints
-    // (`effectiveChecks` folds over surviving manifests only — a
-    // constraint whose add-record lives only in an expired manifest
-    // would silently stop being enforced) and streaming `#txn` replay
-    // watermarks (other writers can push the head past a sink's last
-    // micro-batch; expire that batch's marker and an engine replay
-    // double-commits). Before deleting, publish ONE normalize version
-    // (same partition map as the newest kept version) that re-bases
-    // the fold in the manifest plane — NOT table.meta, whose
-    // read-modify-write overlay could resurrect a dropped check from
-    // a tag-retained add whose drop-version expired:
-    //   * `#txn` re-publishes each app's max batch id;
-    //   * a `#checkdrop` for EVERY name ever seen cancels raw adds in
-    //     older kept manifests, then `#check` re-adds the live set.
-    // CAS-published like any commit; a racing writer takes the version
-    // and the publish retries on the new head.
-    val expiring = versions.filterNot(keep).toSet
-    // ONE header read over all manifests (headerLines per version would
-    // re-list and re-read every manifest per expiring version — O(V²))
-    val carriesFoldedMeta = graft.sources.SnapshotManifest
-      .allHeaderLines(root)
-      .exists { case (v, ls) => expiring(v) && ls.exists(l =>
-        l.startsWith("#check\t") || l.startsWith("#checkdrop\t") ||
-        l.startsWith("#txn\t") || l.startsWith("#rename\t") ||
-        l.startsWith("#partspec\t") || l.startsWith("#drop\t")) }
-    if (carriesFoldedMeta) {
-      var attempts = 0
-      var published = -1
-      while (published < 0) {
-        attempts += 1
-        // EVERYTHING recomputes inside the CAS loop: a racing data
-        // commit moves the head, and republishing a stale base's
-        // entries at the new head would silently roll that commit
-        // back (its rows vanishing from every head read). The base is
-        // the CURRENT head's manifest — whatever just won.
-        val baseV = headVersion(root)
-        val entries = readManifest(root, baseV)
-        val txns = graft.sources.SnapshotManifest.txnWatermarks(root)
-        val live = graft.sources.SnapshotManifest.effectiveChecks(root)
-        val everNamed =
-          graft.sources.SnapshotManifest.checkNamesEverSeen(root)
-        // rename chains + partition specs re-publish verbatim:
-        // expiring the manifests that carry them would un-map every
-        // pre-rename file's renamed columns / un-parse every
-        // mixed-arity entry — silent data invisibility
-        val specLines = graft.sources.SnapshotMeta.read(root).toSeq
-          .flatMap(m => graft.sources.SnapshotManifest
-            .partitionSpecs(root, m.partitionSchema).drop(1)
-            .map(sp => s"#partspec\t${sp.json}"))
-        val normalize =
-          specLines ++
-          graft.sources.SnapshotRename.renameLines(
-            graft.sources.SnapshotManifest.renameChains(root)) ++
-          // `#drop` tombstones re-publish so the schema subtraction and
-          // the re-add refusals survive their carrier manifests
-          graft.sources.SnapshotManifest.droppedColumns(root).toSeq
-            .sorted.map(n => s"#drop\t$n") ++
-          txns.toSeq.sortBy(_._1).map { case (a, b) => s"#txn\t$a:$b" } ++
-          everNamed.toSeq.sorted.map(n => s"#checkdrop\t$n") ++
-          live.map { case (n, sql) => s"#check\t$n\t$sql" }
-        try {
-          writeManifest(root, baseV + 1, entries, extraMeta = normalize)
-          published = baseV + 1
-          // same bytes as the base version ⇒ its stats sidecar carries
-          // over verbatim (readers fall back to listing if absent)
-          graft.sources.SnapshotFiles.read(root, baseV).foreach { fm =>
-            graft.sources.SnapshotFiles.write(root, published,
-              fm.toSeq.sortBy(_._1).flatMap(_._2))
-          }
-        } catch {
-          case e: SnapshotConflictException =>
-            if (attempts >= 20) throw e
-        }
-      }
-    }
-    versions.filterNot(keep).foreach { v =>
-      java.nio.file.Files.deleteIfExists(mdir.resolve(s"v$v.manifest"))
-      java.nio.file.Files.deleteIfExists(mdir.resolve(s"v$v.files"))
-    }
-    removed
   }
 
   /** Incremental materialized-view refresh, scoped by the manifest

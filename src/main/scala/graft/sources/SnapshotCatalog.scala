@@ -435,7 +435,7 @@ final class GraftSnapshotCatalog extends TableCatalog
     val root = createRootOf(ident)
     val (dataSchema, partitionSchema, key, deleteMode) =
       declaredLayout(schema, partitions, properties)
-    graft.operators.SourceQueries.snapshotCreateTable(
+    SnapshotTxn.snapshotCreateTable(
       root, dataSchema, partitionSchema, key, deleteMode)
     loadTable(ident)
   }
@@ -602,7 +602,7 @@ final class GraftSnapshotCatalog extends TableCatalog
       }
       .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
     JFiles.createDirectories(stagingRoot)
-    graft.operators.SourceQueries.snapshotCreateTable(
+    SnapshotTxn.snapshotCreateTable(
       stagingRoot, dataSchema, partitionSchema, key, deleteMode)
     val meta = SnapshotMeta.read(stagingRoot).get
     val inner = new SnapshotV2Table(
@@ -677,7 +677,7 @@ final class GraftSnapshotCatalog extends TableCatalog
       throw new IllegalArgumentException(s"column $name does not exist"))
     val to = ut.newDataType()
     // the same table the CAS retry loop re-validates against
-    // ([[graft.operators.SourceQueries.snapshotWidenColumn]]); this
+    // ([[SnapshotTxn.snapshotWidenColumn]]); this
     // pre-check exists for the analysis-time error message
     require(SnapshotWiden.safe(field.dataType, to),
       s"unsafe type change ${field.dataType.simpleString} -> " +
@@ -694,7 +694,7 @@ final class GraftSnapshotCatalog extends TableCatalog
     meta.keyCol.foreach(key => require(name != key,
       s"cannot widen the key column $key: the Bloom index hashes key " +
         "BYTES, and an int64 hash of int32-written keys misses"))
-    graft.operators.SourceQueries.snapshotWidenColumn(
+    SnapshotTxn.snapshotWidenColumn(
       SparkSession.active, root, name, to)
     loadTable(ident)
   }
@@ -760,7 +760,7 @@ final class GraftSnapshotCatalog extends TableCatalog
         "references it — drop the constraint first")
     // validated-head pin: same CAS discipline as #rename — the retry
     // must not republish a drop validated against a head that moved
-    graft.operators.SourceQueries.snapshotCheckEvent(
+    SnapshotTxn.snapshotCheckEvent(
       SparkSession.active, root, s"#drop\t$name",
       validatedHead = Some(SnapshotManifest.head(root)))
     loadTable(ident)
@@ -836,7 +836,7 @@ final class GraftSnapshotCatalog extends TableCatalog
     // validated-head pin: the CAS retry must not republish a rename
     // validated against a head that moved (a racing DDL could have
     // taken the target name or added a referencing check)
-    graft.operators.SourceQueries.snapshotCheckEvent(
+    SnapshotTxn.snapshotCheckEvent(
       SparkSession.active, root, s"#rename\t$old\t$nu",
       validatedHead = Some(SnapshotManifest.head(root)))
     loadTable(ident)
@@ -873,7 +873,7 @@ final class GraftSnapshotCatalog extends TableCatalog
         val sql = Option(c.predicateSql()).filter(_.nonEmpty).getOrElse(
           throw new UnsupportedOperationException(
             s"CHECK constraint $name carries no SQL text"))
-        graft.operators.SourceQueries.snapshotCheckEvent(
+        SnapshotTxn.snapshotCheckEvent(
           SparkSession.active, root,
           s"#check\t$name\t${sql.replaceAll("[\\r\\n]+", " ")}",
           // the head Spark's validation scan actually read (from
@@ -896,7 +896,7 @@ final class GraftSnapshotCatalog extends TableCatalog
       throw new IllegalArgumentException(
         s"constraint ${dc.name()} does not exist")
     if (exists)
-      graft.operators.SourceQueries.snapshotCheckEvent(
+      SnapshotTxn.snapshotCheckEvent(
         SparkSession.active, root, s"#checkdrop\t${dc.name()}")
     loadTable(ident)
   }
@@ -923,7 +923,7 @@ final class GraftSnapshotCatalog extends TableCatalog
       case other => throw new UnsupportedOperationException(
         s"only ADD COLUMN is supported (append-only store): $other")
     }
-    graft.operators.SourceQueries.snapshotAddColumns(
+    SnapshotTxn.snapshotAddColumns(
       SparkSession.active, root, adds)
     loadTable(ident)
   }
@@ -1425,9 +1425,9 @@ final class SnapshotV2Table(
       // MERGE-ON-READ: the doomed keys publish as `#delete` manifest
       // records — O(delta) bytes, ZERO partition rewrites (the
       // GDPR-takedown shape at 100 TB); readers anti-filter, compact
-      // materializes ([[graft.operators.SourceQueries
+      // materializes ([[SnapshotTxn
       // .snapshotMorDelete]])
-      graft.operators.SourceQueries.snapshotMorDelete(spark, root, pred)
+      SnapshotTxn.snapshotMorDelete(spark, root, pred)
       return
     }
     val keyCol = tableKey
@@ -2450,7 +2450,7 @@ final class SnapshotVacuumProcedure(cat: GraftSnapshotCatalog)
         SnapshotManifest.versionsWithMtime(root)
           .filter(_._2 >= cutoffMs).map(_._1).toSet
       }
-    val removed = graft.operators.SourceQueries.snapshotVacuum(root,
+    val removed = SnapshotTxn.snapshotVacuum(root,
       (keptFrom to head).toSet ++ tagged ++ recent, retainMs)
     java.util.List.of[org.apache.spark.sql.connector.read.Scan](
       new SnapshotProcedureResult(outSchema,
@@ -2460,7 +2460,7 @@ final class SnapshotVacuumProcedure(cat: GraftSnapshotCatalog)
 }
 
 /** `CALL snap.compute_stats('t')` — backfill the head's stats sidecar
-  * ([[graft.operators.SourceQueries.snapshotComputeStats]]): the
+  * ([[SnapshotTxn.snapshotComputeStats]]): the
   * ANALYZE TABLE analog for the store's metadata plane, giving legacy
   * (pre-sidecar) stores zero-`listStatus` planning and min/max range
   * skipping. `files` = -1 when the head already has one (immutable,
@@ -2488,7 +2488,7 @@ final class SnapshotComputeStatsProcedure(cat: GraftSnapshotCatalog)
   override def call(input: org.apache.spark.sql.catalyst.InternalRow)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
     val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val (v, n) = graft.operators.SourceQueries.snapshotComputeStats(
+    val (v, n) = SnapshotTxn.snapshotComputeStats(
       SparkSession.active, root)
     java.util.List.of[org.apache.spark.sql.connector.read.Scan](
       new SnapshotProcedureResult(outSchema,
@@ -2498,7 +2498,7 @@ final class SnapshotComputeStatsProcedure(cat: GraftSnapshotCatalog)
 
 /** `CALL snap.build_bloom('t', 'col')` — retrofit the per-file Bloom
   * point-lookup index over the head's files
-  * ([[graft.operators.SourceQueries.snapshotBuildBloom]]); readers
+  * ([[SnapshotTxn.snapshotBuildBloom]]); readers
   * opt in per read with the `bloomKey` option.
   */
 final class SnapshotBuildBloomProcedure(cat: GraftSnapshotCatalog)
@@ -2524,7 +2524,7 @@ final class SnapshotBuildBloomProcedure(cat: GraftSnapshotCatalog)
   override def call(input: org.apache.spark.sql.catalyst.InternalRow)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
     val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val (v, n) = graft.operators.SourceQueries.snapshotBuildBloom(
+    val (v, n) = SnapshotTxn.snapshotBuildBloom(
       SparkSession.active, root, input.getUTF8String(1).toString)
     java.util.List.of[org.apache.spark.sql.connector.read.Scan](
       new SnapshotProcedureResult(outSchema,
@@ -2534,7 +2534,7 @@ final class SnapshotBuildBloomProcedure(cat: GraftSnapshotCatalog)
 
 /** `CALL snap.restore('t', version)` — roll the table back by
   * publishing a NEW head whose manifest mirrors `version`'s (see
-  * [[graft.operators.SourceQueries.snapshotRestore]]): O(manifest),
+  * [[SnapshotTxn.snapshotRestore]]): O(manifest),
   * zero data bytes, every interim version still time-travelable, CAS
   * conflict with a concurrent commit thrown to the caller. Returns
   * what it published.
@@ -2565,7 +2565,7 @@ final class SnapshotRestoreProcedure(cat: GraftSnapshotCatalog)
     val root = cat.resolveRoot(input.getUTF8String(0).toString)
     val from = input.getInt(1)
     val (newV, nParts) =
-      graft.operators.SourceQueries.snapshotRestore(root, from)
+      SnapshotTxn.snapshotRestore(root, from)
     java.util.List.of[org.apache.spark.sql.connector.read.Scan](
       new SnapshotProcedureResult(outSchema,
         Array(org.apache.spark.sql.catalyst.InternalRow(
@@ -2616,7 +2616,7 @@ final class SnapshotTagProcedure(cat: GraftSnapshotCatalog)
 }
 
 /** `CALL snap.compact('t', threshold)` — layout-generic incremental
-  * small-file compaction ([[graft.operators.SourceQueries
+  * small-file compaction ([[SnapshotTxn
   * .snapshotCompact]]): partitions at or above `threshold` parquet
   * files are rewritten key-clustered into one CAS version; quiet
   * partitions keep their exact dirs and a quiet table publishes
@@ -2654,7 +2654,7 @@ final class SnapshotCompactProcedure(cat: GraftSnapshotCatalog)
     val root = cat.resolveRoot(input.getUTF8String(0).toString)
     val fpp = input.getInt(2)
     val (n, v, before, after) =
-      graft.operators.SourceQueries.snapshotCompact(SparkSession.active,
+      SnapshotTxn.snapshotCompact(SparkSession.active,
         root, input.getInt(1), if (fpp == -1) None else Some(fpp))
     java.util.List.of[org.apache.spark.sql.connector.read.Scan](
       new SnapshotProcedureResult(outSchema,
@@ -2667,7 +2667,7 @@ final class SnapshotCompactProcedure(cat: GraftSnapshotCatalog)
   * — the `OPTIMIZE ZORDER BY` shape: hot partitions (≥ threshold
   * files, default 2) rewrite Morton-clustered on the two named
   * numeric columns through the same engine as `compact`
-  * ([[graft.operators.SourceQueries.snapshotCompact]] with a z-order
+  * ([[SnapshotTxn.snapshotCompact]] with a z-order
   * strategy), converging the table to the 2-D-prunable layout one
   * incremental CAS version at a time. Returns what it did.
   */
@@ -2703,7 +2703,7 @@ final class SnapshotZorderProcedure(cat: GraftSnapshotCatalog)
     val root = cat.resolveRoot(input.getUTF8String(0).toString)
     val fpp = input.getInt(4)
     val (n, v, before, after) =
-      graft.operators.SourceQueries.snapshotCompact(SparkSession.active,
+      SnapshotTxn.snapshotCompact(SparkSession.active,
         root, input.getInt(3), if (fpp == -1) None else Some(fpp),
         Some((input.getUTF8String(1).toString,
           input.getUTF8String(2).toString)))
@@ -2715,7 +2715,7 @@ final class SnapshotZorderProcedure(cat: GraftSnapshotCatalog)
 }
 
 /** `CALL snap.evolve_partitioning('t', 'source_col')` — PARTITION-SPEC
-  * EVOLUTION ([[graft.operators.SourceQueries
+  * EVOLUTION ([[SnapshotTxn
   * .snapshotEvolvePartitioning]], the Iceberg spec-v2 shape scoped to
   * APPENDED layout columns): publishes one metadata-only `#partspec`
   * version appending `<source_col>_p` to the current spec. The second
@@ -2756,7 +2756,7 @@ final class SnapshotEvolvePartitioningProcedure(cat: GraftSnapshotCatalog)
   override def call(input: org.apache.spark.sql.catalyst.InternalRow)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
     val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val (v, n) = graft.operators.SourceQueries.snapshotEvolvePartitioning(
+    val (v, n) = SnapshotTxn.snapshotEvolvePartitioning(
       SparkSession.active, root, input.getUTF8String(1).toString)
     java.util.List.of[org.apache.spark.sql.connector.read.Scan](
       new SnapshotProcedureResult(outSchema,
@@ -2766,7 +2766,7 @@ final class SnapshotEvolvePartitioningProcedure(cat: GraftSnapshotCatalog)
 
 /** `CALL snap.migrate_layout('t'[, max_partitions])` — converge a
   * spec-evolved table to its current partition spec
-  * ([[graft.operators.SourceQueries.snapshotMigrateLayout]]): rewrite
+  * ([[SnapshotTxn.snapshotMigrateLayout]]): rewrite
   * up to `max_partitions` old-spec partitions under the current layout
   * as one CAS version. Incremental and idempotent; once the head holds
   * no old-spec entries the SQL door serves the table again.
@@ -2796,7 +2796,7 @@ final class SnapshotMigrateLayoutProcedure(cat: GraftSnapshotCatalog)
   override def call(input: org.apache.spark.sql.catalyst.InternalRow)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
     val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val (n, v) = graft.operators.SourceQueries.snapshotMigrateLayout(
+    val (n, v) = SnapshotTxn.snapshotMigrateLayout(
       SparkSession.active, root, input.getInt(1))
     java.util.List.of[org.apache.spark.sql.connector.read.Scan](
       new SnapshotProcedureResult(outSchema,
@@ -2806,7 +2806,7 @@ final class SnapshotMigrateLayoutProcedure(cat: GraftSnapshotCatalog)
 
 /** `CALL snap.clone('t', 'u'[, version])` — zero-copy hard-link clone
   * of a published version into a brand-new table in the same warehouse
-  * ([[graft.operators.SourceQueries.snapshotClone]]): the cloned
+  * ([[SnapshotTxn.snapshotClone]]): the cloned
   * version becomes the target's v1, stats sidecar + effective schema +
   * live CHECK constraints carry, and — unlike Delta's shallow clone —
   * vacuum on EITHER table stays safe, because each side only unlinks
@@ -2849,7 +2849,7 @@ final class SnapshotCloneProcedure(cat: GraftSnapshotCatalog)
           s"unknown tag '$vArg' — cannot clone it")))
     }
     val (v, nParts, nFiles) =
-      graft.operators.SourceQueries.snapshotClone(src, dst, version)
+      SnapshotTxn.snapshotClone(src, dst, version)
     java.util.List.of[org.apache.spark.sql.connector.read.Scan](
       new SnapshotProcedureResult(outSchema,
         Array(org.apache.spark.sql.catalyst.InternalRow(
@@ -2858,7 +2858,7 @@ final class SnapshotCloneProcedure(cat: GraftSnapshotCatalog)
 }
 
 /** `CALL snap.branch('t', 'dev'[, version])` — fork a writable branch
-  * ([[graft.operators.SourceQueries.snapshotBranchCreate]]): the
+  * ([[SnapshotTxn.snapshotBranchCreate]]): the
   * write-audit-publish staging shape. The branch is a complete
   * mini-store sharing the fork version's data dirs; write to it
   * through `df.write.option("branch", "dev")` or SQL DML on
@@ -2900,7 +2900,7 @@ final class SnapshotBranchProcedure(cat: GraftSnapshotCatalog)
         throw new IllegalArgumentException(
           s"unknown tag '$vArg' — cannot branch from it")))
     }
-    val (base, nParts) = graft.operators.SourceQueries
+    val (base, nParts) = SnapshotTxn
       .snapshotBranchCreate(root, input.getUTF8String(1).toString, v)
     java.util.List.of[org.apache.spark.sql.connector.read.Scan](
       new SnapshotProcedureResult(outSchema,
@@ -2911,7 +2911,7 @@ final class SnapshotBranchProcedure(cat: GraftSnapshotCatalog)
 
 /** `CALL snap.fastforward('t', 'dev')` — publish the branch head as
   * the main table's next version in one CAS commit
-  * ([[graft.operators.SourceQueries.snapshotFastForward]]); refuses if
+  * ([[SnapshotTxn.snapshotFastForward]]); refuses if
   * main moved past the fork point.
   */
 final class SnapshotFastForwardProcedure(cat: GraftSnapshotCatalog)
@@ -2938,7 +2938,7 @@ final class SnapshotFastForwardProcedure(cat: GraftSnapshotCatalog)
   override def call(input: org.apache.spark.sql.catalyst.InternalRow)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
     val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val (v, nParts, linked) = graft.operators.SourceQueries
+    val (v, nParts, linked) = SnapshotTxn
       .snapshotFastForward(root, input.getUTF8String(1).toString)
     java.util.List.of[org.apache.spark.sql.connector.read.Scan](
       new SnapshotProcedureResult(outSchema,

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** MERGE-ON-READ records — the read half. A merge-on-read DELETE
   * (`SnapshotMeta.deleteMode = "merge-on-read"`) publishes the doomed
   * KEYS as per-partition parquet sidecars referenced by `#delete`
-  * manifest records ([[graft.operators.SourceQueries
+  * manifest records ([[SnapshotTxn
   * .snapshotMorDelete]]); a merge-on-read UPDATE/MERGE
   * ([[SnapshotDeltaOperation]]) additionally appends its new rows as
   * `#upsert` delta dirs. Nothing under the data dirs moves. Every

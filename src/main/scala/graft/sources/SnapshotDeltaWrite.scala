@@ -51,7 +51,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Command routing: UPDATE and MERGE arrive here whenever the table
   * declares merge-on-read; DELETE arrives only with an untranslatable
   * predicate (translatable ones take the metadata door —
-  * `canDeleteWhere` → [[graft.operators.SourceQueries
+  * `canDeleteWhere` → [[SnapshotTxn
   * .snapshotMorDelete]]) and writes records only, no delta rows.
   *
   * The scan is the table's STANDARD read path (record-aware, pruned,
@@ -178,14 +178,14 @@ final class SnapshotDeltaWrite(
         org.apache.commons.io.FileUtils.deleteQuietly(dRoot.toFile)
         return
       }
-      try graft.operators.SourceQueries.snapshotMorDeltaCommit(spark,
+      try SnapshotTxn.snapshotMorDeltaCommit(spark,
         root, version, uDirs, dDirs)
       catch {
         // ONLY a CAS loss may reclaim the roots: nothing references
         // them then. Any other failure could be post-publish (the
         // stats-sidecar write), when the dirs ARE referenced state —
         // leave them; vacuum never sweeps referenced dirs.
-        case e: graft.operators.SourceQueries.SnapshotConflictException =>
+        case e: SnapshotTxn.SnapshotConflictException =>
           org.apache.commons.io.FileUtils.deleteQuietly(uRoot.toFile)
           org.apache.commons.io.FileUtils.deleteQuietly(dRoot.toFile)
           throw e

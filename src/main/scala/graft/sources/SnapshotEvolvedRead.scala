@@ -147,7 +147,7 @@ final class SnapshotEvolvedV2Table(
         "converge with CALL migrate_layout first")
 
   /** `INSERT INTO` WORKS on an unmigrated evolved head: the staged
-    * append write feeds the same [[graft.operators.SourceQueries
+    * append write feeds the same [[SnapshotTxn
     * .snapshotCommit]] door as the DataFrame writer, which already
     * lays new rows out under the CURRENT spec and MIGRATES exactly
     * the old-spec partitions it touches — SQL inserts are how a head
@@ -228,7 +228,7 @@ final class SnapshotEvolvedV2Table(
       "DELETE FROM on a VERSION/TIMESTAMP AS OF reference: snapshot " +
         "history is immutable")
     val head = SnapshotTable.read(spark, root, SnapshotManifest.head(root))
-    graft.operators.SourceQueries.snapshotMorDelete(spark, root,
+    SnapshotTxn.snapshotMorDelete(spark, root,
       SnapshotDml.toColumn(filters, head.columns.toSet))
   }
 }

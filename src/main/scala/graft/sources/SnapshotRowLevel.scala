@@ -496,7 +496,7 @@ final class SnapshotReplaceWrite(
             }
         }
       }
-      graft.operators.SourceQueries.snapshotReplacePartitions(spark,
+      SnapshotTxn.snapshotReplacePartitions(spark,
         root, version, replaced, newEntries,
         // stats profile under the EFFECTIVE schema: files written after
         // an ADD COLUMN carry the evolved columns, and profiling with
@@ -750,7 +750,7 @@ final class SnapshotOverwriteWrite(
               s"${(newEntries.keySet -- inScope).mkString(", ")}")
           SnapshotRowLevel.matchingPvs(exprs, ps, manifest.keySet)
       }
-      graft.operators.SourceQueries.snapshotReplacePartitions(spark,
+      SnapshotTxn.snapshotReplacePartitions(spark,
         root, version, replaced, newEntries,
         // stats profile under the EFFECTIVE schema: files written after
         // an ADD COLUMN carry the evolved columns, and profiling with

@@ -18,10 +18,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Manifest reader for the copy-on-write snapshot store
-  * (`graft.operators.SourceQueries`' lakehouse module). A manifest is
+  * ([[SnapshotTxn]], the transaction engine). A manifest is
   * an immutable `v<N>.manifest` file of `partitionValue \t dataDir`
   * lines; the publish protocol (private temp + atomic `link(2)` CAS)
-  * lives with the commit path in `SourceQueries.writeManifest`. This
+  * lives with the commit path in [[SnapshotTxn.writeManifest]]. This
   * object is the READ half, shared between the relational snapshot
   * queries and the [[SnapshotFileIndex]] connector.
   *
@@ -538,7 +538,7 @@ object SnapshotManifest {
     * sidecars; `n = -1` when unknown). Manifests are SELF-CONTAINED
     * on this plane: every commit carries forward the parent records
     * still in force (same pv, same data dir —
-    * [[graft.operators.SourceQueries.writeManifest]]), so a pinned
+    * [[SnapshotTxn.writeManifest]]), so a pinned
     * `VERSION AS OF` read serves exactly its version's delete state
     * and vacuumed gaps cost nothing. A rewritten partition's records
     * drop with the rewrite (the rewriting read applied the
@@ -940,13 +940,13 @@ object SnapshotTags {
   * folded in) and the fork-time live CHECK constraints re-published
   * in its base manifest. Branch commits write data dirs under the
   * branch root; fork-shared partitions keep pointing at the main
-  * table's dirs — [[graft.operators.SourceQueries.snapshotVacuum]]
+  * table's dirs — [[SnapshotTxn.snapshotVacuum]]
   * counts every branch manifest in the referenced set, so a main
   * vacuum can never reclaim data a branch still reads.
   *
   * This object is only the namespace plumbing; create/fast-forward
   * live with the other commit engines in
-  * [[graft.operators.SourceQueries]].
+  * [[SnapshotTxn]].
   */
 object SnapshotBranches {
   def dir(root: JPath): JPath = root.resolve(".branch")
@@ -2185,7 +2185,7 @@ object SnapshotTable {
   * needs state bootstraps it from a batch read of version n−1 and
   * applies the stream on top —
   * each increment costs O(that commit's touched partitions), never a
-  * table scan, because [[graft.operators.SourceQueries.changeRows]]
+  * table scan, because [[SnapshotTxn.changeRows]]
   * reads only repointed dirs. Offsets are VERSION NUMBERS: progress is
   * exactly-once per committed version, checkpointable, and a restarted
   * query resumes from the last committed version offset
@@ -2223,12 +2223,12 @@ final class SnapshotChangefeedSource(
       val delta =
         if (v == 1)
           // parent-less base: the whole v1 snapshot streams as inserts
-          graft.operators.SourceQueries.snapshotRead(spark, root, 1)
+          SnapshotTxn.snapshotRead(spark, root, 1)
             .select(col(keyCol).as("k"), col(valCol).as("price"),
               lit(null).cast("double").as("old_price"),
               lit("insert").as("change_type"), lit(1).as("alive"))
         else
-          graft.operators.SourceQueries.changeRows(spark, root, v - 1, v,
+          SnapshotTxn.changeRows(spark, root, v - 1, v,
             keyCol, valCol)
       delta.select(lit(v).as("version"), col("k"),
         col("price").cast("double").as("price"),
@@ -2465,7 +2465,7 @@ private[sources] object SnapshotDoor {
         SnapshotMeta.read(root).exists(_.mergeOnRead)) {
       import org.apache.spark.sql.functions.{broadcast, col}
       val keys = data.select(col(keyCol)).distinct()
-      graft.operators.SourceQueries.snapshotMorDeleteBy(spark, root,
+      SnapshotTxn.snapshotMorDeleteBy(spark, root,
         df => df.join(broadcast(keys), Seq(keyCol), "left_semi"), txn)
       return
     }
@@ -2473,7 +2473,7 @@ private[sources] object SnapshotDoor {
     // the batch commits as `#delete` records (existing keys) plus
     // `#upsert` delta dirs — O(batch) bytes, zero partition rewrites,
     // the Hudi MERGE_ON_READ ingest shape for streaming into a hot
-    // table ([[graft.operators.SourceQueries.snapshotMorUpsert]],
+    // table ([[SnapshotTxn.snapshotMorUpsert]],
     // CAS retry inside). The copy-on-write door below remains the
     // default: its materialize-on-touch semantics are load-bearing
     // (records drop with rewrites), so the trade is chosen per
@@ -2483,7 +2483,7 @@ private[sources] object SnapshotDoor {
           SnapshotMeta.read(root).exists(_.mergeOnRead),
         "commitMode=upsert-mor needs a bootstrapped " +
           "delete_mode='merge-on-read' store")
-      graft.operators.SourceQueries.snapshotMorUpsert(spark, root,
+      SnapshotTxn.snapshotMorUpsert(spark, root,
         data, keyCol, txn)
       return
     }
@@ -2506,15 +2506,15 @@ private[sources] object SnapshotDoor {
       val head = SnapshotManifest.head(root)
       try {
         if (head == 0)
-          graft.operators.SourceQueries.snapshotInit(spark, root, data,
+          SnapshotTxn.snapshotInit(spark, root, data,
             partCols, bloomIndexKey, txn, keyCol, distribute)
         else
-          graft.operators.SourceQueries.snapshotCommit(spark, root, head,
+          SnapshotTxn.snapshotCommit(spark, root, head,
             head + 1, data, insert, keyCol, partCols, bloomIndexKey, txn,
             distribute)
         committed = true
       } catch {
-        case e: graft.operators.SourceQueries.SnapshotConflictException =>
+        case e: SnapshotTxn.SnapshotConflictException =>
           attempt += 1
           if (attempt >= MaxAttempts) throw e
       }

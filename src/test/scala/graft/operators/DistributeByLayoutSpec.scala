@@ -1,10 +1,11 @@
 package graft.operators
 
+import graft.sources.SnapshotTxn
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Pins the skew-safety contract of [[SourceQueries.distributeByLayout]]
+/** Pins the skew-safety contract of [[SnapshotTxn.distributeByLayout]]
   * (the write-distribution step in front of every dynamic-partition
   * store write): under AQE it must plan a REBALANCE, so that a layout
   * partition value larger than the advisory size is SPLIT across
@@ -45,7 +46,7 @@ class DistributeByLayoutSpec extends SparkSpec {
         .unionAll(s.range(0, 1000).select(
           concat(lit("cold"), col("id") % 10).as("pv"),
           md5(col("id").cast("string")).as("v")))
-      val distributed = SourceQueries.distributeByLayout(build(), Seq("pv"))
+      val distributed = SnapshotTxn.distributeByLayout(build(), Seq("pv"))
       assert(distributed.queryExecution.optimizedPlan.toString
           .contains("RebalancePartitions"),
         "distributeByLayout must plan REBALANCE under AQE:\n" +
@@ -63,7 +64,7 @@ class DistributeByLayoutSpec extends SparkSpec {
       // AQE-off fallback: explicit hash repartition (the hint would
       // silently no-op), one writer per leaf, write still exact
       s.conf.set("spark.sql.adaptive.enabled", "false")
-      val off = SourceQueries.distributeByLayout(build(), Seq("pv"))
+      val off = SnapshotTxn.distributeByLayout(build(), Seq("pv"))
       val offPlan = off.queryExecution.optimizedPlan.toString
       assert(!offPlan.contains("RebalancePartitions"),
         s"AQE-off path must not rely on the rebalance hint:\n$offPlan")

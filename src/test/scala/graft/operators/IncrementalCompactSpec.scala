@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.{SnapshotTxn, SnapshotManifest}
 import java.io.File
 
 import org.apache.spark.sql.functions._
@@ -31,15 +32,15 @@ class IncrementalCompactSpec extends SparkSpec {
     // compacted by another suite's entry run in this JVM
     val root = SourceQueries.buildIncrCompactFixture(spark, sf0001,
       java.nio.file.Paths.get("target/graft-io/incr_compact_spec"))
-    assert(SourceQueries.headVersion(root) === 1)
-    val m1 = SourceQueries.readManifest(root, 1)
+    assert(SnapshotManifest.head(root) === 1)
+    val m1 = SnapshotManifest.read(root, 1)
     val hotMonths = SourceQueries.IncrCompactHotMonths
     hotMonths.foreach { ym =>
       assert(fileCount(m1(ym)) >= SourceQueries.IncrCompactThreshold,
         s"hot month $ym not fragmented")
     }
     val coldCounts = (m1.keySet -- hotMonths).map(ym => ym -> fileCount(m1(ym)))
-    val v1Agg = SourceQueries.snapshotRead(spark, root, 1)
+    val v1Agg = SnapshotTxn.snapshotRead(spark, root, 1)
       .agg(count(lit(1)), graft.functions.dsum(col("o_totalprice"))).head()
 
     // force multiple output files per month so the clustering claim is
@@ -47,9 +48,9 @@ class IncrementalCompactSpec extends SparkSpec {
     val compacted = SourceQueries.compactHotPartitions(spark, root,
       SourceQueries.IncrCompactThreshold, filesPerMonth = Some(4))
     assert(compacted === hotMonths, s"wrong months compacted: $compacted")
-    assert(SourceQueries.headVersion(root) === 2)
+    assert(SnapshotManifest.head(root) === 2)
 
-    val m2 = SourceQueries.readManifest(root, 2)
+    val m2 = SnapshotManifest.read(root, 2)
     (m1.keySet -- hotMonths).foreach { ym =>
       assert(m2(ym) === m1(ym), s"cold month $ym repointed")
     }
@@ -85,13 +86,13 @@ class IncrementalCompactSpec extends SparkSpec {
     // quiet table: second pass selects nothing and publishes nothing
     assert(SourceQueries.compactHotPartitions(spark, root,
       SourceQueries.IncrCompactThreshold) === Nil)
-    assert(SourceQueries.headVersion(root) === 2)
+    assert(SnapshotManifest.head(root) === 2)
 
     // snapshot semantics: v1 unchanged, v2 value-identical to v1
-    val v1After = SourceQueries.snapshotRead(spark, root, 1)
+    val v1After = SnapshotTxn.snapshotRead(spark, root, 1)
       .agg(count(lit(1)), graft.functions.dsum(col("o_totalprice"))).head()
     assert(v1After === v1Agg)
-    val v2Agg = SourceQueries.snapshotRead(spark, root, 2)
+    val v2Agg = SnapshotTxn.snapshotRead(spark, root, 2)
       .agg(count(lit(1)), graft.functions.dsum(col("o_totalprice"))).head()
     assert(v2Agg === v1Agg)
   }

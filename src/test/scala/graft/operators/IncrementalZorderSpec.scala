@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.SnapshotTxn
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions._
@@ -53,7 +54,7 @@ class IncrementalZorderSpec extends SparkSpec {
     val maxCust = graft.core.Tables.orders(s, sf001)
       .agg(max(col("o_custkey"))).head().getLong(0)
     def query(root: java.nio.file.Path, v: Int): DataFrame =
-      SourceQueries.snapshotRead(s, root, v)
+      SnapshotTxn.snapshotRead(s, root, v)
         .filter(col("o_orderdate") >= lit("1996-01-05") &&
           col("o_orderdate") < lit("1996-03-25") &&
           col("o_custkey") <= lit(maxCust / 8))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.SnapshotTxn
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -23,18 +24,18 @@ class PipelineOpsSpec extends SparkSpec {
   test("scd2 intervals chain per key; open/closed matches head liveness") {
     import org.apache.spark.sql.expressions.Window
     val root = SourceQueries.snapshotFixture(spark, sf0001)
-    val v1 = SourceQueries.snapshotRead(spark, root, 1)
+    val v1 = SnapshotTxn.snapshotRead(spark, root, 1)
       .select(col("o_orderkey").as("k"))
-    val v3 = SourceQueries.snapshotRead(spark, root, 3)
+    val v3 = SnapshotTxn.snapshotRead(spark, root, 3)
       .select(col("o_orderkey").as("k"))
 
     // row-level history from the entry's OWN event derivation
-    val base = SourceQueries.snapshotRead(spark, root, 1)
+    val base = SnapshotTxn.snapshotRead(spark, root, 1)
       .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"),
         lit(1).as("alive"))
       .withColumn("v", lit(1))
     def cdc(vFrom: Int, vTo: Int) =
-      SourceQueries.changeRows(spark, root, vFrom, vTo)
+      SnapshotTxn.changeRows(spark, root, vFrom, vTo)
         .select(col("k"), col("price"), col("alive"))
         .withColumn("v", lit(vTo))
     val ev = base.unionByName(cdc(1, 2)).unionByName(cdc(2, 3))

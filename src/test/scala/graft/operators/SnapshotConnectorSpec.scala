@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.{SnapshotTxn, SnapshotManifest}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -41,7 +42,7 @@ class SnapshotConnectorSpec extends SparkSpec {
     assert(parts === 6, s"expected 6 months listed, got $parts")
     assert(files < index.inputFiles.length)
 
-    val expect = SourceQueries.snapshotRead(spark, root, 2)
+    val expect = SnapshotTxn.snapshotRead(spark, root, 2)
       .filter(col("o_ym").between("1995-01", "1995-06"))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), graft.functions.dsum(col("o_totalprice")).as("s"))
@@ -70,7 +71,7 @@ class SnapshotConnectorSpec extends SparkSpec {
       s"expected <=${keys.size * 2} files after Bloom skip, got $files")
     assert(files < total, s"no pruning: $files of $total")
 
-    val expect = SourceQueries.snapshotRead(spark, root, 3)
+    val expect = SnapshotTxn.snapshotRead(spark, root, 3)
       .filter(col("o_orderkey").isin(keys: _*))
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).sortBy(_._1)
@@ -124,7 +125,7 @@ class SnapshotConnectorSpec extends SparkSpec {
   test("unfiltered connector read equals the plain union read") {
     val viaConnector = SnapshotTable.read(spark, root, 1)
       .agg(count(lit(1)), graft.functions.dsum(col("o_totalprice"))).head()
-    val viaUnion = SourceQueries.snapshotRead(spark, root, 1)
+    val viaUnion = SnapshotTxn.snapshotRead(spark, root, 1)
       .agg(count(lit(1)), graft.functions.dsum(col("o_totalprice"))).head()
     assert(viaConnector === viaUnion)
   }
@@ -135,8 +136,8 @@ class SnapshotConnectorSpec extends SparkSpec {
     val head = spark.read.format("graft-snapshot").load(root.toString)
     val v1n = v1.count()
     val headn = head.count()
-    val v3n = SourceQueries.snapshotRead(spark, root, 3).count()
-    assert(v1n === SourceQueries.snapshotRead(spark, root, 1).count())
+    val v3n = SnapshotTxn.snapshotRead(spark, root, 3).count()
+    assert(v1n === SnapshotTxn.snapshotRead(spark, root, 1).count())
     assert(headn === v3n) // head is v3 after merge + delete
     assert(v1n !== v3n)   // delete actually shrank the head
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.{SnapshotTxn, SnapshotManifest}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -44,7 +45,7 @@ class SnapshotMetadataSpec extends SparkSpec {
     // same data dirs, fresh root with ONLY a v1 manifest — the
     // pre-sidecar on-disk layout
     val legacy = java.nio.file.Files.createTempDirectory("legacy_snap")
-    SourceQueries.writeManifest(legacy, 1, SourceQueries.readManifest(root, 2))
+    SnapshotTxn.writeManifest(legacy, 1, SnapshotManifest.read(root, 2))
     val months = SnapshotManifest.read(legacy, 1).size
     assert(months >= 70, s"fixture denominator shrank: $months")
     val df = SnapshotTable.read(spark, legacy, 1)
@@ -100,7 +101,7 @@ class SnapshotMetadataSpec extends SparkSpec {
     assert(index.bloomBitsetsLoaded <= survivorFiles,
       s"loaded ${index.bloomBitsetsLoaded} bitsets for $survivorFiles " +
         s"surviving files (table has $totalFiles)")
-    val expect = SourceQueries.snapshotRead(spark, root, 3)
+    val expect = SnapshotTxn.snapshotRead(spark, root, 3)
       .filter(col("o_ym").between("1995-01", "1995-03") &&
         col("o_orderkey").isin(keys: _*))
       .select(col("o_orderkey"), col("o_totalprice"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.{SnapshotTxn, SnapshotManifest}
 import java.io.File
 import java.nio.file.Paths
 
@@ -44,22 +45,22 @@ class SnapshotStoreSpec extends SparkSpec {
       .toMap
     // publish v1 through the production writer so the spec pins the
     // real manifest format
-    SourceQueries.writeManifest(root, 1, months)
+    SnapshotTxn.writeManifest(root, 1, months)
 
     val month = "1996-03"
     assert(months.contains(month), s"fixture month $month missing")
     val parentFiles = months.map { case (ym, p) => ym -> files(p) }
-    val v1Agg = SourceQueries.snapshotRead(spark, root, 1)
+    val v1Agg = SnapshotTxn.snapshotRead(spark, root, 1)
       .agg(count(lit(1)), graft.functions.dsum(col("o_totalprice"))).head()
 
     val delta = orders.filter(col("o_ym") === month)
       .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
     assert(delta.count() > 0)
-    SourceQueries.snapshotCommit(spark, root, 1, 2, delta,
+    SnapshotTxn.snapshotCommit(spark, root, 1, 2, delta,
       insertDelta = true)
 
-    val m1 = SourceQueries.readManifest(root, 1)
-    val m2 = SourceQueries.readManifest(root, 2)
+    val m1 = SnapshotManifest.read(root, 1)
+    val m2 = SnapshotManifest.read(root, 2)
     val repointed = m1.keySet.filter(ym => m1.get(ym) != m2.get(ym))
     assert(repointed === Set(month),
       s"expected only $month repointed, got: $repointed")
@@ -69,11 +70,11 @@ class SnapshotStoreSpec extends SparkSpec {
       assert(files(m1(ym)) === parentFiles(ym), s"files changed under $ym")
     }
     // parent version still exactly readable (history immutable)
-    val v1After = SourceQueries.snapshotRead(spark, root, 1)
+    val v1After = SnapshotTxn.snapshotRead(spark, root, 1)
       .agg(count(lit(1)), graft.functions.dsum(col("o_totalprice"))).head()
     assert(v1After === v1Agg)
     // child version shows exactly the delta
-    val v2 = SourceQueries.snapshotRead(spark, root, 2)
+    val v2 = SnapshotTxn.snapshotRead(spark, root, 2)
     assert(v2.count() === orders.count())
     val gotMonth = v2.filter(col("o_ym") === month)
       .agg(graft.functions.dsum(col("o_totalprice"))).head().getDouble(0)
@@ -96,7 +97,7 @@ class SnapshotStoreSpec extends SparkSpec {
       .filter(f => f.isDirectory && f.getName.startsWith("o_ym_p="))
       .map(f => f.getName.stripPrefix("o_ym_p=") -> f.getAbsolutePath)
       .toMap
-    SourceQueries.writeManifest(root, 1, months)
+    SnapshotTxn.writeManifest(root, 1, months)
 
     val month = "1996-03"
     def delta(bump: Double) = orders.filter(col("o_ym") === month)
@@ -110,7 +111,7 @@ class SnapshotStoreSpec extends SparkSpec {
       new java.util.concurrent.Callable[Option[Throwable]] {
         def call(): Option[Throwable] = {
           barrier.await()
-          try { SourceQueries.snapshotCommit(spark, root, 1, 2, delta(bump),
+          try { SnapshotTxn.snapshotCommit(spark, root, 1, 2, delta(bump),
                   insertDelta = true); None }
           catch { case e: Throwable => Some(e) }
         }
@@ -121,13 +122,13 @@ class SnapshotStoreSpec extends SparkSpec {
     val losses = outcomes.flatten
     assert(losses.length === 1,
       s"exactly one racer must lose the CAS, got failures: $losses")
-    assert(losses.head.isInstanceOf[SourceQueries.SnapshotConflictException],
+    assert(losses.head.isInstanceOf[SnapshotTxn.SnapshotConflictException],
       s"loser must see a conflict, got: ${losses.head}")
-    assert(SourceQueries.headVersion(root) === 2)
+    assert(SnapshotManifest.head(root) === 2)
 
     // the published v2 is EXACTLY the winner's commit, not a blend
     val winnerBump = bumps(outcomes.indexWhere(_.isEmpty))
-    val v2 = SourceQueries.snapshotRead(spark, root, 2)
+    val v2 = SnapshotTxn.snapshotRead(spark, root, 2)
     assert(v2.count() === orders.count())
     val gotMonth = v2.filter(col("o_ym") === month)
       .agg(graft.functions.dsum(col("o_totalprice"))).head().getDouble(0)
@@ -143,15 +144,15 @@ class SnapshotStoreSpec extends SparkSpec {
       .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
       .filter(_.isDirectory).toSeq
     val referenced = Seq(1, 2)
-      .flatMap(v => SourceQueries.readManifest(root, v).values)
+      .flatMap(v => SnapshotManifest.read(root, v).values)
       .map(p => new File(p).getCanonicalPath).toSet
     val orphans = leaves()
       .filterNot(l => referenced.contains(l.getCanonicalPath))
-    val removed = SourceQueries.snapshotVacuum(root, keep = Set(1, 2))
+    val removed = SnapshotTxn.snapshotVacuum(root, keep = Set(1, 2))
     assert(removed === orphans.length,
       s"vacuum must sweep exactly the ${orphans.length} orphaned dirs")
     orphans.foreach(o => assert(!o.exists(), s"orphan survived: $o"))
-    val v2After = SourceQueries.snapshotRead(spark, root, 2)
+    val v2After = SnapshotTxn.snapshotRead(spark, root, 2)
       .agg(count(lit(1)), graft.functions.dsum(col("o_totalprice"))).head()
     assert(v2After.getLong(0) === orders.count())
   }
@@ -170,19 +171,19 @@ class SnapshotStoreSpec extends SparkSpec {
       .filter(f => f.isDirectory && f.getName.startsWith("o_ym_p="))
       .map(f => f.getName.stripPrefix("o_ym_p=") -> f.getAbsolutePath)
       .toMap
-    SourceQueries.writeManifest(root, 1, months)
+    SnapshotTxn.writeManifest(root, 1, months)
     val month = "1996-03"
     val delta = orders.filter(col("o_ym") === month)
       .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-    SourceQueries.snapshotCommit(spark, root, 1, 2, delta,
+    SnapshotTxn.snapshotCommit(spark, root, 1, 2, delta,
       insertDelta = true)
 
-    val v2Before = SourceQueries.snapshotRead(spark, root, 2)
+    val v2Before = SnapshotTxn.snapshotRead(spark, root, 2)
       .agg(count(lit(1)), graft.functions.dsum(col("o_totalprice"))).head()
 
     // v1-only data = the repointed month's ORIGINAL dir; everything
     // else is shared with v2 and must survive
-    val removed = SourceQueries.snapshotVacuum(root, keep = Set(2))
+    val removed = SnapshotTxn.snapshotVacuum(root, keep = Set(2))
     assert(removed === 1, s"expected exactly the old $month dir, got $removed")
     assert(!new File(months(month)).exists(), "v1-only dir not swept")
     (months - month).values.foreach { p =>
@@ -190,7 +191,7 @@ class SnapshotStoreSpec extends SparkSpec {
     }
     assert(!root.resolve("manifests").resolve("v1.manifest").toFile.exists())
 
-    val v2After = SourceQueries.snapshotRead(spark, root, 2)
+    val v2After = SnapshotTxn.snapshotRead(spark, root, 2)
       .agg(count(lit(1)), graft.functions.dsum(col("o_totalprice"))).head()
     assert(v2After === v2Before)
   }

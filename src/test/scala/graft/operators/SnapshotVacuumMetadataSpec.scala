@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.{SnapshotTxn, SnapshotManifest}
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
@@ -92,11 +93,11 @@ class SnapshotVacuumMetadataSpec extends SparkSpec {
     val months = Map("a" -> leaf.toAbsolutePath.toString)
     // v1 = a sink micro-batch (txn marker); v2 = an interleaved batch
     // writer — the app's HIGHEST marker now rides a non-head manifest
-    SourceQueries.writeManifest(root, 1, months, txn = Some("appX" -> 7L))
-    SourceQueries.writeManifest(root, 2, months)
+    SnapshotTxn.writeManifest(root, 1, months, txn = Some("appX" -> 7L))
+    SnapshotTxn.writeManifest(root, 2, months)
     assert(graft.sources.SnapshotManifest.lastTxnBatch(root, "appX")
       === Some(7L))
-    SourceQueries.snapshotVacuum(root, Set(2), 0)
+    SnapshotTxn.snapshotVacuum(root, Set(2), 0)
     assert(!Files.exists(root.resolve("manifests").resolve("v1.manifest")))
     assert(graft.sources.SnapshotManifest.lastTxnBatch(root, "appX")
       === Some(7L),

@@ -33,8 +33,8 @@ class SnapshotCatalogSpec extends SparkSpec {
     val v3 = spark.sql(s"SELECT COUNT(*) FROM $tbl VERSION AS OF 3")
       .head().getLong(0)
     val head = spark.sql(s"SELECT COUNT(*) FROM $tbl").head().getLong(0)
-    assert(v1 === SourceQueries.snapshotRead(spark, root, 1).count())
-    assert(v3 === SourceQueries.snapshotRead(spark, root, 3).count())
+    assert(v1 === SnapshotTxn.snapshotRead(spark, root, 1).count())
+    assert(v3 === SnapshotTxn.snapshotRead(spark, root, 3).count())
     assert(head === v3) // head is v3 after merge + delete
     assert(v1 !== v3)
   }
@@ -78,7 +78,7 @@ class SnapshotCatalogSpec extends SparkSpec {
       s"""SELECT COUNT(*) FROM $tbl VERSION AS OF 2
          |WHERE o_ym_p BETWEEN '1995-01' AND '1995-06'""".stripMargin)
       .head().getLong(0)
-    val expect = SourceQueries.snapshotRead(spark, root, 2)
+    val expect = SnapshotTxn.snapshotRead(spark, root, 2)
       .filter(col("o_ym").between("1995-01", "1995-06")).count()
     assert(got === expect)
   }
@@ -394,7 +394,7 @@ class SnapshotCatalogSpec extends SparkSpec {
       def chain(e: Throwable): Seq[Throwable] =
         if (e == null) Nil else e +: chain(e.getCause)
       assert(chain(loser).exists(
-        _.isInstanceOf[graft.operators.SourceQueries.SnapshotConflictException]),
+        _.isInstanceOf[SnapshotTxn.SnapshotConflictException]),
         s"loser must surface the CAS conflict, got: $loser")
     }
   }
@@ -448,7 +448,7 @@ class SnapshotCatalogSpec extends SparkSpec {
     "plane as an update delta") {
     val (droot, t) = dmlStore()
     spark.sql(s"UPDATE $t SET price = price + 1.0 WHERE k = 3")
-    val changes = SourceQueries.changeRows(spark, droot, 1, 2,
+    val changes = SnapshotTxn.changeRows(spark, droot, 1, 2,
       keyCol = "k", valCol = "price")
       .collect().map(r => (r.getAs[Long]("k"),
         r.getAs[String]("change_type"),

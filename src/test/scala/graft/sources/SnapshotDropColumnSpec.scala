@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.SourceQueries
 
 /** METADATA-ONLY DROP COLUMN via `#drop` tombstones — the complement
   * of `#rename` on the same name-mapping plane:
@@ -135,7 +134,7 @@ class SnapshotDropColumnSpec extends SparkSpec {
       .write.format("graft-snapshot")
       .option("keyCol", "id").option("partCol", "day")
       .mode("append").save(root.toString)                         // v4
-    SourceQueries.snapshotVacuum(root, Set(4))
+    SnapshotTxn.snapshotVacuum(root, Set(4))
     assert(!java.nio.file.Files.exists(
       root.resolve("manifests").resolve("v3.manifest")),
       "the #drop-bearing manifest must actually have expired")

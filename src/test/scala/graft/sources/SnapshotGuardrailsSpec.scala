@@ -138,7 +138,7 @@ class SnapshotGuardrailsSpec extends SparkSpec {
     assert(listed < SnapshotTable.fileIndexOf(ok).inputFiles.length)
 
     // an overwrite REBUILD re-keys the marker (the explicit spelling)
-    graft.operators.SourceQueries.snapshotBuildBloom(spark, root,
+    SnapshotTxn.snapshotBuildBloom(spark, root,
       "o_totalprice")
     assert(SnapshotBloom.indexedColumn(
       root.resolve("bloomidx").toString) === Some("o_totalprice"))

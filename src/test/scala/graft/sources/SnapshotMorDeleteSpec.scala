@@ -108,7 +108,7 @@ class SnapshotMorDeleteSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq === Seq(24L))
     // DataFrame door
     assert(SnapshotTable.read(spark, root, v3).count() === 24L)
-    assert(graft.operators.SourceQueries
+    assert(SnapshotTxn
       .snapshotRead(spark, root, v3).count() === 24L)
     // time travel: the pre-delete version still serves all 30
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.`t` VERSION AS OF $v2")
@@ -216,12 +216,12 @@ class SnapshotMorDeleteSpec extends SparkSpec {
 
     // vacuum at the head: the delete sidecars are REFERENCED state
     val kept = SnapshotManifest.head(root)
-    graft.operators.SourceQueries.snapshotVacuum(root, Set(kept))
+    SnapshotTxn.snapshotVacuum(root, Set(kept))
     assert(spark.sql(s"SELECT id FROM $cat.`t` ORDER BY id")
       .collect().map(_.getLong(0)).toSeq === expect,
       "vacuum must keep live delete sidecars")
 
-    val (nPart, v, _, _) = graft.operators.SourceQueries
+    val (nPart, v, _, _) = SnapshotTxn
       .snapshotCompact(spark, root, threshold = 2)
     assert(nPart === 2, "the two recorded partitions rewrite")
     assert(SnapshotManifest.deleteRecords(root, v).isEmpty)
@@ -240,7 +240,7 @@ class SnapshotMorDeleteSpec extends SparkSpec {
       SnapshotManifest.deleteRecords(root, ver).valuesIterator.flatten)
       .distinct
     assert(deadDirs.nonEmpty, "fixture must have expired delete dirs")
-    graft.operators.SourceQueries.snapshotVacuum(root, Set(v))
+    SnapshotTxn.snapshotVacuum(root, Set(v))
     assert(deadDirs.forall(d => !new java.io.File(d).exists()),
       s"vacuum must sweep dead delete sidecars: $deadDirs")
     assert(spark.sql(s"SELECT id FROM $cat.`t` ORDER BY id")
@@ -313,10 +313,10 @@ class SnapshotMorDeleteSpec extends SparkSpec {
     val vBase = SnapshotManifest.head(root)
     spark.sql(s"DELETE FROM $cat.`t` WHERE id <= 10")
     val vDel = SnapshotManifest.head(root)
-    graft.operators.SourceQueries.snapshotRestore(root, vBase)
+    SnapshotTxn.snapshotRestore(root, vBase)
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.`t`")
       .head().getLong(0) === 30L, "restore past the delete resurrects")
-    graft.operators.SourceQueries.snapshotRestore(root, vDel)
+    SnapshotTxn.snapshotRestore(root, vDel)
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.`t`")
       .head().getLong(0) === 20L, "restore forward re-dooms")
   }
@@ -339,14 +339,14 @@ class SnapshotMorDeleteSpec extends SparkSpec {
     // spec evolution still refuses (the union-of-specs read has no
     // record plane behind it)
     intercept[Exception] {
-      graft.operators.SourceQueries.snapshotEvolvePartitioning(
+      SnapshotTxn.snapshotEvolvePartitioning(
         spark, root, "bucket(4, id)")
     }
     // clone over LIVE records (round 16): sidecars hard-link, record
     // lines re-publish, the base manifest takes the source version
     // number so future commit stamps stay above the carried ones
     val cloneRoot = root.resolveSibling("mor_refuse_clone")
-    val (cv, nc0, _) = graft.operators.SourceQueries.snapshotClone(
+    val (cv, nc0, _) = SnapshotTxn.snapshotClone(
       root, cloneRoot)
     assert(cv === head && SnapshotManifest.head(cloneRoot) === head,
       "a record-carrying clone bases at the source version")
@@ -355,7 +355,7 @@ class SnapshotMorDeleteSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, cloneRoot, head).count() === 29L,
       "the clone reads through its carried records")
     // branch over LIVE records: fork-shared sidecars, exact reads
-    val (_, nb) = graft.operators.SourceQueries.snapshotBranchCreate(
+    val (_, nb) = SnapshotTxn.snapshotBranchCreate(
       root, "withrecs")
     val broot = graft.sources.SnapshotBranches.root(root, "withrecs")
     assert(nb === 3)
@@ -364,13 +364,13 @@ class SnapshotMorDeleteSpec extends SparkSpec {
       "the branch reads through its carried records")
     // vacuum on MAIN keeps the sidecars the branch references; the
     // clone owns hard links, so it is immune either way
-    graft.operators.SourceQueries.snapshotVacuum(root, Set(head))
+    SnapshotTxn.snapshotVacuum(root, Set(head))
     assert(SnapshotTable.read(spark, broot, head).count() === 29L)
     assert(SnapshotTable.read(spark, cloneRoot, head).count() === 29L)
     // the DataFrame door still reads exactly (opt-in filter applied)
     assert(SnapshotTable.read(spark, root, head).count() === 29L)
     // compact on the CLONE materializes ITS records independently
-    graft.operators.SourceQueries.snapshotCompact(spark, cloneRoot, 2)
+    SnapshotTxn.snapshotCompact(spark, cloneRoot, 2)
     val cHead = SnapshotManifest.head(cloneRoot)
     assert(!SnapshotManifest.hasLiveMorRecords(cloneRoot, cHead))
     assert(SnapshotTable.read(spark, cloneRoot, cHead).count() === 29L)
@@ -539,7 +539,7 @@ class SnapshotMorDeleteSpec extends SparkSpec {
     // for doomed rows living in OLD-SPEC entries too (the record's pv
     // is the current-spec derivation — a pv-scoped diff would miss
     // them; round-16 review fix)
-    val ch = graft.operators.SourceQueries
+    val ch = SnapshotTxn
       .changeRows(spark, root, headE, vDel, keyCol = "id", valCol = "v")
       .collect()
     assert(ch.length === 3 && ch.forall(_.getString(3) === "delete"),
@@ -549,7 +549,7 @@ class SnapshotMorDeleteSpec extends SparkSpec {
 
     // compact DEFERS record-bearing pvs on an evolved head (their
     // doomed rows may live in old-spec arms)
-    graft.operators.SourceQueries.snapshotCompact(spark, root, 2)
+    SnapshotTxn.snapshotCompact(spark, root, 2)
     assert(SnapshotManifest.deleteRecords(root,
       SnapshotManifest.head(root)).nonEmpty,
       "compact must not materialize records while arities are mixed")
@@ -558,7 +558,7 @@ class SnapshotMorDeleteSpec extends SparkSpec {
 
     // migrate converges the layout AND materializes the records whose
     // rows it rewrites (global anti-filter on the migrating read)
-    val (nMig, _) = graft.operators.SourceQueries
+    val (nMig, _) = SnapshotTxn
       .snapshotMigrateLayout(spark, root, 100)
     assert(nMig > 0)
     val vMig = SnapshotManifest.head(root)
@@ -569,7 +569,7 @@ class SnapshotMorDeleteSpec extends SparkSpec {
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.`t` WHERE id >= 29")
       .head().getLong(0) === 0L)
     // converged head: compact clears the remaining records
-    graft.operators.SourceQueries.snapshotCompact(spark, root, 2)
+    SnapshotTxn.snapshotCompact(spark, root, 2)
     val vEnd = SnapshotManifest.head(root)
     assert(!SnapshotManifest.hasLiveMorRecords(root, vEnd))
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.`t`")

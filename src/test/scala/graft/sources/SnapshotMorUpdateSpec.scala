@@ -221,7 +221,7 @@ class SnapshotMorUpdateSpec extends SparkSpec {
       if (k % 7 == 0) k + 0.5 else k.toDouble).sum
 
     // changefeed: the records-only commit diffs as pure updates
-    val ch = graft.operators.SourceQueries
+    val ch = SnapshotTxn
       .changeRows(spark, root, vUpd - 1, vUpd, keyCol = "id",
         valCol = "v").collect()
     assert(ch.length === 4 &&
@@ -230,7 +230,7 @@ class SnapshotMorUpdateSpec extends SparkSpec {
     assert(ch.map(_.getLong(0)).sorted.toSeq === Seq(7L, 14L, 21L, 28L))
 
     // vacuum at the head: #upsert dirs are referenced state
-    graft.operators.SourceQueries.snapshotVacuum(root, Set(vUpd))
+    SnapshotTxn.snapshotVacuum(root, Set(vUpd))
     assert(Math.abs(spark.sql(s"SELECT SUM(v) FROM $cat.`t`")
       .head().getDouble(0) - expectSum) < 1e-9,
       "vacuum must keep live #upsert dirs")
@@ -240,13 +240,13 @@ class SnapshotMorUpdateSpec extends SparkSpec {
     // correctly against the CARRIED delta dirs (stamp order survives
     // the clone — the base manifest takes the source version number)
     val cloneRoot = root.resolveSibling("t_clone")
-    graft.operators.SourceQueries.snapshotClone(root, cloneRoot)
+    SnapshotTxn.snapshotClone(root, cloneRoot)
     val cHead0 = SnapshotManifest.head(cloneRoot)
     assert(SnapshotManifest.upsertRecords(cloneRoot, cHead0).nonEmpty)
     assert(Math.abs(SnapshotTable.read(spark, cloneRoot, cHead0)
       .agg(org.apache.spark.sql.functions.sum("v")).head().getDouble(0)
       - expectSum) < 1e-9, "the clone reads through carried records")
-    graft.operators.SourceQueries.snapshotMorDelete(spark, cloneRoot,
+    SnapshotTxn.snapshotMorDelete(spark, cloneRoot,
       org.apache.spark.sql.functions.col("id") === 14L)
     assert(SnapshotTable.read(spark, cloneRoot,
       SnapshotManifest.head(cloneRoot)).count() === 29L,
@@ -266,7 +266,7 @@ class SnapshotMorUpdateSpec extends SparkSpec {
       "delta rows fold into the rewrite (14, 28 keep their update)")
 
     // compact materializes the rest
-    val (nPart, vCpt, _, _) = graft.operators.SourceQueries
+    val (nPart, vCpt, _, _) = SnapshotTxn
       .snapshotCompact(spark, root, threshold = 2)
     assert(nPart >= 2, s"at least the two recorded partitions rewrite")
     assert(!SnapshotManifest.hasLiveMorRecords(root, vCpt))
@@ -282,7 +282,7 @@ class SnapshotMorUpdateSpec extends SparkSpec {
       SnapshotManifest.upsertRecords(root, ver).valuesIterator.flatten)
       .distinct
     assert(deadDirs.nonEmpty)
-    graft.operators.SourceQueries.snapshotVacuum(root, Set(vCpt))
+    SnapshotTxn.snapshotVacuum(root, Set(vCpt))
     assert(deadDirs.forall(d => !new java.io.File(d).exists()),
       s"vacuum must sweep dead #upsert dirs: $deadDirs")
     assert(Math.abs(spark.sql(s"SELECT SUM(v) FROM $cat.`t`")
@@ -406,13 +406,13 @@ class SnapshotMorUpdateSpec extends SparkSpec {
     val vUpd = SnapshotManifest.head(root)
     assert(spark.sql(s"SELECT CAST(SUM(v) AS BIGINT) FROM $cat.`t`")
       .head().getLong(0) === (1L to 30L).sum + 1000L)
-    graft.operators.SourceQueries.snapshotRestore(root, vBase)
+    SnapshotTxn.snapshotRestore(root, vBase)
     assert(spark.sql(s"SELECT CAST(SUM(v) AS BIGINT) FROM $cat.`t`")
       .head().getLong(0) === (1L to 30L).sum,
       "restore past the update reverts delta rows AND records")
     assert(!SnapshotManifest.hasLiveMorRecords(root,
       SnapshotManifest.head(root)))
-    graft.operators.SourceQueries.snapshotRestore(root, vUpd)
+    SnapshotTxn.snapshotRestore(root, vUpd)
     assert(spark.sql(s"SELECT CAST(SUM(v) AS BIGINT) FROM $cat.`t`")
       .head().getLong(0) === (1L to 30L).sum + 1000L,
       "restore forward re-applies the whole record state")

@@ -5,7 +5,6 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.SourceQueries
 
 /** PARTITION-SPEC EVOLUTION end to end ([[SnapshotManifest
   * .partitionSpecs]], the union-of-specs read in [[SnapshotTable]],
@@ -209,7 +208,7 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
       .write.format("graft-snapshot")
       .option("keyCol", "id").option("partCol", "day")
       .mode("append").save(root.toString)                        // v4
-    SourceQueries.snapshotVacuum(root, Set(3, 4))
+    SnapshotTxn.snapshotVacuum(root, Set(3, 4))
     // the normalize (v5) republished the #partspec line while v3's
     // copy survives — the fold must still be one spec per arity, or
     // the union read double-serves every new-spec partition
@@ -449,7 +448,7 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
       .write.format("graft-snapshot")
       .option("keyCol", "id").option("partCol", "day")
       .mode("append").save(root.toString)                     // v3
-    SourceQueries.snapshotVacuum(root, Set(3))
+    SnapshotTxn.snapshotVacuum(root, Set(3))
     assert(!java.nio.file.Files.exists(
       root.resolve("manifests").resolve("v2.manifest")),
       "the #partspec-bearing manifest must actually have expired")
@@ -478,7 +477,7 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
     assert(SnapshotManifest.read(root, 3).keys
       .map(_.split("/", -1).length).toSet === Set(1, 2),
       "fixture must actually span two layouts")
-    val feed = SourceQueries.changeRows(spark, root, 2, 3, "id", "v")
+    val feed = SnapshotTxn.changeRows(spark, root, 2, 3, "id", "v")
       .select(col("k"), col("price"), col("old_price"), col("change_type"))
       .collect()
       .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)),

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.SourceQueries
 
 /** METADATA-ONLY COLUMN RENAME ([[SnapshotRename]]) end to end. The
   * defining property everywhere: pre-rename files keep their footer
@@ -42,7 +41,7 @@ class SnapshotRenameSpec extends SparkSpec {
       .option("keyCol", "k").option("partCol", "pt")
       .mode("append").save(root.toString)
     // raw metadata-only rename commit (the DDL door publishes the same)
-    SourceQueries.snapshotCheckEvent(spark, root, "#rename\tprice\tamount")
+    SnapshotTxn.snapshotCheckEvent(spark, root, "#rename\tprice\tamount")
     val df = SnapshotTable.read(spark, root, 2)
     assert(df.columns.contains("amount") && !df.columns.contains("price"))
     val got = df.filter(col("amount") > 150.0)
@@ -174,13 +173,13 @@ class SnapshotRenameSpec extends SparkSpec {
       .write.format("graft-snapshot")
       .option("keyCol", "k").option("partCol", "pt")
       .mode("append").save(root.toString)                         // v1
-    SourceQueries.snapshotCheckEvent(spark, root, "#rename\tprice\tamount")
+    SnapshotTxn.snapshotCheckEvent(spark, root, "#rename\tprice\tamount")
     frame(Seq(3L -> 99.0))                                        // v3
       .withColumnRenamed("price", "amount")
       .write.format("graft-snapshot")
       .option("keyCol", "k").option("partCol", "pt")
       .mode("append").save(root.toString)
-    val ch = SourceQueries.changeRows(spark, root, 2, 3,
+    val ch = SnapshotTxn.changeRows(spark, root, 2, 3,
       keyCol = "k", valCol = "amount")
       .select(col("k"), col("price"), col("old_price"), col("change_type"))
       .collect()

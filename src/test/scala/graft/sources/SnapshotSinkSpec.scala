@@ -80,7 +80,7 @@ class SnapshotSinkSpec extends SparkSpec {
     // version (v4) re-basing the per-app watermark fold — the reason a
     // marker that lived ONLY in an expired manifest can't be lost
     // (SnapshotVacuumMetadataSpec pins that interleaved-writer case).
-    graft.operators.SourceQueries.snapshotVacuum(root, Set(3))
+    SnapshotTxn.snapshotVacuum(root, Set(3))
     assert(!root.resolve("manifests").resolve("v1.manifest")
       .toFile.exists())
     assert(SnapshotManifest.head(root) === 4)
@@ -143,7 +143,7 @@ class SnapshotSinkSpec extends SparkSpec {
     frame(Seq((1L, "O", 10.0))).write.format("graft-snapshot")
       .option("keyCol", "o_orderkey").option("partCol", "o_ym")
       .mode("append").save(root.toString)
-    graft.operators.SourceQueries.snapshotBranchCreate(root, "stream")
+    SnapshotTxn.snapshotBranchCreate(root, "stream")
     val params = Map("path" -> root.toString, "branch" -> "stream",
       "txnAppId" -> "br-app", "keyCol" -> "o_orderkey",
       "partCol" -> "o_ym")
@@ -156,7 +156,7 @@ class SnapshotSinkSpec extends SparkSpec {
     assert(stateOf(root) === Set((1L, 10.0)))
     val broot = SnapshotBranches.root(root, "stream")
     assert(SnapshotManifest.head(broot) === 3) // base + 2 micro-batches
-    graft.operators.SourceQueries.snapshotFastForward(root, "stream")
+    SnapshotTxn.snapshotFastForward(root, "stream")
     assert(stateOf(root) === Set((1L, 11.0), (2L, 20.0)),
       "fastforward publishes the streamed state atomically")
   }
@@ -289,7 +289,7 @@ class SnapshotSinkSpec extends SparkSpec {
 
     // changefeed parity: the records-only version streams its doomed
     // keys as delete events with exact pre-images
-    val ch = graft.operators.SourceQueries
+    val ch = SnapshotTxn
       .changeRows(spark, root, vPre, v, keyCol = "id", valCol = "v")
       .collect()
     assert(ch.length === 3 && ch.forall(_.getString(3) === "delete"))
@@ -364,7 +364,7 @@ class SnapshotSinkSpec extends SparkSpec {
       .head().getLong(0) === 31L)
 
     // compact materializes both planes; reads unchanged
-    graft.operators.SourceQueries.snapshotCompact(spark, root, 2)
+    SnapshotTxn.snapshotCompact(spark, root, 2)
     val vc = SnapshotManifest.head(root)
     assert(!SnapshotManifest.hasLiveMorRecords(root, vc))
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.`t`")

@@ -208,7 +208,7 @@ class SnapshotSpjSpec extends SparkSpec {
     val hotDir = base.resolve("a").resolve("d9-hot").resolve("id_p=0")
     hotKeys.map(i => (i, i.toDouble)).toDF("id", "v").repartition(3)
       .write.parquet(hotDir.toString)
-    graft.operators.SourceQueries.snapshotReplacePartitions(s, rootA,
+    SnapshotTxn.snapshotReplacePartitions(s, rootA,
       SnapshotManifest.head(rootA), Set("0"),
       Map("0" -> hotDir.toString),
       org.apache.spark.sql.types.StructType(Seq(
@@ -276,7 +276,7 @@ class SnapshotSpjSpec extends SparkSpec {
     // evolve a's layout: its entries now predate the current spec, so
     // the catalog serves the union-of-specs table — which reports NO
     // KeyGroupedPartitioning; the join must shuffle, never mis-align
-    graft.operators.SourceQueries.snapshotEvolvePartitioning(
+    SnapshotTxn.snapshotEvolvePartitioning(
       s, base.resolve("a"), "truncate(2, day)")
     val expected = (1 to 400).map(i => i + 2.0 * i).sum
     val q = joinDf(s, cat)
@@ -290,7 +290,7 @@ class SnapshotSpjSpec extends SparkSpec {
     // appended here is NOT covered by `id = id` alone, so the honest
     // post-migrate expectation stays `exact + shuffle` (Spark's
     // join-keys-subset opt-in is a separate trade) — pin exactness
-    graft.operators.SourceQueries.snapshotMigrateLayout(
+    SnapshotTxn.snapshotMigrateLayout(
       s, base.resolve("a"), 1000)
     val q2 = joinDf(s, cat)
     assert(q2.collect().head.getDouble(0) === expected)

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.SourceQueries
 
 /** SAFE TYPE WIDENING (`ALTER TABLE … ALTER COLUMN c TYPE t`) as a
   * `#schema` overlay:
@@ -220,7 +219,7 @@ class SnapshotWidenColumnSpec extends SparkSpec {
       .write.format("graft-snapshot")
       .option("keyCol", "id").option("partCol", "day")
       .mode("append").save(root.toString)                          // v3
-    SourceQueries.snapshotVacuum(root, Set(3))
+    SnapshotTxn.snapshotVacuum(root, Set(3))
     val meta = SnapshotMeta.read(root).get
     assert(SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
       ("n").dataType.simpleString === "bigint",

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.SnapshotTxn
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -70,7 +71,7 @@ class SnapshotChangefeedSpec extends SparkSpec {
       .write.format("graft-snapshot")
       .option("keyCol", "o_orderkey").option("partCol", "o_ym")
       .mode("append").save(root.toString)
-    SourceQueries.snapshotBranchCreate(root, "stage")
+    SnapshotTxn.snapshotBranchCreate(root, "stage")
     frame(Seq((2L, "O", 20.0)), "2024-01")
       .write.format("graft-snapshot").option("branch", "stage")
       .option("keyCol", "o_orderkey").option("partCol", "o_ym")
@@ -105,13 +106,13 @@ class SnapshotChangefeedSpec extends SparkSpec {
     drainOnce(root.toString, out.getAbsolutePath, chk.getAbsolutePath)
     val got = changes(spark.read.parquet(out.getAbsolutePath))
 
-    val base = SourceQueries.snapshotRead(spark, root, 1)
+    val base = SnapshotTxn.snapshotRead(spark, root, 1)
       .select(lit(1).as("version"), col("o_orderkey").as("k"),
         col("o_totalprice").as("price"),
         lit(null).cast("double").as("old_price"),
         lit("insert").as("change_type"), lit(1).as("alive"))
     def cdc(vFrom: Int, vTo: Int) =
-      SourceQueries.changeRows(spark, root, vFrom, vTo)
+      SnapshotTxn.changeRows(spark, root, vFrom, vTo)
         .select(lit(vTo).as("version"), col("k"),
           col("price").cast("double").as("price"),
           col("old_price").cast("double").as("old_price"),
@@ -168,7 +169,7 @@ class SnapshotChangefeedSpec extends SparkSpec {
       fromVersion = 3)
     val got = spark.read.parquet(out.getAbsolutePath)
     assert(got.select(min(col("version"))).head().getInt(0) === 3)
-    val expected = SourceQueries.changeRows(spark, root, 2, 3).count()
+    val expected = SnapshotTxn.changeRows(spark, root, 2, 3).count()
     assert(got.count() === expected)
   }
 
@@ -184,7 +185,7 @@ class SnapshotChangefeedSpec extends SparkSpec {
     // drop BOTH rows from the changefeed
     nf(Seq((1L, Some(5.0)), (2L, None)))
       .write.format("graft-snapshot").option("keyCol", "o_orderkey").mode("append").save(root)
-    val cdc = SourceQueries.changeRows(spark,
+    val cdc = SnapshotTxn.changeRows(spark,
         java.nio.file.Paths.get(root), 1, 2)
       .collect().map(r => (r.getLong(0),
         Option(r.get(1)).map(_.asInstanceOf[Double]),
@@ -210,7 +211,7 @@ class SnapshotChangefeedSpec extends SparkSpec {
 
   test("a CDF consumer maintains an MV incrementally, exactly") {
     val got = SourceQueries.streamingCdfMv(spark, sf0001).head()
-    val v3 = SourceQueries.snapshotRead(
+    val v3 = SnapshotTxn.snapshotRead(
       spark, SourceQueries.snapshotFixture(spark, sf0001), 3)
     val expect = v3.agg(count(lit(1)).cast("bigint"),
       sum(round(col("o_totalprice") * lit(1000000L)).cast("bigint"))
