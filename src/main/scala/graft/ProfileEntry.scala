@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 
@@ -17,27 +16,7 @@ object ProfileEntry {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      // Multi-dir reads beyond this many paths launch a distributed
-      // listing job (one task per dir) before any scan: the store's
-      // many-leaf tables (days x bucket layouts: 124-312 leaf dirs)
-      // paid a listing job PER read - staging re-read, stats sidecar,
-      // Bloom build - on a LOCAL filesystem where serial driver
-      // listing is microseconds per dir. 512 keeps the distributed
-      // path for genuinely huge tables; an object-store deployment
-      // would lower it back toward the 32 default.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = HarnessSession()
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
     val tasks = new java.util.concurrent.atomic.AtomicLong

@@ -1,46 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare, and
+  * status.json (`{entry: "ok" | {"error": msg}}`) so a failed entry is
+  * recorded as failed rather than read as a missing dump. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args = subset of query names to dump (iteration aid)
     val wanted = if (args.length > 2) SparkEntry.queries.filter(q => args.drop(2).contains(q._1))
                  else SparkEntry.queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // harness-scale scan splits (see Bench.scala for the sizing rule)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      // Multi-dir reads beyond this many paths launch a distributed
-      // listing job (one task per dir) before any scan: the store's
-      // many-leaf tables (days x bucket layouts: 124-312 leaf dirs)
-      // paid a listing job PER read - staging re-read, stats sidecar,
-      // Bloom build - on a LOCAL filesystem where serial driver
-      // listing is microseconds per dir. 512 keeps the distributed
-      // path for genuinely huge tables; an object-store deployment
-      // would lower it back toward the 32 default.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = HarnessSession()
     new java.io.File(outDir).mkdirs()
-    wanted.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    // a previous run's status must not vouch for this run's dumps
+    Files.deleteIfExists(Paths.get(s"$outDir/status.json"))
+    val status = wanted.toSeq.map { case (name, fn) =>
+      val error =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(s"${e.getClass.getName}: ${e.getMessage}")
+        }
       // drop checkpoint/cache blocks between queries (see Bench)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
+      name -> error
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -57,6 +44,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/status.json"), status.sortBy(_._1)
+      .map { case (k, e) =>
+        s"${q(k)}: ${e.fold(q("ok"))(m => s"{${q("error")}: ${q(m)}}")}"
+      }.mkString("{", ",\n", "}"))
     spark.stop()
   }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.core.Tables
 import graft.functions._
+import graft.sources.SnapshotManifest
 import graft.sources.SnapshotTxn._
 
 /** Source/sink breadth (SURVEY.md §2.3): the reference engine reads whole
@@ -1471,7 +1472,7 @@ object SourceQueries {
     // per-file Bloom bitsets over every leaf dir any version references,
     // so any version read through the connector can file-skip point
     // lookups (files are write-once: the index never goes stale)
-    val allDirs = (1 to 3).flatMap(v => readManifest(root, v).values).distinct
+    val allDirs = (1 to 3).flatMap(v => SnapshotManifest.read(root, v).values).distinct
     graft.sources.SnapshotBloom.build(s, allDirs, "o_orderkey",
       root.resolve("bloomidx").toString,
       dataSchema = Some(orders.schema))
@@ -1983,7 +1984,7 @@ object SourceQueries {
         .start(store.toString)
         .awaitTermination()
     } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    require(headVersion(store) == 1,
+    require(SnapshotManifest.head(store) == 1,
       "staged micro-batches must never advance main")
     val (v, _, _) = snapshotFastForward(store, "staging")
     require(v == 2, s"the publish must be exactly main v2, got $v")
@@ -2045,7 +2046,7 @@ object SourceQueries {
       _.write.format("graft-snapshot").option("branch", "staging")
         .option("keyCol", "o_orderkey").option("partCol", "o_ym")
         .mode("append").save(store.toString))
-    require(headVersion(store) == 1,
+    require(SnapshotManifest.head(store) == 1,
       "staged commits must never advance main")
     def feed(root: java.nio.file.Path, qName: String, arm: String)
         : DataFrame = {
@@ -2489,7 +2490,7 @@ object SourceQueries {
          |WHERE o_ym BETWEEN '1995-01' AND '1995-06'""".stripMargin)
     val root = base.resolve("orders_mor")
     def dataFiles(v: Int): Int =
-      readManifest(root, v).values.toSeq.map(d =>
+      SnapshotManifest.read(root, v).values.toSeq.map(d =>
         Option(new java.io.File(d).listFiles()).getOrElse(Array.empty)
           .count(f => f.isFile && f.getName.endsWith(".parquet"))).sum
     val vPre = graft.sources.SnapshotManifest.head(root)
@@ -2564,7 +2565,7 @@ object SourceQueries {
          |FROM graft_umor_orders_src""".stripMargin)
     val root = base.resolve("orders_umor")
     def dataFiles(v: Int): Int =
-      readManifest(root, v).values.toSeq.map(d =>
+      SnapshotManifest.read(root, v).values.toSeq.map(d =>
         Option(new java.io.File(d).listFiles()).getOrElse(Array.empty)
           .count(f => f.isFile && f.getName.endsWith(".parquet"))).sum
     val vPre = graft.sources.SnapshotManifest.head(root)
@@ -3788,8 +3789,8 @@ object SourceQueries {
     */
   def tableDiff(s: SparkSession, dir: String): DataFrame = {
     val root = snapshotFixture(s, dir)
-    val m1 = readManifest(root, 1)
-    val m3 = readManifest(root, 3)
+    val m1 = SnapshotManifest.read(root, 1)
+    val m3 = SnapshotManifest.read(root, 3)
     val changed = (m1.keySet ++ m3.keySet).toSeq.sorted
       .filter(ym => m1.get(ym) != m3.get(ym))
     val oldSide = s.read.parquet(changed.flatMap(m1.get): _*)
@@ -3929,8 +3930,8 @@ object SourceQueries {
     */
   def mvIncrementalRefresh(s: SparkSession, dir: String): DataFrame = {
     val root = snapshotFixture(s, dir)
-    val m1 = readManifest(root, 1)
-    val m3 = readManifest(root, 3)
+    val m1 = SnapshotManifest.read(root, 1)
+    val m3 = SnapshotManifest.read(root, 3)
     def monthAgg(df: DataFrame): DataFrame = df
       .groupBy(col("o_ym"), col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
@@ -3960,7 +3961,7 @@ object SourceQueries {
   // the repointed months through the manifest store's CAS commit — so
   // readers keep seeing a consistent snapshot, history stays readable,
   // and two racing compactors can't double-publish (the loser's attempt
-  // dir is vacuumable garbage). Cost is O(hot partitions) per pass and
+  // dir is deleted). Cost is O(hot partitions) per pass and
   // O(metadata) when nothing is hot — at 100 TB that is the difference
   // between "compaction is a continuous background task" and "compaction
   // is an outage".
@@ -4041,9 +4042,8 @@ object SourceQueries {
   private[operators] def compactHotPartitions(s: SparkSession,
       root: java.nio.file.Path, threshold: Int,
       filesPerMonth: Option[Int] = None,
-      zorder: Boolean = false): Seq[String] = {
-    val head = headVersion(root)
-    val manifest = readManifest(root, head)
+      zorder: Boolean = false): Seq[String] = commit(root) { a =>
+    val manifest = SnapshotManifest.read(root, a.head)
     val counts = manifest.map { case (ym, p) =>
       ym -> Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
         .count(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -4057,9 +4057,7 @@ object SourceQueries {
           org.apache.commons.io.FileUtils.sizeOf(new java.io.File(p))).max
         (maxBytes / (256L << 20) + 1).toInt
       }
-      val out = root.resolve(
-        s"d${head + 1}-${java.util.UUID.randomUUID.toString.take(8)}")
-        .toString
+      val out = a.scratch().toString
       val rows = s.read.parquet(hotDirs: _*)
       val clustered =
         if (!zorder)
@@ -4087,8 +4085,8 @@ object SourceQueries {
             .drop("z_day", "zval")
         }
       clustered.write.partitionBy("o_ym_p").parquet(out)
-      writeManifest(root, head + 1,
-        manifest ++ hot.map(ym => ym -> s"$out/o_ym_p=$ym"))
+      a.publish(manifest ++ hot.map(ym => ym -> s"$out/o_ym_p=$ym"),
+        written = Some(Written(s, hot.toSet, rows.schema)))
       hot
     }
   }
@@ -4104,7 +4102,7 @@ object SourceQueries {
   def incrementalCompact(s: SparkSession, dir: String): DataFrame = {
     val root = incrCompactFixture(s, dir)
     compactHotPartitions(s, root, IncrCompactThreshold)
-    snapshotRead(s, root, headVersion(root))
+    snapshotRead(s, root, SnapshotManifest.head(root))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         countDistinct(col("o_ym")).as("n_months"),
@@ -4133,7 +4131,7 @@ object SourceQueries {
     compactHotPartitions(s, root, IncrCompactThreshold, zorder = true)
     val maxCust = Tables.orders(s, dir)
       .agg(max(col("o_custkey"))).head().getLong(0)
-    snapshotRead(s, root, headVersion(root))
+    snapshotRead(s, root, SnapshotManifest.head(root))
       .filter(col("o_orderdate") >= lit("1996-01-05") &&
         col("o_orderdate") < lit("1996-03-25") &&
         col("o_custkey") <= lit(maxCust / 8))

@@ -78,13 +78,6 @@ object GraftExtensions {
       em.extraStrategies = em.extraStrategies :+ AsOfJoinStrategy
   }
 
-  /** `graft_min_k` as a Column, for DataFrame-API callers. */
-  def minK(spark: SparkSession, c: Column, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_min_k", c,
-      org.apache.spark.sql.functions.lit(k))
-  }
-
   /** `graft_count_matches` as a Column, for DataFrame-API callers. */
   def countMatches(spark: SparkSession, c: Column, re: String): Column = {
     register(spark)

@@ -583,6 +583,13 @@ object SnapshotManifest {
     headerLines(root, version).exists(l =>
       l.startsWith("#delete\t") || l.startsWith("#upsert\t"))
 
+  /** One merge-on-read record line, `<tag>\t<pv>\t<n>\t<dir>` with
+    * `tag` `#delete` or `#upsert` — the encoder [[morRecordsWithCounts]]
+    * parses.
+    */
+  def morRecord(tag: String, pv: String, n: Long, dir: String): String =
+    s"$tag\t$pv\t$n\t$dir"
+
   /** Shared `<pv>\t<n>\t<dir>` record parse for the two merge-on-read
     * planes (`n = -1` for count-less legacy `#delete` lines).
     */
@@ -1182,6 +1189,17 @@ object SnapshotFiles {
     finally JFiles.deleteIfExists(tmp)
   }
 
+  /** Publish `to`'s version `toV` sidecar as `from`'s version `fromV`
+    * one, each entry passed through `rewrite` — for publishes whose
+    * files ARE that version's (restore, branch fork) or hard links to
+    * them (clone, fast-forward). No source sidecar, no copy: readers
+    * fall back to listing.
+    */
+  def copy(from: JPath, fromV: Int, to: JPath, toV: Int,
+           rewrite: FileEntry => FileEntry = identity): Unit =
+    read(from, fromV).foreach(fm =>
+      write(to, toV, fm.toSeq.sortBy(_._1).flatMap(_._2).map(rewrite)))
+
   /** partitionValue -> file entries, or None if the version predates
     * file manifests (reader falls back to lazy listing).
     */
@@ -1677,16 +1695,6 @@ object SnapshotPartitionValues {
   def leafSuffix(mirrors: Seq[String], pv: String): String =
     mirrors.zip(segments(pv, mirrors.length))
       .map { case (m, v) => s"$m=$v" }.mkString("/")
-
-  /** The LOGICAL (unescaped) string values of a pv — what a rewrite
-    * must re-attach as mirror columns before `partitionBy`, which
-    * re-escapes; feeding it the escaped form would double-escape
-    * (`a%3Ab` → `a%253Ab`) and publish manifest entries pointing at
-    * dirs that don't exist.
-    */
-  def logicalValues(pv: String, n: Int): Seq[String] =
-    segments(pv, n).map(org.apache.spark.sql.catalyst.catalog
-      .ExternalCatalogUtils.unescapePathName)
 
   def row(pv: String, schema: StructType): InternalRow = {
     val raw = if (schema.length == 1) Array(pv) else pv.split("/", -1)
@@ -2497,27 +2505,17 @@ private[sources] object SnapshotDoor {
       case Some(other) => throw new IllegalArgumentException(
         s"distribution must be hash or none, got $other")
     }
-    // CAS retry loop: of N racers exactly one publishes each version;
-    // losers rebase on the new head and re-apply the key-based delta
-    val MaxAttempts = 5
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val head = SnapshotManifest.head(root)
-      try {
-        if (head == 0)
-          SnapshotTxn.snapshotInit(spark, root, data,
-            partCols, bloomIndexKey, txn, keyCol, distribute)
-        else
-          SnapshotTxn.snapshotCommit(spark, root, head,
-            head + 1, data, insert, keyCol, partCols, bloomIndexKey, txn,
-            distribute)
-        committed = true
-      } catch {
-        case e: SnapshotTxn.SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-      }
+    // of N racers exactly one publishes each version; losers rebase on
+    // the new head and re-apply the key-based delta (the engine's
+    // pinned single-attempt commits, re-run by the retrying one)
+    SnapshotTxn.commit(root) { a =>
+      if (a.head == 0)
+        SnapshotTxn.snapshotInit(spark, root, data,
+          partCols, bloomIndexKey, txn, keyCol, distribute)
+      else
+        SnapshotTxn.snapshotCommit(spark, root, a.head,
+          a.version, data, insert, keyCol, partCols, bloomIndexKey, txn,
+          distribute)
     }
   }
 }

@@ -83,10 +83,6 @@ object SnapshotTransforms {
         s"unknown layout transform '$other' on ${f.name}")
     }
 
-  /** True when any field of the spec carries a non-identity transform. */
-  def hasTransforms(spec: StructType): Boolean =
-    spec.fields.exists(f => of(f) != Identity)
-
   /** The hidden (non-identity) mirror names of a spec — excluded from
     * the SQL table schema.
     */

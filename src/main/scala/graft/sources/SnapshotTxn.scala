@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.nio.file.Path
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -19,7 +21,7 @@ object SnapshotTxn {
     * partition write (guide §6 / the Iceberg `write.distribution-mode
     * = hash` discipline, and what the SQL door's
     * `RequiresDistributionAndOrdering` already declares —
-    * [[graft.sources.SnapshotRowLevel]]): without it every input task
+    * [[SnapshotRowLevel]]): without it every input task
     * opens a writer per partition value it sees, committing
     * tasks × partitions tiny files per version. The round-16 baseline
     * measured exactly that — ~1,250-task scan floods on the snapshot
@@ -96,10 +98,9 @@ object SnapshotTxn {
   // horizon and sweeping unreferenced dirs.
 
   /** Two concurrent committers tried to publish the same version: the
-    * loser's commit did NOT land (its data dirs are unreferenced and a
-    * later vacuum sweeps them). Retry = re-read the new head, rebase
+    * loser's commit did NOT land. Retry = re-read the new head, rebase
     * the delta, commit again — the Iceberg/Delta optimistic-concurrency
-    * loop.
+    * loop, run by [[commit]].
     */
   final class SnapshotConflictException(version: Int)
     extends RuntimeException(
@@ -115,10 +116,10 @@ object SnapshotTxn {
     * racing committers overwrote the first's manifest, losing its
     * commit with no error). Of N racers publishing the same version,
     * exactly one link succeeds; the rest get
-    * [[SnapshotConflictException]] and their data dirs stay orphaned
-    * for vacuum.
+    * [[SnapshotConflictException]] ([[commit]] reclaims their scratch
+    * dirs).
     */
-  private[graft] def writeManifest(root: java.nio.file.Path, version: Int,
+  private[graft] def writeManifest(root: Path, version: Int,
                                        entries: Map[String, String],
                                        txn: Option[(String, Long)] = None,
                                        schemaJson: Option[String] = None,
@@ -138,11 +139,11 @@ object SnapshotTxn {
     // left to filter. `deleteCarryFrom` overrides the parent (RESTORE
     // carries the restored version's records — whole-state rollback
     // resurrects rows a later MoR delete doomed, by design).
-    val carryV = deleteCarryFrom.orElse(graft.sources.SnapshotManifest
+    val carryV = deleteCarryFrom.orElse(SnapshotManifest
       .versionsWithMtime(root).map(_._1).filter(_ < version)
       .maxOption)
     val carried: Seq[String] = carryV.toSeq.flatMap { pv =>
-      val parentEntries = graft.sources.SnapshotManifest.read(root, pv)
+      val parentEntries = SnapshotManifest.read(root, pv)
       // records carry iff the partition's BASE entry is unchanged —
       // including partitions with NO base entry on either side (an
       // upsert-delta-only partition, whose rows live entirely under
@@ -150,21 +151,22 @@ object SnapshotTxn {
       // the records into its output, an untouched entry did not
       def sameDir(p: String): Boolean =
         entries.get(p).map(e =>
-          graft.sources.SnapshotManifest.resolvePath(root, e)) ==
+          SnapshotManifest.resolvePath(root, e)) ==
           parentEntries.get(p)
       def carryOf(tag: String,
                   recs: Map[String, Seq[(String, Long)]]): Seq[String] =
         recs.toSeq.sortBy(_._1).flatMap { case (p, rs) =>
-          if (sameDir(p)) rs.map { case (path, n) => s"$tag\t$p\t$n\t$path" }
+          if (sameDir(p)) rs.map { case (path, n) =>
+            SnapshotManifest.morRecord(tag, p, n, path) }
           else Nil
         }
-      carryOf("#delete", graft.sources.SnapshotManifest
+      carryOf("#delete", SnapshotManifest
         .deleteRecordsWithCounts(root, pv)) ++
-        carryOf("#upsert", graft.sources.SnapshotManifest
+        carryOf("#upsert", SnapshotManifest
           .upsertRecordsWithCounts(root, pv))
     }
     // `#`-prefixed metadata records ride FIRST inside the same atomic
-    // publish (see graft.sources.SnapshotManifest): a streaming
+    // publish (see SnapshotManifest): a streaming
     // micro-batch's exactly-once marker and a widening commit's
     // evolved schema commit as ONE unit with the version — atomic and
     // CAS-serialized, where a sidecar written before or after the
@@ -178,7 +180,7 @@ object SnapshotTxn {
         if (!l.startsWith("#delete\t") && !l.startsWith("#upsert\t")) l
         else {
           val i = l.lastIndexOf('\t')
-          l.substring(0, i + 1) + graft.sources.SnapshotManifest
+          l.substring(0, i + 1) + SnapshotManifest
             .relativizePath(root, l.substring(i + 1))
         }
       } ++
@@ -186,7 +188,7 @@ object SnapshotTxn {
       // becomes one movable unit — RENAME TABLE and the staged-CTAS
       // publish are a single directory rename, no metadata rewrites
       entries.toSeq.sorted.map { case (ym, p) =>
-        s"$ym\t${graft.sources.SnapshotManifest.relativizePath(root, p)}"
+        s"$ym\t${SnapshotManifest.relativizePath(root, p)}"
       }
     val tmp = mdir.resolve(
       s"v$version.tmp.${java.util.UUID.randomUUID.toString.take(8)}")
@@ -199,15 +201,125 @@ object SnapshotTxn {
     } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
-  /** Highest published version, or 0 if none. (Read half shared with
-    * the [[graft.sources.SnapshotFileIndex]] connector.)
+  /** Attempts per [[commit]] before the last conflict reaches the
+    * caller: every round of racers has a winner, so five straight
+    * losses means the committer is starved, not unlucky.
     */
-  private[graft] def headVersion(root: java.nio.file.Path): Int =
-    graft.sources.SnapshotManifest.head(root)
+  private[graft] val MaxAttempts = 5
 
-  private[graft] def readManifest(root: java.nio.file.Path,
-                                      version: Int): Map[String, String] =
-    graft.sources.SnapshotManifest.read(root, version)
+  /** The partitions an attempt wrote, profiled into the stats sidecar
+    * under the schema they were written with.
+    */
+  private[graft] final case class Written(s: SparkSession,
+      pvs: Set[String], schema: org.apache.spark.sql.types.StructType)
+
+  /** One try of a [[commit]]: it rebases on `head`, aims at `version`,
+    * writes under its [[scratch]] dirs and ends in [[publish]].
+    */
+  private[graft] final class Attempt private[SnapshotTxn] (
+      val root: Path, val head: Int) {
+    val version: Int = head + 1
+    private var dirs: List[Path] = Nil
+    private[SnapshotTxn] var linked = false
+
+    /** A committer-private attempt root `<plane><version>-<tag><hex>`
+      * (two racers must never interleave files in one dir), deleted
+      * if this attempt loses the link.
+      */
+    def scratch(plane: String = "d", tag: String = ""): Path = {
+      val p = root.resolve(
+        s"$plane$version-$tag${java.util.UUID.randomUUID.toString.take(8)}")
+      dirs ::= p
+      p
+    }
+
+    private[SnapshotTxn] def dropScratch(): Unit =
+      dirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+
+    /** Publish `version`: the manifest link (the CAS), then the
+      * [[SnapshotFiles]] sidecar — stats rows COLLECTED (one
+      * distributed pass) for the `written` partitions only, and copied
+      * from the parent's sidecar for every other entry, O(touched)
+      * maintenance. If the parent has carried partitions but no sidecar
+      * (a legacy store), no sidecar is written: profiling the carried
+      * dirs would be O(table), and the reader's lazy-listing fallback
+      * is sound. A bootstrap's `table.meta` is written by the link
+      * winner only, before the sidecar.
+      */
+    def publish(entries: Map[String, String],
+                txn: Option[(String, Long)] = None,
+                schemaJson: Option[String] = None,
+                extraMeta: Seq[String] = Nil,
+                written: Option[Written] = None,
+                meta: Option[SnapshotMeta.Meta] = None): Unit = {
+      writeManifest(root, version, entries, txn, schemaJson, extraMeta)
+      linked = true
+      meta.foreach(SnapshotMeta.write(root, _))
+      val touched = written.fold(Set.empty[String])(_.pvs)
+      val carried = entries.keySet -- touched
+      val carriedRows: Option[Seq[SnapshotFiles.FileEntry]] =
+        if (carried.isEmpty) Some(Nil)
+        else SnapshotFiles.read(root, head).map(parent =>
+          carried.toSeq.sorted.flatMap(p => parent.getOrElse(p, Nil)))
+      carriedRows.foreach { cr =>
+        val fresh = written.toSeq.flatMap(w => SnapshotFiles.collect(w.s,
+          w.pvs.toSeq.sorted.flatMap(p => entries.get(p).map(p -> _)),
+          w.schema))
+        SnapshotFiles.write(root, version, cr ++ fresh)
+      }
+    }
+  }
+
+  /** THE commit loop: run `body` as an optimistic-concurrency attempt
+    * on the current head until one attempt's [[Attempt.publish]] wins
+    * the link, up to [[MaxAttempts]]; the last
+    * [[SnapshotConflictException]] reaches the caller. A losing
+    * attempt's scratch dirs are deleted — nothing references them. Any
+    * failure after a won link leaves them in place: they may be
+    * published state, and vacuum never sweeps referenced dirs.
+    *
+    * `base` pins a single attempt to that parent, for callers whose
+    * delta cannot be rebased (a group replacement, a task-written MoR
+    * delta, an explicit `fromV`): if the head has moved, the conflict
+    * propagates before any data is written. The write door runs the
+    * pinned [[snapshotInit]]/[[snapshotCommit]] inside an unpinned
+    * commit, which re-runs them on each new head.
+    */
+  private[graft] def commit[A](root: Path, base: Option[Int] = None)(
+      body: Attempt => A): A = {
+    var failures = 0
+    while (true) {
+      val head = SnapshotManifest.head(root)
+      val a = new Attempt(root, base.getOrElse(head))
+      try {
+        if (a.head != head) throw new SnapshotConflictException(a.version)
+        return body(a)
+      } catch {
+        case e: SnapshotConflictException if !a.linked =>
+          a.dropScratch()
+          failures += 1
+          if (base.nonEmpty || failures >= MaxAttempts) throw e
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Guard for metadata planes that re-home or re-interpret data dirs
+    * without a delete-aware read behind them (clone's link plane,
+    * branch forks, spec evolution's union-of-specs arms): live
+    * merge-on-read records would silently resurrect doomed rows
+    * there, so these operations require a compact first — an honest
+    * O(record partitions) materialization, not a correctness gamble.
+    */
+  private def refuseLiveDeletes(root: Path,
+                                op: String,
+                                version: Option[Int] = None): Unit = {
+    val v = version.getOrElse(SnapshotManifest.head(root))
+    require(v == 0 || !SnapshotManifest
+        .hasLiveMorRecords(root, v),
+      s"$op on a store version with live merge-on-read records: " +
+        "materialize them with CALL snap.compact first")
+  }
 
   /** Roll the table back to `toVersion` by publishing a NEW head whose
     * manifest is a verbatim copy of `toVersion`'s partition map — the
@@ -230,40 +342,20 @@ object SnapshotTxn {
     *    the head, so the loser throws [[SnapshotConflictException]]
     *    and the caller re-decides against the new head.
     */
-  /** Guard for metadata planes that re-home or re-interpret data dirs
-    * without a delete-aware read behind them (clone's link plane,
-    * branch forks, spec evolution's union-of-specs arms): live
-    * merge-on-read records would silently resurrect doomed rows
-    * there, so these operations require a compact first — an honest
-    * O(record partitions) materialization, not a correctness gamble.
-    */
-  private def refuseLiveDeletes(root: java.nio.file.Path,
-                                op: String,
-                                version: Option[Int] = None): Unit = {
-    val v = version.getOrElse(headVersion(root))
-    require(v == 0 || !graft.sources.SnapshotManifest
-        .hasLiveMorRecords(root, v),
-      s"$op on a store version with live merge-on-read records: " +
-        "materialize them with CALL snap.compact first")
-  }
-
-  private[graft] def snapshotRestore(root: java.nio.file.Path,
+  private[graft] def snapshotRestore(root: Path,
                                      toVersion: Int): (Int, Int) = {
     val mf = root.resolve("manifests").resolve(s"v$toVersion.manifest")
     require(java.nio.file.Files.exists(mf),
       s"version $toVersion is not published (or was vacuumed) — " +
         "cannot restore to it")
-    val entries = readManifest(root, toVersion)
-    val newV = headVersion(root) + 1
+    val entries = SnapshotManifest.read(root, toVersion)
+    val newV = SnapshotManifest.head(root) + 1
     // delete records carry from the RESTORED version, not the parent:
     // restore is whole-state rollback — a later MoR delete's records
     // must not survive into the restored head (its rows come back),
     // and the restored version's own records must (its deletes hold)
     writeManifest(root, newV, entries, deleteCarryFrom = Some(toVersion))
-    graft.sources.SnapshotFiles.read(root, toVersion).foreach { fm =>
-      graft.sources.SnapshotFiles.write(root, newV,
-        fm.toSeq.sortBy(_._1).flatMap(_._2))
-    }
+    SnapshotFiles.copy(root, toVersion, root, newV)
     (newV, entries.size)
   }
 
@@ -296,11 +388,11 @@ object SnapshotTxn {
     * belongs to the source) and tags (they name source versions).
     * Returns (sourceVersion, nPartitions, nFiles).
     */
-  private[graft] def snapshotClone(srcRoot: java.nio.file.Path,
-      dstRoot: java.nio.file.Path,
+  private[graft] def snapshotClone(srcRoot: Path,
+      dstRoot: Path,
       version: Option[Int] = None): (Int, Int, Int) = {
     import java.nio.file.{Files => JF}
-    val head = headVersion(srcRoot)
+    val head = SnapshotManifest.head(srcRoot)
     require(head > 0, s"$srcRoot has no published versions to clone")
     val v = version.getOrElse(head)
     require(JF.exists(
@@ -310,44 +402,44 @@ object SnapshotTxn {
       "clone target must be a different table")
     require(!JF.exists(dstRoot.resolve("manifests")),
       s"clone target $dstRoot already exists — refusing to overwrite")
-    val meta = graft.sources.SnapshotMeta.read(srcRoot).getOrElse(
+    val meta = SnapshotMeta.read(srcRoot).getOrElse(
       throw new UnsupportedOperationException(
         "clone needs a table.meta layout declaration"))
     val mirrors = meta.partitionSchema.fields.map(_.name).toSeq
     val effective = org.apache.spark.sql.types.StructType(
-      graft.sources.SnapshotManifest
+      SnapshotManifest
         .effectiveDataSchema(srcRoot, meta.dataSchema)
         .fields.map(_.copy(nullable = true)))
-    val manifest = readManifest(srcRoot, v)
+    val manifest = SnapshotManifest.read(srcRoot, v)
     JF.createDirectories(dstRoot)
-    graft.sources.SnapshotMeta.write(dstRoot,
+    SnapshotMeta.write(dstRoot,
       meta.copy(dataSchema = effective))
     // under spec evolution a manifest mixes arities: each entry's leaf
     // name derives from ITS spec's mirror names (specs prefix-extend,
     // so the entry's segment count picks the spec)
-    val cloneSpecs = graft.sources.SnapshotManifest.partitionSpecs(
+    val cloneSpecs = SnapshotManifest.partitionSpecs(
       srcRoot, meta.partitionSchema)
     def mirrorsOf(pv: String): Seq[String] =
-      graft.sources.SnapshotManifest.specFor(pv, cloneSpecs)
+      SnapshotManifest.specFor(pv, cloneSpecs)
         .map(_.fieldNames.toSeq).getOrElse(mirrors)
     // leaf placement PRESERVES the source's root-relative dir layout
     // (round 15): the Bloom index's stored keys survive any root move
-    // through their root-RELATIVE form ([[graft.sources.SnapshotBloom
+    // through their root-RELATIVE form ([[SnapshotBloom
     // .load]]'s rename contract), so a clone that keeps `d3-ab12/...`
     // relative dirs gets the carried index's skipping for free —
     // the same trick RENAME TABLE relies on. Dirs outside the source
     // base (fork-shared branch data) fall back to a clone-owned `d1`.
     val srcBase = srcRoot.toAbsolutePath.normalize
-    def leafOf(pv: String): java.nio.file.Path = {
+    def leafOf(pv: String): Path = {
       val dir = java.nio.file.Paths.get(manifest(pv))
         .toAbsolutePath.normalize
       if (dir.startsWith(srcBase))
         dstRoot.resolve(srcBase.relativize(dir).toString)
-      else dstRoot.resolve("d1").resolve(graft.sources
-        .SnapshotPartitionValues.leafSuffix(mirrorsOf(pv), pv))
+      else dstRoot.resolve("d1").resolve(
+        SnapshotPartitionValues.leafSuffix(mirrorsOf(pv), pv))
     }
     var linked = 0
-    def linkFilesInto(srcDir: String, dst: java.nio.file.Path): Unit = {
+    def linkFilesInto(srcDir: String, dst: Path): Unit = {
       JF.createDirectories(dst)
       Option(new java.io.File(srcDir).listFiles()).getOrElse(Array.empty)
         .filter(_.isFile).foreach { f =>
@@ -375,7 +467,7 @@ object SnapshotTxn {
     // sidecars and `#upsert` delta dirs hard-link exactly like data
     // dirs — relative-layout-preserving, which also preserves their
     // `d<V>`/`u<V>` version STAMPS, so the record-scoping order
-    // ([[graft.sources.SnapshotDeletes.scopeDirs]]) survives the
+    // ([[SnapshotDeletes.scopeDirs]]) survives the
     // clone verbatim — and their record lines re-publish (with
     // counts) in the clone's base manifest. Dirs outside the source
     // base (a cloned BRANCH's fork-shared sidecars) fall back to a
@@ -392,22 +484,22 @@ object SnapshotTxn {
               dstRoot.resolve(srcBase.relativize(src).toString)
             else {
               val stamp =
-                if (tag == "#upsert") graft.sources.SnapshotDeletes
+                if (tag == "#upsert") SnapshotDeletes
                   .publishVersionOf(dir)
-                else graft.sources.SnapshotDeletes.recordVersionOf(dir)
+                else SnapshotDeletes.recordVersionOf(dir)
               val h = f"${dir.hashCode.toLong & 0xffffffffL}%08x"
               dstRoot.resolve(s"${tag.charAt(1)}$stamp-$h")
-                .resolve(graft.sources.SnapshotPartitionValues
+                .resolve(SnapshotPartitionValues
                   .leafSuffix(mirrorsOf(pv), pv))
             }
           linkFilesInto(dir, dst)
-          s"$tag\t$pv\t$n\t${dst.toAbsolutePath}"
+          SnapshotManifest.morRecord(tag, pv, n, dst.toAbsolutePath.toString)
         }
       }
-    val carriedDeletes = linkPlane("#delete", graft.sources
-      .SnapshotManifest.deleteRecordsWithCounts(srcRoot, v))
-    val carriedUpserts = linkPlane("#upsert", graft.sources
-      .SnapshotManifest.upsertRecordsWithCounts(srcRoot, v))
+    val carriedDeletes = linkPlane("#delete",
+      SnapshotManifest.deleteRecordsWithCounts(srcRoot, v))
+    val carriedUpserts = linkPlane("#upsert",
+      SnapshotManifest.upsertRecordsWithCounts(srcRoot, v))
     // a record-carrying clone publishes its base manifest AT THE
     // SOURCE VERSION NUMBER (not 1): the clone's next commit then
     // stamps v+1 — strictly above every carried `d<V>`/`u<V>` stamp,
@@ -448,22 +540,18 @@ object SnapshotTxn {
     // readers need the same name mapping the source folded
     val cloneMeta = cloneSpecs.drop(1)
         .map(sp => s"#partspec\t${sp.json}") ++
-      graft.sources.SnapshotRename.renameLines(
-        graft.sources.SnapshotManifest.renameChains(srcRoot)) ++
+      SnapshotRename.renameLines(
+        SnapshotManifest.renameChains(srcRoot)) ++
       // linked files keep dropped columns' footer bytes: the clone
       // carries the tombstones so its own re-add refusals hold
-      graft.sources.SnapshotManifest.droppedColumns(srcRoot).toSeq
+      SnapshotManifest.droppedColumns(srcRoot).toSeq
         .sorted.map(n => s"#drop\t$n") ++
-      graft.sources.SnapshotManifest.effectiveChecks(srcRoot)
+      SnapshotManifest.effectiveChecks(srcRoot)
         .map { case (n, sql) => s"#check\t$n\t$sql" }
     writeManifest(dstRoot, baseV, entries,
       extraMeta = cloneMeta ++ carriedDeletes ++ carriedUpserts)
-    graft.sources.SnapshotFiles.read(srcRoot, v).foreach { fm =>
-      val rewritten = fm.toSeq.sortBy(_._1).flatMap(_._2).map { e =>
-        e.copy(path = entries(e.pv) + "/" + new java.io.File(e.path).getName)
-      }
-      graft.sources.SnapshotFiles.write(dstRoot, baseV, rewritten)
-    }
+    SnapshotFiles.copy(srcRoot, v, dstRoot, baseV, e =>
+      e.copy(path = entries(e.pv) + "/" + new java.io.File(e.path).getName))
     (v, entries.size, linked)
   }
 
@@ -480,17 +568,16 @@ object SnapshotTxn {
     * reads naturally. The base-manifest publish is the same link(2)
     * CAS as every commit — racing creators of one name get one winner.
     */
-  private[graft] def snapshotBranchCreate(root: java.nio.file.Path,
+  private[graft] def snapshotBranchCreate(root: Path,
       name: String, version: Option[Int] = None): (Int, Int) = {
-    import graft.sources.{SnapshotBranches, SnapshotMeta, SnapshotManifest}
     SnapshotBranches.validate(name)
-    require(graft.sources.SnapshotTags.resolve(root, name).isEmpty,
+    require(SnapshotTags.resolve(root, name).isEmpty,
       s"a tag named '$name' exists — branches and tags share the " +
         "VERSION AS OF namespace")
     require(!SnapshotBranches.exists(root, name),
       s"branch '$name' already exists — re-creating it would silently " +
         "discard its staged commits; drop_branch first")
-    val head = headVersion(root)
+    val head = SnapshotManifest.head(root)
     require(head > 0, s"$root has no published versions to branch from")
     val base = version.getOrElse(head)
     require(java.nio.file.Files.exists(
@@ -506,7 +593,7 @@ object SnapshotTxn {
       SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
         .fields.map(_.copy(nullable = true)))
     SnapshotMeta.write(broot, meta.copy(dataSchema = effective))
-    val entries = readManifest(root, base)
+    val entries = SnapshotManifest.read(root, base)
     // rename chains re-publish with the checks: fork-shared files keep
     // their written-time footer names, so the branch's readers need the
     // same name mapping main folded (and [[snapshotFastForward]] keys
@@ -514,7 +601,7 @@ object SnapshotTxn {
     val checkLines = SnapshotManifest
         .partitionSpecs(root, meta.partitionSchema).drop(1)
         .map(sp => s"#partspec\t${sp.json}") ++
-      graft.sources.SnapshotRename.renameLines(
+      SnapshotRename.renameLines(
         SnapshotManifest.renameChains(root)) ++
       SnapshotManifest.droppedColumns(root).toSeq
         .sorted.map(n => s"#drop\t$n") ++
@@ -531,7 +618,8 @@ object SnapshotTxn {
     def carryPlane(tag: String,
         recs: Map[String, Seq[(String, Long)]]): Seq[String] =
       recs.toSeq.sortBy(_._1).flatMap { case (pv, rs) =>
-        rs.sortBy(_._1).map { case (dir, n) => s"$tag\t$pv\t$n\t$dir" }
+        rs.sortBy(_._1).map { case (dir, n) =>
+          SnapshotManifest.morRecord(tag, pv, n, dir) }
       }
     val morLines =
       carryPlane("#delete",
@@ -539,10 +627,7 @@ object SnapshotTxn {
       carryPlane("#upsert",
         SnapshotManifest.upsertRecordsWithCounts(root, base))
     writeManifest(broot, base, entries, extraMeta = checkLines ++ morLines)
-    graft.sources.SnapshotFiles.read(root, base).foreach { fm =>
-      graft.sources.SnapshotFiles.write(broot, base,
-        fm.toSeq.sortBy(_._1).flatMap(_._2))
-    }
+    SnapshotFiles.copy(root, base, broot, base)
     SnapshotBranches.writeBase(root, name, base)
     (base, entries.size)
   }
@@ -566,9 +651,8 @@ object SnapshotTxn {
     * `#checkdrop` — main cannot have moved its own (that would have
     * bumped main's head and refused above).
     */
-  private[graft] def snapshotFastForward(root: java.nio.file.Path,
+  private[graft] def snapshotFastForward(root: Path,
       name: String): (Int, Int, Int) = {
-    import graft.sources.{SnapshotBranches, SnapshotManifest, SnapshotMeta}
     require(SnapshotBranches.exists(root, name), s"no branch named '$name'")
     val broot = SnapshotBranches.root(root, name)
     refuseLiveDeletes(broot, "fast_forward")
@@ -576,14 +660,14 @@ object SnapshotTxn {
       throw new IllegalStateException(
         s"branch $name has no recorded fork point (half-created? " +
           "drop_branch and re-create)"))
-    val mainHead = headVersion(root)
+    val mainHead = SnapshotManifest.head(root)
     require(mainHead == base,
       s"main advanced past the fork (head $mainHead, forked at $base) " +
         "— a fast-forward would erase the interleaved commits; " +
         "re-branch from the new head and re-apply")
-    val bHead = headVersion(broot)
+    val bHead = SnapshotManifest.head(broot)
     if (bHead == base) return (mainHead, 0, 0) // nothing staged
-    val entries = readManifest(broot, bHead)
+    val entries = SnapshotManifest.read(broot, bHead)
     val ffMeta = SnapshotMeta.read(root).get
     val ffSpecs = SnapshotManifest.partitionSpecs(
       broot, ffMeta.partitionSchema)
@@ -598,7 +682,7 @@ object SnapshotTxn {
     val rewritten = entries.map { case (pv, dirPath) =>
       if (!canon(dirPath).startsWith(brootCanon)) pv -> dirPath
       else {
-        val dst = ffRoot.resolve(graft.sources.SnapshotPartitionValues
+        val dst = ffRoot.resolve(SnapshotPartitionValues
           .leafSuffix(mirrorsOf(pv), pv))
         java.nio.file.Files.createDirectories(dst)
         Option(new java.io.File(dirPath).listFiles()).getOrElse(Array.empty)
@@ -644,14 +728,11 @@ object SnapshotTxn {
     writeManifest(root, mainHead + 1, rewritten,
       schemaJson = schemaJson,
       extraMeta = specDelta ++ renameDelta ++ dropDelta ++ checkDelta)
-    graft.sources.SnapshotFiles.read(broot, bHead).foreach { fm =>
-      val rows = fm.toSeq.sortBy(_._1).flatMap(_._2).map { e =>
-        val newDir = rewritten(e.pv)
-        if (newDir == entries(e.pv)) e
-        else e.copy(path = newDir + "/" + new java.io.File(e.path).getName)
-      }
-      graft.sources.SnapshotFiles.write(root, mainHead + 1, rows)
-    }
+    SnapshotFiles.copy(broot, bHead, root, mainHead + 1, { e =>
+      val newDir = rewritten(e.pv)
+      if (newDir == entries(e.pv)) e
+      else e.copy(path = newDir + "/" + new java.io.File(e.path).getName)
+    })
     (mainHead + 1, rewritten.size, linked)
   }
 
@@ -659,62 +740,35 @@ object SnapshotTxn {
     * month lives IN the data (`o_ym`); the `o_ym_p=` dir name is layout
     * only, so leaf dirs from different commit roots mix freely. A store
     * with rename history reads through the declared name-mapping fold
-    * ([[graft.sources.SnapshotRename.readDirs]]); rename-free stores
+    * ([[SnapshotRename.readDirs]]); rename-free stores
     * keep the historical inference read.
     */
   private[graft] def snapshotRead(s: SparkSession,
-      root: java.nio.file.Path, version: Int): DataFrame = {
+      root: Path, version: Int): DataFrame = {
     val (base, ups, recs) =
-      graft.sources.SnapshotDeletes.versionDirs(root, version)
-    val logical = graft.sources.SnapshotMeta.read(root)
-      .map(m => graft.sources.SnapshotManifest.effectiveDataSchema(
+      SnapshotDeletes.versionDirs(root, version)
+    val logical = SnapshotMeta.read(root)
+      .map(m => SnapshotManifest.effectiveDataSchema(
         root, m.dataSchema))
     def read(dirs: Seq[String]): DataFrame = logical
       .filter(l =>
-        graft.sources.SnapshotRename.chainsFor(root, l).nonEmpty ||
+        SnapshotRename.chainsFor(root, l).nonEmpty ||
           // upsert-delta dirs may carry columns in a different order
           // than older base files; the declared read normalizes
           ups.nonEmpty)
-      .map(l => graft.sources.SnapshotRename.readDirs(s, root, dirs, l))
+      .map(l => SnapshotRename.readDirs(s, root, dirs, l))
       .getOrElse(s.read.parquet(dirs: _*))
     if (recs.isEmpty && ups.isEmpty) read(base)
     else {
       // merge-on-read records: base dirs anti-join ALL doomed keys,
       // each upsert-delta group only the records newer than its stamp
       // (broadcast, delta-sized both sides)
-      val keyCol = graft.sources.SnapshotMeta.read(root)
+      val keyCol = SnapshotMeta.read(root)
         .flatMap(_.keyCol).getOrElse(throw new IllegalStateException(
           s"$root carries merge-on-read records but table.meta " +
             "declares no key_column"))
-      graft.sources.SnapshotDeletes.scopedUnion(s, keyCol, read,
+      SnapshotDeletes.scopedUnion(s, keyCol, read,
         base, ups, recs).getOrElse(read(base))
-    }
-  }
-
-  /** Publish the [[graft.sources.SnapshotFiles]] sidecar for a freshly
-    * CAS-won version: per-file stats rows are COLLECTED (one
-    * distributed pass) for the commit's new dirs only, and copied
-    * verbatim from the parent's sidecar for every untouched partition
-    * — O(touched) maintenance, the commit's own bound. If the parent
-    * has carried partitions but no sidecar (a legacy store), no
-    * sidecar is written: profiling the carried dirs would be O(table),
-    * and the reader's lazy-listing fallback is sound.
-    */
-  private def publishFilesSidecar(s: SparkSession, root: java.nio.file.Path,
-      version: Int, parentV: Option[Int], entries: Map[String, String],
-      touched: Set[String], dataSchema: org.apache.spark.sql.types.StructType)
-      : Unit = {
-    val carried = entries.keySet -- touched
-    val carriedRows: Option[Seq[graft.sources.SnapshotFiles.FileEntry]] =
-      if (carried.isEmpty) Some(Nil)
-      else parentV.flatMap(pv => graft.sources.SnapshotFiles.read(root, pv))
-        .map(parent => carried.toSeq.sorted.flatMap(p =>
-          parent.getOrElse(p, Nil)))
-    carriedRows.foreach { cr =>
-      val fresh = graft.sources.SnapshotFiles.collect(s,
-        touched.toSeq.sorted.flatMap(p => entries.get(p).map(p -> _)),
-        dataSchema)
-      graft.sources.SnapshotFiles.write(root, version, cr ++ fresh)
     }
   }
 
@@ -732,296 +786,293 @@ object SnapshotTxn {
     * racers must never interleave files in one dir), checks its parent
     * is still the head (fail-fast, before any data is written), and
     * publishes via [[writeManifest]]'s atomic create. Exactly one of N
-    * racers wins; each loser throws [[SnapshotConflictException]],
-    * its attempt dirs referenced by no manifest, reclaimed by
-    * [[snapshotVacuum]]. `SnapshotStoreSpec` races two commits off the
-    * same parent and pins all three properties.
+    * racers wins; each loser throws [[SnapshotConflictException]]
+    * after [[commit]] deletes its attempt dirs. `SnapshotStoreSpec`
+    * races two commits off the same parent and pins all three
+    * properties.
     */
   private[graft] def snapshotCommit(s: SparkSession,
-      root: java.nio.file.Path, fromV: Int, toV: Int, delta: DataFrame,
+      root: Path, fromV: Int, toV: Int, delta: DataFrame,
       insertDelta: Boolean, keyCol: String = "o_orderkey",
       partCols: Seq[String] = Seq("o_ym"),
       bloomIndexKey: Option[String] = None,
       txn: Option[(String, Long)] = None,
       distribute: Boolean = true): Unit = {
-    val head = headVersion(root)
-    if (head != fromV) throw new SnapshotConflictException(toV)
-    val parent = readManifest(root, fromV)
-    // PARTITION-SPEC EVOLUTION: commits always lay out under the
-    // CURRENT spec — the caller's partCols are the bootstrap-time
-    // declaration, superseded once `#partspec` records exist. An
-    // old-spec parent entry whose prefix overlaps a touched partition
-    // MIGRATES: its kept rows rewrite under the current spec (the
-    // store's usual touched-partition rewrite granularity).
-    val specs = graft.sources.SnapshotMeta.read(root).map(m =>
-      graft.sources.SnapshotManifest.partitionSpecs(root, m.partitionSchema))
-      .getOrElse(Seq.empty)
-    val multiSpec = specs.lengthCompare(1) > 0
-    // the CURRENT spec is the layout authority whenever the store
-    // declares one — it also carries the hidden-partitioning transform
-    // tags (days/bucket mirrors derive f(source), not source); the
-    // caller's `partCols` only drives meta-less legacy stores
-    val curSpec: Option[Seq[org.apache.spark.sql.types.StructField]] =
-      specs.lastOption.map(_.fields.toSeq)
-    val effPartCols: Seq[String] =
-      curSpec.map(_.map(_.name.stripSuffix("_p"))).getOrElse(partCols)
-    def mirrorExpr(frame: DataFrame, c: String)
-        : org.apache.spark.sql.Column =
-      curSpec.flatMap(_.find(_.name == s"${c}_p")) match {
-        case Some(f)
-          if graft.sources.SnapshotTransforms.of(f) !=
-            graft.sources.SnapshotTransforms.Identity =>
-          graft.sources.SnapshotTransforms.deriveCol(
-            f, col(c), frame.schema(c).dataType)
-        case _ => col(c)
+    require(toV == fromV + 1, s"v$toV does not follow v$fromV")
+    def attempt(a: Attempt): Unit = {
+      val parent = SnapshotManifest.read(root, fromV)
+      // PARTITION-SPEC EVOLUTION: commits always lay out under the
+      // CURRENT spec — the caller's partCols are the bootstrap-time
+      // declaration, superseded once `#partspec` records exist. An
+      // old-spec parent entry whose prefix overlaps a touched partition
+      // MIGRATES: its kept rows rewrite under the current spec (the
+      // store's usual touched-partition rewrite granularity).
+      val specs = SnapshotMeta.read(root).map(m =>
+        SnapshotManifest.partitionSpecs(root, m.partitionSchema))
+        .getOrElse(Seq.empty)
+      val multiSpec = specs.lengthCompare(1) > 0
+      // the CURRENT spec is the layout authority whenever the store
+      // declares one — it also carries the hidden-partitioning transform
+      // tags (days/bucket mirrors derive f(source), not source); the
+      // caller's `partCols` only drives meta-less legacy stores
+      val curSpec: Option[Seq[org.apache.spark.sql.types.StructField]] =
+        specs.lastOption.map(_.fields.toSeq)
+      val effPartCols: Seq[String] =
+        curSpec.map(_.map(_.name.stripSuffix("_p"))).getOrElse(partCols)
+      def mirrorExpr(frame: DataFrame, c: String)
+          : org.apache.spark.sql.Column =
+        curSpec.flatMap(_.find(_.name == s"${c}_p")) match {
+          case Some(f)
+            if SnapshotTransforms.of(f) !=
+              SnapshotTransforms.Identity =>
+            SnapshotTransforms.deriveCol(
+              f, col(c), frame.schema(c).dataType)
+          case _ => col(c)
+        }
+      // manifest pv = the partition values joined by '/' in
+      // partition-schema order. Each value is HIVE-ESCAPED
+      // (ExternalCatalogUtils.escapePathName — the same escaping
+      // partitionBy applies to dir names), so the commit-side pv matches
+      // snapshotInit's dir-walk form for values containing ':', '%',
+      // '=', '/', ... — an unescaped pv would miss the parent entry and
+      // silently orphan the rewritten partition. NULL partition values
+      // are rejected loudly (the store's partition columns are keys).
+      // BOOTSTRAP INSERT (parent has no entries, single spec): nothing
+      // can be kept, migrated, or recorded, so the delta's touched-
+      // partition set decides nothing — skip the distinct+collect pre-
+      // pass (two Spark jobs per CREATE+INSERT chain) and let the write
+      // itself discover the leafs (walkLeafDirs below). The null-
+      // partition-value refusal moves to a post-write dir-name check,
+      // same message, same loud failure.
+      val bootstrapInsert =
+        parent.isEmpty && !multiSpec && insertDelta
+      val touched: Seq[String] =
+        if (bootstrapInsert) Seq.empty
+        else delta
+          .select(effPartCols.map(c => mirrorExpr(delta, c).as(c)): _*)
+          .distinct()
+          .collect()
+          .map { r =>
+            effPartCols.indices.map { i =>
+              if (r.isNullAt(i)) throw new IllegalArgumentException(
+                s"null value in partition column ${effPartCols(i)} — the " +
+                  "snapshot store requires non-null partition values")
+              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+                .escapePathName(String.valueOf(r.get(i)))
+            }.mkString("/")
+          }.toSeq.sorted
+      if (touched.isEmpty && !bootstrapInsert) {
+        // legal no-change commit (e.g. an ingest batch that filtered to
+        // zero rows): republish the parent entries as the new version
+        a.publish(parent, txn)
+        return
       }
-    // manifest pv = the partition values joined by '/' in
-    // partition-schema order. Each value is HIVE-ESCAPED
-    // (ExternalCatalogUtils.escapePathName — the same escaping
-    // partitionBy applies to dir names), so the commit-side pv matches
-    // snapshotInit's dir-walk form for values containing ':', '%',
-    // '=', '/', ... — an unescaped pv would miss the parent entry and
-    // silently orphan the rewritten partition. NULL partition values
-    // are rejected loudly (the store's partition columns are keys).
-    // BOOTSTRAP INSERT (parent has no entries, single spec): nothing
-    // can be kept, migrated, or recorded, so the delta's touched-
-    // partition set decides nothing — skip the distinct+collect pre-
-    // pass (two Spark jobs per CREATE+INSERT chain) and let the write
-    // itself discover the leafs (walkLeafDirs below). The null-
-    // partition-value refusal moves to a post-write dir-name check,
-    // same message, same loud failure.
-    val bootstrapInsert =
-      parent.isEmpty && !multiSpec && insertDelta
-    val touched: Seq[String] =
-      if (bootstrapInsert) Seq.empty
-      else delta
-        .select(effPartCols.map(c => mirrorExpr(delta, c).as(c)): _*)
-        .distinct()
-        .collect()
-        .map { r =>
-          effPartCols.indices.map { i =>
-            if (r.isNullAt(i)) throw new IllegalArgumentException(
-              s"null value in partition column ${effPartCols(i)} — the " +
-                "snapshot store requires non-null partition values")
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .escapePathName(String.valueOf(r.get(i)))
-          }.mkString("/")
-        }.toSeq.sorted
-    if (touched.isEmpty && !bootstrapInsert) {
-      // legal no-change commit (e.g. an ingest batch that filtered to
-      // zero rows): republish the parent entries as the new version
-      writeManifest(root, toV, parent, txn)
-      publishFilesSidecar(s, root, toV, Some(fromV), parent,
-        Set.empty, delta.schema)
-      return
-    }
-    // a touched partition may be NEW (first rows of a month the parent
-    // has never seen) — only parent-known partitions have rows to keep.
-    // Under spec evolution, an OLD-SPEC parent entry whose segments
-    // prefix a touched partition also has rows to keep: it migrates
-    // (read whole, doomed keys dropped, rewritten under the current
-    // spec) — skipping it would leave the upserted keys' old rows
-    // alive in the old layout, i.e. duplicates.
-    val migrating: Map[String, String] =
-      if (!multiSpec) Map.empty
-      else {
-        val curArity = effPartCols.length
-        parent.filter { case (pv, _) =>
-          val segs = pv.split("/", -1).toSeq
-          segs.length < curArity &&
-            touched.exists(_.split("/", -1).toSeq.startsWith(segs))
+      // a touched partition may be NEW (first rows of a month the parent
+      // has never seen) — only parent-known partitions have rows to keep.
+      // Under spec evolution, an OLD-SPEC parent entry whose segments
+      // prefix a touched partition also has rows to keep: it migrates
+      // (read whole, doomed keys dropped, rewritten under the current
+      // spec) — skipping it would leave the upserted keys' old rows
+      // alive in the old layout, i.e. duplicates.
+      val migrating: Map[String, String] =
+        if (!multiSpec) Map.empty
+        else {
+          val curArity = effPartCols.length
+          parent.filter { case (pv, _) =>
+            val segs = pv.split("/", -1).toSeq
+            segs.length < curArity &&
+              touched.exists(_.split("/", -1).toSeq.startsWith(segs))
+          }
+        }
+      val existing = touched.flatMap(parent.get) ++ migrating.values
+      // effective table schema = bootstrap meta overlaid with the latest
+      // `#schema` manifest record (a prior widening commit). The kept
+      // read DECLARES it rather than inferring from a footer: `existing`
+      // can mix pre- and post-evolution dirs, and inference would take
+      // whichever file lists first — a pre-evolution winner would
+      // silently NULL the evolved columns of every kept row it rewrites.
+      val tableSchema: Option[org.apache.spark.sql.types.StructType] =
+        SnapshotMeta.read(root).map(m =>
+          SnapshotManifest.effectiveDataSchema(
+            root, m.dataSchema))
+      // the kept read maps former footer names through the rename fold
+      // (readDirs) — `existing` can mix pre- and post-rename dirs, and a
+      // plain declared read would NULL a renamed column on every
+      // pre-rename row this rewrite carries forward
+      // merge-on-read records on the partitions THIS commit rewrites
+      // must fold into the kept read (the rewrite materializes them —
+      // they drop with the dir change): `#delete` records anti-filter
+      // the kept rows (skipping would resurrect every doomed key the
+      // rewrite carries forward), `#upsert` delta dirs CONTRIBUTE kept
+      // rows (skipping would silently drop every delta row), each delta
+      // dir filtered only by records newer than its stamp. Untouched
+      // partitions' records carry in the manifest publish and keep
+      // applying at read time.
+      val touchedPvs = (touched ++ migrating.keys).toSet
+      val morDeleteDirs: Seq[String] = {
+        val recs = SnapshotManifest.deleteRecords(root, fromV)
+        // under spec evolution a record's pv (current-spec derivation)
+        // need not match the OLD-SPEC entry its doomed rows live in —
+        // a migrating commit therefore filters by ALL records (global
+        // is exact: the key is table-unique; partition scoping is the
+        // single-spec load optimization)
+        if (migrating.nonEmpty)
+          recs.valuesIterator.flatten.toSeq.distinct.sorted
+        else touchedPvs.toSeq.flatMap(pv => recs.getOrElse(pv, Nil))
+          .distinct.sorted
+      }
+      val morUpsertDirs: Seq[String] = {
+        val recs = SnapshotManifest.upsertRecords(root, fromV)
+        touchedPvs.toSeq.flatMap(pv => recs.getOrElse(pv, Nil))
+          .distinct.sorted
+      }
+      def keptRead(dirs: Seq[String]): DataFrame = tableSchema
+        .map(ts => SnapshotRename.readDirs(s, root, dirs, ts))
+        .getOrElse(s.read.parquet(dirs: _*))
+      // the bootstrap fast path has nothing to keep — skip the anti-join
+      // so the plan carries no pointless broadcast build of the delta's
+      // keys over an empty left side
+      val kept =
+        if (bootstrapInsert) delta.limit(0)
+        else SnapshotDeletes.scopedUnion(s, keyCol, keptRead,
+            existing, morUpsertDirs, morDeleteDirs)
+          .getOrElse(delta.limit(0))
+          .join(broadcast(delta.select(col(keyCol).as("d_key"))),
+            col(keyCol) === col("d_key"), "left_anti")
+      // SCHEMA EVOLUTION (add-column): a delta carrying columns the table
+      // has never seen WIDENS the table — kept rows surface the new
+      // columns as NULL in the rewritten partitions, untouched
+      // partitions' files stay missing them (the declared read schema
+      // fills NULLs at scan time), and the widened schema publishes as a
+      // `#schema` record INSIDE this commit's manifest — atomic with the
+      // CAS, so there is no crash window between data and schema, and
+      // racing wideners serialize through the version CAS (the rebased
+      // loser re-reads the effective schema and republishes a superset).
+      // The delta DROPPING a table column is refused loudly: with
+      // allowMissingColumns it would silently null that column on every
+      // kept row it rewrites — data loss wearing an upsert's clothes.
+      // Both checks compare against the TABLE schema, not `kept`: a
+      // commit touching only brand-new partitions has
+      // kept = delta.limit(0), whose schema is the delta's own and would
+      // mask both the widening and the drop.
+      val tableCols: Set[String] = tableSchema.map(_.fieldNames.toSet)
+        .getOrElse(kept.columns.toSet)
+      val dropped = tableCols -- delta.columns.toSet
+      require(dropped.isEmpty || !insertDelta,
+        s"upsert delta is missing table column(s) ${dropped.mkString(", ")}" +
+          " — an evolving commit may ADD columns, never drop them")
+      // added columns are forced NULLABLE whatever the delta says: every
+      // pre-evolution file fills them with NULL, and a non-nullable
+      // declaration would make readers refuse those files
+      val addedCols =
+        if (insertDelta)
+          delta.schema.fields.filterNot(f => tableCols(f.name))
+            .map(_.copy(nullable = true)).toSeq
+        else Seq.empty
+      // same former-name guard as ALTER ADD COLUMN: a widening delta
+      // must not re-introduce a renamed column's old footer name
+      if (addedCols.nonEmpty) {
+        val formers = SnapshotManifest.renameChains(root)
+          .valuesIterator.flatten.toSet
+        val formerDup = addedCols.map(_.name).filter(formers)
+        require(formerDup.isEmpty,
+          s"widening column(s) ${formerDup.mkString(", ")} are former " +
+            "names of renamed columns — footer names must stay unambiguous")
+        // same dropped-name guard as ALTER ADD COLUMN: a widening delta
+        // must not resurrect a dropped column's footer values
+        val droppedNames =
+          SnapshotManifest.droppedFooterNames(root)
+        val dropDup = addedCols.map(_.name).filter(droppedNames)
+        require(dropDup.isEmpty,
+          s"widening column(s) ${dropDup.mkString(", ")} were DROPPED — " +
+            "pre-drop files still carry their values; use a fresh name")
+        // a layout MIRROR name (`<col>_p`, any spec) is derived, never a
+        // data column: tableCols is the DATA schema so a delta carrying
+        // one (e.g. round-tripped from a read) would otherwise publish a
+        // #schema declaring it as data — a permanent collision with the
+        // partition schema that no later commit can retract
+        val mirrorNames = effPartCols.map(c => s"${c}_p").toSet
+        val mirrorDup = addedCols.map(_.name).filter(mirrorNames)
+        require(mirrorDup.isEmpty,
+          s"column(s) ${mirrorDup.mkString(", ")} are layout MIRROR " +
+            "columns — they derive from their source columns at commit " +
+            "time and cannot widen the data schema; drop them from the " +
+            "delta")
+      }
+      val widenedJson: Option[String] = tableSchema match {
+        case Some(ts) if addedCols.nonEmpty =>
+          Some(org.apache.spark.sql.types.StructType(
+            ts.fields ++ addedCols).json)
+        case _ => None // legacy store (no meta): evolution not supported
+      }
+      val out = a.scratch().toString
+      val pcols = effPartCols.map(c => s"${c}_p")
+      def leafDir(pv: String): String = {
+        val vals =
+          if (effPartCols.length == 1) Array(pv) else pv.split("/", -1)
+        out + "/" + pcols.zip(vals).map { case (c, v) => s"$c=$v" }
+          .mkString("/")
+      }
+      // `kept` may lack delta columns even when the TABLE already has
+      // them: a post-evolution commit touching a pre-evolution partition
+      // reads files that predate the column. The drop `require` above is
+      // the data-loss guard; here missing-on-the-kept-side is always the
+      // legal fill-NULL direction.
+      val keptLacks = (delta.columns.toSet -- kept.columns.toSet).nonEmpty
+      val unionedOut =
+        if (insertDelta)
+          kept.unionByName(delta, allowMissingColumns = keptLacks)
+        else kept
+      val mirrored = effPartCols.foldLeft(unionedOut)(
+        (df, c) => df.withColumn(s"${c}_p", mirrorExpr(unionedOut, c)))
+      (if (distribute) distributeByLayout(mirrored, pcols) else mirrored)
+        .write.mode("overwrite").partitionBy(pcols: _*).parquet(out)
+      // a MIGRATING commit's kept rows fan out to current-spec leafs the
+      // delta alone can't predict (every value of the appended column in
+      // the old partition) — discover entries by walking the output; the
+      // non-migrating path keeps the cheap touched-pv check
+      val walked: Seq[(String, String)] =
+        if (migrating.nonEmpty || bootstrapInsert)
+          walkLeafDirs(new java.io.File(out), pcols)
+        else touched.filter(pv => new java.io.File(leafDir(pv)).isDirectory)
+          .map(pv => pv -> leafDir(pv))
+      // the bootstrap fast path skipped the pre-write null check — a NULL
+      // partition value surfaces as Hive's default leaf name in the walk;
+      // refuse with the same message (the attempt dir stays for vacuum:
+      // only a lost link reclaims it)
+      if (bootstrapInsert) {
+        val defaultLeaf = org.apache.spark.sql.catalyst.catalog
+          .ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+        walked.map(_._1).foreach { pv =>
+          val i = pv.split("/", -1).indexOf(defaultLeaf)
+          if (i >= 0) throw new IllegalArgumentException(
+            s"null value in partition column ${effPartCols(i)} — the " +
+              "snapshot store requires non-null partition values")
         }
       }
-    val existing = touched.flatMap(parent.get) ++ migrating.values
-    // effective table schema = bootstrap meta overlaid with the latest
-    // `#schema` manifest record (a prior widening commit). The kept
-    // read DECLARES it rather than inferring from a footer: `existing`
-    // can mix pre- and post-evolution dirs, and inference would take
-    // whichever file lists first — a pre-evolution winner would
-    // silently NULL the evolved columns of every kept row it rewrites.
-    val tableSchema: Option[org.apache.spark.sql.types.StructType] =
-      graft.sources.SnapshotMeta.read(root).map(m =>
-        graft.sources.SnapshotManifest.effectiveDataSchema(
-          root, m.dataSchema))
-    // the kept read maps former footer names through the rename fold
-    // (readDirs) — `existing` can mix pre- and post-rename dirs, and a
-    // plain declared read would NULL a renamed column on every
-    // pre-rename row this rewrite carries forward
-    // merge-on-read records on the partitions THIS commit rewrites
-    // must fold into the kept read (the rewrite materializes them —
-    // they drop with the dir change): `#delete` records anti-filter
-    // the kept rows (skipping would resurrect every doomed key the
-    // rewrite carries forward), `#upsert` delta dirs CONTRIBUTE kept
-    // rows (skipping would silently drop every delta row), each delta
-    // dir filtered only by records newer than its stamp. Untouched
-    // partitions' records carry in the manifest publish and keep
-    // applying at read time.
-    val touchedPvs = (touched ++ migrating.keys).toSet
-    val morDeleteDirs: Seq[String] = {
-      val recs = graft.sources.SnapshotManifest.deleteRecords(root, fromV)
-      // under spec evolution a record's pv (current-spec derivation)
-      // need not match the OLD-SPEC entry its doomed rows live in —
-      // a migrating commit therefore filters by ALL records (global
-      // is exact: the key is table-unique; partition scoping is the
-      // single-spec load optimization)
-      if (migrating.nonEmpty)
-        recs.valuesIterator.flatten.toSeq.distinct.sorted
-      else touchedPvs.toSeq.flatMap(pv => recs.getOrElse(pv, Nil))
-        .distinct.sorted
-    }
-    val morUpsertDirs: Seq[String] = {
-      val recs = graft.sources.SnapshotManifest.upsertRecords(root, fromV)
-      touchedPvs.toSeq.flatMap(pv => recs.getOrElse(pv, Nil))
-        .distinct.sorted
-    }
-    def keptRead(dirs: Seq[String]): DataFrame = tableSchema
-      .map(ts => graft.sources.SnapshotRename.readDirs(s, root, dirs, ts))
-      .getOrElse(s.read.parquet(dirs: _*))
-    // the bootstrap fast path has nothing to keep — skip the anti-join
-    // so the plan carries no pointless broadcast build of the delta's
-    // keys over an empty left side
-    val kept =
-      if (bootstrapInsert) delta.limit(0)
-      else graft.sources.SnapshotDeletes.scopedUnion(s, keyCol, keptRead,
-          existing, morUpsertDirs, morDeleteDirs)
-        .getOrElse(delta.limit(0))
-        .join(broadcast(delta.select(col(keyCol).as("d_key"))),
-          col(keyCol) === col("d_key"), "left_anti")
-    // SCHEMA EVOLUTION (add-column): a delta carrying columns the table
-    // has never seen WIDENS the table — kept rows surface the new
-    // columns as NULL in the rewritten partitions, untouched
-    // partitions' files stay missing them (the declared read schema
-    // fills NULLs at scan time), and the widened schema publishes as a
-    // `#schema` record INSIDE this commit's manifest — atomic with the
-    // CAS, so there is no crash window between data and schema, and
-    // racing wideners serialize through the version CAS (the rebased
-    // loser re-reads the effective schema and republishes a superset).
-    // The delta DROPPING a table column is refused loudly: with
-    // allowMissingColumns it would silently null that column on every
-    // kept row it rewrites — data loss wearing an upsert's clothes.
-    // Both checks compare against the TABLE schema, not `kept`: a
-    // commit touching only brand-new partitions has
-    // kept = delta.limit(0), whose schema is the delta's own and would
-    // mask both the widening and the drop.
-    val tableCols: Set[String] = tableSchema.map(_.fieldNames.toSet)
-      .getOrElse(kept.columns.toSet)
-    val dropped = tableCols -- delta.columns.toSet
-    require(dropped.isEmpty || !insertDelta,
-      s"upsert delta is missing table column(s) ${dropped.mkString(", ")}" +
-        " — an evolving commit may ADD columns, never drop them")
-    // added columns are forced NULLABLE whatever the delta says: every
-    // pre-evolution file fills them with NULL, and a non-nullable
-    // declaration would make readers refuse those files
-    val addedCols =
-      if (insertDelta)
-        delta.schema.fields.filterNot(f => tableCols(f.name))
-          .map(_.copy(nullable = true)).toSeq
-      else Seq.empty
-    // same former-name guard as ALTER ADD COLUMN: a widening delta
-    // must not re-introduce a renamed column's old footer name
-    if (addedCols.nonEmpty) {
-      val formers = graft.sources.SnapshotManifest.renameChains(root)
-        .valuesIterator.flatten.toSet
-      val formerDup = addedCols.map(_.name).filter(formers)
-      require(formerDup.isEmpty,
-        s"widening column(s) ${formerDup.mkString(", ")} are former " +
-          "names of renamed columns — footer names must stay unambiguous")
-      // same dropped-name guard as ALTER ADD COLUMN: a widening delta
-      // must not resurrect a dropped column's footer values
-      val droppedNames =
-        graft.sources.SnapshotManifest.droppedFooterNames(root)
-      val dropDup = addedCols.map(_.name).filter(droppedNames)
-      require(dropDup.isEmpty,
-        s"widening column(s) ${dropDup.mkString(", ")} were DROPPED — " +
-          "pre-drop files still carry their values; use a fresh name")
-      // a layout MIRROR name (`<col>_p`, any spec) is derived, never a
-      // data column: tableCols is the DATA schema so a delta carrying
-      // one (e.g. round-tripped from a read) would otherwise publish a
-      // #schema declaring it as data — a permanent collision with the
-      // partition schema that no later commit can retract
-      val mirrorNames = effPartCols.map(c => s"${c}_p").toSet
-      val mirrorDup = addedCols.map(_.name).filter(mirrorNames)
-      require(mirrorDup.isEmpty,
-        s"column(s) ${mirrorDup.mkString(", ")} are layout MIRROR " +
-          "columns — they derive from their source columns at commit " +
-          "time and cannot widen the data schema; drop them from the " +
-          "delta")
-    }
-    val widenedJson: Option[String] = tableSchema match {
-      case Some(ts) if addedCols.nonEmpty =>
-        Some(org.apache.spark.sql.types.StructType(ts.fields ++ addedCols).json)
-      case _ => None // legacy store (no meta): evolution not supported
-    }
-    val out = root.resolve(
-      s"d$toV-${java.util.UUID.randomUUID.toString.take(8)}").toString
-    val pcols = effPartCols.map(c => s"${c}_p")
-    def leafDir(pv: String): String = {
-      val vals =
-        if (effPartCols.length == 1) Array(pv) else pv.split("/", -1)
-      out + "/" + pcols.zip(vals).map { case (c, v) => s"$c=$v" }
-        .mkString("/")
-    }
-    // `kept` may lack delta columns even when the TABLE already has
-    // them: a post-evolution commit touching a pre-evolution partition
-    // reads files that predate the column. The drop `require` above is
-    // the data-loss guard; here missing-on-the-kept-side is always the
-    // legal fill-NULL direction.
-    val keptLacks = (delta.columns.toSet -- kept.columns.toSet).nonEmpty
-    val unionedOut =
-      if (insertDelta)
-        kept.unionByName(delta, allowMissingColumns = keptLacks)
-      else kept
-    val mirrored = effPartCols.foldLeft(unionedOut)(
-      (df, c) => df.withColumn(s"${c}_p", mirrorExpr(unionedOut, c)))
-    (if (distribute) distributeByLayout(mirrored, pcols) else mirrored)
-      .write.mode("overwrite").partitionBy(pcols: _*).parquet(out)
-    // a MIGRATING commit's kept rows fan out to current-spec leafs the
-    // delta alone can't predict (every value of the appended column in
-    // the old partition) — discover entries by walking the output; the
-    // non-migrating path keeps the cheap touched-pv check
-    val walked: Seq[(String, String)] =
-      if (migrating.nonEmpty || bootstrapInsert)
-        walkLeafDirs(new java.io.File(out), pcols)
-      else touched.filter(pv => new java.io.File(leafDir(pv)).isDirectory)
-        .map(pv => pv -> leafDir(pv))
-    // the bootstrap fast path skipped the pre-write null check — a NULL
-    // partition value surfaces as Hive's default leaf name in the walk;
-    // refuse with the same message (the attempt dir stays orphaned for
-    // vacuum, like a CAS loser's)
-    if (bootstrapInsert) {
-      val defaultLeaf = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-      walked.map(_._1).foreach { pv =>
-        val i = pv.split("/", -1).indexOf(defaultLeaf)
-        if (i >= 0) throw new IllegalArgumentException(
-          s"null value in partition column ${effPartCols(i)} — the " +
-            "snapshot store requires non-null partition values")
+      val presentSet = walked.map(_._1).toSet
+      val emptied = touched.filterNot(presentSet)
+      val entries =
+        (parent -- emptied -- migrating.keys) ++ walked
+      // the sidecar profile declares the schema of the frame the commit
+      // WROTE (kept ∪ delta, which may be wider than the delta after an
+      // evolution) so the collect's declared read matches the files
+      a.publish(entries, txn, widenedJson,
+        written = Some(Written(s, presentSet, unionedOut.schema)))
+      // incremental Bloom maintenance: index only this commit's new dirs
+      // (append — parent files are write-once, their rows stay valid)
+      bloomIndexKey.foreach { k =>
+        if (walked.nonEmpty)
+          SnapshotBloom.build(s, walked.map(_._2), k,
+            root.resolve("bloomidx").toString, append = true,
+            dataSchema = Some(unionedOut.schema))
       }
     }
-    val presentSet = walked.map(_._1).toSet
-    val emptied = touched.filterNot(presentSet)
-    val entries =
-      (parent -- emptied -- migrating.keys) ++ walked
-    writeManifest(root, toV, entries, txn, widenedJson)
-    // publish the file-stats sidecar (new dirs profiled, the
-    // rest copied from the parent's sidecar — O(touched) maintenance).
-    // The profile declares the schema of the frame the commit WROTE
-    // (kept ∪ delta, which may be wider than the delta after an
-    // evolution) so the collect's declared read matches the files.
-    publishFilesSidecar(s, root, toV, Some(fromV), entries,
-      presentSet, unionedOut.schema)
-    // incremental Bloom maintenance: index only this commit's new dirs
-    // (append — parent files are write-once, their rows stay valid)
-    bloomIndexKey.foreach { k =>
-      if (walked.nonEmpty)
-        graft.sources.SnapshotBloom.build(s, walked.map(_._2), k,
-          root.resolve("bloomidx").toString, append = true,
-          dataSchema = Some(unionedOut.schema))
-    }
+    commit(root, Some(fromV))(attempt)
   }
 
   /** Group-replacement commit for the SQL row-level DML door
-    * ([[graft.sources.SnapshotRowLevelOperation]]): publish
+    * ([[SnapshotRowLevelOperation]]): publish
     * `parent − replaced ∪ newEntries` as the next version through the
     * same CAS manifest plane as every other commit, with the
     * file-stats sidecar profiled for the new dirs only (O(touched)).
@@ -1030,19 +1081,15 @@ object SnapshotTxn {
     * must re-run the statement.
     */
   private[graft] def snapshotReplacePartitions(s: SparkSession,
-      root: java.nio.file.Path, fromV: Int, replaced: Set[String],
+      root: Path, fromV: Int, replaced: Set[String],
       newEntries: Map[String, String],
-      dataSchema: org.apache.spark.sql.types.StructType): Unit = {
-    val head = headVersion(root)
-    if (head != fromV) throw new SnapshotConflictException(fromV + 1)
-    val parent = readManifest(root, fromV)
-    val entries = (parent -- replaced) ++ newEntries
-    writeManifest(root, fromV + 1, entries, None)
-    publishFilesSidecar(s, root, fromV + 1, Some(fromV), entries,
-      newEntries.keySet, dataSchema)
-  }
+      dataSchema: org.apache.spark.sql.types.StructType): Unit =
+    commit(root, Some(fromV)) { a =>
+      a.publish((SnapshotManifest.read(root, fromV) -- replaced) ++ newEntries,
+        written = Some(Written(s, newEntries.keySet, dataSchema)))
+    }
 
-  /** MERGE-ON-READ DELETE commit ([[graft.sources.SnapshotDeletes]]
+  /** MERGE-ON-READ DELETE commit ([[SnapshotDeletes]]
     * is the read half): the doomed KEYS — never the surviving rows —
     * write as per-partition parquet sidecars under a fresh attempt
     * root, and the commit publishes the PARENT's partition map
@@ -1056,12 +1103,12 @@ object SnapshotTxn {
     * commits (a delete recomputes trivially against a new head).
     *
     * Reference scope note: the reference engine has no DML at all
-    * (`/root/reference/mr/worker.go` — append-only outputs); this is
+    * (the reference's `mr/worker.go` — append-only outputs); this is
     * north-star lakehouse surface, the Iceberg equality-delete /
     * Delta deletion-vector trade rebuilt on the manifest plane.
     */
   private[graft] def snapshotMorDelete(s: SparkSession,
-      root: java.nio.file.Path,
+      root: Path,
       pred: org.apache.spark.sql.Column): (Int, Long) =
     snapshotMorDeleteBy(s, root, _.filter(pred))
 
@@ -1083,10 +1130,10 @@ object SnapshotTxn {
     // exactly (round 16; same trade as SnapshotDeletes.readKeys).
     val conf = s.sessionState.newHadoopConf()
     val perLeaf: Map[String, Long] = dirs.map { d =>
-      val key = graft.sources.SnapshotBloom.fileKey(
+      val key = SnapshotBloom.fileKey(
         new org.apache.hadoop.fs.Path(
           new java.io.File(d).getAbsolutePath).toString)
-      val rows = graft.sources.SnapshotFiles.listDataFiles(conf, d)
+      val rows = SnapshotFiles.listDataFiles(conf, d)
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map { st =>
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -1097,7 +1144,7 @@ object SnapshotTxn {
       key -> rows
     }.toMap
     (perLeaf, dir => perLeaf.getOrElse(
-      graft.sources.SnapshotBloom.fileKey(new org.apache.hadoop.fs.Path(
+      SnapshotBloom.fileKey(new org.apache.hadoop.fs.Path(
         new java.io.File(dir).getAbsolutePath).toString), 0L))
   }
 
@@ -1110,31 +1157,29 @@ object SnapshotTxn {
     * nothing).
     */
   private[graft] def snapshotMorDeleteBy(s: SparkSession,
-      root: java.nio.file.Path,
+      root: Path,
       doom: DataFrame => DataFrame,
       txn: Option[(String, Long)] = None): (Int, Long) = {
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
+    val meta = SnapshotMeta.read(root).getOrElse(
       throw new UnsupportedOperationException(
         "merge-on-read delete needs a table.meta layout declaration"))
     val keyCol = meta.keyCol.getOrElse(
       throw new UnsupportedOperationException(
         "merge-on-read delete needs a declared key_column — the " +
           "delete records are keyed on the upsert key"))
-    val MaxAttempts = 5
-    var attempt = 0
-    while (true) {
-      val head = headVersion(root)
+    def attempt(a: Attempt): (Int, Long) = {
+      val head = a.head
       // an UNMIGRATED evolved head is fine (round 16 — VERDICT r15
       // #5): records mint under the CURRENT spec's pv derivation and
       // both evolved readers apply them GLOBALLY on the key (exact —
       // the key is table-unique; arm scoping is a load optimization
       // the delta-sized records don't need)
-      val df = graft.sources.SnapshotTable.read(s, root, head)
+      val df = SnapshotTable.read(s, root, head)
       val keyType = df.schema(keyCol).dataType
-      require(graft.sources.SnapshotDeletes.supportedKeyType(keyType),
+      require(SnapshotDeletes.supportedKeyType(keyType),
         s"merge-on-read needs a LONG/INT/STRING key; $keyCol is " +
           keyType.simpleString)
-      val spec = graft.sources.SnapshotManifest
+      val spec = SnapshotManifest
         .partitionSpecs(root, meta.partitionSchema).last
       val mirrors = spec.fieldNames.toSeq
       // the doomed keys land under the SAME leaf layout as data (pv =
@@ -1142,12 +1187,11 @@ object SnapshotTxn {
       // pruning reason about them partition-by-partition
       val mirrorCols = spec.fields.toSeq.map { f =>
         val src = f.name.stripSuffix("_p")
-        graft.sources.SnapshotTransforms
+        SnapshotTransforms
           .deriveCol(f, col(src), df.schema(src).dataType)
           .cast(f.dataType).as(f.name)
       }
-      val out = root.resolve(
-        s"d${head + 1}-${java.util.UUID.randomUUID.toString.take(8)}")
+      val out = a.scratch()
       distributeByLayout(
           doom(df).select(mirrorCols :+ col(keyCol): _*), mirrors)
         .write.partitionBy(mirrors: _*).parquet(out.toString)
@@ -1157,26 +1201,10 @@ object SnapshotTxn {
         // a STREAMING no-op batch still publishes its exactly-once
         // `#txn` marker (the upsert door's touched-empty parity) —
         // otherwise a restart would replay the batch forever
-        txn match {
-          case Some(_) =>
-            val parent = readManifest(root, head)
-            try {
-              writeManifest(root, head + 1, parent, txn)
-              publishFilesSidecar(s, root, head + 1, Some(head), parent,
-                Set.empty, org.apache.spark.sql.types.StructType(
-                  graft.sources.SnapshotManifest
-                    .effectiveDataSchema(root, meta.dataSchema)
-                    .fields.map(_.copy(nullable = true))))
-              return (head + 1, 0L)
-            } catch {
-              case _: SnapshotConflictException =>
-                attempt += 1
-                if (attempt >= MaxAttempts) throw
-                  new SnapshotConflictException(head + 1)
-            }
-          case None => return (head, 0L)
-        }
-      } else {
+        if (txn.isEmpty) return (head, 0L)
+        a.publish(SnapshotManifest.read(root, head), txn)
+        return (a.version, 0L)
+      }
       // per-leaf doomed counts ride in the records so plan-time
       // statistics report exact post-delete cardinality without
       // opening the sidecars — one delta-sized counting pass
@@ -1191,11 +1219,11 @@ object SnapshotTxn {
       // cases (no sidecar, count-less legacy records) keep records —
       // sound, never wrong.
       val sidecarRows: Map[String, Long] =
-        graft.sources.SnapshotFiles.read(root, head)
+        SnapshotFiles.read(root, head)
           .map(_.view.mapValues(_.map(_.rows).sum).toMap)
           .getOrElse(Map.empty)
       val prior =
-        graft.sources.SnapshotManifest.deleteRecordsWithCounts(root, head)
+        SnapshotManifest.deleteRecordsWithCounts(root, head)
       // a partition carrying upsert-delta dirs can never prove fully
       // doomed from the sidecar alone (delta rows aren't in it), and
       // on an UNMIGRATED evolved head a leaf's doomed count can
@@ -1203,9 +1231,9 @@ object SnapshotTxn {
       // is the current-spec derivation) — in both cases the proof is
       // void: keep records and let compact/migrate materialize
       val upsertPvs =
-        graft.sources.SnapshotManifest.upsertRecords(root, head).keySet
+        SnapshotManifest.upsertRecords(root, head).keySet
       val evolvedHead =
-        graft.sources.SnapshotTable.hasOldSpecEntries(root, head)
+        SnapshotTable.hasOldSpecEntries(root, head)
       def fullyDoomed(pv: String, n: Long): Boolean =
         !evolvedHead && !upsertPvs.contains(pv) &&
           sidecarRows.get(pv).exists { total =>
@@ -1215,30 +1243,17 @@ object SnapshotTxn {
       val (droppedPvs, recordedPvs) = walked.partition {
         case (pv, dir) => fullyDoomed(pv, countOf(dir))
       }
-      val records = recordedPvs.sortBy(_._1)
-        .map { case (pv, dir) => s"#delete\t$pv\t${countOf(dir)}\t$dir" }
-      val entries = readManifest(root, head) -- droppedPvs.map(_._1)
-      try {
-        // parent entries verbatim + new records; the carry rule folds
-        // in the parent's still-live records (dirs unchanged here).
-        // A streaming micro-batch's exactly-once `#txn` marker rides
-        // the records-only manifest like any other commit's.
-        writeManifest(root, head + 1, entries, txn, extraMeta = records)
-        publishFilesSidecar(s, root, head + 1, Some(head), entries,
-          Set.empty, org.apache.spark.sql.types.StructType(
-            graft.sources.SnapshotManifest
-              .effectiveDataSchema(root, meta.dataSchema)
-              .fields.map(_.copy(nullable = true))))
-        return (head + 1, doomedCount)
-      } catch {
-        case e: SnapshotConflictException =>
-          org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-      }
-      }
+      val records = recordedPvs.sortBy(_._1).map { case (pv, dir) =>
+        SnapshotManifest.morRecord("#delete", pv, countOf(dir), dir) }
+      // parent entries verbatim + new records; the carry rule folds
+      // in the parent's still-live records (dirs unchanged here).
+      // A streaming micro-batch's exactly-once `#txn` marker rides
+      // the records-only manifest like any other commit's.
+      a.publish(SnapshotManifest.read(root, head) -- droppedPvs.map(_._1),
+        txn, extraMeta = records)
+      (a.version, doomedCount)
     }
-    throw new IllegalStateException("unreachable")
+    commit(root)(attempt)
   }
 
   /** MERGE-ON-READ UPSERT through the DataFrame/streaming door
@@ -1259,15 +1274,15 @@ object SnapshotTxn {
     * union read). CAS losers rebase and retry like the delete door.
     */
   private[graft] def snapshotMorUpsert(s: SparkSession,
-      root: java.nio.file.Path, delta: DataFrame, keyCol: String,
+      root: Path, delta: DataFrame, keyCol: String,
       txn: Option[(String, Long)] = None): (Int, Long) = {
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
+    val meta = SnapshotMeta.read(root).getOrElse(
       throw new UnsupportedOperationException(
         "merge-on-read upsert needs a table.meta layout declaration"))
     require(meta.keyCol.contains(keyCol) || meta.keyCol.isEmpty,
       s"upsert-mor key '$keyCol' disagrees with the declared key " +
         s"'${meta.keyCol.getOrElse("")}'")
-    val tableSchema = graft.sources.SnapshotManifest
+    val tableSchema = SnapshotManifest
       .effectiveDataSchema(root, meta.dataSchema)
     val extra = delta.columns.toSet -- tableSchema.fieldNames.toSet --
       meta.partitionSchema.fieldNames.toSet
@@ -1281,33 +1296,30 @@ object SnapshotTxn {
     require(missing.isEmpty,
       s"upsert-mor delta is missing table column(s) " +
         s"${missing.mkString(", ")}")
-    val MaxAttempts = 5
-    var attempt = 0
-    while (true) {
-      val head = headVersion(root)
+    commit(root) { a =>
+      val head = a.head
       require(head > 0, "upsert-mor needs a bootstrapped store")
-      require(!graft.sources.SnapshotTable.hasOldSpecEntries(root, head),
+      require(!SnapshotTable.hasOldSpecEntries(root, head),
         "merge-on-read upsert on a spec-evolved store: converge the " +
           "layout with CALL migrate_layout first")
-      val headDf = graft.sources.SnapshotTable.read(s, root, head)
+      val headDf = SnapshotTable.read(s, root, head)
       val keyType = headDf.schema(keyCol).dataType
-      require(graft.sources.SnapshotDeletes.supportedKeyType(keyType),
+      require(SnapshotDeletes.supportedKeyType(keyType),
         s"merge-on-read needs a LONG/INT/STRING key; $keyCol is " +
           keyType.simpleString)
-      val spec = graft.sources.SnapshotManifest
+      val spec = SnapshotManifest
         .partitionSpecs(root, meta.partitionSchema).last
       val mirrors = spec.fieldNames.toSeq
       def mirrorCols(df: DataFrame) = spec.fields.toSeq.map { f =>
         val src = f.name.stripSuffix("_p")
-        graft.sources.SnapshotTransforms
+        SnapshotTransforms
           .deriveCol(f, col(src), df.schema(src).dataType)
           .cast(f.dataType).as(f.name)
       }
-      val stamp = java.util.UUID.randomUUID.toString.take(8)
       // doomed keys = delta keys whose row EXISTS at the head, routed
       // to the OLD row's partition (broadcast semi-join; the delta is
       // batch-sized by contract)
-      val dOut = root.resolve(s"d${head + 1}-$stamp")
+      val dOut = a.scratch("d")
       headDf.join(broadcast(delta.select(col(keyCol).as("__graft_uk"))
           .distinct()),
           col(keyCol) === col("__graft_uk"), "left_semi")
@@ -1316,7 +1328,7 @@ object SnapshotTxn {
         .write.partitionBy(mirrors: _*).parquet(dOut.toString)
       // the batch's rows land as `#upsert` delta dirs under the NEW
       // rows' partitions (mirrors derive from sources, never trusted)
-      val uOut = root.resolve(s"u${head + 1}-$stamp")
+      val uOut = a.scratch("u")
       delta
         .transform(df => df.select(
           df.columns.filterNot(mirrors.contains).map(col).toSeq ++
@@ -1331,51 +1343,27 @@ object SnapshotTxn {
         // empty batch: streaming parity — publish the txn marker
         txn match {
           case Some(_) =>
-            val parent = readManifest(root, head)
-            try {
-              writeManifest(root, head + 1, parent, txn)
-              publishFilesSidecar(s, root, head + 1, Some(head), parent,
-                Set.empty, org.apache.spark.sql.types.StructType(
-                  tableSchema.fields.map(_.copy(nullable = true))))
-              return (head + 1, 0L)
-            } catch {
-              case _: SnapshotConflictException =>
-                attempt += 1
-                if (attempt >= MaxAttempts)
-                  throw new SnapshotConflictException(head + 1)
-            }
-          case None => return (head, 0L)
+            a.publish(SnapshotManifest.read(root, head), txn)
+            (a.version, 0L)
+          case None => (head, 0L)
         }
       } else {
-        val (dCounts, dOf) = leafRowCounts(s, dWalked.map(_._2))
+        val (_, dOf) = leafRowCounts(s, dWalked.map(_._2))
         val (uCounts, uOf) = leafRowCounts(s, uWalked.map(_._2))
         val records =
           dWalked.sortBy(_._1).map { case (pv, dir) =>
-            s"#delete\t$pv\t${dOf(dir)}\t$dir" } ++
+            SnapshotManifest.morRecord("#delete", pv, dOf(dir), dir) } ++
           uWalked.sortBy(_._1).map { case (pv, dir) =>
-            s"#upsert\t$pv\t${uOf(dir)}\t$dir" }
-        val entries = readManifest(root, head)
-        try {
-          writeManifest(root, head + 1, entries, txn,
-            extraMeta = records)
-          publishFilesSidecar(s, root, head + 1, Some(head), entries,
-            Set.empty, org.apache.spark.sql.types.StructType(
-              tableSchema.fields.map(_.copy(nullable = true))))
-          return (head + 1, uCounts.valuesIterator.sum)
-        } catch {
-          case e: SnapshotConflictException =>
-            org.apache.commons.io.FileUtils.deleteQuietly(dOut.toFile)
-            org.apache.commons.io.FileUtils.deleteQuietly(uOut.toFile)
-            attempt += 1
-            if (attempt >= MaxAttempts) throw e
-        }
+            SnapshotManifest.morRecord("#upsert", pv, uOf(dir), dir) }
+        a.publish(SnapshotManifest.read(root, head), txn,
+          extraMeta = records)
+        (a.version, uCounts.valuesIterator.sum)
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** MERGE-ON-READ UPDATE/MERGE commit half
-    * ([[graft.sources.SnapshotDeltaWrite]] hands the task-written dirs
+    * ([[SnapshotDeltaWrite]] hands the task-written dirs
     * here): publish parent entries VERBATIM plus `#delete` records
     * (matched keys, per old-row partition) and `#upsert` records
     * (updated/inserted rows, per new-row partition) — one CAS version,
@@ -1385,42 +1373,23 @@ object SnapshotTxn {
     * delta computed against a stale head cannot be rebased safely.
     */
   private[graft] def snapshotMorDeltaCommit(s: SparkSession,
-      root: java.nio.file.Path, fromVersion: Int,
-      uDirs: Seq[(String, String)], dDirs: Seq[(String, String)]): Int = {
-    val head = headVersion(root)
-    if (head != fromVersion) throw new SnapshotConflictException(
-      fromVersion + 1)
-    // rows-per-leaf counting pass ([[leafRowCounts]], the MoR DELETE
-    // door's pair) — planes counted separately (different schemas)
-    def records(tag: String, pvDirs: Seq[(String, String)]): Seq[String] = {
-      val (_, countOf) = leafRowCounts(s, pvDirs.map(_._2).distinct)
-      pvDirs.map { case (pv, dir) => s"$tag\t$pv\t${countOf(dir)}\t$dir" }
+      root: Path, fromVersion: Int,
+      uDirs: Seq[(String, String)], dDirs: Seq[(String, String)]): Int =
+    commit(root, Some(fromVersion)) { a =>
+      if (SnapshotMeta.read(root).isEmpty) throw new IllegalStateException(
+        "merge-on-read delta commit on a meta-less store")
+      // rows-per-leaf counting pass ([[leafRowCounts]], the MoR DELETE
+      // door's pair) — planes counted separately (different schemas)
+      def records(tag: String, pvDirs: Seq[(String, String)]): Seq[String] = {
+        val (_, countOf) = leafRowCounts(s, pvDirs.map(_._2).distinct)
+        pvDirs.map { case (pv, dir) =>
+          SnapshotManifest.morRecord(tag, pv, countOf(dir), dir) }
+      }
+      a.publish(SnapshotManifest.read(root, fromVersion),
+        extraMeta = records("#delete", dDirs) ++ records("#upsert", uDirs))
+      a.version
     }
-    val entries = readManifest(root, fromVersion)
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
-      throw new IllegalStateException(
-        "merge-on-read delta commit on a meta-less store"))
-    writeManifest(root, fromVersion + 1, entries,
-      extraMeta = records("#delete", dDirs) ++ records("#upsert", uDirs))
-    publishFilesSidecar(s, root, fromVersion + 1, Some(fromVersion),
-      entries, Set.empty, org.apache.spark.sql.types.StructType(
-        graft.sources.SnapshotManifest
-          .effectiveDataSchema(root, meta.dataSchema)
-          .fields.map(_.copy(nullable = true))))
-    fromVersion + 1
-  }
 
-  /** Schema-only widening commit for SQL `ALTER TABLE ADD COLUMN`
-    * ([[graft.sources.GraftSnapshotCatalog.alterTable]]): publish the
-    * parent's entries unchanged as the next version with the widened
-    * schema riding as its `#schema` manifest record — the SAME atomic
-    * in-manifest evolution the write door's widening upsert uses
-    * (CAS-serialized, no sidecar crash window), just with zero data
-    * movement. Every file ever written stays valid: readers fill the
-    * new columns with NULL through the declared schema. Retries the
-    * CAS on a racing commit (a schema publish composes with any
-    * parent, so rebasing is just re-reading the head).
-    */
   /** `CALL snap.compute_stats('t')` — BACKFILL the head version's
     * `v<N>.files` stats sidecar (bytes, rows, per-column min/max) for
     * stores that predate the sidecar plane or whose sidecar publish
@@ -1435,14 +1404,14 @@ object SnapshotTxn {
     * recovers as rewrites re-write files under the current name).
     */
   private[graft] def snapshotComputeStats(s: SparkSession,
-      root: java.nio.file.Path): (Int, Int) = {
-    val head = headVersion(root)
+      root: Path): (Int, Int) = {
+    val head = SnapshotManifest.head(root)
     require(head >= 1, s"$root has no published versions")
-    if (graft.sources.SnapshotFiles.exists(root, head)) return (head, -1)
-    val entries = readManifest(root, head)
-    val declared = graft.sources.SnapshotMeta.read(root)
+    if (SnapshotFiles.exists(root, head)) return (head, -1)
+    val entries = SnapshotManifest.read(root, head)
+    val declared = SnapshotMeta.read(root)
       .map(m => org.apache.spark.sql.types.StructType(
-        graft.sources.SnapshotManifest
+        SnapshotManifest
           .effectiveDataSchema(root, m.dataSchema)
           .fields.map(_.copy(nullable = true))))
       .getOrElse {
@@ -1452,12 +1421,12 @@ object SnapshotTxn {
               "from"))
         s.read.parquet(first).schema
       }
-    val chains = graft.sources.SnapshotRename.chainsFor(root, declared)
+    val chains = SnapshotRename.chainsFor(root, declared)
     val statSchema = org.apache.spark.sql.types.StructType(
       declared.fields.filterNot(f => chains.contains(f.name)))
-    val rows = graft.sources.SnapshotFiles.collect(
+    val rows = SnapshotFiles.collect(
       s, entries.toSeq.sorted, statSchema)
-    graft.sources.SnapshotFiles.write(root, head, rows)
+    SnapshotFiles.write(root, head, rows)
     (head, rows.size)
   }
 
@@ -1473,44 +1442,30 @@ object SnapshotTxn {
     * correctness issue, and unindexed files are never skipped.
     */
   private[graft] def snapshotBuildBloom(s: SparkSession,
-      root: java.nio.file.Path, keyCol: String): (Int, Int) = {
-    val head = headVersion(root)
+      root: Path, keyCol: String): (Int, Int) = {
+    val head = SnapshotManifest.head(root)
     require(head >= 1, s"$root has no published versions")
-    val meta = graft.sources.SnapshotMeta.read(root)
+    val meta = SnapshotMeta.read(root)
     val eff: Option[org.apache.spark.sql.types.StructType] = meta.map { m =>
-      val e = graft.sources.SnapshotManifest
+      val e = SnapshotManifest
         .effectiveDataSchema(root, m.dataSchema)
       require(e.fieldNames.contains(keyCol),
         s"column $keyCol does not exist")
-      val hot = graft.sources.SnapshotRename.chainsFor(root, e)
+      val hot = SnapshotRename.chainsFor(root, e)
       require(!hot.contains(keyCol),
         s"cannot index $keyCol: it has rename history — pre-rename " +
           "files carry it under a former name and would index as NULL; " +
           "compact/rewrite first")
       e
     }
-    val dirs = readManifest(root, head).values.toSeq.sorted
+    val dirs = SnapshotManifest.read(root, head).values.toSeq.sorted
     require(dirs.nonEmpty, s"head version $head has no partitions")
-    graft.sources.SnapshotBloom.build(s, dirs, keyCol,
+    SnapshotBloom.build(s, dirs, keyCol,
       root.resolve("bloomidx").toString,
       dataSchema = eff)
     (head, dirs.size)
   }
 
-  /** SAFE TYPE WIDENING (`ALTER TABLE … ALTER COLUMN c TYPE t`) — a
-    * `#schema` overlay exactly like ADD COLUMN: one metadata-only CAS
-    * version publishing the effective schema with `c` at its widened
-    * type, zero files rewritten. Pre-widening files keep their
-    * written-time physical type and readers CAST UP at scan time
-    * (Spark's parquet readers serve int32 under a declared LONG and
-    * float under a declared DOUBLE — the Iceberg/Delta safe-promotion
-    * set); DML doors accept the widened type immediately; narrowing
-    * and unrelated retypes are refused by the caller
-    * ([[graft.sources.GraftSnapshotCatalog]] gate). Everything
-    * re-validates inside the CAS retry loop (the migrate_layout
-    * lesson): a racing rename/drop/widen re-reads the effective
-    * schema, so the published record is a superset of whatever won.
-    */
   /** `CREATE TABLE` bootstrap (round 12): an EMPTY store with its
     * layout declared up front — `table.meta` (data schema, mirror
     * partition schema, upsert key) plus an empty v1 manifest through
@@ -1521,7 +1476,7 @@ object SnapshotTxn {
     * append. An empty sidecar rides along so v1 reads list zero files
     * without falling back to directory listing.
     */
-  private[graft] def snapshotCreateTable(root: java.nio.file.Path,
+  private[graft] def snapshotCreateTable(root: Path,
       dataSchema: org.apache.spark.sql.types.StructType,
       partitionSchema: org.apache.spark.sql.types.StructType,
       keyCol: String, deleteMode: Option[String] = None): Unit = {
@@ -1531,9 +1486,9 @@ object SnapshotTxn {
     // schemas, exactly one places table.meta — a replace-existing
     // write here would let the LOSER clobber the winner's declared
     // schema and key after both reported success
-    val wanted = graft.sources.SnapshotMeta.Meta(partitionSchema,
+    val wanted = SnapshotMeta.Meta(partitionSchema,
       dataSchema, Some(keyCol), deleteMode)
-    try graft.sources.SnapshotMeta.writeIfAbsent(root, wanted)
+    try SnapshotMeta.writeIfAbsent(root, wanted)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         // a crash between the meta publish and the v1 manifest link
@@ -1542,8 +1497,8 @@ object SnapshotTxn {
         // NoSuchTable) — with no SQL-level way out. A re-run of the
         // SAME declaration completes the bootstrap below; a DIFFERENT
         // declaration refuses (the first creator's schema won the CAS)
-        val noManifest = headVersion(root) == 0
-        val sameDecl = graft.sources.SnapshotMeta.read(root)
+        val noManifest = SnapshotManifest.head(root) == 0
+        val sameDecl = SnapshotMeta.read(root)
           .contains(wanted)
         if (!(noManifest && sameDecl))
           throw new org.apache.spark.sql.catalyst.analysis
@@ -1558,20 +1513,31 @@ object SnapshotTxn {
         throw new org.apache.spark.sql.catalyst.analysis
           .TableAlreadyExistsException(Seq(root.getFileName.toString))
     }
-    graft.sources.SnapshotFiles.write(root, 1, Nil)
+    SnapshotFiles.write(root, 1, Nil)
   }
 
+  /** SAFE TYPE WIDENING (`ALTER TABLE … ALTER COLUMN c TYPE t`) — a
+    * `#schema` overlay exactly like ADD COLUMN: one metadata-only CAS
+    * version publishing the effective schema with `c` at its widened
+    * type, zero files rewritten. Pre-widening files keep their
+    * written-time physical type and readers CAST UP at scan time
+    * (Spark's parquet readers serve int32 under a declared LONG and
+    * float under a declared DOUBLE — the Iceberg/Delta safe-promotion
+    * set); DML doors accept the widened type immediately; narrowing
+    * and unrelated retypes are refused by the caller
+    * ([[GraftSnapshotCatalog]] gate). Everything
+    * re-validates inside the CAS retry loop (the migrate_layout
+    * lesson): a racing rename/drop/widen re-reads the effective
+    * schema, so the published record is a superset of whatever won.
+    */
   private[graft] def snapshotWidenColumn(s: SparkSession,
-      root: java.nio.file.Path, name: String,
+      root: Path, name: String,
       to: org.apache.spark.sql.types.DataType): Unit = {
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
+    val meta = SnapshotMeta.read(root).getOrElse(
       throw new UnsupportedOperationException(
         "legacy store without table.meta: type widening needs the " +
           "declared-schema plane"))
-    val MaxAttempts = 5
-    var attempt = 0
-    var committed = false
-    while (!committed) {
+    commit(root) { a =>
       // the FULL gate re-runs inside the retry loop, not just
       // existence: a losing racer's retry sees whatever won between
       // attempts — another widening (this retype could now be a
@@ -1579,16 +1545,16 @@ object SnapshotTxn {
       // or an evolve_partitioning that just made the column a layout
       // source. Validating once outside the loop and republishing is
       // exactly the migrate_layout stale-spec bug.
-      val effective = graft.sources.SnapshotManifest
+      val effective = SnapshotManifest
         .effectiveDataSchema(root, meta.dataSchema)
       val field = effective.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"column $name does not exist"))
-      require(graft.sources.SnapshotWiden.safe(field.dataType, to),
+      require(SnapshotWiden.safe(field.dataType, to),
         s"unsafe type change ${field.dataType.simpleString} -> " +
           s"${to.simpleString}: only widening promotions are " +
           "metadata-only (int->bigint, float->double, decimal " +
           "precision growth)")
-      val mirrors = graft.sources.SnapshotManifest
+      val mirrors = SnapshotManifest
         .partitionSpecs(root, meta.partitionSchema).last.fieldNames.toSet
       require(!mirrors(name) && !mirrors.map(_.stripSuffix("_p"))(name),
         s"cannot widen $name: partition values parse under the " +
@@ -1600,34 +1566,32 @@ object SnapshotTxn {
         effective.fields.map(f =>
           if (f.name == name) f.copy(dataType = to, nullable = true)
           else f))
-      val head = headVersion(root)
-      require(head >= 1, "cannot ALTER an unbootstrapped store")
-      val parent = readManifest(root, head)
-      try {
-        writeManifest(root, head + 1, parent, None, Some(widened.json))
-        publishFilesSidecar(s, root, head + 1, Some(head), parent,
-          Set.empty, widened)
-        committed = true
-      } catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-      }
+      require(a.head >= 1, "cannot ALTER an unbootstrapped store")
+      a.publish(SnapshotManifest.read(root, a.head),
+        schemaJson = Some(widened.json))
     }
   }
 
+  /** Schema-only widening commit for SQL `ALTER TABLE ADD COLUMN`
+    * ([[GraftSnapshotCatalog.alterTable]]): publish the
+    * parent's entries unchanged as the next version with the widened
+    * schema riding as its `#schema` manifest record — the SAME atomic
+    * in-manifest evolution the write door's widening upsert uses
+    * (CAS-serialized, no sidecar crash window), just with zero data
+    * movement. Every file ever written stays valid: readers fill the
+    * new columns with NULL through the declared schema. Retries the
+    * CAS on a racing commit (a schema publish composes with any
+    * parent, so rebasing is just re-reading the head).
+    */
   private[graft] def snapshotAddColumns(s: SparkSession,
-      root: java.nio.file.Path,
+      root: Path,
       newCols: Seq[org.apache.spark.sql.types.StructField]): Unit = {
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
+    val meta = SnapshotMeta.read(root).getOrElse(
       throw new UnsupportedOperationException(
         "legacy store without table.meta: schema evolution needs the " +
           "declared-schema plane"))
-    val MaxAttempts = 5
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val effective = graft.sources.SnapshotManifest
+    commit(root) { a =>
+      val effective = SnapshotManifest
         .effectiveDataSchema(root, meta.dataSchema)
       val dup = newCols.map(_.name).filter(effective.fieldNames.contains)
       require(dup.isEmpty,
@@ -1636,7 +1600,7 @@ object SnapshotTxn {
       // adding it back would make the physical read schema carry two
       // fields of one name (store unreadable) and resurrect pre-rename
       // values into the supposedly-NULL new column
-      val formers = graft.sources.SnapshotManifest.renameChains(root)
+      val formers = SnapshotManifest.renameChains(root)
         .valuesIterator.flatten.toSet
       val formerDup = newCols.map(_.name).filter(formers)
       require(formerDup.isEmpty,
@@ -1646,7 +1610,7 @@ object SnapshotTxn {
       // column under that name would resurrect them on every old-file
       // read — revival must be spelled as a rewrite into a fresh name
       val droppedNames =
-        graft.sources.SnapshotManifest.droppedFooterNames(root)
+        SnapshotManifest.droppedFooterNames(root)
       val dropDup = newCols.map(_.name).filter(droppedNames)
       require(dropDup.isEmpty,
         s"column(s) ${dropDup.mkString(", ")} were DROPPED — pre-drop " +
@@ -1654,19 +1618,9 @@ object SnapshotTxn {
           "would silently resurrect them")
       val widened = org.apache.spark.sql.types.StructType(
         effective.fields ++ newCols.map(_.copy(nullable = true)))
-      val head = headVersion(root)
-      require(head >= 1, "cannot ALTER an unbootstrapped store")
-      val parent = readManifest(root, head)
-      try {
-        writeManifest(root, head + 1, parent, None, Some(widened.json))
-        publishFilesSidecar(s, root, head + 1, Some(head), parent,
-          Set.empty, widened)
-        committed = true
-      } catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-      }
+      require(a.head >= 1, "cannot ALTER an unbootstrapped store")
+      a.publish(SnapshotManifest.read(root, a.head),
+        schemaJson = Some(widened.json))
     }
   }
 
@@ -1680,13 +1634,10 @@ object SnapshotTxn {
     * before `alterTable` ever reaches us.
     */
   private[graft] def snapshotCheckEvent(s: SparkSession,
-      root: java.nio.file.Path, record: String,
-      validatedHead: Option[Int] = None): Unit = {
-    val MaxAttempts = 5
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val head = headVersion(root)
+      root: Path, record: String,
+      validatedHead: Option[Int] = None): Unit =
+    commit(root) { a =>
+      val head = a.head
       require(head >= 1, "cannot ALTER an unbootstrapped store")
       // an ADD CONSTRAINT validated a SPECIFIC version's data: if a
       // data commit raced in after that scan, publishing would bless
@@ -1695,22 +1646,8 @@ object SnapshotTxn {
         throw new IllegalStateException(
           s"table advanced from v$v to v$head during validation — " +
             "re-run the statement"))
-      val parent = readManifest(root, head)
-      val dataSchema = graft.sources.SnapshotManifest.evolvedDataSchema(root)
-        .orElse(graft.sources.SnapshotMeta.read(root).map(_.dataSchema))
-        .getOrElse(org.apache.spark.sql.types.StructType(Nil))
-      try {
-        writeManifest(root, head + 1, parent, extraMeta = Seq(record))
-        publishFilesSidecar(s, root, head + 1, Some(head), parent,
-          Set.empty, dataSchema)
-        committed = true
-      } catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-      }
+      a.publish(SnapshotManifest.read(root, head), extraMeta = Seq(record))
     }
-  }
 
   /** Layout-generic incremental compaction for ANY snapshot store —
     * the `CALL snap.compact(...)` engine. Hot partitions (≥ threshold
@@ -1739,31 +1676,29 @@ object SnapshotTxn {
     * (time travel intact) until vacuum reclaims them.
     */
   private[graft] def snapshotCompact(s: SparkSession,
-      root: java.nio.file.Path, threshold: Int,
+      root: Path, threshold: Int,
       filesPerPartition: Option[Int] = None,
       zorderCols: Option[(String, String)] = None): (Int, Int, Int, Int) = {
     require(threshold >= 2, s"threshold must be >= 2, got $threshold")
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
+    val meta = SnapshotMeta.read(root).getOrElse(
       throw new UnsupportedOperationException(
         "compact needs a table.meta layout declaration"))
     // on a spec-evolved store compact operates on CURRENT-spec
     // partitions only (old-spec entries migrate through upserts);
     // mirrors therefore come from the current spec
-    val compactSpecs = graft.sources.SnapshotManifest.partitionSpecs(
+    val compactSpecs = SnapshotManifest.partitionSpecs(
       root, meta.partitionSchema)
     val mirrors = compactSpecs.last.fields.map(_.name).toSeq
-    val dataSchema = graft.sources.SnapshotManifest
+    val dataSchema = SnapshotManifest
       .effectiveDataSchema(root, meta.dataSchema)
     val declared = org.apache.spark.sql.types.StructType(
       dataSchema.fields.map(_.copy(nullable = true)))
     def parquetCount(p: String): Int =
       Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
         .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    val MaxAttempts = 5
-    var attempt = 0
-    while (true) {
-      val head = headVersion(root)
-      val manifestFull = readManifest(root, head)
+    def attempt(a: Attempt): (Int, Int, Int, Int) = {
+      val head = a.head
+      val manifestFull = SnapshotManifest.read(root, head)
       // hot-partition detection over current-spec entries only; the
       // publish below still carries EVERY entry (old-spec included)
       val manifest = manifestFull
@@ -1777,9 +1712,9 @@ object SnapshotTxn {
       // in `#upsert` records (an UPDATE moved rows into a month the
       // base manifest never saw) — hot too, compacting it mints its
       // first base entry.
-      val morRecords = graft.sources.SnapshotManifest
+      val morRecords = SnapshotManifest
         .deleteRecords(root, head)
-      val morUpserts = graft.sources.SnapshotManifest
+      val morUpserts = SnapshotManifest
         .upsertRecords(root, head)
         .filter(_._1.split("/", -1).length == mirrors.length)
       // on an UNMIGRATED evolved head a record's doomed rows may live
@@ -1789,7 +1724,7 @@ object SnapshotTxn {
       // migrate_layout converges the head (which materializes the
       // records for the rows it rewrites).
       val evolvedHead =
-        graft.sources.SnapshotTable.hasOldSpecEntries(root, head)
+        SnapshotTable.hasOldSpecEntries(root, head)
       val recordPvs =
         if (evolvedHead) Set.empty[String]
         else (morRecords.keySet.intersect(
@@ -1815,9 +1750,7 @@ object SnapshotTxn {
       if (hot.isEmpty) return (0, head, 0, 0)
       val filesBefore = hot.map(pv => counts.getOrElse(pv, 0) +
         morUpserts.getOrElse(pv, Nil).map(parquetCount).sum).sum
-      val out = root.resolve(
-        s"d${head + 1}-${java.util.UUID.randomUUID.toString.take(8)}")
-        .toString
+      val out = a.scratch().toString
       // ONE scopedUnion across every hot partition (round 16): the
       // per-pv loop this replaces ran a broadcast anti-join — plus a
       // schema-inference job on the record dirs — PER hot partition
@@ -1839,9 +1772,9 @@ object SnapshotTxn {
       val hotUps = hot.flatMap(pv => morUpserts.getOrElse(pv, Nil))
       val allRecDirs = morRecords.valuesIterator.flatten.toSeq
         .distinct.sorted
-      val rows = graft.sources.SnapshotDeletes.scopedUnion(s,
+      val rows = SnapshotDeletes.scopedUnion(s,
         meta.keyCol.getOrElse("__graft_keyless"),
-        dirs => graft.sources.SnapshotRename.readDirs(
+        dirs => SnapshotRename.readDirs(
           s, root, dirs, declared),
         hotBase, hotUps, allRecDirs).getOrElse(
           throw new IllegalStateException("hot partitions have " +
@@ -1855,7 +1788,7 @@ object SnapshotTxn {
       // the door, never compact)
       val unioned = compactSpecs.last.fields.foldLeft(rows) { (df, f) =>
         val src = f.name.stripSuffix("_p")
-        df.withColumn(f.name, graft.sources.SnapshotTransforms
+        df.withColumn(f.name, SnapshotTransforms
           .deriveCol(f, col(src), df.schema(src).dataType)
           .cast(f.dataType))
       }
@@ -1892,7 +1825,7 @@ object SnapshotTxn {
       }
       clustered.write.partitionBy(mirrors: _*).parquet(out)
       def leafOf(pv: String): String =
-        s"$out/${graft.sources.SnapshotPartitionValues
+        s"$out/${SnapshotPartitionValues
           .leafSuffix(mirrors, pv)}"
       // a hot partition whose every row was merge-on-read-doomed
       // rewrites to NOTHING — it drops from the manifest (the
@@ -1900,22 +1833,12 @@ object SnapshotTxn {
       // dangling dir
       val survived = hot.filter(pv =>
         new java.io.File(leafOf(pv)).isDirectory)
-      val entries = (manifestFull -- hot) ++
-        survived.map(pv => pv -> leafOf(pv))
-      try {
-        writeManifest(root, head + 1, entries)
-        publishFilesSidecar(s, root, head + 1, Some(head), entries,
-          survived.toSet, declared)
-        return (hot.size, head + 1, filesBefore, survived.map(pv =>
-          parquetCount(leafOf(pv))).sum)
-      } catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-        // the attempt root stays orphaned for vacuum, like any loser
-      }
+      a.publish((manifestFull -- hot) ++ survived.map(pv => pv -> leafOf(pv)),
+        written = Some(Written(s, survived.toSet, declared)))
+      (hot.size, a.version, filesBefore,
+        survived.map(pv => parquetCount(leafOf(pv))).sum)
     }
-    throw new IllegalStateException("unreachable")
+    commit(root)(attempt)
   }
 
   /** Bootstrap a snapshot store: the whole frame becomes v1, laid out
@@ -1927,36 +1850,34 @@ object SnapshotTxn {
     * bootstrap stays readable) and the v1 file-stats sidecar.
     */
   private[graft] def snapshotInit(s: SparkSession,
-      root: java.nio.file.Path, data: DataFrame,
+      root: Path, data: DataFrame,
       partCols: Seq[String] = Seq("o_ym"),
       bloomIndexKey: Option[String] = None,
       txn: Option[(String, Long)] = None,
       keyCol: String = "o_orderkey",
-      distribute: Boolean = true): Unit = {
+      distribute: Boolean = true): Unit = commit(root, Some(0)) { a =>
     import org.apache.spark.sql.types.{StructField, StructType}
     val pcols = partCols.map(c => s"${c}_p")
-    val d1 = root.resolve(
-      s"d1-${java.util.UUID.randomUUID.toString.take(8)}").toString
+    val d1 = a.scratch().toString
     val mirrored = partCols.foldLeft(data)(
       (df, c) => df.withColumn(s"${c}_p", col(c)))
     (if (distribute) distributeByLayout(mirrored, pcols) else mirrored)
       .write.mode("overwrite").partitionBy(pcols: _*).parquet(d1)
     val parts = walkLeafDirs(new java.io.File(d1), pcols)
-    writeManifest(root, 1, parts.toMap, txn)
-    graft.sources.SnapshotMeta.write(root, graft.sources.SnapshotMeta.Meta(
-      StructType(partCols.map(c =>
-        StructField(s"${c}_p", data.schema(c).dataType, nullable = true))),
-      data.schema,
-      // recorded so the SQL DML door can upsert/delete without the
-      // caller re-declaring the key (absent ⇒ the door's default)
-      Some(keyCol)))
-    publishFilesSidecar(s, root, 1, None, parts.toMap,
-      parts.map(_._1).toSet, data.schema)
+    a.publish(parts.toMap, txn,
+      written = Some(Written(s, parts.map(_._1).toSet, data.schema)),
+      meta = Some(SnapshotMeta.Meta(
+        StructType(partCols.map(c => StructField(s"${c}_p",
+          data.schema(c).dataType, nullable = true))),
+        data.schema,
+        // recorded so the SQL DML door can upsert/delete without the
+        // caller re-declaring the key (absent ⇒ the door's default)
+        Some(keyCol))))
     // commit-path Bloom maintenance (the write door's `bloomKey`
     // option): one map-side pass over the dirs this commit wrote
     bloomIndexKey.foreach { k =>
       if (parts.nonEmpty)
-        graft.sources.SnapshotBloom.build(s, parts.map(_._2).toSeq, k,
+        SnapshotBloom.build(s, parts.map(_._2).toSeq, k,
           root.resolve("bloomidx").toString,
           dataSchema = Some(data.schema))
     }
@@ -1998,38 +1919,38 @@ object SnapshotTxn {
     * `bucket(n, id)` appended) without CREATE-time foresight and
     * without a rewrite; the transform rides the `#partspec` record as
     * field metadata exactly like a CREATE-time declaration
-    * ([[graft.sources.SnapshotTransforms]]).
+    * ([[SnapshotTransforms]]).
     */
   private[graft] def snapshotEvolvePartitioning(s: SparkSession,
-      root: java.nio.file.Path, sourceSpec: String): (Int, Int) = {
+      root: Path, sourceSpec: String): (Int, Int) = {
     refuseLiveDeletes(root, "evolve_partitioning")
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
+    val meta = SnapshotMeta.read(root).getOrElse(
       throw new UnsupportedOperationException(
         "legacy store without table.meta: partition-spec evolution " +
           "needs the declared-layout plane"))
-    val specs = graft.sources.SnapshotManifest.partitionSpecs(
+    val specs = SnapshotManifest.partitionSpecs(
       root, meta.partitionSchema)
     val current = specs.last
-    val dataSchema = graft.sources.SnapshotManifest.effectiveDataSchema(
+    val dataSchema = SnapshotManifest.effectiveDataSchema(
       root, meta.dataSchema)
     // bare name = identity; f(col) / f(n, col) = hidden transform
     val unary = "(days|months|years|hours)\\(\\s*([^\\s(),]+)\\s*\\)".r
     val binary = "(bucket|truncate)\\(\\s*(\\d+)\\s*,\\s*([^\\s(),]+)\\s*\\)".r
     val (sourceCol, transform):
-        (String, Option[graft.sources.SnapshotTransforms.T]) =
+        (String, Option[SnapshotTransforms.T]) =
       sourceSpec.trim match {
         case unary("days", c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Days))
+          (c, Some(SnapshotTransforms.Days))
         case unary("months", c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Months))
+          (c, Some(SnapshotTransforms.Months))
         case unary("years", c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Years))
+          (c, Some(SnapshotTransforms.Years))
         case unary("hours", c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Hours))
+          (c, Some(SnapshotTransforms.Hours))
         case binary("bucket", n, c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Bucket(n.toInt)))
+          (c, Some(SnapshotTransforms.Bucket(n.toInt)))
         case binary("truncate", w, c) =>
-          (c, Some(graft.sources.SnapshotTransforms.Truncate(w.toInt)))
+          (c, Some(SnapshotTransforms.Truncate(w.toInt)))
         case bare if bare.nonEmpty && !bare.contains("(") => (bare, None)
         case other => throw new IllegalArgumentException(
           s"unsupported partition transform '$other': a bare source " +
@@ -2049,7 +1970,7 @@ object SnapshotTxn {
       s"$sourceCol already partitions this table")
     require(!dataSchema.fieldNames.contains(mirror),
       s"mirror name $mirror collides with a data column")
-    require(graft.sources.SnapshotRename.chainsFor(root, dataSchema)
+    require(SnapshotRename.chainsFor(root, dataSchema)
       .valuesIterator.flatten.forall(_ != mirror),
       s"mirror name $mirror collides with a former column name")
     val appended = transform match {
@@ -2057,11 +1978,11 @@ object SnapshotTxn {
       // mirrorField validates the (transform, source-type) pairing —
       // the same refusal matrix CREATE TABLE applies — and records the
       // transform as field METADATA so it rides the #partspec JSON
-      case Some(t) => graft.sources.SnapshotTransforms.mirrorField(t, field)
+      case Some(t) => SnapshotTransforms.mirrorField(t, field)
     }
     val newSpec = org.apache.spark.sql.types.StructType(
       current.fields :+ appended)
-    val validatedAt = headVersion(root)
+    val validatedAt = SnapshotManifest.head(root)
     require(validatedAt >= 1, "cannot evolve an unbootstrapped store")
     // DDL-time NULL audit (the ADD CONSTRAINT discipline — one scan of
     // one column, at the moment the user asks for the layout change):
@@ -2070,7 +1991,7 @@ object SnapshotTxn {
     // checked per commit, but pre-evolution rows can only be checked
     // here — without this, a migrating rewrite would silently write a
     // __HIVE_DEFAULT_PARTITION__ leaf and break mirror == source
-    val nulls = graft.sources.SnapshotTable
+    val nulls = SnapshotTable
       .read(s, root, validatedAt)
       .filter(col(sourceCol).isNull).limit(1).count()
     require(nulls == 0L,
@@ -2081,7 +2002,7 @@ object SnapshotTxn {
     // evolutions could publish conflicting same-arity specs)
     snapshotCheckEvent(s, root, s"#partspec\t${newSpec.json}",
       validatedHead = Some(validatedAt))
-    (headVersion(root), newSpec.length)
+    (SnapshotManifest.head(root), newSpec.length)
   }
 
   /** `CALL snap.migrate_layout('t'[, max_partitions])` — converge a
@@ -2101,27 +2022,25 @@ object SnapshotTxn {
     * At 100 TB: O(migrated partitions) per call, caller-bounded.
     */
   private[graft] def snapshotMigrateLayout(s: SparkSession,
-      root: java.nio.file.Path, maxPartitions: Int): (Int, Int) = {
+      root: Path, maxPartitions: Int): (Int, Int) = {
     require(maxPartitions >= 1, "max_partitions must be >= 1")
-    val meta = graft.sources.SnapshotMeta.read(root).getOrElse(
+    val meta = SnapshotMeta.read(root).getOrElse(
       throw new UnsupportedOperationException(
         "migrate_layout needs a table.meta layout declaration"))
-    val MaxAttempts = 5
-    var attempt = 0
-    while (true) {
-      val head = headVersion(root)
-      val manifest = readManifest(root, head)
+    def attempt(a: Attempt): (Int, Int) = {
+      val head = a.head
+      val manifest = SnapshotManifest.read(root, head)
       // spec/schema resolution lives INSIDE the retry loop, like the
       // head/manifest reads above: a concurrent evolve_partitioning
       // winning a version between attempts would otherwise have this
       // retry rewrite old-spec partitions under a stale spec and
       // report them migrated while they stay old-spec relative to
       // the new current layout
-      val current = graft.sources.SnapshotManifest.partitionSpecs(
+      val current = SnapshotManifest.partitionSpecs(
         root, meta.partitionSchema).last
       val pcols = current.fieldNames.toSeq
       val declared = org.apache.spark.sql.types.StructType(
-        graft.sources.SnapshotManifest.effectiveDataSchema(
+        SnapshotManifest.effectiveDataSchema(
           root, meta.dataSchema).fields.map(_.copy(nullable = true)))
       val old = manifest.toSeq
         .filter(_._1.split("/", -1).length < current.length)
@@ -2134,11 +2053,11 @@ object SnapshotTxn {
       // key it carries forward. (`#upsert` deltas cannot exist on an
       // evolved store — UPDATE refuses evolved heads, evolve refuses
       // live records.)
-      val migRecDirs = graft.sources.SnapshotManifest
+      val migRecDirs = SnapshotManifest
         .deleteRecords(root, head).valuesIterator.flatten
         .toSeq.distinct.sorted
-      val unioned = graft.sources.SnapshotDeletes.antiJoin(s,
-        graft.sources.SnapshotRename.readDirs(
+      val unioned = SnapshotDeletes.antiJoin(s,
+        SnapshotRename.readDirs(
           s, root, old.map(_._2), declared),
         meta.keyCol.getOrElse(if (migRecDirs.isEmpty) "__nokey" else
           throw new IllegalStateException(
@@ -2150,9 +2069,7 @@ object SnapshotTxn {
       require(nullRow == 0L,
         s"NULL value(s) in partition source column(s) " +
           s"${srcCols.mkString(", ")} — backfill before migrating")
-      val out = root.resolve(
-        s"d${head + 1}-mig${java.util.UUID.randomUUID.toString.take(8)}")
-        .toString
+      val out = a.scratch(tag = "mig").toString
       // mirrors re-derive through their declared transform (identity
       // verbatim, days/bucket compute f(source) — the door's own
       // write discipline). NO re-distribution here: the new spec
@@ -2163,7 +2080,7 @@ object SnapshotTxn {
       // (input splits × appended fan) with zero shuffle; a hash
       // shuffle would move every row for the same file count.
       current.fields.foldLeft(unioned)((df, f) =>
-          df.withColumn(f.name, graft.sources.SnapshotTransforms
+          df.withColumn(f.name, SnapshotTransforms
             .deriveCol(f, col(f.name.stripSuffix("_p")),
               unioned.schema(f.name.stripSuffix("_p")).dataType)))
         .write.partitionBy(pcols: _*).parquet(out)
@@ -2179,20 +2096,11 @@ object SnapshotTxn {
         s"migration derived pv(s) ${clobbered.mkString(", ")} that " +
           "already exist as current-spec entries — store invariant " +
           "violated, refusing to overwrite")
-      val entries = (manifest -- old.map(_._1)) ++ walked
-      try {
-        writeManifest(root, head + 1, entries)
-        publishFilesSidecar(s, root, head + 1, Some(head), entries,
-          walked.map(_._1).toSet, declared)
-        return (old.size, head + 1)
-      } catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt >= MaxAttempts) throw e
-        // the attempt root stays orphaned for vacuum, like any loser
-      }
+      a.publish((manifest -- old.map(_._1)) ++ walked,
+        written = Some(Written(s, walked.map(_._1).toSet, declared)))
+      (old.size, a.version)
     }
-    throw new IllegalStateException("unreachable")
+    commit(root)(attempt)
   }
 
   /** Change rows between two adjacent snapshot versions, scoped to the
@@ -2204,22 +2112,22 @@ object SnapshotTxn {
     * `old_price` (the pre-image; null for an insert), `change_type`
     * (`insert` / `update` / `delete`), and `alive` (0 for a delete).
     */
-  private[graft] def changeRows(s: SparkSession, root: java.nio.file.Path,
+  private[graft] def changeRows(s: SparkSession, root: Path,
                                 vFrom: Int, vTo: Int,
                                 keyCol: String = "o_orderkey",
                                 valCol: String = "o_totalprice"): DataFrame = {
-    val m1 = readManifest(root, vFrom)
-    val m2 = readManifest(root, vTo)
+    val m1 = SnapshotManifest.read(root, vFrom)
+    val m2 = SnapshotManifest.read(root, vTo)
     // a merge-on-read DELETE changes a partition's ROWS without
     // touching its dir — the records diff makes those partitions
     // changefeed-visible (their doomed keys surface as delete events)
-    val d1 = graft.sources.SnapshotManifest.deleteRecords(root, vFrom)
-    val d2 = graft.sources.SnapshotManifest.deleteRecords(root, vTo)
+    val d1 = SnapshotManifest.deleteRecords(root, vFrom)
+    val d2 = SnapshotManifest.deleteRecords(root, vTo)
     // `#upsert` records diff like dirs: a merge-on-read UPDATE commit
     // changes a partition's rows purely on the record planes, and its
     // delta rows must surface as update/insert events
-    val u1 = graft.sources.SnapshotManifest.upsertRecords(root, vFrom)
-    val u2 = graft.sources.SnapshotManifest.upsertRecords(root, vTo)
+    val u1 = SnapshotManifest.upsertRecords(root, vFrom)
+    val u2 = SnapshotManifest.upsertRecords(root, vTo)
     // on an UNMIGRATED evolved head a record's pv is the CURRENT-spec
     // derivation while its doomed rows may live in OLD-SPEC entries
     // whose dir never moved — any record-state diff therefore pulls
@@ -2230,8 +2138,8 @@ object SnapshotTxn {
     val recordDiff = d1 != d2 || u1 != u2
     val oldSpecPvs: Set[String] =
       if (!recordDiff) Set.empty
-      else graft.sources.SnapshotMeta.read(root).map { m =>
-        val curLen = graft.sources.SnapshotManifest
+      else SnapshotMeta.read(root).map { m =>
+        val curLen = SnapshotManifest
           .partitionSpecs(root, m.partitionSchema).last.length
         (m1.keySet ++ m2.keySet)
           .filter(_.split("/", -1).length < curLen)
@@ -2257,8 +2165,8 @@ object SnapshotTxn {
     // nulling a widened column (or crashing on a renamed one) out of
     // the changefeed. Mirrors never ride in data files, so flat dir
     // reads are arity-agnostic by construction.
-    val declaredLogical = graft.sources.SnapshotMeta.read(root)
-      .map(m => graft.sources.SnapshotManifest.effectiveDataSchema(
+    val declaredLogical = SnapshotMeta.read(root)
+      .map(m => SnapshotManifest.effectiveDataSchema(
         root, m.dataSchema))
     def scoped(d: Map[String, Seq[String]]): Seq[String] =
       changed.flatMap(d.get).flatten.distinct.sorted
@@ -2269,9 +2177,9 @@ object SnapshotTxn {
     def side(base: Seq[String], keyAs: String, priceAs: String,
              upsertDirs: Seq[String], doomDirs: Seq[String]): DataFrame = {
       def read(dirs: Seq[String]): DataFrame = declaredLogical.map(l =>
-          graft.sources.SnapshotRename.readDirs(s, root, dirs, l))
+          SnapshotRename.readDirs(s, root, dirs, l))
         .getOrElse(s.read.parquet(dirs: _*))
-      graft.sources.SnapshotDeletes.scopedUnion(s, keyCol, read,
+      SnapshotDeletes.scopedUnion(s, keyCol, read,
           base, upsertDirs, doomDirs)
         .map(_.select(col(keyCol).as(keyAs), col(valCol).as(priceAs)))
         .getOrElse(s.range(0).select(col("id").as(keyAs),
@@ -2307,7 +2215,7 @@ object SnapshotTxn {
     * proportional to partition count, not data size. Returns the
     * number of leaf dirs removed.
     */
-  private[graft] def snapshotVacuum(root: java.nio.file.Path,
+  private[graft] def snapshotVacuum(root: Path,
                                     keep: Set[Int],
                                     minAgeMs: Long = 0L): Int = {
     def canon(p: String): String = new java.io.File(p).getCanonicalPath
@@ -2320,25 +2228,25 @@ object SnapshotTxn {
     // raw .branch dirs, not the valid-branch listing: a half-created
     // branch (manifest linked, crash before branch.meta) must still
     // protect what it references
-    val branchRefs = Option(graft.sources.SnapshotBranches.dir(root)
+    val branchRefs = Option(SnapshotBranches.dir(root)
         .toFile.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).toSeq.flatMap { bd =>
         val broot = bd.toPath
-        graft.sources.SnapshotManifest.versionsWithMtime(broot).map(_._1)
-          .flatMap(v => graft.sources.SnapshotManifest.read(broot, v).values
-            ++ graft.sources.SnapshotManifest.deleteRecords(broot, v)
+        SnapshotManifest.versionsWithMtime(broot).map(_._1)
+          .flatMap(v => SnapshotManifest.read(broot, v).values
+            ++ SnapshotManifest.deleteRecords(broot, v)
               .values.flatten
-            ++ graft.sources.SnapshotManifest.upsertRecords(broot, v)
+            ++ SnapshotManifest.upsertRecords(broot, v)
               .values.flatten)
       }
     // `#delete`/`#upsert` record dirs pin like data dirs: a kept
     // version's merge-on-read sidecars ARE its read state — sweeping
     // one would silently resurrect doomed keys or drop delta rows
     val referenced = (versions.filter(keep)
-      .flatMap(v => readManifest(root, v).values ++
-        graft.sources.SnapshotManifest.deleteRecords(root, v)
+      .flatMap(v => SnapshotManifest.read(root, v).values ++
+        SnapshotManifest.deleteRecords(root, v)
           .values.flatten ++
-        graft.sources.SnapshotManifest.upsertRecords(root, v)
+        SnapshotManifest.upsertRecords(root, v)
           .values.flatten) ++ branchRefs)
       .map(canon).toSet
     // the grace window protecting IN-FLIGHT commits: an attempt root
@@ -2397,9 +2305,9 @@ object SnapshotTxn {
     // A racing widener publishes its superset record in a NEW (kept)
     // manifest, which continues to overlay this floor.
     for {
-      meta <- graft.sources.SnapshotMeta.read(root)
-      evolved <- graft.sources.SnapshotManifest.evolvedDataSchema(root)
-    } graft.sources.SnapshotMeta.write(root,
+      meta <- SnapshotMeta.read(root)
+      evolved <- SnapshotManifest.evolvedDataSchema(root)
+    } SnapshotMeta.write(root,
       meta.copy(dataSchema = evolved))
     // Expiring manifests may ALSO carry commit-coupled metadata whose
     // fold goes dark when the records vanish: live CHECK constraints
@@ -2421,61 +2329,44 @@ object SnapshotTxn {
     val expiring = versions.filterNot(keep).toSet
     // ONE header read over all manifests (headerLines per version would
     // re-list and re-read every manifest per expiring version — O(V²))
-    val carriesFoldedMeta = graft.sources.SnapshotManifest
+    val carriesFoldedMeta = SnapshotManifest
       .allHeaderLines(root)
       .exists { case (v, ls) => expiring(v) && ls.exists(l =>
         l.startsWith("#check\t") || l.startsWith("#checkdrop\t") ||
         l.startsWith("#txn\t") || l.startsWith("#rename\t") ||
         l.startsWith("#partspec\t") || l.startsWith("#drop\t")) }
-    if (carriesFoldedMeta) {
-      var attempts = 0
-      var published = -1
-      while (published < 0) {
-        attempts += 1
-        // EVERYTHING recomputes inside the CAS loop: a racing data
-        // commit moves the head, and republishing a stale base's
-        // entries at the new head would silently roll that commit
-        // back (its rows vanishing from every head read). The base is
-        // the CURRENT head's manifest — whatever just won.
-        val baseV = headVersion(root)
-        val entries = readManifest(root, baseV)
-        val txns = graft.sources.SnapshotManifest.txnWatermarks(root)
-        val live = graft.sources.SnapshotManifest.effectiveChecks(root)
-        val everNamed =
-          graft.sources.SnapshotManifest.checkNamesEverSeen(root)
-        // rename chains + partition specs re-publish verbatim:
-        // expiring the manifests that carry them would un-map every
-        // pre-rename file's renamed columns / un-parse every
-        // mixed-arity entry — silent data invisibility
-        val specLines = graft.sources.SnapshotMeta.read(root).toSeq
-          .flatMap(m => graft.sources.SnapshotManifest
-            .partitionSpecs(root, m.partitionSchema).drop(1)
-            .map(sp => s"#partspec\t${sp.json}"))
-        val normalize =
-          specLines ++
-          graft.sources.SnapshotRename.renameLines(
-            graft.sources.SnapshotManifest.renameChains(root)) ++
-          // `#drop` tombstones re-publish so the schema subtraction and
-          // the re-add refusals survive their carrier manifests
-          graft.sources.SnapshotManifest.droppedColumns(root).toSeq
-            .sorted.map(n => s"#drop\t$n") ++
-          txns.toSeq.sortBy(_._1).map { case (a, b) => s"#txn\t$a:$b" } ++
-          everNamed.toSeq.sorted.map(n => s"#checkdrop\t$n") ++
-          live.map { case (n, sql) => s"#check\t$n\t$sql" }
-        try {
-          writeManifest(root, baseV + 1, entries, extraMeta = normalize)
-          published = baseV + 1
-          // same bytes as the base version ⇒ its stats sidecar carries
-          // over verbatim (readers fall back to listing if absent)
-          graft.sources.SnapshotFiles.read(root, baseV).foreach { fm =>
-            graft.sources.SnapshotFiles.write(root, published,
-              fm.toSeq.sortBy(_._1).flatMap(_._2))
-          }
-        } catch {
-          case e: SnapshotConflictException =>
-            if (attempts >= 20) throw e
-        }
-      }
+    if (carriesFoldedMeta) commit(root) { a =>
+      // EVERYTHING recomputes inside the CAS loop: a racing data
+      // commit moves the head, and republishing a stale base's
+      // entries at the new head would silently roll that commit
+      // back (its rows vanishing from every head read). The base is
+      // the CURRENT head's manifest — whatever just won.
+      val txns = SnapshotManifest.txnWatermarks(root)
+      val live = SnapshotManifest.effectiveChecks(root)
+      val everNamed =
+        SnapshotManifest.checkNamesEverSeen(root)
+      // rename chains + partition specs re-publish verbatim:
+      // expiring the manifests that carry them would un-map every
+      // pre-rename file's renamed columns / un-parse every
+      // mixed-arity entry — silent data invisibility
+      val specLines = SnapshotMeta.read(root).toSeq
+        .flatMap(m => SnapshotManifest
+          .partitionSpecs(root, m.partitionSchema).drop(1)
+          .map(sp => s"#partspec\t${sp.json}"))
+      val normalize =
+        specLines ++
+        SnapshotRename.renameLines(
+          SnapshotManifest.renameChains(root)) ++
+        // `#drop` tombstones re-publish so the schema subtraction and
+        // the re-add refusals survive their carrier manifests
+        SnapshotManifest.droppedColumns(root).toSeq
+          .sorted.map(n => s"#drop\t$n") ++
+        txns.toSeq.sortBy(_._1).map { case (app, b) => s"#txn\t$app:$b" } ++
+        everNamed.toSeq.sorted.map(n => s"#checkdrop\t$n") ++
+        live.map { case (n, sql) => s"#check\t$n\t$sql" }
+      // same bytes as the base version ⇒ its stats sidecar carries
+      // over verbatim (readers fall back to listing if absent)
+      a.publish(SnapshotManifest.read(root, a.head), extraMeta = normalize)
     }
     versions.filterNot(keep).foreach { v =>
       java.nio.file.Files.deleteIfExists(mdir.resolve(s"v$v.manifest"))

@@ -6,7 +6,10 @@ Usage: python3 tools/check_oracle.py <verifyOutDir> <sfDir>
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify),
 runs the matching oracle SQL from oracle_sql.json in DuckDB over the
 sfDir tables, and compares: row count, column names/types (sorted by
-name), and the multiset of row values. Exits nonzero on any mismatch.
+name), and the multiset of row values. Where graft.Verify wrote
+status.json (`{entry: "ok" | {"error": msg}}`), every entry it names
+is checked and an entry that errored or left no dump is a failure.
+Exits nonzero on any failure.
 """
 import json
 import sys
@@ -29,13 +32,27 @@ def main(out_dir: str, sf_dir: str) -> int:
     import os
     dumped = sorted(d for d in os.listdir(out_dir)
                     if os.path.isdir(os.path.join(out_dir, d)))
-    # every oracle key must have a non-empty dump: a failed/raced Verify
-    # write otherwise vanishes silently from the comparison. (A dump dir
-    # holding under half the catalog is a deliberate subset run —
-    # `runMain graft.Verify <sf> <out> q1 q2` — check only what's there.)
-    subset = len(dumped) < len(oracles) / 2
-    names = sorted(dumped if subset else set(dumped) | set(oracles))
+    status_path = os.path.join(out_dir, "status.json")
+    if os.path.exists(status_path):
+        # Verify's own record of what it ran: the entry list, and each
+        # entry's error if it threw
+        with open(status_path) as f:
+            status = json.load(f)
+        names = sorted(status)
+    else:
+        # every oracle key must have a non-empty dump: a failed/raced
+        # write otherwise vanishes silently from the comparison. (A dump
+        # dir holding under half the catalog is a deliberate subset run
+        # — `runMain graft.Verify <sf> <out> q1 q2` — check only what's
+        # there.)
+        status = {}
+        subset = len(dumped) < len(oracles) / 2
+        names = sorted(dumped if subset else set(dumped) | set(oracles))
     for name in names:
+        if status.get(name, "ok") != "ok":
+            print(f"[FAIL] {name}: Verify error: {status[name]['error']}")
+            failures += 1
+            continue
         if not glob.glob(f"{out_dir}/{name}/*.parquet"):
             print(f"[FAIL] {name}: no dump written (Verify failed or "
                   f"raced another JVM?)")
@@ -86,6 +103,9 @@ def main(out_dir: str, sf_dir: str) -> int:
             failures += 1
         else:
             print(f"[ok] {name}: {len(s_rows)} rows match exactly")
+    if status:
+        ok = sum(1 for v in status.values() if v == "ok")
+        print(f"--- status.json: {ok} of {len(status)} entries ok")
     print(f"--- {len(names)} queries, {failures} failures")
     return 1 if failures else 0
 
