@@ -4084,9 +4084,9 @@ object SourceQueries {
             .sortWithinPartitions(col("o_ym"), col("zval"))
             .drop("z_day", "zval")
         }
-      clustered.write.partitionBy("o_ym_p").parquet(out)
+      val (_, files) = writeLeaves(s, clustered, Seq("o_ym_p"), out)
       a.publish(manifest ++ hot.map(ym => ym -> s"$out/o_ym_p=$ym"),
-        written = Some(Written(s, hot.toSet, rows.schema)))
+        fresh = Some(files.filter(f => hot.contains(f.pv))))
       hot
     }
   }

@@ -146,7 +146,7 @@ final class SnapshotDeltaWrite(
       // drops nothing here — deletes never enter the u-plane), so the
       // INSERT-door mirror discipline applies to MERGE inserts only
       val uFactory = SnapshotWriteSupport.factory(spark, meta,
-        writeSchema, uRoot, checkMirrors = true)
+        writeSchema, uRoot, checkMirrors = true, foldStats = false)
       val rowIdSchema = info.rowIdSchema().orElseThrow(() =>
         new IllegalStateException(
           "delta write planned without a row ID schema"))

@@ -452,18 +452,18 @@ final class SnapshotReplaceWrite(
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo)
         : DataWriterFactory =
       SnapshotWriteSupport.factory(spark, meta, info.schema(),
-        attemptRoot, checkMirrors = false)
+        attemptRoot, checkMirrors = false, foldStats = true)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val newEntries: Map[String, String] = messages.toSeq
-        .flatMap(_.asInstanceOf[SnapshotReplaceCommit].pvDirs)
+      val commits = messages.toSeq.map(_.asInstanceOf[SnapshotReplaceCommit])
+      val newEntries: Map[String, String] = commits.flatMap(_.pvDirs)
         .toMap // dir per pv is deterministic, duplicates collapse
       val replaced = op.replacedGroups()
       val parent = SnapshotManifest.read(root, version)
       // rows MOVED into a partition outside the replaced set: its
       // existing files must survive — link them into the new dir
       // (write-once files, safe sharing; copy fallback)
-      newEntries.foreach { case (pv, dir) =>
+      val links = newEntries.toSeq.flatMap { case (pv, dir) =>
         // rows may not MOVE into a partition carrying live
         // merge-on-read delete records: the old files link in
         // verbatim but the records drop with the dir change, and a
@@ -475,10 +475,11 @@ final class SnapshotReplaceWrite(
             s"rows moved into partition $pv, which carries " +
               "merge-on-read delete records — materialize them with " +
               "CALL snap.compact first")
-        if (!replaced.contains(pv)) parent.get(pv).foreach { oldDir =>
+        if (replaced.contains(pv)) Nil
+        else parent.get(pv).toSeq.flatMap { oldDir =>
           SnapshotFiles.listDataFiles(
             spark.sparkContext.hadoopConfiguration, oldDir)
-            .foreach { st =>
+            .toSeq.map { st =>
               val src = java.nio.file.Paths.get(
                 st.getPath.toUri.getPath)
               // carry- prefix + fresh uuid: the receiving dir may hold
@@ -493,17 +494,27 @@ final class SnapshotReplaceWrite(
                 case _: UnsupportedOperationException =>
                   JFiles.copy(src, dst)
               }
+              (pv, src, dst)
             }
         }
       }
-      SnapshotTxn.snapshotReplacePartitions(spark,
-        root, version, replaced, newEntries,
-        // stats profile under the EFFECTIVE schema: files written after
-        // an ADD COLUMN carry the evolved columns, and profiling with
-        // the bootstrap schema would leave them permanently unskippable
-        StructType(SnapshotManifest
-          .effectiveDataSchema(root, meta.dataSchema)
-          .fields.map(_.copy(nullable = true))))
+      // a carried file's stats entry is its source file's, from the
+      // parent sidecar, re-pathed to the link (the clone rule of
+      // SnapshotFiles.copy); no parent sidecar, or no entry for a
+      // source file, publishes no sidecar for this version
+      val carried: Option[Seq[SnapshotFiles.FileEntry]] =
+        if (links.isEmpty) Some(Nil)
+        else SnapshotFiles.read(root, version).flatMap { fm =>
+          val found = links.flatMap { case (pv, src, dst) =>
+            fm.getOrElse(pv, Nil)
+              .find(e => java.nio.file.Paths.get(e.path).getFileName ==
+                src.getFileName)
+              .map(_.copy(path = dst.toAbsolutePath.toString))
+          }
+          Option.when(found.size == links.size)(found)
+        }
+      SnapshotTxn.snapshotReplacePartitions(root, version, replaced,
+        newEntries, carried.map(commits.flatMap(_.files) ++ _))
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -568,7 +579,7 @@ private[sources] trait SnapshotClusteredWrite
 private[sources] object SnapshotWriteSupport {
   def factory(spark: SparkSession, meta: SnapshotMeta.Meta,
               writeSchema: StructType, attemptRoot: JPath,
-              checkMirrors: Boolean): DataWriterFactory = {
+              checkMirrors: Boolean, foldStats: Boolean): DataWriterFactory = {
     JFiles.createDirectories(attemptRoot)
     val mirrorNames = meta.partitionSchema.fieldNames.toSeq
     val fileSchema = StructType(
@@ -611,7 +622,7 @@ private[sources] object SnapshotWriteSupport {
       Map.empty, fileSchema)
     new SnapshotReplaceWriterFactory(attemptRoot.toString, writeSchema,
       fileSchema, mirrorNames, srcCols, owf,
-      new SerializableConf(job.getConfiguration), checkMirrors,
+      new SerializableConf(job.getConfiguration), checkMirrors, foldStats,
       spark.sessionState.conf.sessionLocalTimeZone)
   }
 }
@@ -647,7 +658,7 @@ final class SnapshotAppendWrite(
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo)
         : DataWriterFactory =
       SnapshotWriteSupport.factory(spark, meta, info.schema(),
-        staging, checkMirrors = true)
+        staging, checkMirrors = true, foldStats = false)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit =
       try {
@@ -728,11 +739,11 @@ final class SnapshotOverwriteWrite(
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo)
         : DataWriterFactory =
       SnapshotWriteSupport.factory(spark, meta, info.schema(),
-        attemptRoot, checkMirrors = true)
+        attemptRoot, checkMirrors = true, foldStats = true)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val newEntries: Map[String, String] = messages.toSeq
-        .flatMap(_.asInstanceOf[SnapshotReplaceCommit].pvDirs).toMap
+      val commits = messages.toSeq.map(_.asInstanceOf[SnapshotReplaceCommit])
+      val newEntries: Map[String, String] = commits.flatMap(_.pvDirs).toMap
       val ps = meta.partitionSchema
       val manifest = SnapshotManifest.read(root, version)
       val replaced: Set[String] = staticFilters match {
@@ -750,14 +761,8 @@ final class SnapshotOverwriteWrite(
               s"${(newEntries.keySet -- inScope).mkString(", ")}")
           SnapshotRowLevel.matchingPvs(exprs, ps, manifest.keySet)
       }
-      SnapshotTxn.snapshotReplacePartitions(spark,
-        root, version, replaced, newEntries,
-        // stats profile under the EFFECTIVE schema: files written after
-        // an ADD COLUMN carry the evolved columns, and profiling with
-        // the bootstrap schema would leave them permanently unskippable
-        StructType(SnapshotManifest
-          .effectiveDataSchema(root, meta.dataSchema)
-          .fields.map(_.copy(nullable = true))))
+      SnapshotTxn.snapshotReplacePartitions(root, version, replaced,
+        newEntries, Some(commits.flatMap(_.files)))
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -766,10 +771,11 @@ final class SnapshotOverwriteWrite(
 }
 
 /** Per-task commit: the (partitionValue → leaf dir) pairs this task
-  * wrote files under.
+  * wrote files under, and the stats entry of each file it wrote (empty
+  * when the write folds no stats).
   */
-final case class SnapshotReplaceCommit(pvDirs: Seq[(String, String)])
-  extends WriterCommitMessage
+final case class SnapshotReplaceCommit(pvDirs: Seq[(String, String)],
+    files: Seq[SnapshotFiles.FileEntry]) extends WriterCommitMessage
 
 final class SnapshotReplaceWriterFactory(
     attemptRoot: String,
@@ -781,19 +787,23 @@ final class SnapshotReplaceWriterFactory(
     owf: OutputWriterFactory,
     conf: SerializableConf,
     checkMirrors: Boolean = false,
+    foldStats: Boolean = false,
     timeZoneId: String = "UTC") extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new SnapshotReplaceDataWriter(attemptRoot, writeSchema, fileSchema,
       mirrorNames, srcCols, owf, conf.conf, partitionId, taskId,
-      checkMirrors, timeZoneId)
+      checkMirrors, foldStats, timeZoneId)
 }
 
 /** Streams rows into one parquet file per partition value this task
   * sees (stock [[ParquetFileFormat]] writers — bit-compatible with the
   * door's files). File names carry the task id, so parallel tasks
-  * writing the same partition never collide.
+  * writing the same partition never collide. With `foldStats`, each
+  * file's sidecar entry is folded from the rows it receives
+  * ([[SnapshotFiles.StatsFold]]) and rides back in the task's commit
+  * message.
   */
 final class SnapshotReplaceDataWriter(
     attemptRoot: String,
@@ -806,8 +816,9 @@ final class SnapshotReplaceDataWriter(
     conf: Configuration,
     partitionId: Int,
     taskId: Long,
-    checkMirrors: Boolean = false,
-    timeZoneId: String = "UTC") extends DataWriter[InternalRow] {
+    checkMirrors: Boolean,
+    foldStats: Boolean,
+    timeZoneId: String) extends DataWriter[InternalRow] {
 
   private val ctx = new TaskAttemptContextImpl(new Configuration(conf),
     new TaskAttemptID(new TaskID(new org.apache.hadoop.mapreduce.JobID(
@@ -844,6 +855,9 @@ final class SnapshotReplaceDataWriter(
 
   private val writers = mutable.HashMap.empty[String, OutputWriter]
   private val dirs = mutable.HashMap.empty[String, String]
+  // pv -> (final file, its stats fold), with `foldStats`
+  private val folds =
+    mutable.HashMap.empty[String, (JPath, SnapshotFiles.StatsFold)]
   // task-commit protocol: stream into HIDDEN .inprog files (invisible
   // to every reader and to the driver commit's dir publish), rename to
   // the visible name only in commit(). A failed or speculative task
@@ -920,11 +934,15 @@ final class SnapshotReplaceDataWriter(
       val ext = owf.getFileExtension(ctx)
       val tmp = java.nio.file.Paths.get(
         s"$dir/.inprog-part-$partitionId-$taskId$ext")
-      pending += tmp -> java.nio.file.Paths.get(
-        s"$dir/part-$partitionId-$taskId$ext")
+      val fin = java.nio.file.Paths.get(s"$dir/part-$partitionId-$taskId$ext")
+      pending += tmp -> fin
+      if (foldStats)
+        folds(pv) = fin -> new SnapshotFiles.StatsFold(fileSchema, timeZoneId)
       owf.newInstance(tmp.toString, fileSchema, ctx)
     })
-    w.write(project(row))
+    val out = project(row)
+    w.write(out)
+    if (foldStats) folds(pv)._2.update(out)
   }
 
   override def commit(): WriterCommitMessage = {
@@ -932,7 +950,10 @@ final class SnapshotReplaceDataWriter(
     pending.foreach { case (tmp, fin) =>
       JFiles.move(tmp, fin, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
-    SnapshotReplaceCommit(dirs.toSeq)
+    SnapshotReplaceCommit(dirs.toSeq, folds.toSeq.map {
+      case (pv, (fin, fold)) =>
+        fold.entry(pv, fin.toAbsolutePath.toString, JFiles.size(fin))
+    })
   }
 
   override def abort(): Unit = {

@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Predicate, XxHash64}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, OutputWriter, OutputWriterFactory, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider}
@@ -1131,12 +1131,15 @@ object SnapshotMeta {
   *    lists lazily per SURVIVING partition — never eagerly for the
   *    whole table.
   *
-  * Stats rows for UNTOUCHED partitions are copied from the parent
-  * version's sidecar at commit time — only a commit's new dirs are
-  * ever re-profiled, so sidecar maintenance is O(touched partitions),
-  * the same bound as the commit itself. The sidecar is written by the
-  * manifest-CAS WINNER only, after the manifest link: a reader racing
-  * that window falls back to lazy listing, which is sound.
+  * A commit never re-reads what it wrote: each new file's entry is
+  * folded row by row inside the task that writes it ([[StatsFold]],
+  * the combiner discipline), and returns to the driver with that
+  * task's result. Entries for UNTOUCHED partitions are copied from the
+  * parent version's sidecar, so sidecar maintenance is O(touched
+  * partitions), the same bound as the commit itself. The sidecar is
+  * written by the manifest-CAS WINNER only, after the manifest link: a
+  * reader racing that window falls back to lazy listing, which is
+  * sound.
   */
 object SnapshotFiles {
   /** Stats values are stored as Spark `CAST(x AS STRING)` text; min/max
@@ -1167,16 +1170,20 @@ object SnapshotFiles {
   def write(root: JPath, version: Int, entries: Seq[FileEntry]): Unit = {
     import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
-    val lines = entries.map { e =>
-      // under-root file paths store RELATIVE, like the manifest's dirs
-      // (one movable table root — see SnapshotManifest.relativizePath)
-      val stored = SnapshotManifest.relativizePath(root, e.path)
-      JsonMethods.compact(JsonMethods.render(
-        ("pv" -> e.pv) ~ ("path" -> stored) ~ ("bytes" -> e.bytes) ~
-          ("rows" -> e.rows) ~
-          ("stats" -> e.stats.map { case (c, (mn, mx)) => c -> List(mn, mx) }) ~
-          ("ndv" -> e.ndv)))
-    }
+    // under-root file paths store RELATIVE, like the manifest's dirs
+    // (one movable table root — see SnapshotManifest.relativizePath);
+    // lines sort by (pv, path), so a version's sidecar bytes do not
+    // depend on the order its write tasks finished in
+    val lines = entries
+      .map(e => e -> SnapshotManifest.relativizePath(root, e.path))
+      .sortBy { case (e, stored) => (e.pv, stored) }
+      .map { case (e, stored) =>
+        JsonMethods.compact(JsonMethods.render(
+          ("pv" -> e.pv) ~ ("path" -> stored) ~ ("bytes" -> e.bytes) ~
+            ("rows" -> e.rows) ~
+            ("stats" -> e.stats.map { case (c, (mn, mx)) => c -> List(mn, mx) }) ~
+            ("ndv" -> e.ndv)))
+      }
     val mdir = root.resolve("manifests")
     JFiles.createDirectories(mdir)
     val tmp = mdir.resolve(
@@ -1267,12 +1274,6 @@ object SnapshotFiles {
       case _ => false
     })
 
-  /** One distributed pass over `dirsByPart`'s data dirs -> per-file
-    * (bytes, rows, min/max per stats column). Grouped on
-    * `_metadata.file_path`, so cost is a map-side-combined aggregate
-    * over exactly the dirs a commit touched; the collected result is
-    * O(files) driver metadata, the manifest's own class.
-    */
   /** DataSketches HLL precision for the per-file NDV sketches:
     * lgK = 12 is Spark's own `hll_sketch_agg` default (~1.6% error),
     * and a sketch is at most ~2.5 KB serialized (far less in the
@@ -1280,6 +1281,158 @@ object SnapshotFiles {
     */
   val NdvLgK = 12
 
+  /** One file's [[FileEntry]], folded row by row inside the task that
+    * writes the file — the stats ride with the write instead of a
+    * second pass over its output (the Delta
+    * `DeltaJobStatisticsTracker` shape). The result is exactly what
+    * [[collect]] profiles for the closed file:
+    *
+    *  - min/max under Catalyst's ordering, as the `min`/`max`
+    *    aggregates fold it (NaN sorts highest; of equal values such as
+    *    -0.0 and 0.0 the first seen stays), rendered by the same
+    *    `CAST(… AS STRING)`;
+    *  - the NDV sketch built by Spark's own `HllSketchAgg` over the
+    *    cast text, so the sketch bytes match `hll_sketch_agg`'s (its
+    *    final merge of one partial sketch into an empty union returns
+    *    the partial's bytes; `WriteTimeStatsSpec` pins this in the
+    *    sketch's set and HLL modes).
+    *
+    * Not thread-safe: one fold per file per task.
+    */
+  final class StatsFold(schema: StructType, timeZoneId: String) {
+    private val cols = statCols(schema).toArray
+    private val ordinals = cols.map(f => schema.fieldIndex(f.name))
+    private val orderings = cols.map(f =>
+      org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(f.dataType))
+    private val sketchAggs = cols.zip(ordinals).map { case (f, i) =>
+      new org.apache.spark.sql.catalyst.expressions.aggregate.HllSketchAgg(
+        Cast(BoundReference(i, f.dataType, nullable = true), StringType,
+          Some(timeZoneId)), NdvLgK)
+    }
+    private val sketches = sketchAggs.map(_.createAggregationBuffer())
+    private val mins = new Array[Any](cols.length)
+    private val maxs = new Array[Any](cols.length)
+    private var rows = 0L
+
+    def update(row: InternalRow): Unit = {
+      rows += 1
+      var k = 0
+      while (k < cols.length) {
+        val i = ordinals(k)
+        if (!row.isNullAt(i)) {
+          val v = row.get(i, cols(k).dataType)
+          // writers reuse their row buffers: keep copies, never views
+          if (mins(k) == null || orderings(k).lt(v, mins(k)))
+            mins(k) = InternalRow.copyValue(v)
+          if (maxs(k) == null || orderings(k).gt(v, maxs(k)))
+            maxs(k) = InternalRow.copyValue(v)
+          sketchAggs(k).update(sketches(k), row)
+        }
+        k += 1
+      }
+    }
+
+    def entry(pv: String, path: String, bytes: Long): FileEntry = {
+      def text(k: Int, v: Any): String =
+        Cast(Literal(v, cols(k).dataType), StringType, Some(timeZoneId))
+          .eval().toString
+      val stats = cols.indices.flatMap { k =>
+        if (mins(k) == null) None
+        else {
+          val (mn, mx) = (text(k, mins(k)), text(k, maxs(k)))
+          if (mn.length > MaxStatLen || mx.length > MaxStatLen) None
+          else Some(cols(k).name -> (mn, mx))
+        }
+      }.toMap
+      val ndv = cols.indices.map(k =>
+        cols(k).name -> java.util.Base64.getEncoder.encodeToString(
+          sketchAggs(k).eval(sketches(k)).asInstanceOf[Array[Byte]])).toMap
+      FileEntry(pv, path, bytes, rows, stats, ndv)
+    }
+  }
+
+  /** Stock parquet writes that fold every file's [[FileEntry]] in the
+    * writing task ([[StatsFold]]) and hand it back through `files`, an
+    * accumulator, so the entries return with the write job's own task
+    * results. Entries carry the partition value parsed from the leaf
+    * dir names (`pcols` order, still escaped — the manifest form) and
+    * the file NAME as `path`; [[SnapshotTxn.writeLeaves]] re-homes
+    * them under the committed leaf dirs.
+    */
+  final class StatsParquetFormat(pcols: Seq[String],
+      files: org.apache.spark.util.CollectionAccumulator[FileEntry],
+      timeZoneId: String) extends ParquetFileFormat {
+    override def prepareWrite(s: SparkSession,
+        job: org.apache.hadoop.mapreduce.Job, options: Map[String, String],
+        dataSchema: StructType): OutputWriterFactory =
+      new StatsWriterFactory(super.prepareWrite(s, job, options, dataSchema),
+        pcols, files, timeZoneId)
+  }
+
+  private final class StatsWriterFactory(inner: OutputWriterFactory,
+      pcols: Seq[String],
+      files: org.apache.spark.util.CollectionAccumulator[FileEntry],
+      timeZoneId: String) extends OutputWriterFactory {
+    override def getFileExtension(
+        ctx: org.apache.hadoop.mapreduce.TaskAttemptContext): String =
+      inner.getFileExtension(ctx)
+
+    override def newInstance(path: String, dataSchema: StructType,
+        ctx: org.apache.hadoop.mapreduce.TaskAttemptContext): OutputWriter = {
+      val w = inner.newInstance(path, dataSchema, ctx)
+      val fold = new StatsFold(dataSchema, timeZoneId)
+      val file = new Path(path)
+      val leafNames = Iterator.iterate(file.getParent)(_.getParent)
+        .take(pcols.length).map(_.getName).toSeq.reverse
+      val pv = pcols.zip(leafNames)
+        .map { case (c, d) => d.stripPrefix(s"$c=") }.mkString("/")
+      new OutputWriter {
+        override def write(row: InternalRow): Unit = {
+          w.write(row)
+          fold.update(row)
+        }
+        override def close(): Unit = {
+          w.close()
+          val bytes = file.getFileSystem(ctx.getConfiguration)
+            .getFileStatus(file).getLen
+          files.add(fold.entry(pv, file.getName, bytes))
+        }
+        override def path(): String = w.path()
+      }
+    }
+  }
+
+  /** Refuse a write whose entries do not name exactly the data files
+    * the committed write left in each leaf dir (`pv -> dir`): a
+    * partial sidecar would hide files from every sidecar-served read.
+    */
+  def requireExact(conf: org.apache.hadoop.conf.Configuration,
+                   leaves: Seq[(String, String)],
+                   entries: Seq[FileEntry]): Unit = {
+    def names(es: Seq[FileEntry]) = es.map(e => new Path(e.path).getName)
+    val byPv = entries.groupBy(_.pv)
+    val strays = byPv.keySet -- leaves.map(_._1)
+    if (strays.nonEmpty) throw new IllegalStateException(
+      s"stats entries for partitions the write left no dir for: " +
+        strays.toSeq.sorted.mkString(", "))
+    leaves.foreach { case (pv, dir) =>
+      val listed = listDataFiles(conf, dir).map(_.getPath.getName).sorted.toSeq
+      val named = names(byPv.getOrElse(pv, Nil)).sorted
+      if (listed != named) throw new IllegalStateException(
+        s"stats entries for $dir name [${named.mkString(", ")}] but the " +
+          s"write left [${listed.mkString(", ")}]")
+    }
+  }
+
+  /** The RETROFIT profile, behind `CALL snap.compute_stats` for files
+    * no commit wrote (legacy and sidecar-less stores): one distributed
+    * pass over `dirsByPart`'s data dirs -> per-file (bytes, rows,
+    * min/max and NDV sketch per stats column). Grouped on
+    * `_metadata.file_path`, so cost is a map-side-combined aggregate
+    * over exactly the given dirs; the collected result is O(files)
+    * driver metadata, the manifest's own class. [[StatsFold]] computes
+    * the same entry at write time.
+    */
   def collect(s: SparkSession, dirsByPart: Seq[(String, String)],
               schema: StructType): Seq[FileEntry] = {
     if (dirsByPart.isEmpty) return Nil
@@ -1294,12 +1447,10 @@ object SnapshotFiles {
       // union losslessly at plan time
       sc.map(f => hll_sketch_agg(col(f.name).cast("string"),
         lit(NdvLgK)).as(s"nd__${f.name}"))
-    // DECLARED schema: the profiled dirs are always files this very
-    // commit wrote under the caller's schema, and an undeclared read
-    // runs a footer-inference job over every file first — measured as
-    // a 312-task pre-job on the migrate path (round 16). Nullable
-    // overlay so carried pre-evolution files degrade to null stats
-    // (dropped, sound) instead of a read refusal.
+    // DECLARED schema: an undeclared read runs a footer-inference job
+    // over every file first — measured as a 312-task pre-job on the
+    // migrate path (round 16). Nullable overlay so pre-evolution files
+    // degrade to null stats (dropped, sound) instead of a read refusal.
     val rows = s.read
       .schema(StructType(schema.fields.map(_.copy(nullable = true))))
       .parquet(dirsByPart.map(_._2): _*)

@@ -207,12 +207,6 @@ object SnapshotTxn {
     */
   private[graft] val MaxAttempts = 5
 
-  /** The partitions an attempt wrote, profiled into the stats sidecar
-    * under the schema they were written with.
-    */
-  private[graft] final case class Written(s: SparkSession,
-      pvs: Set[String], schema: org.apache.spark.sql.types.StructType)
-
   /** One try of a [[commit]]: it rebases on `head`, aims at `version`,
     * writes under its [[scratch]] dirs and ends in [[publish]].
     */
@@ -237,35 +231,33 @@ object SnapshotTxn {
       dirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
 
     /** Publish `version`: the manifest link (the CAS), then the
-      * [[SnapshotFiles]] sidecar — stats rows COLLECTED (one
-      * distributed pass) for the `written` partitions only, and copied
-      * from the parent's sidecar for every other entry, O(touched)
-      * maintenance. If the parent has carried partitions but no sidecar
-      * (a legacy store), no sidecar is written: profiling the carried
-      * dirs would be O(table), and the reader's lazy-listing fallback
-      * is sound. A bootstrap's `table.meta` is written by the link
-      * winner only, before the sidecar.
+      * [[SnapshotFiles]] sidecar — the `fresh` entries, folded at
+      * write time by the tasks that wrote the files, for every file of
+      * the partitions they name, and entries copied from the parent's
+      * sidecar for every other partition, O(touched) maintenance; no
+      * Spark job runs here. `fresh = None` (the touched files' entries
+      * are unknown) or a parent without a sidecar under carried
+      * partitions (a legacy store) publishes no sidecar: the reader's
+      * lazy-listing fallback is sound. A bootstrap's `table.meta` is
+      * written by the link winner only, before the sidecar.
       */
     def publish(entries: Map[String, String],
                 txn: Option[(String, Long)] = None,
                 schemaJson: Option[String] = None,
                 extraMeta: Seq[String] = Nil,
-                written: Option[Written] = None,
+                fresh: Option[Seq[SnapshotFiles.FileEntry]] = Some(Nil),
                 meta: Option[SnapshotMeta.Meta] = None): Unit = {
       writeManifest(root, version, entries, txn, schemaJson, extraMeta)
       linked = true
       meta.foreach(SnapshotMeta.write(root, _))
-      val touched = written.fold(Set.empty[String])(_.pvs)
-      val carried = entries.keySet -- touched
-      val carriedRows: Option[Seq[SnapshotFiles.FileEntry]] =
-        if (carried.isEmpty) Some(Nil)
-        else SnapshotFiles.read(root, head).map(parent =>
-          carried.toSeq.sorted.flatMap(p => parent.getOrElse(p, Nil)))
-      carriedRows.foreach { cr =>
-        val fresh = written.toSeq.flatMap(w => SnapshotFiles.collect(w.s,
-          w.pvs.toSeq.sorted.flatMap(p => entries.get(p).map(p -> _)),
-          w.schema))
-        SnapshotFiles.write(root, version, cr ++ fresh)
+      fresh.foreach { files =>
+        val carried = entries.keySet -- files.map(_.pv)
+        val carriedRows: Option[Seq[SnapshotFiles.FileEntry]] =
+          if (carried.isEmpty) Some(Nil)
+          else SnapshotFiles.read(root, head).map(parent =>
+            carried.toSeq.sorted.flatMap(p => parent.getOrElse(p, Nil)))
+        carriedRows.foreach(cr =>
+          SnapshotFiles.write(root, version, cr ++ files))
       }
     }
   }
@@ -841,7 +833,7 @@ object SnapshotTxn {
       // can be kept, migrated, or recorded, so the delta's touched-
       // partition set decides nothing — skip the distinct+collect pre-
       // pass (two Spark jobs per CREATE+INSERT chain) and let the write
-      // itself discover the leafs (walkLeafDirs below). The null-
+      // itself discover the leafs (writeLeaves below). The null-
       // partition-value refusal moves to a post-write dir-name check,
       // same message, same loud failure.
       val bootstrapInsert =
@@ -1007,12 +999,6 @@ object SnapshotTxn {
       }
       val out = a.scratch().toString
       val pcols = effPartCols.map(c => s"${c}_p")
-      def leafDir(pv: String): String = {
-        val vals =
-          if (effPartCols.length == 1) Array(pv) else pv.split("/", -1)
-        out + "/" + pcols.zip(vals).map { case (c, v) => s"$c=$v" }
-          .mkString("/")
-      }
       // `kept` may lack delta columns even when the TABLE already has
       // them: a post-evolution commit touching a pre-evolution partition
       // reads files that predate the column. The drop `require` above is
@@ -1025,17 +1011,13 @@ object SnapshotTxn {
         else kept
       val mirrored = effPartCols.foldLeft(unionedOut)(
         (df, c) => df.withColumn(s"${c}_p", mirrorExpr(unionedOut, c)))
-      (if (distribute) distributeByLayout(mirrored, pcols) else mirrored)
-        .write.mode("overwrite").partitionBy(pcols: _*).parquet(out)
-      // a MIGRATING commit's kept rows fan out to current-spec leafs the
-      // delta alone can't predict (every value of the appended column in
-      // the old partition) — discover entries by walking the output; the
-      // non-migrating path keeps the cheap touched-pv check
-      val walked: Seq[(String, String)] =
-        if (migrating.nonEmpty || bootstrapInsert)
-          walkLeafDirs(new java.io.File(out), pcols)
-        else touched.filter(pv => new java.io.File(leafDir(pv)).isDirectory)
-          .map(pv => pv -> leafDir(pv))
+      // entries come from the output's leaf dirs: a MIGRATING commit's
+      // kept rows fan out to current-spec leafs the delta alone can't
+      // predict (every value of the appended column in the old
+      // partition)
+      val (walked, files) = writeLeaves(s,
+        if (distribute) distributeByLayout(mirrored, pcols) else mirrored,
+        pcols, out)
       // the bootstrap fast path skipped the pre-write null check — a NULL
       // partition value surfaces as Hive's default leaf name in the walk;
       // refuse with the same message (the attempt dir stays for vacuum:
@@ -1054,11 +1036,7 @@ object SnapshotTxn {
       val emptied = touched.filterNot(presentSet)
       val entries =
         (parent -- emptied -- migrating.keys) ++ walked
-      // the sidecar profile declares the schema of the frame the commit
-      // WROTE (kept ∪ delta, which may be wider than the delta after an
-      // evolution) so the collect's declared read matches the files
-      a.publish(entries, txn, widenedJson,
-        written = Some(Written(s, presentSet, unionedOut.schema)))
+      a.publish(entries, txn, widenedJson, fresh = Some(files))
       // incremental Bloom maintenance: index only this commit's new dirs
       // (append — parent files are write-once, their rows stay valid)
       bloomIndexKey.foreach { k =>
@@ -1074,19 +1052,19 @@ object SnapshotTxn {
   /** Group-replacement commit for the SQL row-level DML door
     * ([[SnapshotRowLevelOperation]]): publish
     * `parent − replaced ∪ newEntries` as the next version through the
-    * same CAS manifest plane as every other commit, with the
-    * file-stats sidecar profiled for the new dirs only (O(touched)).
-    * No rebase on conflict — a group replacement computed against a
-    * stale head is not a key-based delta, so a racer means the caller
-    * must re-run the statement.
+    * same CAS manifest plane as every other commit, with `fresh` (the
+    * write tasks' entries for every file under the new dirs) in the
+    * file-stats sidecar — see [[Attempt.publish]]. No rebase on
+    * conflict — a group replacement computed against a stale head is
+    * not a key-based delta, so a racer means the caller must re-run
+    * the statement.
     */
-  private[graft] def snapshotReplacePartitions(s: SparkSession,
-      root: Path, fromV: Int, replaced: Set[String],
-      newEntries: Map[String, String],
-      dataSchema: org.apache.spark.sql.types.StructType): Unit =
+  private[graft] def snapshotReplacePartitions(root: Path, fromV: Int,
+      replaced: Set[String], newEntries: Map[String, String],
+      fresh: Option[Seq[SnapshotFiles.FileEntry]]): Unit =
     commit(root, Some(fromV)) { a =>
       a.publish((SnapshotManifest.read(root, fromV) -- replaced) ++ newEntries,
-        written = Some(Written(s, newEntries.keySet, dataSchema)))
+        fresh = fresh)
     }
 
   /** MERGE-ON-READ DELETE commit ([[SnapshotDeletes]]
@@ -1823,20 +1801,16 @@ object SnapshotTxn {
             .sortWithinPartitions(sortCols: _*)
             .drop(zc)
       }
-      clustered.write.partitionBy(mirrors: _*).parquet(out)
-      def leafOf(pv: String): String =
-        s"$out/${SnapshotPartitionValues
-          .leafSuffix(mirrors, pv)}"
+      val (leaves, files) = writeLeaves(s, clustered, mirrors, out)
       // a hot partition whose every row was merge-on-read-doomed
       // rewrites to NOTHING — it drops from the manifest (the
       // snapshotCommit emptied-partition rule), never publishes a
       // dangling dir
-      val survived = hot.filter(pv =>
-        new java.io.File(leafOf(pv)).isDirectory)
-      a.publish((manifestFull -- hot) ++ survived.map(pv => pv -> leafOf(pv)),
-        written = Some(Written(s, survived.toSet, declared)))
+      val survived = leaves.filter(l => hot.contains(l._1))
+      a.publish((manifestFull -- hot) ++ survived,
+        fresh = Some(files.filter(f => hot.contains(f.pv))))
       (hot.size, a.version, filesBefore,
-        survived.map(pv => parquetCount(leafOf(pv))).sum)
+        survived.map(l => parquetCount(l._2)).sum)
     }
     commit(root)(attempt)
   }
@@ -1861,11 +1835,10 @@ object SnapshotTxn {
     val d1 = a.scratch().toString
     val mirrored = partCols.foldLeft(data)(
       (df, c) => df.withColumn(s"${c}_p", col(c)))
-    (if (distribute) distributeByLayout(mirrored, pcols) else mirrored)
-      .write.mode("overwrite").partitionBy(pcols: _*).parquet(d1)
-    val parts = walkLeafDirs(new java.io.File(d1), pcols)
-    a.publish(parts.toMap, txn,
-      written = Some(Written(s, parts.map(_._1).toSet, data.schema)),
+    val (parts, files) = writeLeaves(s,
+      if (distribute) distributeByLayout(mirrored, pcols) else mirrored,
+      pcols, d1)
+    a.publish(parts.toMap, txn, fresh = Some(files),
       meta = Some(SnapshotMeta.Meta(
         StructType(partCols.map(c => StructField(s"${c}_p",
           data.schema(c).dataType, nullable = true))),
@@ -1883,11 +1856,36 @@ object SnapshotTxn {
     }
   }
 
+  /** The store's one DataFrame write into an attempt dir: `df` laid
+    * out under `out` by `pcols` — hive leaf dirs of stock parquet
+    * files, the plan `df.write.partitionBy(pcols: _*).parquet(out)`
+    * runs — with each file's sidecar entry folded in the task that
+    * writes it ([[SnapshotFiles.StatsParquetFormat]]). Returns the leaf
+    * dirs (`pv -> dir`, [[walkLeafDirs]] form) and one entry per data
+    * file, re-homed under its leaf dir. Entries that do not name
+    * exactly the files the write left throw `IllegalStateException`
+    * ([[SnapshotFiles.requireExact]]) before anything publishes.
+    */
+  private[graft] def writeLeaves(s: SparkSession, df: DataFrame,
+      pcols: Seq[String], out: String)
+      : (Seq[(String, String)], Seq[SnapshotFiles.FileEntry]) = {
+    val acc = s.sparkContext.collectionAccumulator[SnapshotFiles.FileEntry]
+    org.apache.spark.sql.GraftPlanBridge.writeFiles(df,
+      new SnapshotFiles.StatsParquetFormat(pcols, acc,
+        s.sessionState.conf.sessionLocalTimeZone), out, pcols)
+    val leaves = walkLeafDirs(new java.io.File(out), pcols)
+    val dirOf = leaves.toMap
+    val files = acc.value.asScala.toSeq.map(e =>
+      dirOf.get(e.pv).fold(e)(d => e.copy(path = s"$d/${e.path}")))
+    SnapshotFiles.requireExact(s.sessionState.newHadoopConf(), leaves, files)
+    (leaves, files)
+  }
+
   /** Walk a hive-style nested commit root: one (pv, leafDir) per leaf,
     * pv = dir-name values joined by '/' in `pcols` order (still
-    * escaped — exactly the manifest form). Shared by the bootstrap and
-    * by spec-migrating commits, whose output leafs aren't knowable
-    * from the delta alone.
+    * escaped — exactly the manifest form). Shared by [[writeLeaves]]
+    * and the merge-on-read delta writes, whose output leafs aren't
+    * knowable from their input alone.
     */
   private def walkLeafDirs(rootDir: java.io.File,
       pcols: Seq[String]): Seq[(String, String)] = {
@@ -2079,12 +2077,12 @@ object SnapshotTxn {
       // fans out only by the appended column, bounding files at
       // (input splits × appended fan) with zero shuffle; a hash
       // shuffle would move every row for the same file count.
-      current.fields.foldLeft(unioned)((df, f) =>
+      val (walked, files) = writeLeaves(s,
+        current.fields.foldLeft(unioned)((df, f) =>
           df.withColumn(f.name, SnapshotTransforms
             .deriveCol(f, col(f.name.stripSuffix("_p")),
-              unioned.schema(f.name.stripSuffix("_p")).dataType)))
-        .write.partitionBy(pcols: _*).parquet(out)
-      val walked = walkLeafDirs(new java.io.File(out), pcols)
+              unioned.schema(f.name.stripSuffix("_p")).dataType))),
+        pcols, out)
       // INVARIANT, made loud: a migrated pv may never collide with an
       // existing current-spec entry — the door migrates prefix-
       // overlapping old entries on every touch, so coexistence is
@@ -2096,8 +2094,7 @@ object SnapshotTxn {
         s"migration derived pv(s) ${clobbered.mkString(", ")} that " +
           "already exist as current-spec entries — store invariant " +
           "violated, refusing to overwrite")
-      a.publish((manifest -- old.map(_._1)) ++ walked,
-        written = Some(Written(s, walked.map(_._1).toSet, declared)))
+      a.publish((manifest -- old.map(_._1)) ++ walked, fresh = Some(files))
       (old.size, a.version)
     }
     commit(root)(attempt)

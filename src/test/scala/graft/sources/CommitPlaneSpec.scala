@@ -2,9 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Path}
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
 
-import graft.sources.SnapshotTxn.{commit, MaxAttempts,
+import graft.SparkSpec
+import graft.sources.SnapshotTxn.{commit, writeLeaves, MaxAttempts,
   SnapshotConflictException}
 
 /** Pins the store's one commit loop, [[SnapshotTxn.commit]], driven
@@ -16,9 +18,12 @@ import graft.sources.SnapshotTxn.{commit, MaxAttempts,
   *  2. a failure after a won link leaves them in place (they may be
   *     published state);
   *  3. the [[MaxAttempts]]th conflict reaches the caller;
-  *  4. a retry rebases on the new head, so the racer's commit survives.
+  *  4. a retry rebases on the new head, so the racer's commit survives;
+  *  5. publishing a commit's stats sidecar starts no Spark job (the
+  *     entries were folded by the write tasks);
+  *  6. a losing attempt's folded entries reach no sidecar.
   */
-class CommitPlaneSpec extends AnyFunSuite {
+class CommitPlaneSpec extends SparkSpec {
 
   /** A store at v1 holding one partition. */
   private def store(): Path = {
@@ -115,5 +120,89 @@ class CommitPlaneSpec extends AnyFunSuite {
       commit(root, base = Some(1)) { _ => ran = true }
     }
     assert(!ran, "a pinned attempt ran against a moved head")
+  }
+
+  /** Write `ids` under `a`'s scratch dir, laid out by `p = id % 2`. */
+  private def writeRows(a: SnapshotTxn.Attempt, ids: Seq[Long])
+      : (Seq[(String, String)], Seq[SnapshotFiles.FileEntry]) = {
+    import spark.implicits._
+    val df = ids.toDF("id").select(col("id"),
+      (col("id") % 2).cast("string").as("p"), (col("id") * 1.5).as("v"))
+    writeLeaves(spark, df, Seq("p"), a.scratch().toString)
+  }
+
+  test("publishing a profiled commit starts no Spark job") {
+    val root = Files.createTempDirectory("commit_plane_jobs")
+    commit(root) { a =>
+      val (leaves, files) = writeRows(a, 1L to 20L)
+      a.publish(leaves.toMap, fresh = Some(files))
+    }
+    // v2 rewrites partition "1" and carries "0" from v1's sidecar
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    commit(root) { a =>
+      val (leaves, files) = writeRows(a, Seq(21L, 23L))
+      org.apache.spark.GraftListenerDrain.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        a.publish(SnapshotManifest.read(root, a.head) ++ leaves,
+          fresh = Some(files))
+        org.apache.spark.GraftListenerDrain.drain(sc)
+      } finally sc.removeSparkListener(listener)
+    }
+    assert(jobs.get === 0, "publish must not re-read what the commit wrote")
+    val sidecar = SnapshotFiles.read(root, 2).getOrElse(
+      fail("the profiled commit published no sidecar"))
+    assert(sidecar.keySet === Set("0", "1"))
+    assert(sidecar("0") === SnapshotFiles.read(root, 1).get("0"),
+      "the untouched partition's entries carry verbatim")
+    assert(sidecar("1").map(_.rows).sum === 2L)
+  }
+
+  test("a losing attempt's folded entries reach no sidecar") {
+    val root = Files.createTempDirectory("commit_plane_fold")
+    commit(root) { a =>
+      val (leaves, files) = writeRows(a, 1L to 10L)
+      a.publish(leaves.toMap, fresh = Some(files))
+    }
+    val scratch = Seq.newBuilder[Path]
+    commit(root) { a =>
+      val (leaves, files) = writeRows(a, Seq(11L))
+      scratch += Path.of(leaves.head._2).getParent
+      if (a.head == 1) commit(root) { r => // the racer wins v2
+        val (rl, rf) = writeRows(r, Seq(13L))
+        r.publish(SnapshotManifest.read(root, r.head) ++ rl,
+          fresh = Some(rf))
+      }
+      a.publish(SnapshotManifest.read(root, a.head) ++ leaves,
+        fresh = Some(files))
+    }
+    val Seq(lost, won) = scratch.result()
+    assert(!Files.exists(lost), s"loser's scratch dir survived: $lost")
+    assert(SnapshotManifest.head(root) === 3)
+    for (v <- 1 to 3) {
+      val entries = SnapshotFiles.read(root, v).getOrElse(
+        fail(s"v$v published no sidecar")).values.flatten.toSeq
+      entries.foreach { e =>
+        assert(!e.path.startsWith(lost.toString),
+          s"v$v sidecar names the loser's file ${e.path}")
+        assert(Files.exists(Path.of(e.path)), s"v$v: ${e.path} is gone")
+      }
+      // the sidecar names exactly the files the manifest's dirs hold
+      val listed = SnapshotManifest.read(root, v).values.flatMap(d =>
+        SnapshotFiles.listDataFiles(
+          spark.sparkContext.hadoopConfiguration, d)
+          .map(_.getPath.toUri.getPath)).toSet
+      assert(entries.map(_.path).toSet === listed, s"v$v")
+    }
+    val v3 = SnapshotFiles.read(root, 3).get
+    assert(v3("1").map(_.path).forall(_.startsWith(won.toString)))
+    assert(v3("0") === SnapshotFiles.read(root, 1).get("0"),
+      "partition 0 carries from v1 through the racer's v2")
+    assert(v3.values.flatten.map(_.rows).sum === 6L)
   }
 }

@@ -208,14 +208,15 @@ class SnapshotSpjSpec extends SparkSpec {
     val hotDir = base.resolve("a").resolve("d9-hot").resolve("id_p=0")
     hotKeys.map(i => (i, i.toDouble)).toDF("id", "v").repartition(3)
       .write.parquet(hotDir.toString)
-    SnapshotTxn.snapshotReplacePartitions(s, rootA,
+    SnapshotTxn.snapshotReplacePartitions(rootA,
       SnapshotManifest.head(rootA), Set("0"),
       Map("0" -> hotDir.toString),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.DoubleType))))
+      Some(SnapshotFiles.collect(s, Seq("0" -> hotDir.toString),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("id",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("v",
+            org.apache.spark.sql.types.DoubleType))))))
     assert(Option(hotDir.toFile.listFiles()).get
       .count(_.getName.endsWith(".parquet")) === 3,
       "fixture must really split the hot bucket")

@@ -1,0 +1,184 @@
+package graft.sources
+
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+
+/** Every commit path folds its stats sidecar at write time
+  * ([[SnapshotFiles.StatsFold]]); `CALL compute_stats` still profiles
+  * with the distributed re-read ([[SnapshotFiles.collect]]). After each
+  * commit below, the published `v<N>.files` is deleted, rebuilt by
+  * `compute_stats`, and both entry sets must be identical file by
+  * file: bytes, rows, min/max text and the base64 NDV sketch.
+  *
+  * One table covers every stats type and the edge values: NaN, -0.0
+  * and 0.0 in FLOAT/DOUBLE, decimals, dates, the empty string, a
+  * string past the 64-char stat limit, non-ASCII text, an all-NULL
+  * column, several files in one partition, and hive-escaped partition
+  * values (`a:b`, `50%`) whose dir names need the URI decoding in
+  * `collect`.
+  */
+class WriteTimeStatsSpec extends SparkSpec {
+
+  private val parts = Seq("a:b", "50%", "plain")
+
+  /** `ids` as table rows; `p` is the partition column. */
+  private def rows(ids: Seq[Long], part: Column => Column): DataFrame = {
+    import spark.implicits._
+    val id = col("id")
+    def floaty(t: String) =
+      when(id % 7 === 0, lit(Double.NaN))
+        .when(id % 7 === 1, lit(-0.0))
+        .when(id % 7 === 2, lit(0.0))
+        .otherwise(id * 1.5).cast(t)
+    ids.toDF("id").select(id,
+      (id % 100).cast("tinyint").as("b"),
+      (id * 3).cast("smallint").as("sh"),
+      (id * 7 % 50).cast("int").as("i"),
+      floaty("float").as("f"),
+      floaty("double").as("d"),
+      (id * 37 % 1000 / 7).cast("decimal(10,2)").as("dec"),
+      date_add(lit("2020-01-01").cast("date"), (id * 11 % 900).cast("int"))
+        .as("dt"),
+      when(id % 4 === 0, lit(""))
+        .when(id % 4 === 1, concat(lit("x" * 70), id.cast("string")))
+        .when(id % 4 === 2, concat(lit("naïve-☃-日本-"), id.cast("string")))
+        .otherwise(concat(lit("s"), id.cast("string"))).as("s"),
+      lit(null).cast("int").as("nul"),
+      (id % 2).cast("int").as("g"),
+      part(id).as("p"))
+  }
+
+  private def byMod(id: Column): Column =
+    element_at(typedlit(parts), (id % 3 + 1).cast("int"))
+
+  /** Delete the head's published sidecar, rebuild it with
+    * `compute_stats`, and require the same entries file by file.
+    */
+  private def assertRebuildMatches(root: Path, cat: String,
+      what: String): Seq[SnapshotFiles.FileEntry] = {
+    val v = SnapshotManifest.head(root)
+    val published = SnapshotFiles.read(root, v).getOrElse(
+      fail(s"$what: v$v published no sidecar")).values.flatten.toSeq
+    Files.delete(root.resolve("manifests").resolve(s"v$v.files"))
+    val r = spark.sql(s"CALL $cat.compute_stats('t')").head()
+    assert(r.getInt(0) === v && r.getInt(1) === published.size,
+      s"$what: $r")
+    val rebuilt = SnapshotFiles.read(root, v).get.values.flatten
+      .map(e => e.path -> e).toMap
+    assert(published.map(_.path).toSet === rebuilt.keySet,
+      s"$what: the sidecars name different files")
+    published.foreach(e => assert(e === rebuilt(e.path), s"$what: ${e.path}"))
+    published
+  }
+
+  test("write-time sidecars equal the compute_stats rebuild on every " +
+    "commit path") {
+    val base = Files.createTempDirectory("wts")
+    val root = base.resolve("t")
+    val cat = "wts"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      "graft.sources.GraftSnapshotCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    val t = s"$cat.`t`"
+    def door(df: DataFrame, mode: String = "upsert",
+             distribution: String = "hash"): Unit =
+      df.write.format("graft-snapshot")
+        .option("keyCol", "id").option("partCol", "p")
+        .option("commitMode", mode).option("distribution", distribution)
+        .mode("append").save(root.toString)
+
+    // door bootstrap: 3 input tasks, no re-distribution -> 3 files in
+    // every partition
+    door(rows(1L to 300L, byMod).repartition(3), distribution = "none")
+    val v1 = assertRebuildMatches(root, cat, "door bootstrap")
+    assert(v1.map(_.pv).toSet === Set("a%3Ab", "50%25", "plain"))
+    assert(v1.groupBy(_.pv).values.forall(_.size == 3))
+    assert(v1.exists(_.stats.get("f").exists(_._2 == "NaN")))
+    assert(v1.exists(_.stats.get("d").exists(_._1 == "-0.0")))
+    assert(v1.forall(e => !e.stats.contains("nul") && !e.stats.contains("s")),
+      "all-NULL and over-long columns carry no min/max")
+    assert(v1.forall(_.ndv.keySet.contains("nul")))
+
+    // 1,000 new keys: this file's sketches leave set mode for HLL mode
+    door(rows(Seq(3L, 6L) ++ (1000L to 2000L), _ => lit("plain")))
+    assertRebuildMatches(root, cat, "door upsert")
+    door(rows(Seq(1L, 4L), _ => lit("a:b")), mode = "delete")
+    assertRebuildMatches(root, cat, "door delete")
+
+    // `50%` still holds its 3 bootstrap files: z-order it down to 2,
+    // then compact it to 1
+    val z = spark.sql(s"CALL $cat.zorder('t', 'id', 'i', 2, 2)").head()
+    assert(z.getInt(0) === 1, s"zorder: $z")
+    assertRebuildMatches(root, cat, "zorder")
+    val c = spark.sql(s"CALL $cat.compact('t', 2)").head()
+    assert(c.getInt(0) === 1, s"compact: $c")
+    assertRebuildMatches(root, cat, "compact")
+
+    rows(500L to 520L, _ => lit("plain")).createOrReplaceTempView("wts_src")
+    val cols = "id, b, sh, i, f, d, dec, dt, s, nul, g, p"
+    spark.sql(s"INSERT OVERWRITE $t PARTITION (p_p = 'plain') " +
+      s"SELECT $cols FROM wts_src")
+    assertRebuildMatches(root, cat, "static INSERT OVERWRITE")
+    rows(600L to 630L, _ => lit("50%")).createOrReplaceTempView("wts_src")
+    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+    try {
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      spark.sql(s"INSERT OVERWRITE $t SELECT $cols, p AS p_p FROM wts_src")
+    } finally prev match {
+      case Some(v) =>
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+      case None =>
+        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    }
+    assertRebuildMatches(root, cat, "dynamic INSERT OVERWRITE")
+
+    spark.sql(s"DELETE FROM $t WHERE i % 5 = 0")
+    assertRebuildMatches(root, cat, "copy-on-write DELETE")
+    // MERGE moves `plain` rows into `a:b`, which is not a replaced
+    // group: its old files hard-link into the new dir as carry- files
+    rows(Seq(501L, 502L, 900L), _ => lit("a:b"))
+      .createOrReplaceTempView("wts_merge")
+    spark.sql(
+      s"""MERGE INTO $t AS tgt USING wts_merge AS src ON tgt.id = src.id
+         |WHEN MATCHED THEN UPDATE SET p = src.p, s = src.s
+         |WHEN NOT MATCHED THEN INSERT ($cols, p_p)
+         |  VALUES (src.id, src.b, src.sh, src.i, src.f, src.d, src.dec,
+         |    src.dt, src.s, src.nul, src.g, src.p, src.p)
+         |""".stripMargin)
+    val merged = assertRebuildMatches(root, cat, "copy-on-write MERGE")
+    assert(merged.exists(e => e.pv == "a%3Ab" &&
+      Path.of(e.path).getFileName.toString.startsWith("carry-")),
+      "the MERGE must carry a:b's old files by link")
+
+    spark.sql(s"CALL $cat.evolve_partitioning('t', 'g')")
+    val m = spark.sql(s"CALL $cat.migrate_layout('t')").head()
+    assert(m.getInt(0) === 3, s"migrate_layout: $m")
+    val migrated = assertRebuildMatches(root, cat, "migrate_layout")
+    assert(migrated.map(_.pv).toSet ===
+      Set("a%3Ab/0", "a%3Ab/1", "50%25/0", "50%25/1", "plain/0", "plain/1"))
+  }
+
+  test("a write whose entries miss or invent a file is refused") {
+    val out = Files.createTempDirectory("wts_exact")
+    val leaf = Files.createDirectories(out.resolve("p=x"))
+    Seq("part-0.parquet", "part-1.parquet")
+      .foreach(n => Files.writeString(leaf.resolve(n), "rows"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    def entry(pv: String, name: String) = SnapshotFiles.FileEntry(
+      pv, leaf.resolve(name).toString, 4L, 1L, Map.empty)
+    val leaves = Seq("x" -> leaf.toString)
+    SnapshotFiles.requireExact(conf, leaves,
+      Seq(entry("x", "part-0.parquet"), entry("x", "part-1.parquet")))
+    intercept[IllegalStateException] {
+      SnapshotFiles.requireExact(conf, leaves, Seq(entry("x", "part-0.parquet")))
+    }
+    intercept[IllegalStateException] {
+      SnapshotFiles.requireExact(conf, leaves, Seq(entry("x", "part-0.parquet"),
+        entry("x", "part-1.parquet"), entry("y", "part-2.parquet")))
+    }
+  }
+}

@@ -6,7 +6,9 @@ Usage: python3 tools/bench_compare.py <old.json> <new.json> [threshold]
 Accepts either a raw Bench output line or the driver's BENCH_r*.json
 wrapper (extracts the JSON line from its "tail"). Prints per-query
 deltas sorted by regression, flagging changes beyond the threshold
-(default 1.5x).
+(default 1.5x). Exits 1 on a regression, or when a query of the old run
+is missing from the new one (a query that stopped running is a failure,
+not a speed-up).
 """
 import json
 import re
@@ -40,12 +42,14 @@ def main(old_path: str, new_path: str, threshold: float = 1.5) -> int:
         rows.append((ratio if ratio is not None else 0.0, name, a, b))
     rows.sort(reverse=True)
     flagged = 0
+    removed = []
     for ratio, name, a, b in rows:
         mark = ""
         if a is None:
             mark = "NEW"
         elif b is None:
             mark = "REMOVED"
+            removed.append(name)
         elif ratio >= threshold:
             mark = "SLOWER"
             flagged += 1
@@ -58,7 +62,10 @@ def main(old_path: str, new_path: str, threshold: float = 1.5) -> int:
     print(f"--- total {old['value']:.1f}s -> {new['value']:.1f}s "
           f"({len(oq)} -> {len(nq)} queries), {flagged} regressions "
           f">= {threshold}x")
-    return 1 if flagged else 0
+    if removed:
+        print(f"FAIL: {len(removed)} queries of the old run are missing "
+              f"from the new one: {', '.join(removed)}")
+    return 1 if flagged or removed else 0
 
 
 if __name__ == "__main__":
