@@ -4,7 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
+  StreamingQuery, Trigger}
 
 import graft.core.Tables
 import graft.functions._
@@ -203,24 +204,18 @@ object SourceQueries {
 
   /** The hourly event rollup as a STRUCTURED STREAMING job: file source
     * over the same parquet, 1-hour tumbling windows, Complete-mode memory
-    * sink, Trigger.AvailableNow (process everything, then stop) — the
-    * bounded-run harness for an unbounded pipeline. Incremental partial
+    * sink, an AvailableNow run ([[runBounded]]) — the bounded-run
+    * harness for an unbounded pipeline. Incremental partial
     * aggregation per micro-batch is the streaming twin of the batch
     * partial+final agg, and the result hash-matches the same DuckDB
     * oracle as the batch query.
     */
   def streamingEventsHourly(s: SparkSession, dir: String): DataFrame = {
     val qName = "graft_streaming_hourly"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    // 8 state partitions for the bounded run (see streamingDedupEvents);
-    // try covers setup too so a throw can't leak the 8-partition conf
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
-    try {
+    runBounded(s, dir, "events", qName) {
       val streamDir = eventsStreamDir(s, dir)
       val rawSchema = s.read.parquet(streamDir).schema // ts vintage varies
-      val agg = s.readStream.schema(rawSchema).parquet(streamDir)
+      s.readStream.schema(rawSchema).parquet(streamDir)
         .transform(Tables.normalizeEventTs)
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -228,28 +223,13 @@ object SourceQueries {
              davg(col("value")).as("avg_value"))
         .select(col("w.start").as("hour"), col("event_type"),
           col("n_events"), col("sum_value"), col("avg_value"))
-      agg.writeStream
+        .writeStream
         .outputMode(OutputMode.Complete())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
   }
 
-  /** Streaming stateful dedup: watermarked `dropDuplicates(event_id)` —
-    * the exactly-once ingestion guard of a streaming pipeline (state =
-    * one entry per id inside the watermark, evicted as event time
-    * advances) — then a per-type rollup. The harness events are already
-    * unique by id, so the oracle is the plain batch rollup: the operator
-    * must pass everything through exactly once. Scoped to a 10% user
-    * cohort: a bounded-run AvailableNow batch holds ALL ids in state at
-    * once (no mid-batch watermark eviction), so the full table would
-    * spend the whole benchmark writing state-store snapshots — a real
-    * stream pays that state linearly, not all at once.
-    */
   /** LATE-DATA ACCOUNTING: the watermark's drop side, verified
     * end-to-end. Four pinned-mtime file micro-batches: the middle
     * time slice [Jan 10, Jan 20) first, then the post-Jan-20 rows
@@ -274,10 +254,8 @@ object SourceQueries {
     */
   def streamingLateData(s: SparkSession, dir: String): DataFrame = {
     val qName = "graft_streaming_late_data"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    // deterministic per-sf dir, wiped at entry start (the query above
-    // is already stopped): leak-free across JVMs, idempotent per call
+    // deterministic per-sf dir, wiped at entry start: leak-free across
+    // JVMs, idempotent per call
     val base = java.nio.file.Paths.get(ioDir("late_data"))
       .resolve(Tables.dirKey(dir))
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
@@ -316,24 +294,17 @@ object SourceQueries {
     // the deposits wrote exactly evts' projection, so its schema IS the
     // files' schema — no footer re-read needed
     val schema = evts.schema
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevSplit = s.conf.get("spark.sql.files.maxPartitionBytes")
-    val prevMinPn = s.conf.getOption("spark.sql.files.minPartitionNum")
-    val dropped =
-      try {
-        // setup INSIDE try so a throw can't leak the pinned confs
-        // (the streamingEventsHourly discipline)
-        s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
-        // the drop-count plane (see below) needs the straggler file to
-        // be ONE map partition; parquet is splittable, so pin the split
-        // size above any plausible fixture size instead of assuming.
-        // maxPartitionBytes alone is only an UPPER bound — the actual
-        // split is min(max, max(openCost, bytes/minPartitionNum)), and
-        // minPartitionNum defaults to the session parallelism (32), so
-        // a file past ~4 MB would still split 32 ways and the counter
-        // would count each window once PER SPLIT. Pin both.
-        s.conf.set("spark.sql.files.maxPartitionBytes", "1g")
-        s.conf.set("spark.sql.files.minPartitionNum", "1")
+    // the drop-count plane (see below) needs the straggler file to be
+    // ONE map partition; parquet is splittable, so pin the split size
+    // above any plausible fixture size instead of assuming.
+    // maxPartitionBytes alone is only an UPPER bound — the actual split
+    // is min(max, max(openCost, bytes/minPartitionNum)), and
+    // minPartitionNum defaults to the session parallelism (32), so a
+    // file past ~4 MB would still split 32 ways and the counter would
+    // count each window once PER SPLIT. Pin both.
+    val q = withConfs(s, "spark.sql.files.maxPartitionBytes" -> "1g",
+        "spark.sql.files.minPartitionNum" -> "1") {
+      runBounded(s, dir, "events", qName) {
         // NOTE: no filter between agg and sink — a predicate on the
         // window key pushes below the EventTimeWatermark node and
         // silently disables late-row dropping (observed: 0 drops, all
@@ -342,7 +313,7 @@ object SourceQueries {
         // window never emits (nothing later advances the watermark
         // past it), and the belt-and-braces exclusion happens on the
         // BATCH result below.
-        val q = s.readStream.schema(schema)
+        s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(inbox.toString)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour").as("w"))
@@ -352,22 +323,12 @@ object SourceQueries {
           .writeStream
           .outputMode(OutputMode.Append())
           .format("memory")
-          .queryName(qName)
           .option("checkpointLocation", base.resolve("chk").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.recentProgress
-          .flatMap(p => p.stateOperators.map(_.numRowsDroppedByWatermark))
-          .sum
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-        prevMinPn match {
-          case Some(v) => s.conf.set("spark.sql.files.minPartitionNum", v)
-          case None => s.conf.unset("spark.sql.files.minPartitionNum")
-        }
       }
+    }
+    val dropped = q.recentProgress
+      .flatMap(p => p.stateOperators.map(_.numRowsDroppedByWatermark))
+      .sum
     s.table(qName)
       .filter(col("hour") < lit("2024-02-01").cast("timestamp"))
       // the drop counter sits ABOVE the map-side partial aggregate, so
@@ -378,20 +339,23 @@ object SourceQueries {
       .withColumn("n_late_windows", lit(dropped))
   }
 
+  /** Streaming stateful dedup: watermarked `dropDuplicates(event_id)` —
+    * the exactly-once ingestion guard of a streaming pipeline (state =
+    * one entry per id inside the watermark, evicted as event time
+    * advances) — then a per-type rollup. The harness events are already
+    * unique by id, so the oracle is the plain batch rollup: the operator
+    * must pass everything through exactly once. Scoped to a 10% user
+    * cohort: a bounded-run AvailableNow batch holds ALL ids in state at
+    * once (no mid-batch watermark eviction), so the full table would
+    * spend the whole benchmark writing state-store snapshots — a real
+    * stream pays that state linearly, not all at once.
+    */
   def streamingDedupEvents(s: SparkSession, dir: String): DataFrame = {
     val qName = "graft_streaming_dedup"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    // fewer state partitions for the bounded run: each state partition
-    // snapshots to disk per batch, and this job has ONE batch — 8 stores
-    // amortize far better than 32 at harness scale (a real deployment
-    // sizes this to the cluster; the setting is pinned at query start)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
-    try {
+    runBounded(s, dir, "events", qName) {
       val streamDir = eventsStreamDir(s, dir)
       val rawSchema = s.read.parquet(streamDir).schema
-      val agg = s.readStream.schema(rawSchema).parquet(streamDir)
+      s.readStream.schema(rawSchema).parquet(streamDir)
         .transform(Tables.normalizeEventTs)
         .filter(col("user_id") % 10 === 0)
         .withWatermark("ts", "1 hour")
@@ -399,14 +363,10 @@ object SourceQueries {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
              dsum(col("value")).as("sum_value"))
-      agg.writeStream
+        .writeStream
         .outputMode(OutputMode.Complete())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
   }
 
@@ -425,14 +385,10 @@ object SourceQueries {
     */
   def streamingDedupWithinWm(s: SparkSession, dir: String): DataFrame = {
     val qName = "graft_streaming_dedup_wm"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
-    try {
+    runBounded(s, dir, "events", qName) {
       val streamDir = eventsStreamDir(s, dir)
       val rawSchema = s.read.parquet(streamDir).schema
-      val agg = s.readStream.schema(rawSchema).parquet(streamDir)
+      s.readStream.schema(rawSchema).parquet(streamDir)
         .transform(Tables.normalizeEventTs)
         .filter(col("user_id") % 10 === 3)
         .withWatermark("ts", "1 hour")
@@ -440,14 +396,10 @@ object SourceQueries {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
              dsum(col("value")).as("sum_value"))
-      agg.writeStream
+        .writeStream
         .outputMode(OutputMode.Complete())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
   }
 
@@ -463,30 +415,22 @@ object SourceQueries {
     */
   def streamingEnrichJoin(s: SparkSession, dir: String): DataFrame = {
     val qName = "graft_streaming_enrich"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
-    try {
+    runBounded(s, dir, "events", qName) {
       val streamDir = eventsStreamDir(s, dir)
       val rawSchema = s.read.parquet(streamDir).schema
       val dim = Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment"))
-      val agg = s.readStream.schema(rawSchema).parquet(streamDir)
+      s.readStream.schema(rawSchema).parquet(streamDir)
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("c_mktsegment").as("segment"), col("event_type"),
           col("value"))
         .groupBy(col("segment"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
              dsum(col("value")).as("sum_value"))
-      agg.writeStream
+        .writeStream
         .outputMode(OutputMode.Complete())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
   }
 
@@ -507,29 +451,21 @@ object SourceQueries {
     */
   def streamingIncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val qName = "graft_streaming_incdedup"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
     val tbl = DedupQueries.ensureBandIndex(s, dir)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "documents"))
-    try {
+    runBounded(s, dir, "documents", qName) {
       val streamDir = docsStreamDir(dir)
       val rawSchema = s.read.parquet(streamDir).schema
-      val agg = DedupQueries
+      DedupQueries
         .batchBandRows(s.readStream.schema(rawSchema).parquet(streamDir))
         .withColumnRenamed("doc_id", "doc_new")
         .join(s.table(tbl).withColumnRenamed("doc_id", "doc_base"),
           Seq("band", "sig"))
         .groupBy("doc_new", "doc_base")
         .agg(count(lit(1)).as("n_bands"))
-      agg.writeStream
+        .writeStream
         .outputMode(OutputMode.Complete())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
   }
 
@@ -546,11 +482,7 @@ object SourceQueries {
     */
   def streamingClickAttribution(s: SparkSession, dir: String): DataFrame = {
     val qName = "graft_streaming_attrib"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
-    try {
+    runBounded(s, dir, "events", qName) {
       val streamDir = eventsStreamDir(s, dir)
       val rawSchema = s.read.parquet(streamDir).schema
       def side(tpe: String) = s.readStream.schema(rawSchema).parquet(streamDir)
@@ -564,20 +496,16 @@ object SourceQueries {
         .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
           col("ts").as("p_ts"))
         .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
+      clicks.join(purchases,
         col("user_id") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("interval 30 minutes"))
         .select(col("click_id"), col("purchase_id"), col("user_id"),
           (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-      joined.writeStream
+        .writeStream
         .outputMode(OutputMode.Append())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
   }
 
@@ -605,11 +533,7 @@ object SourceQueries {
   def streamingLeftJoinUnmatched(s: SparkSession, dir: String)
       : DataFrame = {
     val qName = "graft_streaming_left_join"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
-    try {
+    runBounded(s, dir, "events", qName) {
       def side(tpe: String) = sessionEventsStream(s, dir)
         .withWatermark("ts", "1 hour")
         .filter(col("event_type") === tpe || col("user_id") < 0)
@@ -619,7 +543,7 @@ object SourceQueries {
       val purchases = side("purchase")
         .select(col("event_id").as("purchase_id"),
           col("user_id").as("p_user"), col("ts").as("p_ts"))
-      val joined = clicks.join(purchases,
+      clicks.join(purchases,
         col("user_id") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("interval 30 minutes"),
@@ -627,14 +551,10 @@ object SourceQueries {
         .select(col("click_id"), col("user_id"), col("purchase_id"),
           (unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
             .as("gap_us"))
-      joined.writeStream
+        .writeStream
         .outputMode(OutputMode.Append())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName).filter(col("user_id") >= 0)
   }
 
@@ -657,11 +577,7 @@ object SourceQueries {
   def streamingFullJoinAttribution(s: SparkSession, dir: String)
       : DataFrame = {
     val qName = "graft_streaming_full_join"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
-    try {
+    runBounded(s, dir, "events", qName) {
       def side(tpe: String) = sessionEventsStream(s, dir)
         .withWatermark("ts", "1 hour")
         .filter(col("event_type") === tpe || col("user_id") < 0)
@@ -671,7 +587,7 @@ object SourceQueries {
       val purchases = side("purchase")
         .select(col("event_id").as("purchase_id"),
           col("user_id").as("p_user"), col("ts").as("p_ts"))
-      val joined = clicks.join(purchases,
+      clicks.join(purchases,
         col("user_id") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("interval 30 minutes"),
@@ -680,14 +596,10 @@ object SourceQueries {
           col("p_user"),
           (unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
             .as("gap_us"))
-      joined.writeStream
+        .writeStream
         .outputMode(OutputMode.Append())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
       .filter(coalesce(col("user_id"), lit(0L)) >= 0 &&
         coalesce(col("p_user"), lit(0L)) >= 0)
@@ -697,8 +609,8 @@ object SourceQueries {
     * and the outer attribution join: the events parquet exposed through
     * a scratch dir (symlinks) PLUS a single sentinel row 2 h past
     * max(ts), so an event-time watermark provably passes every real
-    * session's close and append-mode output is complete under
-    * `Trigger.AvailableNow`. Returns the normalized streaming
+    * session's close and append-mode output is complete in an
+    * AvailableNow run. Returns the normalized streaming
     * DataFrame; callers must filter the sentinel's `user_id = -1` out
     * of their RESULT (not the input — the sentinel has to reach the
     * watermark node to advance it).
@@ -778,25 +690,14 @@ object SourceQueries {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val qName = "graft_streaming_sessions"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
-    // everything below may throw — the finally must restore the session
-    // conf regardless, or all later queries in the run inherit 8
-    // shuffle partitions
-    try {
+    runBounded(s, dir, "events", qName) {
       val events = sessionEventsStream(s, dir)
         .as[graft.streaming.EventStreams.Event]
-      val q = graft.streaming.EventStreams.sessionize(events)
+      graft.streaming.EventStreams.sessionize(events)
         .writeStream
         .outputMode(OutputMode.Append())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
       .filter(col("user_id") >= 0)
       .withColumn("session_id",
@@ -823,12 +724,8 @@ object SourceQueries {
     */
   def streamingSessionWindow(s: SparkSession, dir: String): DataFrame = {
     val qName = "graft_streaming_session_window"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
-    try {
-      val q = sessionEventsStream(s, dir)
+    runBounded(s, dir, "events", qName) {
+      sessionEventsStream(s, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
@@ -839,11 +736,7 @@ object SourceQueries {
         .writeStream
         .outputMode(OutputMode.Append())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName).filter(col("user_id") >= 0)
       .select("user_id", "session_start", "session_end",
         "n_events", "sum_value")
@@ -860,17 +753,12 @@ object SourceQueries {
     * dropped or doubled epoch would change the counts).
     */
   def streamingMroutSink(s: SparkSession, dir: String): DataFrame = {
-    val qName = "graft_streaming_mrout"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "events"))
     val outRoot = java.nio.file.Paths.get(ioDir("mrout_stream"))
       .resolve(Tables.dirKey(dir) + "f")
-    // fresh run every time: Append across reruns would double the data
-    org.apache.commons.io.FileUtils.deleteDirectory(outRoot.toFile)
     val outPath = outRoot.resolve("data").toString
-    try {
+    runBounded(s, dir, "events", "graft_streaming_mrout") {
+      // fresh run every time: Append across reruns would double the data
+      org.apache.commons.io.FileUtils.deleteDirectory(outRoot.toFile)
       val streamDir = eventsStreamDir(s, dir)
       val rawSchema = s.read.parquet(streamDir).schema
       s.readStream.schema(rawSchema).parquet(streamDir)
@@ -879,12 +767,9 @@ object SourceQueries {
         .writeStream
         .format("mrout")
         .outputMode(OutputMode.Append())
-        .queryName(qName)
         .option("checkpointLocation", outRoot.resolve("chk").toString)
-        .trigger(Trigger.AvailableNow())
-        .start(outPath)
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        .option("path", outPath)
+    }
     s.read.format("mrout").load(outPath)
       .select(split(col("value"), " ").as("kv"))
       .select(element_at(col("kv"), 1).as("event_type"),
@@ -1685,12 +1570,8 @@ object SourceQueries {
     */
   def streamingSnapshotCdf(s: SparkSession, dir: String): DataFrame = {
     val qName = "graft_streaming_snapshot_cdf"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
     val root = snapshotFixture(s, dir)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "orders"))
-    try {
+    runBounded(s, dir, "orders", qName) {
       s.readStream.format("graft-snapshot").option("fromVersion", "1")
         .load(root.toString)
         .groupBy(col("version"))
@@ -1706,11 +1587,7 @@ object SourceQueries {
         .writeStream
         .outputMode(OutputMode.Complete())
         .format("memory")
-        .queryName(qName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
   }
 
@@ -1735,23 +1612,22 @@ object SourceQueries {
     val priceMicros = new java.util.concurrent.atomic.AtomicLong(0)
     def micros(c: Column): Column =
       coalesce(round(c * lit(1000000L)).cast("bigint"), lit(0L))
-    val q = s.readStream.format("graft-snapshot").option("fromVersion", "1")
-      .load(root.toString)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val r = batch.agg(
-          sum(when(col("change_type") === "insert", 1L)
-            .when(col("change_type") === "delete", -1L)
-            .otherwise(0L)).as("dn"),
-          sum(micros(col("price")) - micros(col("old_price"))).as("dp"))
-          .head()
-        if (!r.isNullAt(0)) nLive.addAndGet(r.getLong(0))
-        if (!r.isNullAt(1)) priceMicros.addAndGet(r.getLong(1))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runBounded(s, dir, "orders", "graft_streaming_cdf_mv") {
+      s.readStream.format("graft-snapshot").option("fromVersion", "1")
+        .load(root.toString)
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val r = batch.agg(
+            sum(when(col("change_type") === "insert", 1L)
+              .when(col("change_type") === "delete", -1L)
+              .otherwise(0L)).as("dn"),
+            sum(micros(col("price")) - micros(col("old_price"))).as("dp"))
+            .head()
+          if (!r.isNullAt(0)) nLive.addAndGet(r.getLong(0))
+          if (!r.isNullAt(1)) priceMicros.addAndGet(r.getLong(1))
+          ()
+        }
+    }
     import s.implicits._
     Seq((nLive.get(), priceMicros.get())).toDF("n_live", "price_micros")
   }
@@ -1769,17 +1645,8 @@ object SourceQueries {
     * bench trials), so the timed cost is build-inclusive by design —
     * the entry IS the write path.
     */
-  private val doorRoots =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
   def snapshotWriteDoor(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(ioDir("snapshot_door"))
-      .resolve(java.util.UUID.randomUUID.toString.take(8))
-    // fresh root per invocation (the write path must stay idempotent
-    // across bench trials) — but sweep the PREVIOUS trial's root so N
-    // trials cost one store's disk, not N
-    doorRoots.put(Tables.dirKey(dir), root).foreach(old =>
-      org.apache.commons.io.FileUtils.deleteQuietly(old.toFile))
+    val root = freshRoot("snapshot_door", dir)
     val orders = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         date_format(col("o_orderdate"), "yyyy-MM").as("o_ym"))
@@ -1823,13 +1690,7 @@ object SourceQueries {
     * time-travelable.
     */
   def streamingSnapshotSink(s: SparkSession, dir: String): DataFrame = {
-    val qName = "graft_streaming_snapshot_sink"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    val base = java.nio.file.Paths.get(ioDir("snapshot_sink"))
-      .resolve(java.util.UUID.randomUUID.toString.take(8))
-    sinkRoots.put(Tables.dirKey(dir), base).foreach(old =>
-      org.apache.commons.io.FileUtils.deleteQuietly(old.toFile))
+    val base = freshRoot("snapshot_sink", dir)
     val inbox = base.resolve("inbox")
     val store = base.resolve("store")
     java.nio.file.Files.createDirectories(inbox)
@@ -1861,34 +1722,23 @@ object SourceQueries {
       depositSingleParquet(updates13, proto, "b2", t0 + 120000)
     }
     val schema = s.read.parquet(inbox.resolve("b0.parquet").toString).schema
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "orders"))
-    try {
+    runBounded(s, dir, "orders", "graft_streaming_snapshot_sink") {
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(inbox.toString)
         .writeStream.format("graft-snapshot")
         .outputMode(OutputMode.Append())
-        .queryName(qName)
         .option("checkpointLocation", base.resolve("chk").toString)
         .option("keyCol", "o_orderkey")
         .option("partCol", "o_ym")
         .option("txnAppId", "graft_sink_entry")
-        .trigger(Trigger.AvailableNow())
-        .start(store.toString)
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        .option("path", store.toString)
+    }
     s.read.format("graft-snapshot").load(store.toString)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         countDistinct(col("o_orderkey")).as("n_keys"),
         dsum(col("o_totalprice")).as("sum_price"))
   }
-
-  private val sinkRoots =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
-  private val wapRoots =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
 
   private val wapProtoRoots =
     scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
@@ -1944,13 +1794,7 @@ object SourceQueries {
     * metadata), zero data bytes.
     */
   def streamingWap(s: SparkSession, dir: String): DataFrame = {
-    val qName = "graft_streaming_wap"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
-    val base = java.nio.file.Paths.get(ioDir("snapshot_swap"))
-      .resolve(java.util.UUID.randomUUID.toString.take(8))
-    wapRoots.put(Tables.dirKey(dir), base).foreach(old =>
-      org.apache.commons.io.FileUtils.deleteQuietly(old.toFile))
+    val base = freshRoot("snapshot_swap", dir)
     val inbox = base.resolve("inbox")
     val store = base.resolve("store")
     java.nio.file.Files.createDirectories(inbox)
@@ -1968,22 +1812,17 @@ object SourceQueries {
     }
     snapshotBranchCreate(store, "staging")
     val schema = s.read.parquet(inbox.resolve("b0.parquet").toString).schema
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "orders"))
-    try {
+    runBounded(s, dir, "orders", "graft_streaming_wap") {
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(inbox.toString)
         .writeStream.format("graft-snapshot")
         .outputMode(OutputMode.Append())
-        .queryName(qName)
         .option("checkpointLocation", base.resolve("chk").toString)
         .option("branch", "staging")
         .option("keyCol", "o_orderkey").option("partCol", "o_ym")
         .option("txnAppId", "graft_swap_entry")
-        .trigger(Trigger.AvailableNow())
-        .start(store.toString)
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        .option("path", store.toString)
+    }
     require(SnapshotManifest.head(store) == 1,
       "staged micro-batches must never advance main")
     val (v, _, _) = snapshotFastForward(store, "staging")
@@ -2000,9 +1839,6 @@ object SourceQueries {
           col("sum_price"))
     arm("published", 2).unionByName(arm("v1", 1))
   }
-
-  private val bcdfRoots =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
 
   /** Changefeed on a BRANCH root plus the fastforward publish seen
     * from main — the WAP loop's last unobserved surface: the CDF
@@ -2024,14 +1860,7 @@ object SourceQueries {
     * manifest-scoped [[changeRows]] — never a table scan.
     */
   def streamingBranchCdf(s: SparkSession, dir: String): DataFrame = {
-    val qB = "graft_streaming_branch_cdf_b"
-    val qM = "graft_streaming_branch_cdf_m"
-    s.streams.active.filter(q => Option(q.name).exists(Set(qB, qM)))
-      .foreach(_.stop())
-    val base = java.nio.file.Paths.get(ioDir("snapshot_bcdf"))
-      .resolve(java.util.UUID.randomUUID.toString.take(8))
-    bcdfRoots.put(Tables.dirKey(dir), base).foreach(old =>
-      org.apache.commons.io.FileUtils.deleteQuietly(old.toFile))
+    val base = freshRoot("snapshot_bcdf", dir)
     val store = base.resolve("store")
     java.nio.file.Files.createDirectories(base)
     snapshotClone(wapPrototype(s, dir).resolve("store"), store)
@@ -2050,9 +1879,7 @@ object SourceQueries {
       "staged commits must never advance main")
     def feed(root: java.nio.file.Path, qName: String, arm: String)
         : DataFrame = {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "orders"))
-      try {
+      runBounded(s, dir, "orders", qName) {
         s.readStream.format("graft-snapshot").option("fromVersion", "2")
           .load(root.toString)
           .groupBy(col("version"))
@@ -2068,34 +1895,24 @@ object SourceQueries {
           .writeStream
           .outputMode(OutputMode.Complete())
           .format("memory")
-          .queryName(qName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(qName).withColumn("arm", lit(arm))
     }
-    val branchArm = feed(
-      graft.sources.SnapshotBranches.root(store, "staging"), qB, "branch")
+    val branchArm = feed(graft.sources.SnapshotBranches.root(store, "staging"),
+      "graft_streaming_branch_cdf_b", "branch")
     // materialize the branch arm BEFORE the publish drops the branch:
     // the memory sink holds the snapshot, but the stream itself must
     // have consumed staged versions while they were the branch's
     val (v, _, _) = snapshotFastForward(store, "staging")
     require(v == 2, s"the publish must be exactly main v2, got $v")
     graft.sources.SnapshotBranches.drop(store, "staging")
-    val mainArm = feed(store, qM, "main")
+    val mainArm = feed(store, "graft_streaming_branch_cdf_m", "main")
     branchArm.unionByName(mainArm)
       .select(col("arm"), col("version"), col("n_changes"),
         col("n_inserts"), col("n_updates"), col("n_deletes"),
         col("key_sum"), col("price_sum"), col("old_price_sum"))
   }
 
-  /** Deposit a frame as ONE parquet file in a file-stream inbox with a
-    * pinned mtime — the file source processes oldest-first, so the
-    * mtimes ARE the micro-batch order and must not depend on
-    * write-race timestamps. Shared with `SnapshotSinkSpec` (the
-    * entry and the spec must exercise the same ordering discipline).
-    */
   /** Shuffle-partition count for the bounded streaming runs, derived
     * from the streamed source's bytes instead of a pinned constant
     * (guide §2: partitioning scale-adaptive, never tuned to local mode
@@ -2117,6 +1934,73 @@ object SourceQueries {
       if (f.isDirectory) org.apache.commons.io.FileUtils.sizeOf(f)
       else f.length
     math.max(2L, bytes / (8L << 20)).toString
+  }
+
+  /** Set each `k -> v` session conf for the span of `body` and put
+    * every one back on exit, throw included: a key that was set gets
+    * its old value again, a key that was absent is unset again.
+    */
+  private[operators] def withConfs[A](s: SparkSession,
+      confs: (String, String)*)(body: => A): A = {
+    val set = s.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** The bounded-stream lifecycle every `streaming_*` entry shares, as
+    * the reference's one worker loop runs every app: stop a leftover
+    * query named `qName`, build the entry's `writer` (output mode, sink
+    * and options), start it under AvailableNow (drain what is there,
+    * then stop) and return the finished query. The writer is built
+    * inside the conf scope, so setup that throws cannot leak the
+    * streaming partition count into later entries. That count follows
+    * the streamed `table`'s bytes ([[streamShufflePartitions]]), not
+    * the session's batch setting: each stateful partition commits one
+    * state store per micro-batch, and the query fixes the count at
+    * start.
+    */
+  private[operators] def runBounded[T](s: SparkSession, dir: String,
+      table: String, qName: String)(
+      writer: => DataStreamWriter[T]): StreamingQuery = {
+    s.streams.active.filter(q => Option(q.name).contains(qName)).foreach(_.stop())
+    withConfs(s,
+        "spark.sql.shuffle.partitions" -> streamShufflePartitions(dir, table)) {
+      val q = writer.queryName(qName).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    }
+  }
+
+  private val freshRoots = scala.collection.concurrent.TrieMap
+    .empty[(String, String), java.nio.file.Path]
+
+  /** A new scratch root under `ioDir(name)` for an entry that must
+    * start from nothing on every call (a write path stays idempotent
+    * across bench trials); the previous call's root for the same
+    * `(name, dir)` is deleted, so N trials cost one root's disk, not N.
+    */
+  private def freshRoot(name: String, dir: String): java.nio.file.Path = {
+    val root = java.nio.file.Paths.get(ioDir(name))
+      .resolve(java.util.UUID.randomUUID.toString.take(8))
+    freshRoots.put((name, Tables.dirKey(dir)), root).foreach(old =>
+      org.apache.commons.io.FileUtils.deleteQuietly(old.toFile))
+    root
+  }
+
+  /** Register the snapshot store's SQL catalog `cat` over `warehouse`
+    * in session `s`.
+    */
+  private def snapshotCatalog(s: SparkSession, cat: String,
+      warehouse: java.nio.file.Path): Unit = {
+    val key = s"spark.sql.catalog.$cat"
+    s.conf.set(key, "graft.sources.GraftSnapshotCatalog")
+    s.conf.set(s"$key.warehouse", warehouse.toString)
   }
 
   private val inboxProtoRoots = scala.collection.concurrent.TrieMap
@@ -2188,6 +2072,12 @@ object SourceQueries {
     } finally st.close()
   }
 
+  /** Deposit a frame as ONE parquet file in a file-stream inbox with a
+    * pinned mtime — the file source processes oldest-first, so the
+    * mtimes ARE the micro-batch order and must not depend on
+    * write-race timestamps. Shared with `SnapshotSinkSpec` (the
+    * entry and the spec must exercise the same ordering discipline).
+    */
   private[graft] def depositSingleParquet(df: DataFrame,
       inbox: java.nio.file.Path, name: String, mtime: Long): Unit = {
     val tmp = inbox.resolveSibling(s"tmp_$name")
@@ -2216,10 +2106,7 @@ object SourceQueries {
     * zero data files are touched beyond the commit's own partitions.
     */
   def snapshotAddColumn(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(ioDir("snapshot_evolve"))
-      .resolve(java.util.UUID.randomUUID.toString.take(8))
-    evolveRoots.put(Tables.dirKey(dir), root).foreach(old =>
-      org.apache.commons.io.FileUtils.deleteQuietly(old.toFile))
+    val root = freshRoot("snapshot_evolve", dir)
     val orders = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         date_format(col("o_orderdate"), "yyyy-MM").as("o_ym"))
@@ -2250,9 +2137,6 @@ object SourceQueries {
       .select(col("version"), col("o_orderstatus"), col("n_orders"),
         col("n_channel"), col("n_channels_distinct"), col("sum_price"))
   }
-
-  private val evolveRoots =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
 
   /** Time travel: after the v2 merge and v3 delete have committed, read
     * snapshots v1 AND v3 side by side — identical per-status aggregates
@@ -2292,10 +2176,7 @@ object SourceQueries {
     val root = snapshotFixture(s, dir)
     val key = Tables.dirKey(dir)
     val cat = s"snap_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-      root.getParent.toString)
+    snapshotCatalog(s, cat, root.getParent)
     val tbl = s"$cat.`${root.getFileName}`"
     def arm(v: Int): String =
       s"""SELECT 'v$v' AS version, o_orderstatus,
@@ -2330,10 +2211,7 @@ object SourceQueries {
     val root = snapshotFixture(s, dir)
     val key = Tables.dirKey(dir)
     val cat = s"snap_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-      root.getParent.toString)
+    snapshotCatalog(s, cat, root.getParent)
     val tbl = s"$cat.`${root.getFileName}`"
     val dimPath = root.getParent.resolve("calendar_dim").toString
     if (!new java.io.File(dimPath).isDirectory)
@@ -2367,10 +2245,7 @@ object SourceQueries {
     val root = snapshotFixture(s, dir)
     val key = Tables.dirKey(dir)
     val cat = s"snap_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-      root.getParent.toString)
+    snapshotCatalog(s, cat, root.getParent)
     val tn = root.getFileName.toString
     s.sql(
       s"""SELECT f.pv AS o_ym, SUM(f.row_count) AS n_rows,
@@ -2414,9 +2289,7 @@ object SourceQueries {
     val root = ordersYmFixture(s, dir, base, "orders_dml")
     val orders = ordersYmFrame(s, dir)
     val cat = s"snapdml_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`${root.getFileName}`"
     orders.createOrReplaceTempView("graft_dml_orders_src")
     // table schema = data columns + the o_ym_p layout mirror (whose
@@ -2471,9 +2344,7 @@ object SourceQueries {
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     java.nio.file.Files.createDirectories(base)
     val cat = s"snapmor_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`orders_mor`"
     ordersYmFrame(s, dir).createOrReplaceTempView("graft_mor_orders_src")
     s.sql(
@@ -2545,9 +2416,7 @@ object SourceQueries {
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     java.nio.file.Files.createDirectories(base)
     val cat = s"snapumor_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`orders_umor`"
     ordersYmFrame(s, dir).filter(
         col("o_ym").between("1995-01", "1995-06"))
@@ -2630,18 +2499,13 @@ object SourceQueries {
     * partitions).
     */
   def streamingMorCdf(s: SparkSession, dir: String): DataFrame = {
-    val qName = "graft_streaming_mor_cdf"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
     val key = Tables.dirKey(dir)
     val base = java.nio.file.Paths.get(ioDir("snapshot_mor_cdf"))
       .resolve(key)
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     java.nio.file.Files.createDirectories(base)
     val cat = s"snapmorcdf_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`orders_mor_cdf`"
     ordersYmFrame(s, dir)
       .createOrReplaceTempView("graft_mor_cdf_orders_src")
@@ -2659,9 +2523,8 @@ object SourceQueries {
          |WHERE o_ym BETWEEN '1995-01' AND '1995-06'""".stripMargin)
     s.sql(s"DELETE FROM $tbl WHERE o_totalprice >= 400000.0")
     val root = base.resolve("orders_mor_cdf")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "orders"))
-    try {
+    val qName = "graft_streaming_mor_cdf"
+    runBounded(s, dir, "orders", qName) {
       // fromVersion 2 = the INSERT (v1 is the empty CREATE)
       s.readStream.format("graft-snapshot").option("fromVersion", "2")
         .load(root.toString)
@@ -2673,11 +2536,7 @@ object SourceQueries {
         .writeStream
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
         .format("memory")
-        .queryName(qName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
   }
 
@@ -2699,18 +2558,13 @@ object SourceQueries {
     * O(matched keys) per commit, never a partition rewrite.
     */
   def streamingUmorCdf(s: SparkSession, dir: String): DataFrame = {
-    val qName = "graft_streaming_umor_cdf"
-    s.streams.active.filter(q => Option(q.name).contains(qName))
-      .foreach(_.stop())
     val key = Tables.dirKey(dir)
     val base = java.nio.file.Paths.get(ioDir("snapshot_umor_cdf"))
       .resolve(key)
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     java.nio.file.Files.createDirectories(base)
     val cat = s"snapumorcdf_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`orders_umor_cdf`"
     ordersYmFrame(s, dir)
       .createOrReplaceTempView("graft_umor_cdf_orders_src")
@@ -2730,9 +2584,8 @@ object SourceQueries {
       s"""UPDATE $tbl SET o_totalprice = o_totalprice * 2.0
          |WHERE o_totalprice >= 400000.0""".stripMargin)
     val root = base.resolve("orders_umor_cdf")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(dir, "orders"))
-    try {
+    val qName = "graft_streaming_umor_cdf"
+    runBounded(s, dir, "orders", qName) {
       // fromVersion 2 = the INSERT (v1 is the empty CREATE)
       s.readStream.format("graft-snapshot").option("fromVersion", "2")
         .load(root.toString)
@@ -2744,11 +2597,7 @@ object SourceQueries {
         .writeStream
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
         .format("memory")
-        .queryName(qName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.table(qName)
   }
 
@@ -2773,9 +2622,7 @@ object SourceQueries {
     val root = ordersYmFixture(s, dir, base, "orders_restore")
     val orders = ordersYmFrame(s, dir)
     val cat = s"snaprst_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`${root.getFileName}`"
     orders.createOrReplaceTempView("graft_rst_orders_src")
     s.sql(
@@ -2823,9 +2670,7 @@ object SourceQueries {
     val root = ordersYmFixture(s, dir, base, "orders_cl")
     val orders = ordersYmFrame(s, dir)
     val cat = s"snapcl_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`${root.getFileName}`"
     orders.createOrReplaceTempView("graft_cl_orders_src")
     s.sql(
@@ -2881,9 +2726,7 @@ object SourceQueries {
     val root = ordersYmFixture(s, dir, base, "orders_wap")
     val orders = ordersYmFrame(s, dir)
     val cat = s"snapwap_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tn = root.getFileName.toString
     val tbl = s"$cat.`$tn`"
     s.sql(s"CALL $cat.branch('$tn', 'staging')")
@@ -2924,10 +2767,7 @@ object SourceQueries {
     val root = snapshotFixture(s, dir)
     val key = Tables.dirKey(dir)
     val cat = s"snap_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-      root.getParent.toString)
+    snapshotCatalog(s, cat, root.getParent)
     val tn = root.getFileName.toString
     Seq("audited" -> 1, "pre_delete" -> 2).foreach { case (n, v) =>
       s.sql(s"CALL $cat.drop_tag('$tn', '$n')")
@@ -2970,9 +2810,7 @@ object SourceQueries {
     val root = ordersYmFixture(s, dir, base, "orders_check")
     val orders = ordersYmFrame(s, dir)
     val cat = s"snapchk_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`${root.getFileName}`"
     s.sql(s"ALTER TABLE $tbl ADD CONSTRAINT price_positive " +
       "CHECK (o_totalprice > 0.0)")
@@ -3030,9 +2868,7 @@ object SourceQueries {
     val root = ordersYmFixture(s, dir, base, "orders_rl")
     val orders = ordersYmFrame(s, dir)
     val cat = s"snaprl_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`${root.getFileName}`"
     orders.createOrReplaceTempView("graft_rl_orders_src")
     s.sql(
@@ -3094,15 +2930,10 @@ object SourceQueries {
     val root = ordersYmFixture(s, dir, base, "orders_ow")
     val orders = ordersYmFrame(s, dir)
     val cat = s"snapow_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`${root.getFileName}`"
     orders.createOrReplaceTempView("graft_ow_orders_src")
-    val prevMode =
-      s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    try {
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    withConfs(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       s.sql(
         s"""INSERT OVERWRITE $tbl
            |SELECT o_orderkey, o_orderstatus, o_totalprice * 0.9,
@@ -3110,11 +2941,6 @@ object SourceQueries {
            |FROM graft_ow_orders_src
            |WHERE o_ym IN ('1995-01', '1995-02')
            |  AND o_orderkey % 3 = 0""".stripMargin)
-    } finally prevMode match {
-      case Some(v) =>
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        s.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
     s.sql(
       s"""INSERT OVERWRITE $tbl PARTITION (o_ym_p = '1996-05')
@@ -3158,9 +2984,7 @@ object SourceQueries {
     val root = ordersYmFixture(s, dir, base, "orders_ren")
     val orders = ordersYmFrame(s, dir)
     val cat = s"snapren_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`${root.getFileName}`"
     orders.createOrReplaceTempView("graft_ren_orders_src")
     s.sql(
@@ -3215,9 +3039,7 @@ object SourceQueries {
     // DDL+DML advance the store: rebuild per call via hard-link clone
     val root = ordersYmFixture(s, dir, base, "orders_pse")
     val cat = s"snappse_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     s.sql(s"CALL $cat.evolve_partitioning('${root.getFileName}', " +
       "'o_orderstatus')")
     val orders = ordersYmFrame(s, dir)
@@ -3269,9 +3091,7 @@ object SourceQueries {
     val base = java.nio.file.Paths.get(ioDir("snapshot_psesql")).resolve(key)
     val root = ordersYmFixture(s, dir, base, "orders_psr")
     val cat = s"snappsr_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     s.sql(s"CALL $cat.evolve_partitioning('${root.getFileName}', " +
       "'o_orderstatus')")
     val tbl = s"$cat.`${root.getFileName}`"
@@ -3334,9 +3154,7 @@ object SourceQueries {
     val base = java.nio.file.Paths.get(ioDir("snapshot_pst")).resolve(key)
     val root = ordersYmFixture(s, dir, base, "orders_pst")
     val cat = s"snappst_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     s.sql(s"CALL $cat.evolve_partitioning('${root.getFileName}', " +
       "'bucket(4, o_orderkey)')")                                 // v2
     val tbl = s"$cat.`${root.getFileName}`"
@@ -3396,9 +3214,7 @@ object SourceQueries {
     val base = java.nio.file.Paths.get(ioDir("snapshot_drop")).resolve(key)
     val root = ordersYmFixture(s, dir, base, "orders_drop")
     val cat = s"snapdrop_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`${root.getFileName}`"
     s.sql(s"ALTER TABLE $tbl DROP COLUMN o_orderstatus")          // v2
     // post-drop upsert: the delta carries the post-drop shape
@@ -3458,9 +3274,7 @@ object SourceQueries {
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     java.nio.file.Files.createDirectories(base)
     val cat = s"snapct_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     ordersYmFrame(s, dir).createOrReplaceTempView("graft_ct_orders")
     val tbl = s"$cat.`orders_ct`"
     s.sql(
@@ -3520,9 +3334,7 @@ object SourceQueries {
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     java.nio.file.Files.createDirectories(base)
     val cat = s"snaphp_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         col("o_orderdate"))
@@ -3581,9 +3393,7 @@ object SourceQueries {
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     java.nio.file.Files.createDirectories(base)
     val cat = s"snapbdpp_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val slice = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         col("o_orderdate"))
@@ -3641,9 +3451,7 @@ object SourceQueries {
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     java.nio.file.Files.createDirectories(base)
     val cat = s"snapspj_$key"
-    ns.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    ns.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(ns, cat, base)
     Tables.orders(ns, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       .filter(col("o_orderdate") >= lit("1995-01-01") &&
@@ -3693,9 +3501,7 @@ object SourceQueries {
     val key = Tables.dirKey(dir)
     val base = java.nio.file.Paths.get(ioDir("snapshot_rt")).resolve(key)
     val cat = s"snaprt_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     ordersYmFixture(s, dir, base, "orders_rt")
     s.sql(s"ALTER TABLE $cat.`orders_rt` RENAME TO `orders_renamed`")
     val tbl = s"$cat.`orders_renamed`"
@@ -3754,9 +3560,7 @@ object SourceQueries {
       .option("keyCol", "o_orderkey").option("partCol", "o_ym")
       .mode("append").save(root.toString)                         // v1
     val cat = s"snapwiden_$key"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftSnapshotCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    snapshotCatalog(s, cat, base)
     val tbl = s"$cat.`${root.getFileName}`"
     s.sql(s"ALTER TABLE $tbl ALTER COLUMN o_day TYPE BIGINT")     // v2
     s.sql(s"ALTER TABLE $tbl ALTER COLUMN o_price_f TYPE DOUBLE") // v3

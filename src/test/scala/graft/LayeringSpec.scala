@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.sources`, and nothing there may reach back into
   * `graft.operators` (the catalog entries and fixtures that USE the
   * store) — not in code, and not in a doc link, which would point a
-  * reader at the wrong home.
+  * reader at the wrong home. In `graft.operators`, every bounded
+  * stream runs through `SourceQueries.runBounded`, and
+  * `SourceQueries` saves no session conf by hand (`withConfs` does).
   */
 class LayeringSpec extends AnyFunSuite {
   test("no file under graft/sources names graft.operators") {
@@ -25,5 +27,30 @@ class LayeringSpec extends AnyFunSuite {
         }
       }
     assert(hits.isEmpty, hits.mkString("sources -> operators:\n", "\n", ""))
+  }
+
+  test("graft/operators runs every bounded stream through one runner") {
+    val dir = Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(dir), s"run from the repo root: no $dir")
+    val lines = Files.list(dir).iterator.asScala.toSeq.sorted
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.map { case (l, i) =>
+          s"${f.getFileName}:${i + 1}: ${l.trim}"
+        }
+      }
+    // the lifecycle steps SourceQueries.runBounded owns: a second line
+    // naming one of them is a hand-written lifecycle
+    for (step <- Seq("Trigger.AvailableNow", ".awaitTermination(",
+        ".streams.active")) {
+      val hits = lines.filter(_.contains(step))
+      assert(hits.size == 1, hits.mkString(s"$step on ${hits.size} lines:\n", "\n", ""))
+    }
+    val src = new String(Files.readAllBytes(dir.resolve("SourceQueries.scala")))
+    val saves = "val\\s+prev\\w*\\s*=\\s*\\w+\\.conf\\.get".r.findAllIn(src).toSeq
+    assert(saves.isEmpty,
+      saves.mkString("hand-written conf save (use withConfs):\n", "\n", ""))
+    val catalogs = src.linesIterator.count(_.contains("spark.sql.catalog."))
+    assert(catalogs == 1, s"spark.sql.catalog. on $catalogs lines, not only in snapshotCatalog")
   }
 }
