@@ -1008,121 +1008,79 @@ object SourceQueries {
            dsum(col("o_totalprice")).as("sum_price"))
   }
 
-  /** Copy-on-write MERGE (upsert) into a month-partitioned parquet
-    * warehouse table — the Delta-less incremental-ingest primitive:
-    *
-    *  1. the delta's months define the TOUCHED partitions (a tiny
-    *     driver-side distinct — partition metadata, not data);
-    *  2. only touched partitions are read back (partition pruning),
-    *     anti-joined against the delta's keys (delta is broadcast — a
-    *     merge batch is always small next to the table) and unioned
-    *     with the delta;
-    *  3. the rewritten partitions land in a temp dir and swap in via
-    *     per-partition delete+rename (the MrOutSource temp+rename
-    *     commit discipline — readers never see a half-written
-    *     partition file set).
-    *
+  /** Commit `delta(orders)` to a per-call hard-link clone of the
+    * pristine keyed orders store ([[ordersYmFixture]] — the base table
+    * already exists, each trial starts from it) through the
+    * `graft-snapshot` write door with `commitMode` `mode`, and read the
+    * new head. The door's copy-on-write commit ([[snapshotCommit]])
+    * reads back only the months the delta touches, anti-joins them
+    * against its keys, writes the result under a fresh attempt dir and
+    * publishes one manifest repointing just those months through the
+    * link(2) CAS: a reader sees the old version or the new one, never
+    * a half-swapped month, and untouched months keep their parent dirs.
     * Cost is O(touched partitions) I/O + O(delta) shuffle regardless of
-    * table size — at 100 TB a daily merge rewrites the handful of
-    * month partitions the delta touches, never the table. Updates must
-    * keep their partition key (a cross-partition move is
-    * delete+insert, the same primitive twice).
+    * table size.
     */
-  private[operators] def mergeInto(s: SparkSession, basePath: String,
-                                   tmpPath: String, delta: DataFrame,
-                                   insertDelta: Boolean = true)
-      : Unit = {
-    val touched = delta.select("o_ym").distinct().collect()
-      .map(_.getString(0))
-    val kept = s.read.parquet(basePath)
-      .filter(col("o_ym").isin(touched.toIndexedSeq: _*))
-      .join(broadcast(delta.select(col("o_orderkey").as("d_key"))),
-        col("o_orderkey") === col("d_key"), "left_anti")
-    // insertDelta = false is DELETE: drop matching keys, re-insert
-    // nothing — same touched-partition scoping and commit path
-    distributeByLayout(
-        if (insertDelta) kept.unionByName(delta) else kept, Seq("o_ym"))
-      .write.mode("overwrite").partitionBy("o_ym").parquet(tmpPath)
-    val conf = s.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(basePath).getFileSystem(conf)
-    touched.foreach { ym =>
-      val dst = new org.apache.hadoop.fs.Path(s"$basePath/o_ym=$ym")
-      fs.delete(dst, true)
-      fs.rename(new org.apache.hadoop.fs.Path(s"$tmpPath/o_ym=$ym"), dst)
-    }
+  private def commitToClone(s: SparkSession, dir: String, name: String,
+      mode: String)(delta: DataFrame => DataFrame): DataFrame = {
+    val root = ordersYmFixture(s, dir,
+      java.nio.file.Paths.get(ioDir(s"snapshot_$name"))
+        .resolve(Tables.dirKey(dir)), s"orders_$name")
+    delta(ordersYmFrame(s, dir)).write.format("graft-snapshot")
+      .option("commitMode", mode).mode("append").save(root.toString)
+    s.read.format("graft-snapshot").load(root.toString)
   }
 
-  /** The catalog entry: build the month-partitioned base from orders
-    * (the FIXTURE — a real warehouse table already exists), merge a
-    * deterministic delta (10%-price updates for keys ≡ 0 mod 97;
-    * inserts re-keyed negative for keys ≡ 0 mod 1013 — guaranteed
-    * absent), and aggregate the post-merge table. The oracle computes
-    * the same merge relationally over the original orders, so
-    * duplicate inserts, lost updates, or a half-swapped partition all
-    * hash-mismatch (`n_keys` counts distinct keys explicitly).
+  /** The MERGE delta: 10%-price updates for keys ≡ 0 mod 97, inserts
+    * re-keyed negative for keys ≡ 0 mod 1013 (guaranteed absent).
     */
-  def mergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(ioDir("merge_orders"))
-      .resolve(Tables.dirKey(dir))
-    val basePath = root.resolve("base").toString
-    val tmpPath = root.resolve("delta_out").toString
-    val orders = Tables.orders(s, dir)
-      .withColumn("o_ym", date_format(col("o_orderdate"), "yyyy-MM"))
-    // base table from the shared per-JVM prototype (mergeUpsert and
-    // deleteKeys bootstrap the IDENTICAL month-partitioned base):
-    // hard-link clone per call, because mergeInto swaps partition dirs
-    // in place and each trial must start from the pristine base
-    linkTreeFromPrototype(dir, "orders_ym_base",
-        java.nio.file.Paths.get(basePath)) { proto =>
-      distributeByLayout(orders, Seq("o_ym"))
-        .write.mode("overwrite").partitionBy("o_ym").parquet(proto.toString)
-    }
+  private def mergeDelta(orders: DataFrame): DataFrame = {
     val updates = orders.filter(col("o_orderkey") % 97 === 0)
       .withColumn("o_totalprice", col("o_totalprice") * lit(1.1))
     val inserts = orders.filter(col("o_orderkey") % 1013 === 0)
       .withColumn("o_orderkey", -col("o_orderkey") - lit(1))
-    mergeInto(s, basePath, tmpPath, updates.unionByName(inserts))
-    s.read.parquet(basePath)
+    updates.unionByName(inserts)
+  }
+
+  /** The DELETE key list: keys ≡ 0 mod 131. */
+  private def doomedKeys(orders: DataFrame): DataFrame =
+    orders.filter(col("o_orderkey") % 131 === 0)
+
+  /** Copy-on-write MERGE (upsert) into the month-partitioned keyed
+    * store — the incremental-ingest primitive: [[mergeDelta]] commits
+    * as one version ([[commitToClone]]) and the entry aggregates the
+    * head. At 100 TB a daily merge rewrites the handful of month
+    * partitions the delta touches, never the table. Updates must keep
+    * their partition key (a cross-partition move is delete+insert, the
+    * same primitive twice). The oracle computes the same merge
+    * relationally over the original orders, so duplicate inserts, lost
+    * updates, or a lost month all hash-mismatch (`n_keys` counts
+    * distinct keys explicitly). `MergeUpsertSpec` pins the
+    * touched-partition scoping.
+    */
+  def mergeUpsert(s: SparkSession, dir: String): DataFrame =
+    commitToClone(s, dir, "merge", "upsert")(mergeDelta)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         countDistinct(col("o_orderkey")).as("n_keys"),
         dsum(col("o_totalprice")).as("sum_price"))
-  }
 
   /** Partition-scoped DELETE — the takedown / right-to-be-forgotten
     * primitive a training-data warehouse runs daily: remove a key list
-    * from the month-partitioned table through the SAME touched-
-    * partition copy-on-write path as the merge (`insertDelta = false`),
-    * so cost is O(partitions containing the keys), not O(table). The
-    * key list here is deterministic (keys ≡ 0 mod 131); real deletes
+    * ([[doomedKeys]]) from the month-partitioned keyed store through
+    * the SAME touched-partition copy-on-write commit as the merge
+    * (`commitMode` delete, [[commitToClone]]), so cost is
+    * O(partitions containing the keys), not O(table). Real deletes
     * arrive as a table of (key, partition) — carrying the partition
     * key in the delete request is what makes partition scoping
     * possible at 100 TB (a keys-only delete must touch every
     * partition). Oracle: the complement filter over the original.
     */
-  def deleteKeys(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(ioDir("delete_orders"))
-      .resolve(Tables.dirKey(dir))
-    val basePath = root.resolve("base").toString
-    val tmpPath = root.resolve("delta_out").toString
-    val orders = Tables.orders(s, dir)
-      .withColumn("o_ym", date_format(col("o_orderdate"), "yyyy-MM"))
-    // base table from the shared per-JVM prototype (mergeUpsert and
-    // deleteKeys bootstrap the IDENTICAL month-partitioned base):
-    // hard-link clone per call, because mergeInto swaps partition dirs
-    // in place and each trial must start from the pristine base
-    linkTreeFromPrototype(dir, "orders_ym_base",
-        java.nio.file.Paths.get(basePath)) { proto =>
-      distributeByLayout(orders, Seq("o_ym"))
-        .write.mode("overwrite").partitionBy("o_ym").parquet(proto.toString)
-    }
-    val doomed = orders.filter(col("o_orderkey") % 131 === 0)
-    mergeInto(s, basePath, tmpPath, doomed, insertDelta = false)
-    s.read.parquet(basePath)
+  def deleteKeys(s: SparkSession, dir: String): DataFrame =
+    commitToClone(s, dir, "delete", "delete")(doomedKeys)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("sum_price"))
-  }
 
   /** Clustering-preserving small-file COMPACTION — the other daily
     * housekeeping job: a streaming ingest leaves hundreds of tiny
@@ -1319,12 +1277,10 @@ object SourceQueries {
         dsum(col("price")).as("price_sum"))
   }
 
-  /** Three-version fixture over orders: v1 = the base table; v2 = MERGE
-    * (10% price bump for keys ≡ 0 mod 97, re-keyed-negative inserts for
-    * keys ≡ 0 mod 1013); v3 = DELETE of keys ≡ 0 mod 131 — the same
-    * deterministic deltas as `source_merge_upsert`/`source_delete_keys`,
-    * but committed through the manifest store so all three versions
-    * coexist on disk.
+  /** Three-version fixture over orders: v1 = the base table; v2 =
+    * [[mergeDelta]]; v3 = DELETE of [[doomedKeys]] — the deltas of
+    * `source_merge_upsert`/`source_delete_keys`, chained in one store
+    * so all three versions coexist on disk.
     */
   private val snapshotRoots =
     scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
@@ -1342,18 +1298,10 @@ object SourceQueries {
     // a leftover manifest from a dead prior build would read as a
     // concurrent committer
     org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-    val orders = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-        date_format(col("o_orderdate"), "yyyy-MM").as("o_ym"))
+    val orders = ordersYmFrame(s, dir)
     snapshotInit(s, root, orders, Seq("o_ym"))
-    val updates = orders.filter(col("o_orderkey") % 97 === 0)
-      .withColumn("o_totalprice", col("o_totalprice") * lit(1.1))
-    val inserts = orders.filter(col("o_orderkey") % 1013 === 0)
-      .withColumn("o_orderkey", -col("o_orderkey") - lit(1))
-    snapshotCommit(s, root, 1, 2, updates.unionByName(inserts),
-      insertDelta = true)
-    val doomed = orders.filter(col("o_orderkey") % 131 === 0)
-    snapshotCommit(s, root, 2, 3, doomed, insertDelta = false)
+    snapshotCommit(s, root, 1, 2, mergeDelta(orders), insertDelta = true)
+    snapshotCommit(s, root, 2, 3, doomedKeys(orders), insertDelta = false)
     // per-file Bloom bitsets over every leaf dir any version references,
     // so any version read through the connector can file-skip point
     // lookups (files are write-once: the index never goes stale)
@@ -1366,7 +1314,8 @@ object SourceQueries {
 
   /** Pristine keyed/partitioned orders store shared by the SQL-door
     * entries (`sql_dml_roundtrip`, `sql_restore`, `sql_clone`, `sql_wap`,
-    * `sql_constraints`, `sql_update_merge`, `sql_insert_overwrite`):
+    * `sql_constraints`, `sql_update_merge`, `sql_insert_overwrite`) and
+    * the write-door `source_merge_upsert`/`source_delete_keys`:
     * built ONCE per JVM per sf dir through the DataFrame write door (so
     * `table.meta` records keyCol + layout exactly as each entry's own
     * per-call bootstrap did), then hard-link-CLONED into each entry's
@@ -2040,15 +1989,14 @@ object SourceQueries {
     .empty[(String, String), java.nio.file.Path]
 
   /** One-time per JVM per sf dir prototype for a plain parquet TREE
-    * fixture (a partitioned base table, a fragmented small-file dir):
+    * fixture (`source_compact_files`' fragmented small-file dir):
     * `build` writes the deterministic fixture once into a prototype
     * dir; every entry call wipes `dst` and hard-links the tree back
-    * (dirs recreated, files linked — parquet files are write-once, and
-    * the merge/delete entries replace whole partition dirs, so a
-    * linked file's inode is never mutated). The [[wapPrototype]]
-    * discipline for non-store fixtures: at 100 TB the base table
-    * EXISTS — rebuilding it per run measured 0.5–1 s of pure fixture
-    * I/O inside merge/delete/compact's timed windows.
+    * (dirs recreated, files linked — parquet files are write-once and
+    * the entry only reads the linked tree, so a linked file's inode is
+    * never mutated). The [[wapPrototype]] discipline for non-store
+    * fixtures: rebuilding the fixture per run measured 0.5–1 s of pure
+    * fixture I/O inside the entry's timed window.
     */
   private def linkTreeFromPrototype(dir: String, entry: String,
       dst: java.nio.file.Path)(build: java.nio.file.Path => Unit): Unit = {
@@ -3796,16 +3744,19 @@ object SourceQueries {
 
   private[operators] def buildIncrCompactFixture(s: SparkSession,
       dir: String, root: java.nio.file.Path): java.nio.file.Path = {
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      // o_orderdate lands as DATE: parquet min/max stats on
-      // TIMESTAMP_NTZ are not usable by the reader-side row-group
-      // filter (the zorderLayout finding), and the whole point of a
-      // clustered rewrite is that the cluster dims PRUNE
-      val orders = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"), to_date(col("o_orderdate")).as("o_orderdate"),
-          date_format(col("o_orderdate"), "yyyy-MM").as("o_ym"))
-      val base = root.resolve("d1").toString
+    org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    // o_orderdate lands as DATE: parquet min/max stats on
+    // TIMESTAMP_NTZ are not usable by the reader-side row-group
+    // filter (the zorderLayout finding), and the whole point of a
+    // clustered rewrite is that the cluster dims PRUNE
+    val orders = Tables.orders(s, dir)
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+        col("o_totalprice"), to_date(col("o_orderdate")).as("o_orderdate"),
+        date_format(col("o_orderdate"), "yyyy-MM").as("o_ym"))
+    // v1 publishes no sidecar (`fresh = None`): these plain parquet
+    // writes fold no file stats, and readers fall back to listing
+    commit(root, Some(0)) { a =>
+      val base = a.scratch().toString
       val isHot = col("o_ym").isin(IncrCompactHotMonths: _*)
       orders.filter(!isHot)
         .withColumn("o_ym_p", col("o_ym"))
@@ -3819,8 +3770,9 @@ object SourceQueries {
         .getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("o_ym_p="))
         .map(f => f.getName.stripPrefix("o_ym_p=") -> f.getAbsolutePath)
-      writeManifest(root, 1, months.toMap)
-      root
+      a.publish(months.toMap, fresh = None)
+    }
+    root
   }
 
   /** One incremental compaction pass over the store at `root`: returns

@@ -1196,11 +1196,11 @@ object SnapshotFiles {
     finally JFiles.deleteIfExists(tmp)
   }
 
-  /** Publish `to`'s version `toV` sidecar as `from`'s version `fromV`
-    * one, each entry passed through `rewrite` — for publishes whose
-    * files ARE that version's (restore, branch fork) or hard links to
-    * them (clone, fast-forward). No source sidecar, no copy: readers
-    * fall back to listing.
+  /** Publish `from`'s version `fromV` sidecar as `to`'s version `toV`
+    * one, each entry passed through `rewrite` — for the bootstraps of a
+    * new root whose files ARE that version's (branch fork) or hard
+    * links to them (clone). No source sidecar, no copy: readers fall
+    * back to listing.
     */
   def copy(from: JPath, fromV: Int, to: JPath, toV: Int,
            rewrite: FileEntry => FileEntry = identity): Unit =

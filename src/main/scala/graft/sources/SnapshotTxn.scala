@@ -83,10 +83,9 @@ object SnapshotTxn {
 
   // ---- Manifest-based snapshot store (time travel + changefeed) ----
   //
-  // The missing lakehouse piece after MERGE/DELETE/COMPACT: those entries
-  // swap rewritten partitions IN PLACE, so history is gone the moment a
-  // commit lands. Here every commit instead writes NEW partition dirs and
-  // publishes an immutable manifest (version -> {month -> dir}); old data
+  // A commit never swaps partitions in place (history would be gone the
+  // moment it landed): it writes NEW partition dirs and publishes an
+  // immutable manifest (version -> {month -> dir}) through [[commit]]; old data
   // files are never touched, so any past version stays readable forever —
   // the reproducibility contract a training run needs ("the corpus as of
   // snapshot v1"), and the diff of two manifests IS the changefeed. This
@@ -240,22 +239,28 @@ object SnapshotTxn {
       * partitions (a legacy store) publishes no sidecar: the reader's
       * lazy-listing fallback is sound. A bootstrap's `table.meta` is
       * written by the link winner only, before the sidecar.
+      * `carryFrom` names the version whose `#delete`/`#upsert` records
+      * and sidecar entries carry forward in place of the parent's:
+      * RESTORE carries the restored version's whole state.
       */
     def publish(entries: Map[String, String],
                 txn: Option[(String, Long)] = None,
                 schemaJson: Option[String] = None,
                 extraMeta: Seq[String] = Nil,
                 fresh: Option[Seq[SnapshotFiles.FileEntry]] = Some(Nil),
-                meta: Option[SnapshotMeta.Meta] = None): Unit = {
-      writeManifest(root, version, entries, txn, schemaJson, extraMeta)
+                meta: Option[SnapshotMeta.Meta] = None,
+                carryFrom: Option[Int] = None): Unit = {
+      writeManifest(root, version, entries, txn, schemaJson, extraMeta,
+        carryFrom)
       linked = true
       meta.foreach(SnapshotMeta.write(root, _))
       fresh.foreach { files =>
         val carried = entries.keySet -- files.map(_.pv)
         val carriedRows: Option[Seq[SnapshotFiles.FileEntry]] =
           if (carried.isEmpty) Some(Nil)
-          else SnapshotFiles.read(root, head).map(parent =>
-            carried.toSeq.sorted.flatMap(p => parent.getOrElse(p, Nil)))
+          else SnapshotFiles.read(root, carryFrom.getOrElse(head))
+            .map(parent =>
+              carried.toSeq.sorted.flatMap(p => parent.getOrElse(p, Nil)))
         carriedRows.foreach(cr =>
           SnapshotFiles.write(root, version, cr ++ files))
       }
@@ -341,14 +346,15 @@ object SnapshotTxn {
       s"version $toVersion is not published (or was vacuumed) — " +
         "cannot restore to it")
     val entries = SnapshotManifest.read(root, toVersion)
-    val newV = SnapshotManifest.head(root) + 1
-    // delete records carry from the RESTORED version, not the parent:
-    // restore is whole-state rollback — a later MoR delete's records
-    // must not survive into the restored head (its rows come back),
-    // and the restored version's own records must (its deletes hold)
-    writeManifest(root, newV, entries, deleteCarryFrom = Some(toVersion))
-    SnapshotFiles.copy(root, toVersion, root, newV)
-    (newV, entries.size)
+    // delete records and sidecar entries carry from the RESTORED
+    // version, not the parent: restore is whole-state rollback — a
+    // later MoR delete's records must not survive into the restored
+    // head (its rows come back), and the restored version's own
+    // records must (its deletes hold)
+    commit(root, Some(SnapshotManifest.head(root))) { a =>
+      a.publish(entries, carryFrom = Some(toVersion))
+      (a.version, entries.size)
+    }
   }
 
   /** Clone a snapshot version into a brand-new table — the Delta/
@@ -635,7 +641,8 @@ object SnapshotTxn {
     *
     * Branch-RESIDENT partitions (dirs the branch's own commits wrote,
     * living under the branch root) are hard-linked under a main-owned
-    * root first — zero bytes, O(files) — so `drop_branch` after a
+    * attempt root first ([[Attempt.scratch]], deleted if the publish
+    * loses the CAS) — zero bytes, O(files) — so `drop_branch` after a
     * publish can never strand data main now references; fork-shared
     * partitions keep their main dirs verbatim. Branch-side schema
     * widening rides the published manifest as its `#schema` record,
@@ -668,23 +675,6 @@ object SnapshotTxn {
         .getOrElse(ffMeta.partitionSchema.fieldNames.toSeq)
     def canon(p: String): String = new java.io.File(p).getCanonicalPath
     val brootCanon = canon(broot.toString) + "/"
-    val ffRoot = root.resolve(
-      s"d${mainHead + 1}-ff${java.util.UUID.randomUUID.toString.take(8)}")
-    var linked = 0
-    val rewritten = entries.map { case (pv, dirPath) =>
-      if (!canon(dirPath).startsWith(brootCanon)) pv -> dirPath
-      else {
-        val dst = ffRoot.resolve(SnapshotPartitionValues
-          .leafSuffix(mirrorsOf(pv), pv))
-        java.nio.file.Files.createDirectories(dst)
-        Option(new java.io.File(dirPath).listFiles()).getOrElse(Array.empty)
-          .filter(_.isFile).foreach { f =>
-            java.nio.file.Files.createLink(dst.resolve(f.getName), f.toPath)
-            linked += 1
-          }
-        pv -> dst.toAbsolutePath.toString
-      }
-    }
     // branch-side metadata deltas ride the published manifest
     val mainChecks = SnapshotManifest.effectiveChecks(root)
     val brChecks = SnapshotManifest.effectiveChecks(broot)
@@ -717,15 +707,33 @@ object SnapshotTxn {
     // branch-staged partition-spec evolutions publish the same way
     val specDelta = SnapshotManifest.partSpecEvents(broot)
       .filter(_._1 > base).map { case (_, sp) => s"#partspec\t${sp.json}" }
-    writeManifest(root, mainHead + 1, rewritten,
-      schemaJson = schemaJson,
-      extraMeta = specDelta ++ renameDelta ++ dropDelta ++ checkDelta)
-    SnapshotFiles.copy(broot, bHead, root, mainHead + 1, { e =>
-      val newDir = rewritten(e.pv)
-      if (newDir == entries(e.pv)) e
-      else e.copy(path = newDir + "/" + new java.io.File(e.path).getName)
-    })
-    (mainHead + 1, rewritten.size, linked)
+    commit(root, Some(mainHead)) { a =>
+      val ffRoot = a.scratch("d", "ff")
+      var linked = 0
+      val rewritten = entries.map { case (pv, dirPath) =>
+        if (!canon(dirPath).startsWith(brootCanon)) pv -> dirPath
+        else {
+          val dst = ffRoot.resolve(SnapshotPartitionValues
+            .leafSuffix(mirrorsOf(pv), pv))
+          java.nio.file.Files.createDirectories(dst)
+          Option(new java.io.File(dirPath).listFiles()).getOrElse(Array.empty)
+            .filter(_.isFile).foreach { f =>
+              java.nio.file.Files.createLink(dst.resolve(f.getName), f.toPath)
+              linked += 1
+            }
+          pv -> dst.toAbsolutePath.toString
+        }
+      }
+      a.publish(rewritten, schemaJson = schemaJson,
+        extraMeta = specDelta ++ renameDelta ++ dropDelta ++ checkDelta,
+        fresh = SnapshotFiles.read(broot, bHead).map(_.values.flatten.toSeq
+          .map { e =>
+            val newDir = rewritten(e.pv)
+            if (newDir == entries(e.pv)) e
+            else e.copy(path = newDir + "/" + new java.io.File(e.path).getName)
+          }))
+      (a.version, rewritten.size, linked)
+    }
   }
 
   /** Read one snapshot: the union of its manifest's partition dirs. The
@@ -777,7 +785,7 @@ object SnapshotTxn {
     * its rewritten months under a committer-PRIVATE attempt root (two
     * racers must never interleave files in one dir), checks its parent
     * is still the head (fail-fast, before any data is written), and
-    * publishes via [[writeManifest]]'s atomic create. Exactly one of N
+    * publishes via [[Attempt.publish]]'s atomic create. Exactly one of N
     * racers wins; each loser throws [[SnapshotConflictException]]
     * after [[commit]] deletes its attempt dirs. `SnapshotStoreSpec`
     * races two commits off the same parent and pins all three
@@ -1482,7 +1490,7 @@ object SnapshotTxn {
           throw new org.apache.spark.sql.catalyst.analysis
             .TableAlreadyExistsException(Seq(root.getFileName.toString))
     }
-    try writeManifest(root, 1, Map.empty)
+    try commit(root, Some(0))(_.publish(Map.empty))
     catch {
       // someone published v1 between our meta write and this link — a
       // racing bootstrap committed real data; refuse loudly rather
@@ -1491,7 +1499,6 @@ object SnapshotTxn {
         throw new org.apache.spark.sql.catalyst.analysis
           .TableAlreadyExistsException(Seq(root.getFileName.toString))
     }
-    SnapshotFiles.write(root, 1, Nil)
   }
 
   /** SAFE TYPE WIDENING (`ALTER TABLE … ALTER COLUMN c TYPE t`) — a

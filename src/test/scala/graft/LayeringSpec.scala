@@ -13,6 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * reader at the wrong home. In `graft.operators`, every bounded
   * stream runs through `SourceQueries.runBounded`, and
   * `SourceQueries` saves no session conf by hand (`withConfs` does).
+  * Every table commit publishes through `SnapshotTxn.commit`: no main
+  * file swaps a dir by rename outside the `MrOutSource` committer,
+  * and only the publish and the two new-root bootstraps write a
+  * manifest.
   */
 class LayeringSpec extends AnyFunSuite {
   test("no file under graft/sources names graft.operators") {
@@ -52,5 +56,33 @@ class LayeringSpec extends AnyFunSuite {
       saves.mkString("hand-written conf save (use withConfs):\n", "\n", ""))
     val catalogs = src.linesIterator.count(_.contains("spark.sql.catalog."))
     assert(catalogs == 1, s"spark.sql.catalog. on $catalogs lines, not only in snapshotCatalog")
+  }
+
+  test("every table commit publishes through one commit plane") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repo root: no $main")
+    val st = Files.walk(main)
+    val files = try st.iterator.asScala.toSeq.sorted
+      .filter(_.toString.endsWith(".scala")) finally st.close()
+    // (file, enclosing member of the top-level object, line)
+    val member = "^  (?:private\\[\\w+\\] )?(?:final )?(?:def|class) (\\w+)".r
+    val lines = files.flatMap { f =>
+      var owner = ""
+      Files.readAllLines(f).asScala.toSeq.map { l =>
+        member.findFirstMatchIn(l).foreach(m => owner = m.group(1))
+        (main.relativize(f).toString, owner, l)
+      }
+    }
+    val renames = lines.filter(r => r._3.contains(".rename(") &&
+      r._1 != "graft/sources/MrOutSource.scala")
+    assert(renames.isEmpty, renames.map(r => s"${r._1}: ${r._3.trim}")
+      .mkString("dir swap by rename outside MrOutSource:\n", "\n", ""))
+    // the definition, Attempt.publish, and the clone and branch
+    // bootstraps of a new root at the source's version number
+    val publishes = lines.filter(_._3.contains("writeManifest("))
+      .map(r => s"${r._1}:${r._2}")
+    assert(publishes.sorted === Seq("Attempt", "snapshotBranchCreate",
+        "snapshotClone", "writeManifest")
+        .map(o => s"graft/sources/SnapshotTxn.scala:$o"))
   }
 }

@@ -12,7 +12,9 @@ import graft.SparkSpec
   * with the distributed re-read ([[SnapshotFiles.collect]]). After each
   * commit below, the published `v<N>.files` is deleted, rebuilt by
   * `compute_stats`, and both entry sets must be identical file by
-  * file: bytes, rows, min/max text and the base64 NDV sketch.
+  * file: bytes, rows, min/max text and the base64 NDV sketch. RESTORE
+  * and fast-forward, which carry a sidecar instead of folding one, get
+  * the same check; CREATE TABLE's v1 must publish an empty one.
   *
   * One table covers every stats type and the edge values: NaN, -0.0
   * and 0.0 in FLOAT/DOUBLE, decimals, dates, the empty string, a
@@ -160,6 +162,30 @@ class WriteTimeStatsSpec extends SparkSpec {
     val migrated = assertRebuildMatches(root, cat, "migrate_layout")
     assert(migrated.map(_.pv).toSet ===
       Set("a%3Ab/0", "a%3Ab/1", "50%25/0", "50%25/1", "plain/0", "plain/1"))
+
+    // RESTORE carries the restored version's sidecar, not the parent's
+    val restored = SnapshotManifest.head(root)
+    door(rows(Seq(2L, 5L) ++ (3000L to 3010L), _ => lit("plain")))
+    spark.sql(s"CALL $cat.restore('t', $restored)")
+    assertRebuildMatches(root, cat, "RESTORE")
+
+    // fast-forward publishes a branch commit's files, linked under main
+    spark.sql(s"CALL $cat.branch('t', 'b')")
+    rows(Seq(7L, 8L) ++ (4000L to 4010L), _ => lit("50%"))
+      .write.format("graft-snapshot").option("branch", "b")
+      .option("keyCol", "id").option("partCol", "p")
+      .mode("append").save(root.toString)
+    val ff = spark.sql(s"CALL $cat.fastforward('t', 'b')").head()
+    assert(ff.getInt(0) === SnapshotManifest.head(root) && ff.getInt(2) > 0,
+      s"fastforward: $ff")
+    assertRebuildMatches(root, cat, "fast-forward")
+
+    spark.sql(
+      s"""CREATE TABLE $cat.`c` (id BIGINT, v DOUBLE, p STRING, p_p STRING)
+         |PARTITIONED BY (p_p)
+         |TBLPROPERTIES ('key_column' = 'id')""".stripMargin)
+    assert(SnapshotFiles.read(base.resolve("c"), 1) === Some(Map.empty),
+      "CREATE TABLE: v1 must publish an empty sidecar")
   }
 
   test("a write whose entries miss or invent a file is refused") {
