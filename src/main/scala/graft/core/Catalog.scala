@@ -17,14 +17,13 @@ object Catalog {
     */
   def register(spark: SparkSession, dir: String): Unit = {
     GraftExtensions.register(spark)
-    Tables.all.foreach { name =>
-      // events needs its ts-vintage normalization (normalizeEventTs), so go
-      // through the typed loaders, not the raw parquet read
-      val df = name match {
-        case "events" => Tables.events(spark, dir)
-        case other    => Tables.load(spark, dir, other)
-      }
-      df.createOrReplaceTempView(name)
+    // events goes through its typed loader (the ts-vintage normalization,
+    // normalizeEventTs), and first: that loader sets nanosAsLong, which
+    // keys every cached schema (Tables.schemaOf), so the other tables get
+    // the same keys on the first call as on every later one
+    Tables.events(spark, dir).createOrReplaceTempView("events")
+    Tables.all.filterNot(_ == "events").foreach { name =>
+      Tables.load(spark, dir, name).createOrReplaceTempView(name)
     }
   }
 

@@ -1,23 +1,65 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the harness star schema + LLM-pipeline tables
   * (`/root/testdata/sf*`, see TESTDATA.md / FIXTURES.md).
   *
   * All reads are plain parquet scans so Catalyst keeps full pushdown /
   * pruning freedom: callers `select`/`filter` and the scan node shows
-  * `PushedFilters` + a narrowed `ReadSchema`. No caching here — at the
-  * 100 TB design point the tables don't fit in memory, and caching would
-  * defeat partition pruning.
+  * `PushedFilters` + a narrowed `ReadSchema`. No data is cached here — at
+  * the 100 TB design point the tables don't fit in memory, and caching
+  * would defeat partition pruning. Only the footer-derived schema is
+  * cached ([[schemaOf]]), so a repeated load skips the inference job.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A fresh scan of one table. Each call builds a new relation (fresh
+    * attribute ids, so self-joins resolve as over two reads); only the
+    * schema comes from [[schemaOf]].
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Session confs whose values change the schema parquet inference
+    * derives from the same footers: the TIMESTAMP(NANOS), binary and
+    * INT96 mappings, the NTZ inference, and whether every part file's
+    * footer is merged.
+    */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Seq[String]), StructType]
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per
+    * (absolute path, [[dataFingerprint]], inference confs) in this JVM.
+    * Rewriting the data in place changes the fingerprint and flipping an
+    * inference conf changes the key, so neither serves a stale schema.
+    * Like the fingerprint, it assumes a single file or a flat dir of part
+    * files. A path that does not exist is inferred uncached, so it fails
+    * with Spark's own `PATH_NOT_FOUND`.
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    def infer = spark.read.parquet(path).schema
+    val abs = java.nio.file.Paths.get(path).toAbsolutePath.normalize
+    if (!java.nio.file.Files.exists(abs)) infer
+    else {
+      val key = (abs.toString, dataFingerprint(abs.toString),
+        inferenceConfs.map(k => spark.conf.getOption(k).orNull))
+      schemas.computeIfAbsent(key, _ => infer)
+    }
+  }
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -214,7 +214,7 @@ object SourceQueries {
     val qName = "graft_streaming_hourly"
     runBounded(s, dir, "events", qName) {
       val streamDir = eventsStreamDir(s, dir)
-      val rawSchema = s.read.parquet(streamDir).schema // ts vintage varies
+      val rawSchema = Tables.schemaOf(s, streamDir) // ts vintage varies
       s.readStream.schema(rawSchema).parquet(streamDir)
         .transform(Tables.normalizeEventTs)
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
@@ -354,7 +354,7 @@ object SourceQueries {
     val qName = "graft_streaming_dedup"
     runBounded(s, dir, "events", qName) {
       val streamDir = eventsStreamDir(s, dir)
-      val rawSchema = s.read.parquet(streamDir).schema
+      val rawSchema = Tables.schemaOf(s, streamDir)
       s.readStream.schema(rawSchema).parquet(streamDir)
         .transform(Tables.normalizeEventTs)
         .filter(col("user_id") % 10 === 0)
@@ -387,7 +387,7 @@ object SourceQueries {
     val qName = "graft_streaming_dedup_wm"
     runBounded(s, dir, "events", qName) {
       val streamDir = eventsStreamDir(s, dir)
-      val rawSchema = s.read.parquet(streamDir).schema
+      val rawSchema = Tables.schemaOf(s, streamDir)
       s.readStream.schema(rawSchema).parquet(streamDir)
         .transform(Tables.normalizeEventTs)
         .filter(col("user_id") % 10 === 3)
@@ -417,7 +417,7 @@ object SourceQueries {
     val qName = "graft_streaming_enrich"
     runBounded(s, dir, "events", qName) {
       val streamDir = eventsStreamDir(s, dir)
-      val rawSchema = s.read.parquet(streamDir).schema
+      val rawSchema = Tables.schemaOf(s, streamDir)
       val dim = Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment"))
       s.readStream.schema(rawSchema).parquet(streamDir)
@@ -454,7 +454,7 @@ object SourceQueries {
     val tbl = DedupQueries.ensureBandIndex(s, dir)
     runBounded(s, dir, "documents", qName) {
       val streamDir = docsStreamDir(dir)
-      val rawSchema = s.read.parquet(streamDir).schema
+      val rawSchema = Tables.schemaOf(s, streamDir)
       DedupQueries
         .batchBandRows(s.readStream.schema(rawSchema).parquet(streamDir))
         .withColumnRenamed("doc_id", "doc_new")
@@ -484,7 +484,7 @@ object SourceQueries {
     val qName = "graft_streaming_attrib"
     runBounded(s, dir, "events", qName) {
       val streamDir = eventsStreamDir(s, dir)
-      val rawSchema = s.read.parquet(streamDir).schema
+      val rawSchema = Tables.schemaOf(s, streamDir)
       def side(tpe: String) = s.readStream.schema(rawSchema).parquet(streamDir)
         .transform(Tables.normalizeEventTs)
         .filter(col("event_type") === tpe)
@@ -642,7 +642,7 @@ object SourceQueries {
           .compareTo(srcMtime) < 0
       if (stale) java.nio.file.Files.delete(sentinel)
       if (!java.nio.file.Files.exists(sentinel)) {
-        val raw = s.read.parquet(srcPath.toString)
+        val raw = Tables.load(s, dir, "events")
         val tmp = sessDir.resolve("_sentinel_tmp")
         // bump 2 h past max(ts) in the source's OWN type (long nanos vs
         // µs timestamp vintages — see Tables.normalizeEventTs), so the
@@ -667,7 +667,7 @@ object SourceQueries {
         java.nio.file.Files.move(part, sentinel)
         org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
       }
-      val rawSchema = s.read.parquet(sessDir.toString).schema
+      val rawSchema = Tables.schemaOf(s, sessDir.toString)
       s.readStream.schema(rawSchema).parquet(sessDir.toString)
         .transform(Tables.normalizeEventTs)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -760,7 +760,7 @@ object SourceQueries {
       // fresh run every time: Append across reruns would double the data
       org.apache.commons.io.FileUtils.deleteDirectory(outRoot.toFile)
       val streamDir = eventsStreamDir(s, dir)
-      val rawSchema = s.read.parquet(streamDir).schema
+      val rawSchema = Tables.schemaOf(s, streamDir)
       s.readStream.schema(rawSchema).parquet(streamDir)
         .select(col("event_id").cast("string").as("key"),
           concat_ws(" ", col("event_type"), col("user_id")).as("value"))
@@ -1670,7 +1670,7 @@ object SourceQueries {
         "b1", t0 + 60000)
       depositSingleParquet(updates13, proto, "b2", t0 + 120000)
     }
-    val schema = s.read.parquet(inbox.resolve("b0.parquet").toString).schema
+    val schema = Tables.schemaOf(s, inbox.resolve("b0.parquet").toString)
     runBounded(s, dir, "orders", "graft_streaming_snapshot_sink") {
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(inbox.toString)
@@ -1760,7 +1760,7 @@ object SourceQueries {
       dst.toFile.setLastModified(mt)
     }
     snapshotBranchCreate(store, "staging")
-    val schema = s.read.parquet(inbox.resolve("b0.parquet").toString).schema
+    val schema = Tables.schemaOf(s, inbox.resolve("b0.parquet").toString)
     runBounded(s, dir, "orders", "graft_streaming_wap") {
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(inbox.toString)

@@ -2179,7 +2179,7 @@ object SnapshotTable {
             s"snapshot v$version of $root has no partitions and no " +
               "table.meta sidecar to supply a schema"))
         (StructType(Seq(StructField(partitionCol, StringType, nullable = true))),
-          s.read.parquet(dataDir).schema)
+          graft.core.Tables.schemaOf(s, dataDir))
     }
 
   /** The relation (also used by the `graft-snapshot` format). */

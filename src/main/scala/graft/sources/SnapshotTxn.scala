@@ -1405,7 +1405,7 @@ object SnapshotTxn {
           throw new IllegalArgumentException(
             s"head version $head has no partitions to infer a schema " +
               "from"))
-        s.read.parquet(first).schema
+        graft.core.Tables.schemaOf(s, first)
       }
     val chains = SnapshotRename.chainsFor(root, declared)
     val statSchema = org.apache.spark.sql.types.StructType(

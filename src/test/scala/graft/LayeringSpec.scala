@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every table commit publishes through `SnapshotTxn.commit`: no main
   * file swaps a dir by rename outside the `MrOutSource` committer,
   * and only the publish and the two new-root bootstraps write a
-  * manifest.
+  * manifest. Parquet schemas are inferred only in `Tables.schemaOf`,
+  * behind its cache.
   */
 class LayeringSpec extends AnyFunSuite {
   test("no file under graft/sources names graft.operators") {
@@ -58,21 +59,26 @@ class LayeringSpec extends AnyFunSuite {
     assert(catalogs == 1, s"spark.sql.catalog. on $catalogs lines, not only in snapshotCatalog")
   }
 
-  test("every table commit publishes through one commit plane") {
+  /** Every line under `src/main/scala` as (file, enclosing member of
+    * the top-level object, line). */
+  private lazy val mainLines: Seq[(String, String, String)] = {
     val main = Paths.get("src/main/scala")
     assert(Files.isDirectory(main), s"run from the repo root: no $main")
     val st = Files.walk(main)
     val files = try st.iterator.asScala.toSeq.sorted
       .filter(_.toString.endsWith(".scala")) finally st.close()
-    // (file, enclosing member of the top-level object, line)
     val member = "^  (?:private\\[\\w+\\] )?(?:final )?(?:def|class) (\\w+)".r
-    val lines = files.flatMap { f =>
+    files.flatMap { f =>
       var owner = ""
       Files.readAllLines(f).asScala.toSeq.map { l =>
         member.findFirstMatchIn(l).foreach(m => owner = m.group(1))
         (main.relativize(f).toString, owner, l)
       }
     }
+  }
+
+  test("every table commit publishes through one commit plane") {
+    val lines = mainLines
     val renames = lines.filter(r => r._3.contains(".rename(") &&
       r._1 != "graft/sources/MrOutSource.scala")
     assert(renames.isEmpty, renames.map(r => s"${r._1}: ${r._3.trim}")
@@ -84,5 +90,21 @@ class LayeringSpec extends AnyFunSuite {
     assert(publishes.sorted === Seq("Attempt", "snapshotBranchCreate",
         "snapshotClone", "writeManifest")
         .map(o => s"graft/sources/SnapshotTxn.scala:$o"))
+  }
+
+  test("every parquet schema inference goes through the schema cache") {
+    // `read.parquet(<path>).schema`, also split over lines, with one
+    // level of nested parens in the path expression
+    val inference =
+      "read\\s*\\.\\s*parquet\\s*\\((?:[^()]|\\([^()]*\\))*\\)\\s*\\.\\s*schema\\b".r
+    val sites = mainLines.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (f, ls) =>
+      val text = ls.map(_._3).mkString("\n")
+      inference.findAllMatchIn(text).map { m =>
+        val i = text.substring(0, m.start).count(_ == '\n')
+        (s"$f:${ls(i)._2}", s"$f:${i + 1}: ${ls(i)._3.trim}")
+      }
+    }
+    assert(sites.map(_._1) === Seq("graft/core/Tables.scala:schemaOf"),
+      sites.map(_._2).mkString("parquet schema inferred outside Tables.schemaOf:\n", "\n", ""))
   }
 }
