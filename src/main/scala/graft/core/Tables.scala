@@ -149,6 +149,15 @@ object Tables {
   /** See [[normalizeEventTs]] for the `ts` schema dance. The legacy
     * nanos-as-long conf is still flipped so a TIMESTAMP(NANOS) vintage of
     * the data remains readable at all (without it the scan throws).
+    *
+    * The conf stays set on the caller's session: it cannot be scoped
+    * to this load. Spark reads it again when the scan's reader is
+    * built (`ParquetFileFormat.buildReaderWithPartitionValues` →
+    * `setupHadoopConf`, Spark 4.1.2), long after this call returns, so
+    * restoring it here would break the returned frame's scan. A
+    * [[load]] of another table before the session's first events load
+    * therefore keys its [[schemaOf]] entry under the unset value and
+    * infers once more after it.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -2,23 +2,17 @@ package graft.sources
 
 import java.nio.file.{Files => JFiles, Path => JPath}
 
-import scala.collection.mutable
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.catalyst.util.RowDeltaUtils
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{DataWriter, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** SQL `UPDATE` / `MERGE INTO` on a `delete_mode = 'merge-on-read'`
@@ -79,9 +73,8 @@ final class SnapshotDeltaOperation(
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = readTable.newScanBuilder(options)
 
-  /** Key first (the doomed-key sidecar column), then every layout
-    * SOURCE column (record routing); order is what the task writer's
-    * bound projections assume.
+  /** The key (the doomed-key file's one column) and every layout
+    * SOURCE column (record routing); the key writer finds each by name.
     */
   override def rowId(): Array[NamedReference] = {
     val srcs = meta.partitionSchema.fieldNames.toSeq
@@ -98,15 +91,17 @@ final class SnapshotDeltaOperation(
     }
 }
 
-/** The delta write: tasks stream update/insert rows through the SAME
+/** The delta write: tasks stream update/insert rows under a `u<V>`
+  * root and doomed keys under a `d<V>` root, each plane through the SAME
   * per-partition parquet task writer as every other v2 write into the
-  * store (hidden `.inprog` files, rename on task commit) under a
-  * `u<V>` root, and doomed keys into single-column key files under a
-  * `d<V>` root; the driver commit publishes parent entries VERBATIM
-  * plus the two record planes — one CAS manifest version, zero data
-  * files touched. A CAS loser throws ([[SnapshotConflictException]]):
-  * like the group replacement, a delta computed against a stale head
-  * cannot be rebased safely (the matched set may have changed).
+  * store ([[SnapshotReplaceDataWriter]]: hidden `.inprog` files, rename
+  * on task commit, each file's entry folded as it is written); the
+  * driver commit publishes parent entries VERBATIM plus the two record
+  * planes, counted from those entries — one CAS manifest version, zero
+  * data files touched or re-read. A CAS loser throws
+  * ([[SnapshotConflictException]]): like the group replacement, a delta
+  * computed against a stale head cannot be rebased safely (the matched
+  * set may have changed).
   */
 final class SnapshotDeltaWrite(
     spark: SparkSession,
@@ -141,45 +136,45 @@ final class SnapshotDeltaWrite(
 
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo)
         : DeltaWriterFactory = {
-      val writeSchema = info.schema()
       // update/insert rows reach the writer op-coded (the task writer
       // drops nothing here — deletes never enter the u-plane), so the
       // INSERT-door mirror discipline applies to MERGE inserts only
       val uFactory = SnapshotWriteSupport.factory(spark, meta,
-        writeSchema, uRoot, checkMirrors = true, foldStats = false)
+        info.schema(), uRoot, checkMirrors = true)
+      // doomed keys: the row ID (key + layout source columns) routes
+      // each key to the OLD row's partition, and only the key column
+      // lands in the file — the shape the merge-on-read DELETE door
+      // writes, so the read plane's key loader serves both unchanged
       val rowIdSchema = info.rowIdSchema().orElseThrow(() =>
         new IllegalStateException(
           "delta write planned without a row ID schema"))
-      val keyIdx = rowIdSchema.fieldIndex(keyCol)
-      val keySchema = StructType(Seq(
-        rowIdSchema.fields(keyIdx).copy(name = keyCol, nullable = true)))
+      val keySchema =
+        StructType(Seq(rowIdSchema(keyCol).copy(nullable = true)))
       val srcCols = meta.partitionSchema.fields.toSeq.map { mf =>
-        val c = mf.name.stripSuffix("_p")
-        val i = rowIdSchema.fieldIndex(c)
+        val i = rowIdSchema.fieldIndex(mf.name.stripSuffix("_p"))
         (i, rowIdSchema.fields(i).dataType, SnapshotTransforms.of(mf))
       }
       JFiles.createDirectories(dRoot)
       val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-      val owf = new ParquetFileFormat().prepareWrite(spark, job,
-        Map.empty, keySchema)
-      new SnapshotDeltaWriterFactory(uFactory, dRoot.toString, keySchema,
-        keyIdx, meta.partitionSchema.fieldNames.toSeq, srcCols, owf,
-        new SerializableConf(job.getConfiguration))
+      val dFactory = new SnapshotReplaceWriterFactory(dRoot.toString,
+        rowIdSchema, keySchema, meta.partitionSchema.fieldNames.toSeq,
+        srcCols, new ParquetFileFormat().prepareWrite(spark, job,
+          Map.empty, keySchema), new SerializableConf(job.getConfiguration),
+        checkMirrors = false, spark.sessionState.conf.sessionLocalTimeZone)
+      new SnapshotDeltaWriterFactory(uFactory, dFactory)
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val ms = messages.toSeq.map(_.asInstanceOf[SnapshotDeltaCommit])
-      // dir per pv is deterministic (shared roots), duplicates collapse
-      val uDirs = ms.flatMap(_.uDirs).distinct.sortBy(_._1)
-      val dDirs = ms.flatMap(_.dDirs).distinct.sortBy(_._1)
-      if (uDirs.isEmpty && dDirs.isEmpty) {
+      if (ms.forall(m =>
+          m.upserts.pvDirs.isEmpty && m.deletes.pvDirs.isEmpty)) {
         // statement matched nothing: legal no-op, no version published
         org.apache.commons.io.FileUtils.deleteQuietly(uRoot.toFile)
         org.apache.commons.io.FileUtils.deleteQuietly(dRoot.toFile)
         return
       }
-      try SnapshotTxn.snapshotMorDeltaCommit(spark,
-        root, version, uDirs, dDirs)
+      try SnapshotTxn.snapshotMorDeltaCommit(root, version,
+        ms.map(_.deletes), ms.map(_.upserts))
       catch {
         // ONLY a CAS loss may reclaim the roots: nothing references
         // them then. Any other failure could be post-publish (the
@@ -199,54 +194,29 @@ final class SnapshotDeltaWrite(
   }
 }
 
-/** Per-task commit: (pv → leaf dir) pairs for the two planes. */
+/** Per-task commit: the two planes' task commits. */
 private[sources] final case class SnapshotDeltaCommit(
-    uDirs: Seq[(String, String)],
-    dDirs: Seq[(String, String)]) extends WriterCommitMessage
+    upserts: SnapshotReplaceCommit,
+    deletes: SnapshotReplaceCommit) extends WriterCommitMessage
 
 private[sources] final class SnapshotDeltaWriterFactory(
-    uFactory: org.apache.spark.sql.connector.write.DataWriterFactory,
-    dRoot: String,
-    keySchema: StructType,
-    keyIdxInRowId: Int,
-    mirrorNames: Seq[String],
-    srcCols: Seq[(Int, org.apache.spark.sql.types.DataType,
-      SnapshotTransforms.T)],
-    owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: SerializableConf) extends DeltaWriterFactory {
+    uFactory: DataWriterFactory,
+    dFactory: DataWriterFactory) extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] =
-    new SnapshotDeltaTaskWriter(
-      uFactory.createWriter(partitionId, taskId)
-        .asInstanceOf[DataWriter[InternalRow]],
-      dRoot, keySchema, keyIdxInRowId, mirrorNames, srcCols, owf,
-      conf.conf, partitionId, taskId)
+    new SnapshotDeltaTaskWriter(uFactory.createWriter(partitionId, taskId),
+      dFactory.createWriter(partitionId, taskId))
 }
 
-/** One task's delta writer: update/insert rows go op-coded into the
-  * shared replace writer (one parquet file per touched partition, the
-  * `.inprog`-then-rename task protocol); doomed keys stream into
-  * single-column key files per OLD-row partition — the same file shape
-  * the merge-on-read DELETE door writes, so the read plane's key
-  * loader serves both unchanged.
+/** One task's delta writer over two replace-task writers: update/insert
+  * rows go op-coded into `uWriter`, and each doomed row's ID goes into
+  * `dWriter`, which routes it by the OLD row's partition and keeps the
+  * key column.
   */
 private[sources] final class SnapshotDeltaTaskWriter(
     uWriter: DataWriter[InternalRow],
-    dRoot: String,
-    keySchema: StructType,
-    keyIdxInRowId: Int,
-    mirrorNames: Seq[String],
-    srcCols: Seq[(Int, org.apache.spark.sql.types.DataType,
-      SnapshotTransforms.T)],
-    owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: Configuration,
-    partitionId: Int,
-    taskId: Long) extends DeltaWriter[InternalRow] {
-
-  private val ctx = new TaskAttemptContextImpl(new Configuration(conf),
-    new TaskAttemptID(new TaskID(new org.apache.hadoop.mapreduce.JobID(
-      "graft-delta", 0), TaskType.MAP, partitionId), 0))
+    dWriter: DataWriter[InternalRow]) extends DeltaWriter[InternalRow] {
 
   private val opRow = new GenericInternalRow(1)
   private val joined = new JoinedRow()
@@ -255,66 +225,24 @@ private[sources] final class SnapshotDeltaTaskWriter(
     joined(opRow, row)
   }
 
-  private val dWriters = mutable.HashMap.empty[String, OutputWriter]
-  private val dDirs = mutable.HashMap.empty[String, String]
-  private val dPending = mutable.Buffer.empty[(JPath, JPath)]
-
-  private lazy val keyProj: UnsafeProjection = UnsafeProjection.create(
-    Array(BoundReference(keyIdxInRowId, keySchema.fields(0).dataType,
-      nullable = true): Expression))
-
-  /** Record `id`'s key as doomed under the OLD row's partition value
-    * (derived from the id's source columns through the layout's
-    * transforms — the same routing every store writer uses).
-    */
-  private def doom(id: InternalRow): Unit = {
-    val vals = srcCols.map { case (i, dt, t) =>
-      ExternalCatalogUtils.escapePathName(
-        SnapshotRowRouting.routedValue(id, i, dt, t))
-    }
-    val pv = vals.mkString("/")
-    val w = dWriters.getOrElseUpdate(pv, {
-      val leaf = mirrorNames.zip(vals)
-        .map { case (m, v) => s"$m=$v" }.mkString("/")
-      val dir = s"$dRoot/$leaf"
-      JFiles.createDirectories(java.nio.file.Paths.get(dir))
-      dDirs(pv) = dir
-      val ext = owf.getFileExtension(ctx)
-      val tmp = java.nio.file.Paths.get(
-        s"$dir/.inprog-keys-$partitionId-$taskId$ext")
-      dPending += tmp -> java.nio.file.Paths.get(
-        s"$dir/keys-$partitionId-$taskId$ext")
-      owf.newInstance(tmp.toString, keySchema, ctx)
-    })
-    w.write(keyProj(id))
-  }
-
   override def delete(metadata: InternalRow, id: InternalRow): Unit =
-    doom(id)
+    dWriter.write(id)
 
   override def update(metadata: InternalRow, id: InternalRow,
                       row: InternalRow): Unit = {
-    doom(id)
+    dWriter.write(id)
     uWriter.write(coded(RowDeltaUtils.UPDATE_OPERATION, row))
   }
 
   override def insert(row: InternalRow): Unit =
     uWriter.write(coded(RowDeltaUtils.INSERT_OPERATION, row))
 
-  override def commit(): WriterCommitMessage = {
-    dWriters.values.foreach(_.close())
-    dPending.foreach { case (tmp, fin) =>
-      JFiles.move(tmp, fin, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    val um = uWriter.commit().asInstanceOf[SnapshotReplaceCommit]
-    SnapshotDeltaCommit(um.pvDirs, dDirs.toSeq)
-  }
+  override def commit(): WriterCommitMessage = SnapshotDeltaCommit(
+    upserts = uWriter.commit().asInstanceOf[SnapshotReplaceCommit],
+    deletes = dWriter.commit().asInstanceOf[SnapshotReplaceCommit])
 
   override def abort(): Unit = {
-    dWriters.values.foreach { w =>
-      try w.close() catch { case _: Throwable => () }
-    }
-    dPending.foreach { case (tmp, _) => JFiles.deleteIfExists(tmp) }
+    dWriter.abort()
     uWriter.abort()
   }
 

@@ -452,7 +452,7 @@ final class SnapshotReplaceWrite(
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo)
         : DataWriterFactory =
       SnapshotWriteSupport.factory(spark, meta, info.schema(),
-        attemptRoot, checkMirrors = false, foldStats = true)
+        attemptRoot, checkMirrors = false)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val commits = messages.toSeq.map(_.asInstanceOf[SnapshotReplaceCommit])
@@ -574,12 +574,13 @@ private[sources] trait SnapshotClusteredWrite
 }
 
 /** Shared task-writer construction for every v2 batch write into the
-  * store (the row-level replace and the overwrite door).
+  * store (the row-level replace, the overwrite and append doors, and
+  * the merge-on-read delta's update/insert rows).
   */
 private[sources] object SnapshotWriteSupport {
   def factory(spark: SparkSession, meta: SnapshotMeta.Meta,
               writeSchema: StructType, attemptRoot: JPath,
-              checkMirrors: Boolean, foldStats: Boolean): DataWriterFactory = {
+              checkMirrors: Boolean): DataWriterFactory = {
     JFiles.createDirectories(attemptRoot)
     val mirrorNames = meta.partitionSchema.fieldNames.toSeq
     val fileSchema = StructType(
@@ -622,7 +623,7 @@ private[sources] object SnapshotWriteSupport {
       Map.empty, fileSchema)
     new SnapshotReplaceWriterFactory(attemptRoot.toString, writeSchema,
       fileSchema, mirrorNames, srcCols, owf,
-      new SerializableConf(job.getConfiguration), checkMirrors, foldStats,
+      new SerializableConf(job.getConfiguration), checkMirrors,
       spark.sessionState.conf.sessionLocalTimeZone)
   }
 }
@@ -658,7 +659,7 @@ final class SnapshotAppendWrite(
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo)
         : DataWriterFactory =
       SnapshotWriteSupport.factory(spark, meta, info.schema(),
-        staging, checkMirrors = true, foldStats = false)
+        staging, checkMirrors = true)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit =
       try {
@@ -739,7 +740,7 @@ final class SnapshotOverwriteWrite(
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo)
         : DataWriterFactory =
       SnapshotWriteSupport.factory(spark, meta, info.schema(),
-        attemptRoot, checkMirrors = true, foldStats = true)
+        attemptRoot, checkMirrors = true)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val commits = messages.toSeq.map(_.asInstanceOf[SnapshotReplaceCommit])
@@ -771,8 +772,7 @@ final class SnapshotOverwriteWrite(
 }
 
 /** Per-task commit: the (partitionValue → leaf dir) pairs this task
-  * wrote files under, and the stats entry of each file it wrote (empty
-  * when the write folds no stats).
+  * wrote files under, and the stats entry of each file it wrote.
   */
 final case class SnapshotReplaceCommit(pvDirs: Seq[(String, String)],
     files: Seq[SnapshotFiles.FileEntry]) extends WriterCommitMessage
@@ -787,21 +787,20 @@ final class SnapshotReplaceWriterFactory(
     owf: OutputWriterFactory,
     conf: SerializableConf,
     checkMirrors: Boolean = false,
-    foldStats: Boolean = false,
     timeZoneId: String = "UTC") extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new SnapshotReplaceDataWriter(attemptRoot, writeSchema, fileSchema,
       mirrorNames, srcCols, owf, conf.conf, partitionId, taskId,
-      checkMirrors, foldStats, timeZoneId)
+      checkMirrors, timeZoneId)
 }
 
 /** Streams rows into one parquet file per partition value this task
   * sees (stock [[ParquetFileFormat]] writers — bit-compatible with the
   * door's files). File names carry the task id, so parallel tasks
-  * writing the same partition never collide. With `foldStats`, each
-  * file's sidecar entry is folded from the rows it receives
+  * writing the same partition never collide. Each file's sidecar
+  * entry, its row count included, is folded from the rows it receives
   * ([[SnapshotFiles.StatsFold]]) and rides back in the task's commit
   * message.
   */
@@ -817,7 +816,6 @@ final class SnapshotReplaceDataWriter(
     partitionId: Int,
     taskId: Long,
     checkMirrors: Boolean,
-    foldStats: Boolean,
     timeZoneId: String) extends DataWriter[InternalRow] {
 
   private val ctx = new TaskAttemptContextImpl(new Configuration(conf),
@@ -855,7 +853,7 @@ final class SnapshotReplaceDataWriter(
 
   private val writers = mutable.HashMap.empty[String, OutputWriter]
   private val dirs = mutable.HashMap.empty[String, String]
-  // pv -> (final file, its stats fold), with `foldStats`
+  // pv -> (final file, its stats fold)
   private val folds =
     mutable.HashMap.empty[String, (JPath, SnapshotFiles.StatsFold)]
   // task-commit protocol: stream into HIDDEN .inprog files (invisible
@@ -936,13 +934,12 @@ final class SnapshotReplaceDataWriter(
         s"$dir/.inprog-part-$partitionId-$taskId$ext")
       val fin = java.nio.file.Paths.get(s"$dir/part-$partitionId-$taskId$ext")
       pending += tmp -> fin
-      if (foldStats)
-        folds(pv) = fin -> new SnapshotFiles.StatsFold(fileSchema, timeZoneId)
+      folds(pv) = fin -> new SnapshotFiles.StatsFold(fileSchema, timeZoneId)
       owf.newInstance(tmp.toString, fileSchema, ctx)
     })
     val out = project(row)
     w.write(out)
-    if (foldStats) folds(pv)._2.update(out)
+    folds(pv)._2.update(out)
   }
 
   override def commit(): WriterCommitMessage = {

@@ -1098,40 +1098,23 @@ object SnapshotTxn {
       pred: org.apache.spark.sql.Column): (Int, Long) =
     snapshotMorDeleteBy(s, root, _.filter(pred))
 
-  /** One delta-sized counting pass over freshly-written leaf dirs:
-    * rows per leaf, keyed by the canonicalization pair every
-    * manifest-plane consumer uses (URI-decode the `_metadata` path,
-    * fileKey the on-disk dir — escaped-value partition names must
-    * meet on one form). Shared by the MoR DELETE door and the
-    * UPDATE/MERGE delta commit, whose records both carry the counts
-    * so plan-time statistics stay exact without opening sidecars.
+  /** Rows per leaf of one write, summed over the entries its tasks
+    * folded (0 for a pv the write left no file under).
     */
-  private def leafRowCounts(s: SparkSession, dirs: Seq[String])
-      : (Map[String, Long], String => Long) = {
-    // Row counts come from the parquet FOOTERS, driver-side: the dirs
-    // are this commit's own freshly-written delta (delta-sized by the
-    // door's contract), and the prior distributed count here was two
-    // Spark jobs plus a schema-inference pre-job PER commit — pure
-    // job-launch overhead around numbers every footer already carries
-    // exactly (round 16; same trade as SnapshotDeletes.readKeys).
-    val conf = s.sessionState.newHadoopConf()
-    val perLeaf: Map[String, Long] = dirs.map { d =>
-      val key = SnapshotBloom.fileKey(
-        new org.apache.hadoop.fs.Path(
-          new java.io.File(d).getAbsolutePath).toString)
-      val rows = SnapshotFiles.listDataFiles(conf, d)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map { st =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(st.getPath, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
-      key -> rows
-    }.toMap
-    (perLeaf, dir => perLeaf.getOrElse(
-      SnapshotBloom.fileKey(new org.apache.hadoop.fs.Path(
-        new java.io.File(dir).getAbsolutePath).toString), 0L))
+  private def rowsByPv(files: Seq[SnapshotFiles.FileEntry])
+      : Map[String, Long] =
+    files.groupMapReduce(_.pv)(_.rows)(_ + _).withDefaultValue(0L)
+
+  /** One `tag` record (`#delete`/`#upsert`) per leaf (`pv -> dir`) of a
+    * merge-on-read write, sorted by pv, each carrying the leaf's row
+    * count from the write's own entries ([[rowsByPv]]) so plan-time
+    * statistics stay exact without opening a file.
+    */
+  private def morRecords(tag: String, leaves: Seq[(String, String)],
+      files: Seq[SnapshotFiles.FileEntry]): Seq[String] = {
+    val rows = rowsByPv(files)
+    leaves.sortBy(_._1).map { case (pv, dir) =>
+      SnapshotManifest.morRecord(tag, pv, rows(pv), dir) }
   }
 
   /** Doomed-row selection generalized over both DELETE doors: the SQL
@@ -1178,10 +1161,9 @@ object SnapshotTxn {
           .cast(f.dataType).as(f.name)
       }
       val out = a.scratch()
-      distributeByLayout(
-          doom(df).select(mirrorCols :+ col(keyCol): _*), mirrors)
-        .write.partitionBy(mirrors: _*).parquet(out.toString)
-      val walked = walkLeafDirs(out.toFile, mirrors)
+      val (walked, files) = writeLeaves(s, distributeByLayout(
+          doom(df).select(mirrorCols :+ col(keyCol): _*), mirrors),
+        mirrors, out.toString)
       if (walked.isEmpty) { // predicate matched nothing: legal no-op
         org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
         // a STREAMING no-op batch still publishes its exactly-once
@@ -1191,11 +1173,11 @@ object SnapshotTxn {
         a.publish(SnapshotManifest.read(root, head), txn)
         return (a.version, 0L)
       }
-      // per-leaf doomed counts ride in the records so plan-time
-      // statistics report exact post-delete cardinality without
-      // opening the sidecars — one delta-sized counting pass
-      val (perLeaf, countOf) = leafRowCounts(s, walked.map(_._2))
-      val doomedCount = perLeaf.valuesIterator.sum
+      // per-leaf doomed counts, folded by the write tasks, ride in the
+      // records so plan-time statistics report exact post-delete
+      // cardinality without opening the key files
+      val doomed = rowsByPv(files)
+      val doomedCount = files.map(_.rows).sum
       // a FULLY-doomed partition (this statement's doomed rows == its
       // live rows, provable from the sidecar row counts minus prior
       // record counts) DROPS from the manifest instead of minting a
@@ -1227,10 +1209,9 @@ object SnapshotTxn {
             pd.forall(_ >= 0) && n == total - pd.sum
           }
       val (droppedPvs, recordedPvs) = walked.partition {
-        case (pv, dir) => fullyDoomed(pv, countOf(dir))
+        case (pv, _) => fullyDoomed(pv, doomed(pv))
       }
-      val records = recordedPvs.sortBy(_._1).map { case (pv, dir) =>
-        SnapshotManifest.morRecord("#delete", pv, countOf(dir), dir) }
+      val records = morRecords("#delete", recordedPvs, files)
       // parent entries verbatim + new records; the carry rule folds
       // in the parent's still-live records (dirs unchanged here).
       // A streaming micro-batch's exactly-once `#txn` marker rides
@@ -1306,23 +1287,23 @@ object SnapshotTxn {
       // to the OLD row's partition (broadcast semi-join; the delta is
       // batch-sized by contract)
       val dOut = a.scratch("d")
-      headDf.join(broadcast(delta.select(col(keyCol).as("__graft_uk"))
-          .distinct()),
-          col(keyCol) === col("__graft_uk"), "left_semi")
-        .transform(df => df.select(mirrorCols(df) :+ col(keyCol): _*))
-        .transform(distributeByLayout(_, mirrors))
-        .write.partitionBy(mirrors: _*).parquet(dOut.toString)
+      val (dWalked, dFiles) = writeLeaves(s,
+        headDf.join(broadcast(delta.select(col(keyCol).as("__graft_uk"))
+            .distinct()),
+            col(keyCol) === col("__graft_uk"), "left_semi")
+          .transform(df => df.select(mirrorCols(df) :+ col(keyCol): _*))
+          .transform(distributeByLayout(_, mirrors)),
+        mirrors, dOut.toString)
       // the batch's rows land as `#upsert` delta dirs under the NEW
       // rows' partitions (mirrors derive from sources, never trusted)
       val uOut = a.scratch("u")
-      delta
-        .transform(df => df.select(
-          df.columns.filterNot(mirrors.contains).map(col).toSeq ++
-            mirrorCols(df): _*))
-        .transform(distributeByLayout(_, mirrors))
-        .write.partitionBy(mirrors: _*).parquet(uOut.toString)
-      val dWalked = walkLeafDirs(dOut.toFile, mirrors)
-      val uWalked = walkLeafDirs(uOut.toFile, mirrors)
+      val (uWalked, uFiles) = writeLeaves(s,
+        delta
+          .transform(df => df.select(
+            df.columns.filterNot(mirrors.contains).map(col).toSeq ++
+              mirrorCols(df): _*))
+          .transform(distributeByLayout(_, mirrors)),
+        mirrors, uOut.toString)
       if (uWalked.isEmpty && dWalked.isEmpty) {
         org.apache.commons.io.FileUtils.deleteQuietly(dOut.toFile)
         org.apache.commons.io.FileUtils.deleteQuietly(uOut.toFile)
@@ -1334,45 +1315,38 @@ object SnapshotTxn {
           case None => (head, 0L)
         }
       } else {
-        val (_, dOf) = leafRowCounts(s, dWalked.map(_._2))
-        val (uCounts, uOf) = leafRowCounts(s, uWalked.map(_._2))
-        val records =
-          dWalked.sortBy(_._1).map { case (pv, dir) =>
-            SnapshotManifest.morRecord("#delete", pv, dOf(dir), dir) } ++
-          uWalked.sortBy(_._1).map { case (pv, dir) =>
-            SnapshotManifest.morRecord("#upsert", pv, uOf(dir), dir) }
         a.publish(SnapshotManifest.read(root, head), txn,
-          extraMeta = records)
-        (a.version, uCounts.valuesIterator.sum)
+          extraMeta = morRecords("#delete", dWalked, dFiles) ++
+            morRecords("#upsert", uWalked, uFiles))
+        (a.version, uFiles.map(_.rows).sum)
       }
     }
   }
 
   /** MERGE-ON-READ UPDATE/MERGE commit half
-    * ([[SnapshotDeltaWrite]] hands the task-written dirs
-    * here): publish parent entries VERBATIM plus `#delete` records
-    * (matched keys, per old-row partition) and `#upsert` records
-    * (updated/inserted rows, per new-row partition) — one CAS version,
-    * zero data files touched. Per-leaf row counts ride in the records
-    * (one delta-sized counting pass per plane) so plan-time statistics
-    * stay exact without opening sidecars. CAS conflicts propagate: a
-    * delta computed against a stale head cannot be rebased safely.
+    * ([[SnapshotDeltaWrite]] hands its write tasks' commits here, one
+    * per task and plane): publish parent entries VERBATIM plus
+    * `#delete` records (matched keys, per old-row partition) and
+    * `#upsert` records (updated/inserted rows, per new-row partition) —
+    * one CAS version, zero data files touched. Per-leaf row counts,
+    * summed from the tasks' folded entries, ride in the records so
+    * plan-time statistics stay exact without opening a file. CAS
+    * conflicts propagate: a delta computed against a stale head cannot
+    * be rebased safely.
     */
-  private[graft] def snapshotMorDeltaCommit(s: SparkSession,
-      root: Path, fromVersion: Int,
-      uDirs: Seq[(String, String)], dDirs: Seq[(String, String)]): Int =
+  private[graft] def snapshotMorDeltaCommit(root: Path, fromVersion: Int,
+      deletes: Seq[SnapshotReplaceCommit],
+      upserts: Seq[SnapshotReplaceCommit]): Int =
     commit(root, Some(fromVersion)) { a =>
       if (SnapshotMeta.read(root).isEmpty) throw new IllegalStateException(
         "merge-on-read delta commit on a meta-less store")
-      // rows-per-leaf counting pass ([[leafRowCounts]], the MoR DELETE
-      // door's pair) — planes counted separately (different schemas)
-      def records(tag: String, pvDirs: Seq[(String, String)]): Seq[String] = {
-        val (_, countOf) = leafRowCounts(s, pvDirs.map(_._2).distinct)
-        pvDirs.map { case (pv, dir) =>
-          SnapshotManifest.morRecord(tag, pv, countOf(dir), dir) }
-      }
+      // a leaf's dir is deterministic (shared plane roots): the tasks
+      // that wrote under one pv name the same dir, which collapses
+      def records(tag: String, cs: Seq[SnapshotReplaceCommit]) =
+        morRecords(tag, cs.flatMap(_.pvDirs).distinct, cs.flatMap(_.files))
       a.publish(SnapshotManifest.read(root, fromVersion),
-        extraMeta = records("#delete", dDirs) ++ records("#upsert", uDirs))
+        extraMeta = records("#delete", deletes) ++
+          records("#upsert", upserts))
       a.version
     }
 
@@ -1865,9 +1839,10 @@ object SnapshotTxn {
 
   /** The store's one DataFrame write into an attempt dir: `df` laid
     * out under `out` by `pcols` — hive leaf dirs of stock parquet
-    * files, the plan `df.write.partitionBy(pcols: _*).parquet(out)`
-    * runs — with each file's sidecar entry folded in the task that
-    * writes it ([[SnapshotFiles.StatsParquetFormat]]). Returns the leaf
+    * files, the `InsertIntoHadoopFsRelationCommand` a plain
+    * `partitionBy(pcols: _*).parquet(out)` on `df.write` runs — with
+    * each file's sidecar entry folded in the task that writes it
+    * ([[SnapshotFiles.StatsParquetFormat]]). Returns the leaf
     * dirs (`pv -> dir`, [[walkLeafDirs]] form) and one entry per data
     * file, re-homed under its leaf dir. Entries that do not name
     * exactly the files the write left throw `IllegalStateException`
@@ -1890,9 +1865,9 @@ object SnapshotTxn {
 
   /** Walk a hive-style nested commit root: one (pv, leafDir) per leaf,
     * pv = dir-name values joined by '/' in `pcols` order (still
-    * escaped — exactly the manifest form). Shared by [[writeLeaves]]
-    * and the merge-on-read delta writes, whose output leafs aren't
-    * knowable from their input alone.
+    * escaped — exactly the manifest form). [[writeLeaves]] is its only
+    * caller: a write's output leaves aren't knowable from its input
+    * alone.
     */
   private def walkLeafDirs(rootDir: java.io.File,
       pcols: Seq[String]): Seq[(String, String)] = {

@@ -17,7 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * file swaps a dir by rename outside the `MrOutSource` committer,
   * and only the publish and the two new-root bootstraps write a
   * manifest. Parquet schemas are inferred only in `Tables.schemaOf`,
-  * behind its cache.
+  * behind its cache. Every store write goes through a writer that folds
+  * its files' entries (`SnapshotTxn.writeLeaves` or the v2 task
+  * writer), and row counts come from those entries, never from a
+  * footer `SnapshotTxn` re-opens.
   */
 class LayeringSpec extends AnyFunSuite {
   test("no file under graft/sources names graft.operators") {
@@ -106,5 +109,19 @@ class LayeringSpec extends AnyFunSuite {
     }
     assert(sites.map(_._1) === Seq("graft/core/Tables.scala:schemaOf"),
       sites.map(_._2).mkString("parquet schema inferred outside Tables.schemaOf:\n", "\n", ""))
+  }
+
+  test("every store write folds its entries, and no commit re-reads a footer") {
+    def hits(p: ((String, String, String)) => Boolean) =
+      mainLines.filter(p).map(r => s"${r._1}: ${r._3.trim}")
+    val reopens = hits(r => r._1 == "graft/sources/SnapshotTxn.scala" &&
+      r._3.contains("ParquetFileReader"))
+    assert(reopens.isEmpty, reopens.mkString("footer read in SnapshotTxn:\n", "\n", ""))
+    val plain = hits(r => r._1.startsWith("graft/sources/") &&
+      r._3.contains(".write.partitionBy("))
+    assert(plain.isEmpty,
+      plain.mkString("store write without a fold (use writeLeaves):\n", "\n", ""))
+    val switches = hits(_._3.contains("foldStats"))
+    assert(switches.isEmpty, switches.mkString("fold switch:\n", "\n", ""))
   }
 }

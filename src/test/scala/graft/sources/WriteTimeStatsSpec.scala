@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Path}
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -22,6 +24,10 @@ import graft.SparkSpec
   * column, several files in one partition, and hive-escaped partition
   * values (`a:b`, `50%`) whose dir names need the URI decoding in
   * `collect`.
+  *
+  * Merge-on-read `#delete`/`#upsert` records carry row counts summed
+  * from the same write-time entries; the reference for those is each
+  * record dir's parquet footers.
   */
 class WriteTimeStatsSpec extends SparkSpec {
 
@@ -57,6 +63,14 @@ class WriteTimeStatsSpec extends SparkSpec {
   private def byMod(id: Column): Column =
     element_at(typedlit(parts), (id % 3 + 1).cast("int"))
 
+  /** `df` through the DataFrame write door into the store at `root`. */
+  private def doorWrite(root: Path, df: DataFrame, mode: String = "upsert",
+      distribution: String = "hash"): Unit =
+    df.write.format("graft-snapshot")
+      .option("keyCol", "id").option("partCol", "p")
+      .option("commitMode", mode).option("distribution", distribution)
+      .mode("append").save(root.toString)
+
   /** Delete the head's published sidecar, rebuild it with
     * `compute_stats`, and require the same entries file by file.
     */
@@ -88,10 +102,7 @@ class WriteTimeStatsSpec extends SparkSpec {
     val t = s"$cat.`t`"
     def door(df: DataFrame, mode: String = "upsert",
              distribution: String = "hash"): Unit =
-      df.write.format("graft-snapshot")
-        .option("keyCol", "id").option("partCol", "p")
-        .option("commitMode", mode).option("distribution", distribution)
-        .mode("append").save(root.toString)
+      doorWrite(root, df, mode, distribution)
 
     // door bootstrap: 3 input tasks, no re-distribution -> 3 files in
     // every partition
@@ -186,6 +197,93 @@ class WriteTimeStatsSpec extends SparkSpec {
          |TBLPROPERTIES ('key_column' = 'id')""".stripMargin)
     assert(SnapshotFiles.read(base.resolve("c"), 1) === Some(Map.empty),
       "CREATE TABLE: v1 must publish an empty sidecar")
+  }
+
+  /** Rows in `dir`'s data files, read from their parquet footers. */
+  private def footerRows(dir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    SnapshotFiles.listDataFiles(conf, dir).map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
+  test("merge-on-read record counts equal their dirs' footer counts on " +
+    "every merge-on-read path") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("wts_mor")
+    val root = base.resolve("m")
+    val cat = "wtsmor"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      "graft.sources.GraftSnapshotCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    val t = s"$cat.`m`"
+    spark.sql(
+      s"""CREATE TABLE $t (id BIGINT, v DOUBLE, p STRING, p_p STRING)
+         |PARTITIONED BY (p_p)
+         |TBLPROPERTIES ('key_column' = 'id',
+         |               'delete_mode' = 'merge-on-read')""".stripMargin)
+    def keyed(ids: Seq[Long], part: Column => Column): DataFrame =
+      ids.toDF("id").select(col("id"), (col("id") * 1.5).as("v"),
+        part(col("id")).as("p"))
+    def records(tag: String): Map[String, Long] = {
+      val v = SnapshotManifest.head(root)
+      val planes =
+        if (tag == "#delete") SnapshotManifest.deleteRecordsWithCounts(root, v)
+        else SnapshotManifest.upsertRecordsWithCounts(root, v)
+      planes.values.flatten.toMap
+    }
+    var live = 0L
+    // after `statement`: each plane in `planes` gained records, every
+    // live record counts exactly its dir's footer rows, and the table
+    // serves `live` rows (a dropped doomed key shows here)
+    def check(what: String, change: Long, planes: String*)(
+        statement: => Unit): Unit = {
+      val before = Seq("#delete", "#upsert").map(p => p -> records(p).keySet)
+      statement
+      live += change
+      before.foreach { case (tag, old) =>
+        val now = records(tag)
+        if (planes.contains(tag))
+          assert((now.keySet -- old).nonEmpty, s"$what: no new $tag record")
+        now.foreach { case (dir, n) =>
+          assert(n === footerRows(dir), s"$what: $tag record $dir")
+        }
+      }
+      assert(spark.table(t).count() === live, s"$what: count(*)")
+      assert(spark.table(t).collect().length === live, s"$what: rows")
+    }
+
+    check("door bootstrap", 300) {
+      doorWrite(root, keyed(1L to 300L, byMod))
+    }
+    check("SQL DELETE", -20, "#delete") {
+      spark.sql(s"DELETE FROM $t WHERE id <= 20")
+    }
+    // a phantom key dooms nothing
+    check("door commitMode=delete", -20, "#delete") {
+      doorWrite(root, keyed((31L to 50L) :+ 9999L, byMod), mode = "delete")
+    }
+    // 20 existing keys move to `plain`, 30 new keys land in `a:b`
+    check("door commitMode=upsert-mor", 30, "#delete", "#upsert") {
+      doorWrite(root, keyed(51L to 70L, _ => lit("plain")) union
+        keyed(1001L to 1030L, _ => lit("a:b")), mode = "upsert-mor")
+    }
+    // keys doom in their 3 old partitions, rows land in `plain` only
+    check("MoR UPDATE", 0, "#delete", "#upsert") {
+      spark.sql(s"UPDATE $t SET p = 'plain', v = v + 1 " +
+        "WHERE id BETWEEN 71 AND 100")
+    }
+    keyed((101L to 110L) ++ (2001L to 2015L), _ => lit("50%"))
+      .createOrReplaceTempView("wts_mor_src")
+    check("MoR MERGE", 15, "#delete", "#upsert") {
+      spark.sql(
+        s"""MERGE INTO $t AS tgt USING wts_mor_src AS src
+           |ON tgt.id = src.id
+           |WHEN MATCHED THEN UPDATE SET v = src.v + 1
+           |WHEN NOT MATCHED THEN INSERT (id, v, p, p_p)
+           |  VALUES (src.id, src.v, src.p, src.p)""".stripMargin)
+    }
   }
 
   test("a write whose entries miss or invent a file is refused") {
