@@ -3753,25 +3753,14 @@ object SourceQueries {
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), to_date(col("o_orderdate")).as("o_orderdate"),
         date_format(col("o_orderdate"), "yyyy-MM").as("o_ym"))
-    // v1 publishes no sidecar (`fresh = None`): these plain parquet
-    // writes fold no file stats, and readers fall back to listing
-    commit(root, Some(0)) { a =>
-      val base = a.scratch().toString
-      val isHot = col("o_ym").isin(IncrCompactHotMonths: _*)
-      orders.filter(!isHot)
-        .withColumn("o_ym_p", col("o_ym"))
-        .repartition(col("o_ym_p"))
-        .write.partitionBy("o_ym_p").parquet(base)
-      orders.filter(isHot)
-        .withColumn("o_ym_p", col("o_ym"))
-        .repartition(64)
-        .write.mode("append").partitionBy("o_ym_p").parquet(base)
-      val months = Option(new java.io.File(base).listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("o_ym_p="))
-        .map(f => f.getName.stripPrefix("o_ym_p=") -> f.getAbsolutePath)
-      a.publish(months.toMap, fresh = None)
-    }
+    // the task layout IS the fixture (no layout distribution): each
+    // cold month lands in one task, each hot month across the 64-way
+    // ingest write
+    val isHot = col("o_ym").isin(IncrCompactHotMonths: _*)
+    snapshotInit(s, root,
+      orders.filter(!isHot).repartition(col("o_ym"))
+        .union(orders.filter(isHot).repartition(64)),
+      partCols = Seq("o_ym"), distribute = false)
     root
   }
 
@@ -3842,7 +3831,7 @@ object SourceQueries {
         }
       val (_, files) = writeLeaves(s, clustered, Seq("o_ym_p"), out)
       a.publish(manifest ++ hot.map(ym => ym -> s"$out/o_ym_p=$ym"),
-        fresh = Some(files.filter(f => hot.contains(f.pv))))
+        fresh = files.filter(f => hot.contains(f.pv)))
       hot
     }
   }

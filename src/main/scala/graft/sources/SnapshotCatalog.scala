@@ -30,8 +30,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `VERSION AS OF n` lands in `loadTable(ident, version)`; a bare
   * reference resolves the head. Each table is served by
   * [[SnapshotV2Table]], whose file listing comes from the SAME
-  * manifest plane as the DataFrame door (the `v<N>.files` sidecar when
-  * present — zero `listStatus` planning), and whose scans are ordinary
+  * manifest plane as the DataFrame door (the version's stats sidecar —
+  * zero `listStatus` planning), and whose scans are ordinary
   * DSv2 parquet scans (pushdown, pruning, AQE all apply). DML
   * (`INSERT INTO` as a keyed upsert, `DELETE FROM … WHERE`) routes
   * THROUGH the `graft-snapshot` write door's [[SnapshotDoor]] commit
@@ -41,10 +41,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * its first `df.write.format("graft-snapshot")` commit, which
   * declares the layout and key.
   *
-  * A table named `t` is the store rooted at `<warehouse>/t`. The store
-  * must carry a `table.meta` sidecar (every store bootstrapped through
-  * the current write paths does); pre-sidecar stores use the DataFrame
-  * door, which still supports schema inference.
+  * A table named `t` is the store rooted at `<warehouse>/t`; its
+  * `table.meta` declares the schema, layout and key.
   */
 object GraftSnapshotCatalog {
   /** The staged-CTAS liveness marker ([[StagedSnapshotTable]]'s
@@ -120,7 +118,9 @@ final class GraftSnapshotCatalog extends TableCatalog
     validateSegments(ident)
     val root = ident.namespace().foldLeft(warehouse)(_.resolve(_))
       .resolve(ident.name())
-    if (JFiles.isDirectory(root.resolve("manifests"))) root
+    // a table is a root with a published version: a crashed
+    // bootstrap's meta and sidecar alone are not one
+    if (SnapshotManifest.head(root) > 0) root
     // the Iceberg branch-table spelling: `snap.t.branch_dev` reads and
     // WRITES the branch `dev` of table `t` — every DML door works on
     // the branch's mini-store root unchanged
@@ -131,7 +131,7 @@ final class GraftSnapshotCatalog extends TableCatalog
         .resolve(ident.namespace().last)
       val broot = SnapshotBranches.root(tableRoot,
         ident.name().stripPrefix("branch_"))
-      if (JFiles.isDirectory(broot.resolve("manifests"))) broot
+      if (SnapshotManifest.head(broot) > 0) broot
       else throw new NoSuchTableException(ident)
     } else throw new NoSuchTableException(ident)
   }
@@ -139,8 +139,7 @@ final class GraftSnapshotCatalog extends TableCatalog
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val base = namespace.foldLeft(warehouse)(_.resolve(_))
     Option(base.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory &&
-        new java.io.File(f, "manifests").isDirectory)
+      .filter(f => f.isDirectory && SnapshotManifest.head(f.toPath) > 0)
       .map(f => Identifier.of(namespace, f.getName))
   }
 
@@ -224,8 +223,7 @@ final class GraftSnapshotCatalog extends TableCatalog
           case Some(v) => load(ident, Some(v))
           case None if SnapshotBranches.exists(root, version) =>
             val broot = SnapshotBranches.root(root, version)
-            val meta = SnapshotMeta.read(broot).getOrElse(
-              throw new NoSuchTableException(ident))
+            val meta = SnapshotMeta.read(broot)
             val v = SnapshotManifest.head(broot)
             // same union-of-specs serving as load(): a branch inherits
             // (or stages) spec evolution exactly like main
@@ -274,8 +272,7 @@ final class GraftSnapshotCatalog extends TableCatalog
   private def load(ident: Identifier, v: Option[Int]): Table = {
     val root = rootOf(ident)
     val version = v.getOrElse(SnapshotManifest.head(root))
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new NoSuchTableException(ident))
+    val meta = SnapshotMeta.read(root)
     // a VERSION spanning two layouts can't be one single-layout DSv2
     // relation (one partition schema; null-filling the appended mirror
     // for old-spec files would break pruning exactness) — serve it
@@ -337,7 +334,6 @@ final class GraftSnapshotCatalog extends TableCatalog
       Identifier.of(namespace, "zorder"),
       Identifier.of(namespace, "evolve_partitioning"),
       Identifier.of(namespace, "migrate_layout"),
-      Identifier.of(namespace, "compute_stats"),
       Identifier.of(namespace, "build_bloom"))
 
   override def loadProcedure(ident: Identifier)
@@ -358,7 +354,6 @@ final class GraftSnapshotCatalog extends TableCatalog
       case "evolve_partitioning" =>
         new SnapshotEvolvePartitioningProcedure(this)
       case "migrate_layout" => new SnapshotMigrateLayoutProcedure(this)
-      case "compute_stats" => new SnapshotComputeStatsProcedure(this)
       case "build_bloom" => new SnapshotBuildBloomProcedure(this)
       case other => throw new UnsupportedOperationException(
         s"unknown procedure $other — available: history(table), " +
@@ -370,7 +365,7 @@ final class GraftSnapshotCatalog extends TableCatalog
           "zorder(table, col_a, col_b[, threshold, files_per_partition]), " +
           "evolve_partitioning(table, source_col), " +
           "migrate_layout(table[, max_partitions]), " +
-          "compute_stats(table), build_bloom(table, column)")
+          "build_bloom(table, column)")
     }
 
   /** Procedure-arg table resolution. The WHOLE string is tried as the
@@ -404,7 +399,7 @@ final class GraftSnapshotCatalog extends TableCatalog
     require(table.nonEmpty && table.matches("[A-Za-z][A-Za-z0-9_.-]*"),
       s"table name must match [A-Za-z][A-Za-z0-9_.-]*: '$table'")
     val root = warehouse.resolve(table)
-    if (JFiles.isDirectory(root.resolve("manifests")))
+    if (SnapshotManifest.head(root) > 0)
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(Seq(table))
     root
@@ -445,7 +440,7 @@ final class GraftSnapshotCatalog extends TableCatalog
     validateSegments(ident)
     val root = ident.namespace().foldLeft(warehouse)(_.resolve(_))
       .resolve(ident.name())
-    if (JFiles.isDirectory(root.resolve("manifests")))
+    if (SnapshotManifest.head(root) > 0)
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(ident.namespace() :+ ident.name())
     require(ident.name().matches("[A-Za-z][A-Za-z0-9_-]*"),
@@ -604,7 +599,7 @@ final class GraftSnapshotCatalog extends TableCatalog
     JFiles.createDirectories(stagingRoot)
     SnapshotTxn.snapshotCreateTable(
       stagingRoot, dataSchema, partitionSchema, key, deleteMode)
-    val meta = SnapshotMeta.read(stagingRoot).get
+    val meta = SnapshotMeta.read(stagingRoot)
     val inner = new SnapshotV2Table(
       s"$catName.${ident.name()} (staged)", SparkSession.active,
       stagingRoot, 1, meta)
@@ -668,10 +663,7 @@ final class GraftSnapshotCatalog extends TableCatalog
       s"nested ALTER COLUMN is not supported: " +
         ut.fieldNames.mkString("."))
     val name = ut.fieldNames.head
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "legacy store without table.meta: type widening needs the " +
-          "declared-schema plane"))
+    val meta = SnapshotMeta.read(root)
     val logical = SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
     val field = logical.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"column $name does not exist"))
@@ -728,10 +720,7 @@ final class GraftSnapshotCatalog extends TableCatalog
       s"nested DROP COLUMN is not supported: " +
         dc.fieldNames.mkString("."))
     val name = dc.fieldNames.head
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "legacy store without table.meta: drop needs the " +
-          "declared-schema plane"))
+    val meta = SnapshotMeta.read(root)
     val logical = SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
     if (!logical.fieldNames.contains(name)) {
       require(dc.ifExists(), s"column $name does not exist")
@@ -792,10 +781,7 @@ final class GraftSnapshotCatalog extends TableCatalog
         rc.fieldNames.mkString("."))
     val old = rc.fieldNames.head
     val nu = rc.newName
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "legacy store without table.meta: rename needs the " +
-          "declared-schema plane"))
+    val meta = SnapshotMeta.read(root)
     val logical = SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
     require(logical.fieldNames.contains(old),
       s"column $old does not exist")
@@ -932,9 +918,9 @@ final class GraftSnapshotCatalog extends TableCatalog
     * refs, branches: the whole root). Standard DSv2 semantics, and
     * what makes a failed (non-atomic) CTAS clean up after itself.
     * A WEDGED half-bootstrap (a crash between the `table.meta`
-    * publish and the v1 manifest link left meta with no manifests —
-    * not resolvable as a table) is droppable too: without this, the
-    * wedge had no SQL-level recovery at all.
+    * write and the v1 manifest link left meta with no published
+    * version — not resolvable as a table) is droppable too: without
+    * this, the wedge had no SQL-level recovery at all.
     */
   override def dropTable(ident: Identifier): Boolean =
     try {
@@ -948,7 +934,7 @@ final class GraftSnapshotCatalog extends TableCatalog
         val root = ident.namespace().foldLeft(warehouse)(_.resolve(_))
           .resolve(ident.name())
         if (JFiles.exists(root.resolve("table.meta")) &&
-            !JFiles.isDirectory(root.resolve("manifests"))) {
+            SnapshotManifest.head(root) == 0) {
           org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
           true
         } else false
@@ -959,10 +945,7 @@ final class GraftSnapshotCatalog extends TableCatalog
     * store RELATIVE to the table root (branches `../..`-relative to
     * it), so the root is a movable unit — branches, tags, stats and
     * the Bloom index (whose loads match on the root-relative suffix)
-    * all survive. Legacy stores whose metadata still carries absolute
-    * under-root paths get a one-time rewrite sweep after the move,
-    * mtime-preserving (manifest mtimes are the commit instants
-    * `TIMESTAMP AS OF` resolves against).
+    * all survive with no metadata rewrite.
     */
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
     val oldRoot = rootOf(oldIdent)
@@ -990,8 +973,6 @@ final class GraftSnapshotCatalog extends TableCatalog
           .TableAlreadyExistsException(
             newIdent.namespace() :+ newIdent.name())
     }
-    SnapshotManifest.migrateAbsolutePaths(
-      oldRoot.toAbsolutePath.normalize.toString, newRoot)
   }
 }
 
@@ -1406,7 +1387,7 @@ final class SnapshotV2Table(
 
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    filters.forall(SnapshotDml.translatable)
+    filters.forall(SnapshotDml.translatable(_, schema().fieldNames.toSet))
 
   /** DELETE through the door: pushed filters select the doomed keys
     * from THIS head, and the key list (with its partition source
@@ -1623,9 +1604,7 @@ private[sources] final class SnapshotDppScanBuilder(
         agg.aggregateExpressions.nonEmpty &&
         agg.aggregateExpressions.forall(_.isInstanceOf[
           org.apache.spark.sql.connector.expressions.aggregate.CountStar])
-      val allCounted = deleteState.exists(st =>
-        st.records.keySet.forall(pv => st.doomedCount(pv).isDefined))
-      if (countStarOnly && allCounted && inner.pushAggregation(agg)) {
+      if (countStarOnly && inner.pushAggregation(agg)) {
         aggPushedUnderRecords = true
         true
       } else false
@@ -1857,10 +1836,10 @@ final class SnapshotDppScan(
         // partials (they count doomed rows; `#upsert` delta files'
         // footers already count their rows) — append ONE corrective
         // partial subtracting the scanned partitions' recorded doomed
-        // counts. The push gate guaranteed every record is counted.
+        // counts.
         val doomed = SnapshotRowLevel.matchingPvs(
           current.partitionFilters, partSchema, st.records.keySet)
-          .toSeq.flatMap(st.doomedCount).sum
+          .toSeq.map(st.doomedCount).sum
         if (doomed == 0L) base
         else new SnapshotCountAdjustBatch(base, -doomed,
           current.readSchema().length)
@@ -1908,8 +1887,7 @@ final class SnapshotDppScan(
     * broadcasts — the 100 TB join-planning decision the sidecar's
     * per-file HLL sketches exist to inform ([[SnapshotFiles
     * .estimateNdv]]; round 15, VERDICT r14 #5). The NDV fold is lazy:
-    * sketches decode only if the planner actually asks. Sidecar-less
-    * versions (legacy stores) keep the delegate estimate; a column
+    * sketches decode only if the planner actually asks. A column
     * missing a sketch in ANY pruned file reports no NDV (an
     * under-unioned estimate could flip a join the wrong way). Live
     * merge-on-read deletes make rows/NDV slight over-counts — sound
@@ -1920,27 +1898,22 @@ final class SnapshotDppScan(
     val base = current.estimateStatistics()
     val pruned: Option[Seq[SnapshotFiles.FileEntry]] =
       statsSource.flatMap { case (root, version) =>
-        SnapshotFiles.read(root, version).flatMap { fm =>
-          val byKey = fm.valuesIterator.flatten
-            .map(e => SnapshotBloom.fileKey(e.path) -> e).toMap
-          // a file the sidecar doesn't know (partially-covered sidecar:
-          // a legacy store upgraded mid-history, carried partitions
-          // missing from a parent sidecar) must NOT count as 0 rows —
-          // under-reporting numRows can flip join planning to
-          // broadcasting a large table. Fall back to the delegate.
-          val entries = current.fileIndex
-            .listFiles(current.partitionFilters, current.dataFilters)
-            .iterator.flatMap(_.files)
-            // `#upsert` delta files are outside the sidecar by design:
-            // their rows are counted from the records below, so they
-            // must not void the fold here
-            .filter(st =>
-              SnapshotDeletes.publishVersionOf(st.getPath.toString) < 0)
-            .map(st => byKey.get(SnapshotBloom.fileKey(st.getPath.toString)))
-            .toSeq
-          if (entries.forall(_.isDefined)) Some(entries.flatten)
-          else None
-        }
+        val byKey = SnapshotFiles.read(root, version).valuesIterator.flatten
+          .map(e => SnapshotBloom.fileKey(e.path) -> e).toMap
+        // a file the sidecar doesn't know must NOT count as 0 rows —
+        // under-reporting numRows can flip join planning to
+        // broadcasting a large table. Fall back to the delegate.
+        val entries = current.fileIndex
+          .listFiles(current.partitionFilters, current.dataFilters)
+          .iterator.flatMap(_.files)
+          // `#upsert` delta files are outside the sidecar by design:
+          // their rows are counted from the records below, so they
+          // must not void the fold here
+          .filter(st =>
+            SnapshotDeletes.publishVersionOf(st.getPath.toString) < 0)
+          .map(st => byKey.get(SnapshotBloom.fileKey(st.getPath.toString)))
+          .toSeq
+        Option.when(entries.forall(_.isDefined))(entries.flatten)
       }
     pruned match {
       case None => base
@@ -1951,28 +1924,18 @@ final class SnapshotDppScan(
         // counts for the partitions this scan reads — the file rows
         // still contain the doomed keys, but the scan never serves
         // them, and join planning should see post-delete cardinality.
-        // A count-less record skips its partition's subtraction
-        // (over-counting is the sound direction). `#upsert` delta rows
-        // ADD their recorded counts the same way (a count-less upsert
-        // record would under-report, the unsound direction, so it
-        // voids the row estimate — never minted by this writer).
+        // `#upsert` delta rows ADD their recorded counts the same way.
         private val doomed: Long = deleteState.map { case (st, _) =>
           SnapshotRowLevel.matchingPvs(current.partitionFilters,
             partSchema, st.records.keySet)
-            .toSeq.flatMap(st.doomedCount).sum
+            .toSeq.map(st.doomedCount).sum
         }.getOrElse(0L)
-        private val upserted: Option[Long] = {
-          val counts = SnapshotRowLevel.matchingPvs(
+        private val upserted: Long = SnapshotRowLevel.matchingPvs(
             current.partitionFilters, partSchema, upsertCounts.keySet)
-            .toSeq.flatMap(upsertCounts(_))
-          if (counts.exists(_ < 0)) None else Some(counts.sum)
-        }
+          .toSeq.flatMap(upsertCounts(_)).sum
         override def numRows(): java.util.OptionalLong =
-          upserted match {
-            case None => base.numRows()
-            case Some(u) => java.util.OptionalLong.of(
-              math.max(0L, es.map(_.rows).sum + u - doomed))
-          }
+          java.util.OptionalLong.of(
+            math.max(0L, es.map(_.rows).sum + upserted - doomed))
         override def columnStats(): java.util.Map[
             org.apache.spark.sql.connector.expressions.NamedReference,
             org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
@@ -2147,15 +2110,23 @@ private[sources] object SnapshotDml {
   import org.apache.spark.sql.functions.{col, lit, not}
   import org.apache.spark.sql.sources._
 
-  def translatable(f: Filter): Boolean = f match {
+  /** `f` has a shape [[toColumn]] translates and names only `columns`
+    * (the table's): a filter over a name the table lacks, such as the
+    * `_common_expr_0` alias Spark's `With` gives a shared subexpression
+    * (`id * 2 BETWEEN 42 AND 60`), takes the row-level path instead.
+    */
+  def translatable(f: Filter, columns: Set[String]): Boolean =
+    f.references.forall(columns) && shape(f)
+
+  private def shape(f: Filter): Boolean = f match {
     case _: EqualTo | _: EqualNullSafe | _: In | _: GreaterThan |
          _: GreaterThanOrEqual | _: LessThan | _: LessThanOrEqual |
          _: IsNull | _: IsNotNull | _: StringStartsWith |
          _: StringEndsWith | _: StringContains | _: AlwaysTrue |
          _: AlwaysFalse => true
-    case And(l, r) => translatable(l) && translatable(r)
-    case Or(l, r) => translatable(l) && translatable(r)
-    case Not(c) => translatable(c)
+    case And(l, r) => shape(l) && shape(r)
+    case Or(l, r) => shape(l) && shape(r)
+    case Not(c) => shape(c)
     case _ => false
   }
 
@@ -2193,8 +2164,8 @@ private[sources] object SnapshotDml {
   * shape the DSv2 file-source machinery plans against. Partition
   * pruning runs in the PARENT's `listFiles` over the typed manifest
   * values ([[SnapshotPartitionValues]]); the per-dir file lists come
-  * from the `v<N>.files` sidecar when present (zero `listStatus`
-  * calls) and from one listing per dir otherwise.
+  * from the version's stats sidecar (zero `listStatus` calls on the
+  * base plane).
   */
 final class SnapshotPartitioningIndex(
     spark: SparkSession,
@@ -2219,7 +2190,8 @@ final class SnapshotPartitioningIndex(
     val full = preRead.getOrElse(SnapshotManifest.read(root, version))
     onlyPvs.map(keep => full.filter(e => keep(e._1))).getOrElse(full)
   }
-  private val sidecar = SnapshotFiles.read(root, version)
+  private val sidecar: Map[String, Seq[SnapshotFiles.FileEntry]] =
+    SnapshotFiles.read(root, version)
 
   /** Live `#upsert` delta dirs of the served version, by pv — extra
     * leaf dirs the scan reads ALONGSIDE the base entry (same partition
@@ -2233,31 +2205,14 @@ final class SnapshotPartitioningIndex(
     onlyPvs.map(keep => full.filter(e => keep(e._1))).getOrElse(full)
   }
 
-  /** `listStatus` calls made on the BASE plane — spec hook (0 with a
-    * sidecar; `#upsert` delta-dir listings are delta-plane and counted
-    * apart).
-    */
-  @volatile var fsListCalls: Int = 0
-  @volatile var deltaListCalls: Int = 0
-
   private lazy val filesByDir: Map[Path, Array[FileStatus]] = {
     val base = manifest.toSeq.sortBy(_._1).map { case (pv, dir) =>
-      val listed: Array[FileStatus] = sidecar match {
-        case Some(fm) =>
-          fm.getOrElse(pv, Nil).map(SnapshotFiles.status).toArray
-        case None =>
-          fsListCalls += 1
-          SnapshotFiles.listDataFiles(
-            spark.sparkContext.hadoopConfiguration, dir)
-      }
-      new Path(dir) -> listed
+      new Path(dir) ->
+        sidecar.getOrElse(pv, Nil).map(SnapshotFiles.status).toArray
     }
     val deltas = upserts.toSeq.sortBy(_._1).flatMap { case (_, dirs) =>
-      dirs.sorted.map { d =>
-        deltaListCalls += 1
-        new Path(d) -> SnapshotFiles.listDataFiles(
-          spark.sparkContext.hadoopConfiguration, d)
-      }
+      dirs.sorted.map(d => new Path(d) -> SnapshotFiles.listDataFiles(
+        spark.sparkContext.hadoopConfiguration, d))
     }
     (base ++ deltas).toMap
   }
@@ -2313,9 +2268,8 @@ final class SnapshotPartitioningIndex(
 /** `CALL snap.history('t')` — the version chain as rows: one per
   * published version with its commit instant (the manifest link's
   * mtime — the atomic publish moment, the same clock `TIMESTAMP AS
-  * OF` resolves against), partition count, and whether the version
-  * carries a file-stats sidecar. Pure metadata plane: reads manifest
-  * headers, never data.
+  * OF` resolves against) and partition count. Pure metadata plane:
+  * reads manifests, never data.
   */
 final class SnapshotHistoryProcedure(cat: GraftSnapshotCatalog)
   extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
@@ -2335,8 +2289,7 @@ final class SnapshotHistoryProcedure(cat: GraftSnapshotCatalog)
   private val outSchema = StructType(Seq(
     StructField("version", IntegerType, nullable = false),
     StructField("committed_at", TimestampType, nullable = false),
-    StructField("n_partitions", IntegerType, nullable = false),
-    StructField("has_stats", BooleanType, nullable = false)))
+    StructField("n_partitions", IntegerType, nullable = false)))
 
   override def call(input: org.apache.spark.sql.catalyst.InternalRow)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
@@ -2456,43 +2409,6 @@ final class SnapshotVacuumProcedure(cat: GraftSnapshotCatalog)
       new SnapshotProcedureResult(outSchema,
         Array(org.apache.spark.sql.catalyst.InternalRow(
           removed, head, keptFrom)))).iterator()
-  }
-}
-
-/** `CALL snap.compute_stats('t')` — backfill the head's stats sidecar
-  * ([[SnapshotTxn.snapshotComputeStats]]): the
-  * ANALYZE TABLE analog for the store's metadata plane, giving legacy
-  * (pre-sidecar) stores zero-`listStatus` planning and min/max range
-  * skipping. `files` = -1 when the head already has one (immutable,
-  * left verbatim).
-  */
-final class SnapshotComputeStatsProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "compute_stats"
-  override def description(): String =
-    "backfill the head stats sidecar: compute_stats(table)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build())
-
-  private val outSchema = StructType(Seq(
-    StructField("version", IntegerType, nullable = false),
-    StructField("files", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val (v, n) = SnapshotTxn.snapshotComputeStats(
-      SparkSession.active, root)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(v, n)))).iterator()
   }
 }
 
@@ -3029,11 +2945,8 @@ final class SnapshotProcedureResult(
 }
 
 /** A metadata table (`snap.t.files` / `partitions` / `history` /
-  * `refs`) — the manifest plane served as a read-only SQL table. Rows
-  * come from the version's sidecar when present and from a lazy
-  * per-partition listing otherwise (a legacy store's `files` rows then
-  * carry NULL `row_count` — bytes come from the FS, row counts only
-  * from the sidecar). `VERSION AS OF n` pins `files`/`partitions` to
+  * `refs`) — the manifest plane served as a read-only SQL table. File
+  * rows come from the version's sidecar. `VERSION AS OF n` pins `files`/`partitions` to
   * that version's manifest; `history`/`refs` are version-free. All of
   * it is metadata-plane work — no data file is ever opened.
   */
@@ -3066,8 +2979,7 @@ final class SnapshotMetaTable(tableName: String, root: JPath,
     case "history" => StructType(Seq(
       StructField("version", IntegerType, nullable = false),
       StructField("committed_at", TimestampType, nullable = false),
-      StructField("n_partitions", IntegerType, nullable = false),
-      StructField("has_stats", BooleanType, nullable = false)))
+      StructField("n_partitions", IntegerType, nullable = false)))
     case "refs" => StructType(Seq(
       StructField("name", StringType, nullable = false),
       StructField("kind", StringType, nullable = false),
@@ -3087,40 +2999,23 @@ final class SnapshotMetaTable(tableName: String, root: JPath,
       StructField("delta_dir", StringType, nullable = false)))
   }
 
-  /** (pv, path, bytes, rowCount-or-null) per data file of the pinned
-    * (or head) version.
-    */
-  private def fileRows(): Seq[(String, String, Long, Any)] = {
-    val v = pinned.getOrElse(SnapshotManifest.head(root))
-    SnapshotFiles.read(root, v) match {
-      case Some(fm) => fm.toSeq.sortBy(_._1).flatMap(_._2)
-        .map(e => (e.pv, e.path, e.bytes, e.rows))
-      case None =>
-        SnapshotManifest.read(root, v).toSeq.sortBy(_._1).flatMap {
-          case (pv, dir) => SnapshotFiles.listDataFiles(
-            org.apache.spark.sql.SparkSession.active
-              .sparkContext.hadoopConfiguration, dir)
-            .map(st => (pv, st.getPath.toUri.getPath, st.getLen, null))
-        }
-    }
-  }
+  /** The sidecar entries of the pinned (or head) version, by pv. */
+  private def fileEntries(): Map[String, Seq[SnapshotFiles.FileEntry]] =
+    SnapshotFiles.read(root, pinned.getOrElse(SnapshotManifest.head(root)))
 
   private def computeRows(): Array[InternalRow] = kind match {
-    case "files" => fileRows().map { case (pv, p, b, rc) =>
-      InternalRow(UTF8String.fromString(pv), UTF8String.fromString(p),
-        b, rc)
-    }.toArray
+    case "files" =>
+      fileEntries().toSeq.sortBy(_._1).flatMap(_._2).map(e =>
+        InternalRow(UTF8String.fromString(e.pv),
+          UTF8String.fromString(e.path), e.bytes, e.rows)).toArray
     case "partitions" =>
       val v = pinned.getOrElse(SnapshotManifest.head(root))
       val manifest = SnapshotManifest.read(root, v)
-      val byPv = fileRows().groupBy(_._1)
+      val byPv = fileEntries()
       manifest.toSeq.sortBy(_._1).map { case (pv, dir) =>
         val fs = byPv.getOrElse(pv, Nil)
-        val rows: Any =
-          if (fs.exists(_._4 == null)) null
-          else fs.map(_._4.asInstanceOf[Long]).sum
         InternalRow(UTF8String.fromString(pv), UTF8String.fromString(dir),
-          fs.size, fs.map(_._3).sum, rows)
+          fs.size, fs.map(_.bytes).sum, fs.map(_.rows).sum)
       }.toArray
     case "history" => SnapshotMetaTable.historyRows(root)
     case "refs" => SnapshotMetaTable.refsRows(root)
@@ -3129,8 +3024,8 @@ final class SnapshotMetaTable(tableName: String, root: JPath,
       SnapshotManifest.deleteRecordsWithCounts(root, v).toSeq
         .sortBy(_._1).flatMap { case (pv, recs) =>
           recs.map { case (dir, n) =>
-            InternalRow(UTF8String.fromString(pv),
-              if (n < 0) null else n, UTF8String.fromString(dir))
+            InternalRow(UTF8String.fromString(pv), n,
+              UTF8String.fromString(dir))
           }
         }.toArray
     case "upserts" =>
@@ -3138,8 +3033,8 @@ final class SnapshotMetaTable(tableName: String, root: JPath,
       SnapshotManifest.upsertRecordsWithCounts(root, v).toSeq
         .sortBy(_._1).flatMap { case (pv, recs) =>
           recs.map { case (dir, n) =>
-            InternalRow(UTF8String.fromString(pv),
-              if (n < 0) null else n, UTF8String.fromString(dir))
+            InternalRow(UTF8String.fromString(pv), n,
+              UTF8String.fromString(dir))
           }
         }.toArray
   }
@@ -3165,8 +3060,7 @@ object SnapshotMetaTable {
     */
   def historyRows(root: JPath): Array[InternalRow] =
     SnapshotManifest.versionsWithMtime(root).map { case (v, mtime) =>
-      InternalRow(v, mtime * 1000L, SnapshotManifest.read(root, v).size,
-        SnapshotFiles.exists(root, v))
+      InternalRow(v, mtime * 1000L, SnapshotManifest.read(root, v).size)
     }.toArray
 
   /** Single source for the ref rows — the `refs` meta table and

@@ -352,17 +352,12 @@ object SnapshotDeletes {
     * when the served version has live records (and then the store
     * necessarily declares a key — the MoR door refuses keyless
     * stores). `doomedCount(pv)` is the partition's recorded doomed-key
-    * total, or None when any of its records predates the count field
-    * (statistics then skip the subtraction — over-counting is the
-    * sound direction).
+    * total.
     */
   final case class State(keyField: StructField,
                          records: Map[String, Seq[String]],
                          counts: Map[String, Seq[Long]]) {
-    def doomedCount(pv: String): Option[Long] = {
-      val ns = counts.getOrElse(pv, Nil)
-      if (ns.isEmpty || ns.exists(_ < 0)) None else Some(ns.sum)
-    }
+    def doomedCount(pv: String): Long = counts.getOrElse(pv, Nil).sum
   }
 
   def stateFor(root: JPath, version: Int,

@@ -87,7 +87,8 @@ final class SnapshotDeltaOperation(
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite =
-        new SnapshotDeltaWrite(spark, root, version, meta, keyCol, info)
+        new SnapshotDeltaWrite(spark, root, version, meta, keyCol, info,
+          writesRows = cmd != Command.DELETE)
     }
 }
 
@@ -99,9 +100,11 @@ final class SnapshotDeltaOperation(
   * driver commit publishes parent entries VERBATIM plus the two record
   * planes, counted from those entries — one CAS manifest version, zero
   * data files touched or re-read. A CAS loser throws
-  * ([[SnapshotConflictException]]): like the group replacement, a delta
+  * ([[SnapshotTxn.SnapshotConflictException]]) after its roots are
+  * deleted: like the group replacement, a delta
   * computed against a stale head cannot be rebased safely (the matched
-  * set may have changed).
+  * set may have changed). A DELETE (`writesRows = false`) writes the
+  * key plane only: its write schema has no data columns to lay out.
   */
 final class SnapshotDeltaWrite(
     spark: SparkSession,
@@ -109,7 +112,8 @@ final class SnapshotDeltaWrite(
     version: Int,
     meta: SnapshotMeta.Meta,
     keyCol: String,
-    info: LogicalWriteInfo) extends DeltaWrite
+    info: LogicalWriteInfo,
+    writesRows: Boolean) extends DeltaWrite
   with SnapshotClusteredWrite {
 
   /** Same write-side clustering as every batch write into the store
@@ -139,8 +143,8 @@ final class SnapshotDeltaWrite(
       // update/insert rows reach the writer op-coded (the task writer
       // drops nothing here — deletes never enter the u-plane), so the
       // INSERT-door mirror discipline applies to MERGE inserts only
-      val uFactory = SnapshotWriteSupport.factory(spark, meta,
-        info.schema(), uRoot, checkMirrors = true)
+      val uFactory = Option.when(writesRows)(SnapshotWriteSupport.factory(
+        spark, meta, info.schema(), uRoot, checkMirrors = true))
       // doomed keys: the row ID (key + layout source columns) routes
       // each key to the OLD row's partition, and only the key column
       // lands in the file — the shape the merge-on-read DELETE door
@@ -173,18 +177,9 @@ final class SnapshotDeltaWrite(
         org.apache.commons.io.FileUtils.deleteQuietly(dRoot.toFile)
         return
       }
-      try SnapshotTxn.snapshotMorDeltaCommit(root, version,
-        ms.map(_.deletes), ms.map(_.upserts))
-      catch {
-        // ONLY a CAS loss may reclaim the roots: nothing references
-        // them then. Any other failure could be post-publish (the
-        // stats-sidecar write), when the dirs ARE referenced state —
-        // leave them; vacuum never sweeps referenced dirs.
-        case e: SnapshotTxn.SnapshotConflictException =>
-          org.apache.commons.io.FileUtils.deleteQuietly(uRoot.toFile)
-          org.apache.commons.io.FileUtils.deleteQuietly(dRoot.toFile)
-          throw e
-      }
+      // a lost link reclaims both roots (they are the attempt's scratch)
+      SnapshotTxn.snapshotMorDeltaCommit(root, version,
+        ms.map(_.deletes), ms.map(_.upserts), Seq(uRoot, dRoot))
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -200,22 +195,23 @@ private[sources] final case class SnapshotDeltaCommit(
     deletes: SnapshotReplaceCommit) extends WriterCommitMessage
 
 private[sources] final class SnapshotDeltaWriterFactory(
-    uFactory: DataWriterFactory,
+    uFactory: Option[DataWriterFactory],
     dFactory: DataWriterFactory) extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] =
-    new SnapshotDeltaTaskWriter(uFactory.createWriter(partitionId, taskId),
+    new SnapshotDeltaTaskWriter(
+      uFactory.map(_.createWriter(partitionId, taskId)),
       dFactory.createWriter(partitionId, taskId))
 }
 
 /** One task's delta writer over two replace-task writers: update/insert
-  * rows go op-coded into `uWriter`, and each doomed row's ID goes into
-  * `dWriter`, which routes it by the OLD row's partition and keeps the
-  * key column.
+  * rows go op-coded into `uWriter` (absent for a DELETE), and each
+  * doomed row's ID goes into `dWriter`, which routes it by the OLD
+  * row's partition and keeps the key column.
   */
 private[sources] final class SnapshotDeltaTaskWriter(
-    uWriter: DataWriter[InternalRow],
+    uWriter: Option[DataWriter[InternalRow]],
     dWriter: DataWriter[InternalRow]) extends DeltaWriter[InternalRow] {
 
   private val opRow = new GenericInternalRow(1)
@@ -231,19 +227,20 @@ private[sources] final class SnapshotDeltaTaskWriter(
   override def update(metadata: InternalRow, id: InternalRow,
                       row: InternalRow): Unit = {
     dWriter.write(id)
-    uWriter.write(coded(RowDeltaUtils.UPDATE_OPERATION, row))
+    uWriter.get.write(coded(RowDeltaUtils.UPDATE_OPERATION, row))
   }
 
   override def insert(row: InternalRow): Unit =
-    uWriter.write(coded(RowDeltaUtils.INSERT_OPERATION, row))
+    uWriter.get.write(coded(RowDeltaUtils.INSERT_OPERATION, row))
 
   override def commit(): WriterCommitMessage = SnapshotDeltaCommit(
-    upserts = uWriter.commit().asInstanceOf[SnapshotReplaceCommit],
+    upserts = uWriter.fold(SnapshotReplaceCommit(Nil, Nil))(
+      _.commit().asInstanceOf[SnapshotReplaceCommit]),
     deletes = dWriter.commit().asInstanceOf[SnapshotReplaceCommit])
 
   override def abort(): Unit = {
     dWriter.abort()
-    uWriter.abort()
+    uWriter.foreach(_.abort())
   }
 
   override def close(): Unit = ()

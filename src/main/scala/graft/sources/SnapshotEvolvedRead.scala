@@ -220,7 +220,8 @@ final class SnapshotEvolvedV2Table(
 
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    meta.mergeOnRead && filters.forall(SnapshotDml.translatable)
+    meta.mergeOnRead && filters.forall(
+      SnapshotDml.translatable(_, schema().fieldNames.toSet))
 
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
@@ -267,7 +268,7 @@ private[sources] final class SnapshotEvolvedScanBuilder(
     val recs = SnapshotManifest.deleteRecords(root, version)
     if (recs.isEmpty) None
     else {
-      val keyCol = SnapshotMeta.read(root).flatMap(_.keyCol).getOrElse(
+      val keyCol = SnapshotMeta.read(root).keyCol.getOrElse(
         throw new IllegalStateException(
           s"$root carries #delete records but table.meta declares no " +
             "key_column"))
@@ -455,7 +456,7 @@ final class SnapshotEvolvedScan(
   /** Sum of the arms' estimates (each is the stock file-scan estimate
     * over that arm's pruned listing), so AQE and join planning see the
     * union's true post-pruning size — with a TRUE ROW COUNT from the
-    * version's file-stats sidecar when one exists (the stock estimate
+    * version's file-stats sidecar (the stock estimate
     * carries only bytes), summed over exactly the files each pruned
     * arm will read: the same cardinality wiring as the single-layout
     * door's [[SnapshotDppScan.estimateStatistics]].
@@ -464,21 +465,18 @@ final class SnapshotEvolvedScan(
     val ss = arms.map(_.scan.estimateStatistics())
     val prunedEntries: Option[Seq[SnapshotFiles.FileEntry]] =
       statsSource.flatMap { case (root, version) =>
-        SnapshotFiles.read(root, version).flatMap { fm =>
-          val byKey = fm.valuesIterator.flatten
-            .map(e => SnapshotBloom.fileKey(e.path) -> e).toMap
-          // sidecar-unknown files fall back to the delegate estimate —
-          // defaulting them to 0 rows under-reports numRows and can
-          // flip join planning ([[SnapshotDppScan.estimateStatistics]])
-          val entries = arms.iterator.flatMap { a =>
-            a.scan.fileIndex
-              .listFiles(a.scan.partitionFilters, a.scan.dataFilters)
-              .iterator.flatMap(_.files).map(st =>
-                byKey.get(SnapshotBloom.fileKey(st.getPath.toString)))
-          }.toSeq
-          if (entries.forall(_.isDefined)) Some(entries.flatten)
-          else None
-        }
+        val byKey = SnapshotFiles.read(root, version).valuesIterator.flatten
+          .map(e => SnapshotBloom.fileKey(e.path) -> e).toMap
+        // sidecar-unknown files fall back to the delegate estimate —
+        // defaulting them to 0 rows under-reports numRows and can
+        // flip join planning ([[SnapshotDppScan.estimateStatistics]])
+        val entries = arms.iterator.flatMap { a =>
+          a.scan.fileIndex
+            .listFiles(a.scan.partitionFilters, a.scan.dataFilters)
+            .iterator.flatMap(_.files).map(st =>
+              byKey.get(SnapshotBloom.fileKey(st.getPath.toString)))
+        }.toSeq
+        Option.when(entries.forall(_.isDefined))(entries.flatten)
       }
     new Statistics {
       override def sizeInBytes(): OptionalLong =

@@ -459,11 +459,12 @@ final class SnapshotReplaceWrite(
       val newEntries: Map[String, String] = commits.flatMap(_.pvDirs)
         .toMap // dir per pv is deterministic, duplicates collapse
       val replaced = op.replacedGroups()
-      val parent = SnapshotManifest.read(root, version)
+      lazy val parentFiles = SnapshotFiles.read(root, version)
       // rows MOVED into a partition outside the replaced set: its
       // existing files must survive — link them into the new dir
-      // (write-once files, safe sharing; copy fallback)
-      val links = newEntries.toSeq.flatMap { case (pv, dir) =>
+      // (write-once files, safe sharing; copy fallback), each carrying
+      // its parent sidecar entry re-pathed to the link
+      val carried = newEntries.toSeq.flatMap { case (pv, dir) =>
         // rows may not MOVE into a partition carrying live
         // merge-on-read delete records: the old files link in
         // verbatim but the records drop with the dir change, and a
@@ -476,45 +477,25 @@ final class SnapshotReplaceWrite(
               "merge-on-read delete records — materialize them with " +
               "CALL snap.compact first")
         if (replaced.contains(pv)) Nil
-        else parent.get(pv).toSeq.flatMap { oldDir =>
-          SnapshotFiles.listDataFiles(
-            spark.sparkContext.hadoopConfiguration, oldDir)
-            .toSeq.map { st =>
-              val src = java.nio.file.Paths.get(
-                st.getPath.toUri.getPath)
-              // carry- prefix + fresh uuid: the receiving dir may hold
-              // same-named files from an earlier session's row-level
-              // write (task ids restart per application), and a name
-              // collision would fail the whole statement
-              val dst = java.nio.file.Paths.get(dir).resolve(
-                s"carry-${java.util.UUID.randomUUID.toString.take(8)}-" +
-                  src.getFileName)
-              try JFiles.createLink(dst, src)
-              catch {
-                case _: UnsupportedOperationException =>
-                  JFiles.copy(src, dst)
-              }
-              (pv, src, dst)
-            }
+        else parentFiles.getOrElse(pv, Nil).map { e =>
+          val src = java.nio.file.Paths.get(e.path)
+          // carry- prefix + fresh uuid: the receiving dir may hold
+          // same-named files from an earlier session's row-level
+          // write (task ids restart per application), and a name
+          // collision would fail the whole statement
+          val dst = java.nio.file.Paths.get(dir).resolve(
+            s"carry-${java.util.UUID.randomUUID.toString.take(8)}-" +
+              src.getFileName)
+          try JFiles.createLink(dst, src)
+          catch {
+            case _: UnsupportedOperationException =>
+              JFiles.copy(src, dst)
+          }
+          e.copy(path = dst.toAbsolutePath.toString)
         }
       }
-      // a carried file's stats entry is its source file's, from the
-      // parent sidecar, re-pathed to the link (the clone rule of
-      // SnapshotFiles.copy); no parent sidecar, or no entry for a
-      // source file, publishes no sidecar for this version
-      val carried: Option[Seq[SnapshotFiles.FileEntry]] =
-        if (links.isEmpty) Some(Nil)
-        else SnapshotFiles.read(root, version).flatMap { fm =>
-          val found = links.flatMap { case (pv, src, dst) =>
-            fm.getOrElse(pv, Nil)
-              .find(e => java.nio.file.Paths.get(e.path).getFileName ==
-                src.getFileName)
-              .map(_.copy(path = dst.toAbsolutePath.toString))
-          }
-          Option.when(found.size == links.size)(found)
-        }
       SnapshotTxn.snapshotReplacePartitions(root, version, replaced,
-        newEntries, carried.map(commits.flatMap(_.files) ++ _))
+        newEntries, commits.flatMap(_.files) ++ carried)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -763,7 +744,7 @@ final class SnapshotOverwriteWrite(
           SnapshotRowLevel.matchingPvs(exprs, ps, manifest.keySet)
       }
       SnapshotTxn.snapshotReplacePartitions(root, version, replaced,
-        newEntries, Some(commits.flatMap(_.files)))
+        newEntries, commits.flatMap(_.files))
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =

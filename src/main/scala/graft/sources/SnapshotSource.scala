@@ -37,7 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * the manifest's atomic link(2) publish, so a micro-batch and its
   * exactly-once bookkeeping are one atomic unit (the Delta
   * txn-action shape; a sidecar written after the publish would leave
-  * a crash window where a replayed batch double-commits).
+  * a crash window where a replayed batch double-commits). Every
+  * manifest also names its version's stats sidecar in a
+  * `#files\t<name>` record ([[SnapshotFiles]]), written before the
+  * link.
   */
 object SnapshotManifest {
   /** Every published version with its manifest's mtime — the atomic
@@ -74,8 +77,8 @@ object SnapshotManifest {
 
   /** Resolve one stored dir/file path against its manifest root:
     * RELATIVE entries (round 13+ — what makes a table root one movable
-    * unit) resolve and normalize; absolute entries (legacy stores,
-    * cross-root references) pass through.
+    * unit) resolve and normalize; absolute entries (cross-root
+    * references) pass through.
     */
   private[graft] def resolvePath(root: JPath, p: String): String =
     if (p.startsWith("/")) p
@@ -391,74 +394,6 @@ object SnapshotManifest {
     specs.find(_.length == arity)
   }
 
-  /** RENAME-TABLE migration for LEGACY metadata: stores written before
-    * the relative-path era carry ABSOLUTE dir/file paths in their
-    * manifests and `v<N>.files` sidecars — after the root moves, those
-    * would dangle. One sweep over the moved root (and its branch
-    * mini-stores) rewrites any path that pointed under the OLD root to
-    * the relative form the writers now produce, preserving each
-    * file's mtime (the manifest link's mtime IS the commit instant
-    * `TIMESTAMP AS OF` and `CALL history` resolve against). Stores
-    * written relative need zero rewrites — the sweep is read-only for
-    * them.
-    */
-  def migrateAbsolutePaths(oldRootAbs: String, newRoot: JPath): Unit = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val oldPrefix = oldRootAbs.stripSuffix("/") + "/"
-    val newRootN = newRoot.toAbsolutePath.normalize
-    def remap(miniRoot: JPath, p: String): String =
-      if (!p.startsWith(oldPrefix)) p
-      else relativizePath(miniRoot,
-        newRootN.resolve(p.stripPrefix(oldPrefix)).toString)
-    def rewrite(f: java.io.File, transform: String => String): Unit = {
-      val lines = JFiles.readAllLines(f.toPath).asScala.toSeq
-      val out = lines.map(transform)
-      if (out != lines) {
-        val mtime = f.lastModified()
-        val tmp = f.toPath.resolveSibling(
-          s".${f.getName}.mig.${java.util.UUID.randomUUID.toString.take(8)}")
-        JFiles.write(tmp, out.asJava)
-        JFiles.move(tmp, f.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        f.setLastModified(mtime)
-      }
-    }
-    def sweep(miniRoot: JPath): Unit = {
-      val mdir = miniRoot.resolve("manifests").toFile
-      Option(mdir.listFiles()).getOrElse(Array.empty).foreach { f =>
-        if (f.getName.matches("v\\d+\\.manifest"))
-          rewrite(f, l =>
-            if (l.startsWith("#")) l
-            else {
-              val i = l.lastIndexOf('\t')
-              l.substring(0, i + 1) + remap(miniRoot, l.substring(i + 1))
-            })
-        else if (f.getName.matches("v\\d+\\.files"))
-          rewrite(f, l =>
-            if (l.isEmpty) l
-            else JsonMethods.parse(l) match {
-              // TOP-LEVEL path field only: transformField would recurse
-              // into the stats map, where a data column named "path"
-              // would have its min/max bounds rewritten — corrupted
-              // stats are wrong skipping, not a cosmetic bug
-              case JObject(fields) => JsonMethods.compact(JObject(
-                fields.map {
-                  case ("path", JString(p)) =>
-                    ("path", JString(remap(miniRoot, p)))
-                  case other => other
-                }))
-              case other => JsonMethods.compact(other)
-            })
-      }
-    }
-    sweep(newRootN)
-    Option(SnapshotBranches.dir(newRootN).toFile.listFiles())
-      .getOrElse(Array.empty).filter(_.isDirectory)
-      .foreach(b => sweep(b.toPath))
-  }
-
   /** Every manifest's header lines, one pass — vacuum's record scan
     * (per-version [[headerLines]] would re-read all manifests per
     * version).
@@ -535,7 +470,7 @@ object SnapshotManifest {
     * — partition value → the key-delete parquet dirs that apply to
     * it, each with its doomed-key count `n` (so plan-time statistics
     * can report exact post-delete cardinality without opening the
-    * sidecars; `n = -1` when unknown). Manifests are SELF-CONTAINED
+    * sidecars). Manifests are SELF-CONTAINED
     * on this plane: every commit carries forward the parent records
     * still in force (same pv, same data dir —
     * [[SnapshotTxn.writeManifest]]), so a pinned
@@ -591,7 +526,7 @@ object SnapshotManifest {
     s"$tag\t$pv\t$n\t$dir"
 
   /** Shared `<pv>\t<n>\t<dir>` record parse for the two merge-on-read
-    * planes (`n = -1` for count-less legacy `#delete` lines).
+    * planes.
     */
   private def morRecordsWithCounts(root: JPath, version: Int, tag: String)
       : Map[String, Seq[(String, Long)]] =
@@ -600,10 +535,8 @@ object SnapshotManifest {
         val body = l.stripPrefix(tag)
         val i1 = body.indexOf('\t')
         val i2 = body.indexOf('\t', i1 + 1)
-        val (n, path) =
-          if (i2 < 0) (-1L, body.substring(i1 + 1)) // count-less legacy
-          else (body.substring(i1 + 1, i2).toLong, body.substring(i2 + 1))
-        body.substring(0, i1) -> (resolvePath(root, path), n)
+        body.substring(0, i1) -> (resolvePath(root, body.substring(i2 + 1)),
+          body.substring(i1 + 1, i2).toLong)
     }.groupMap(_._1)(_._2)
 
   def checkNamesEverSeen(root: JPath): Set[String] =
@@ -969,13 +902,12 @@ object SnapshotBranches {
       s"branch name must match [A-Za-z][A-Za-z0-9_.-]*: '$name'")
 
   def exists(tableRoot: JPath, name: String): Boolean =
-    JFiles.isDirectory(root(tableRoot, name).resolve("manifests"))
+    SnapshotManifest.head(root(tableRoot, name)) > 0
 
   /** Every branch and its fork-point version. */
   def list(tableRoot: JPath): Seq[(String, Int)] = {
     Option(dir(tableRoot).toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory &&
-        new java.io.File(f, "manifests").isDirectory)
+      .filter(f => f.isDirectory && SnapshotManifest.head(f.toPath) > 0)
       .flatMap(f => base(tableRoot, f.getName).map(f.getName -> _))
       .toSeq.sortBy(_._1)
   }
@@ -1027,9 +959,9 @@ object SnapshotBranches {
   *    data schema comes from the sidecar, not from opening a data file
   *    that doesn't exist.
   *
-  * Stores bootstrapped before this sidecar existed read exactly as
-  * they used to (single string partition column named by the caller,
-  * schema inferred from a data dir).
+  * A bootstrap writes it before its v1 manifest links
+  * ([[SnapshotTxn.Attempt.publish]]), so every published store has
+  * one.
   */
 object SnapshotMeta {
   /** `keyCol` is the store's upsert/delete key, recorded at bootstrap
@@ -1054,69 +986,79 @@ object SnapshotMeta {
 
   private def file(root: JPath): JPath = root.resolve("table.meta")
 
-  def write(root: JPath, m: Meta): Unit = {
+  private def json(m: Meta): Array[Byte] = {
     import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
-    val j = ("partitionSchema" -> m.partitionSchema.json) ~
-      ("dataSchema" -> m.dataSchema.json) ~
-      ("keyCol" -> m.keyCol) ~
-      ("deleteMode" -> m.deleteMode)
-    val tmp = root.resolve(
-      s".table.meta.tmp.${java.util.UUID.randomUUID.toString.take(8)}")
-    JFiles.write(tmp, JsonMethods.compact(JsonMethods.render(j)).getBytes("UTF-8"))
-    // racing bootstraps write identical content: atomic replace is
-    // idempotent here, unlike the manifest CAS (which arbitrates them)
+    JsonMethods.compact(JsonMethods.render(
+      ("partitionSchema" -> m.partitionSchema.json) ~
+        ("dataSchema" -> m.dataSchema.json) ~
+        ("keyCol" -> m.keyCol) ~
+        ("deleteMode" -> m.deleteMode))).getBytes("UTF-8")
+  }
+
+  private def tmpOf(root: JPath): JPath = root.resolve(
+    s".table.meta.tmp.${java.util.UUID.randomUUID.toString.take(8)}")
+
+  /** Replace `table.meta` — vacuum's fold of the effective schema. */
+  def write(root: JPath, m: Meta): Unit = {
+    val tmp = tmpOf(root)
+    JFiles.write(tmp, json(m))
     JFiles.move(tmp, file(root),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** The CREATE TABLE flavor: place `table.meta` only if the store has
-    * none — racing CREATEs declare potentially DIFFERENT schemas/keys,
-    * so last-writer-wins replace (fine for the write door's identical
-    * re-bootstraps) would let a losing CREATE silently clobber the
-    * winner's declaration. link(2) refuses on an existing target, the
-    * same primitive the manifest CAS arbitrates with.
+  /** The bootstrap flavor: place `table.meta` only if the store has
+    * none — racing bootstraps may declare DIFFERENT schemas/keys, so a
+    * last-writer-wins replace would let a losing one silently clobber
+    * the winner's declaration. link(2) refuses on an existing target
+    * (`FileAlreadyExistsException`), the same primitive the manifest
+    * CAS arbitrates with.
     */
   def writeIfAbsent(root: JPath, m: Meta): Unit = {
-    import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    val j = ("partitionSchema" -> m.partitionSchema.json) ~
-      ("dataSchema" -> m.dataSchema.json) ~
-      ("keyCol" -> m.keyCol) ~
-      ("deleteMode" -> m.deleteMode)
-    val tmp = root.resolve(
-      s".table.meta.tmp.${java.util.UUID.randomUUID.toString.take(8)}")
-    JFiles.write(tmp,
-      JsonMethods.compact(JsonMethods.render(j)).getBytes("UTF-8"))
+    val tmp = tmpOf(root)
+    JFiles.write(tmp, json(m))
     try JFiles.createLink(file(root), tmp)
     finally JFiles.deleteIfExists(tmp)
   }
 
-  def read(root: JPath): Option[Meta] = {
+  /** The store's declaration; a root without one throws
+    * [[SnapshotMissingFileException]] at its head version.
+    */
+  def read(root: JPath): Meta = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val f = file(root)
-    if (!JFiles.exists(f)) None
-    else {
-      val j = JsonMethods.parse(new String(JFiles.readAllBytes(f), "UTF-8"))
-      def struct(field: String): StructType = (j \ field) match {
-        case JString(s) => DataType.fromJson(s).asInstanceOf[StructType]
-        case other => throw new IllegalStateException(
-          s"table.meta: bad $field: $other")
-      }
-      def str(field: String): Option[String] = (j \ field) match {
-        case JString(s) => Some(s)
-        case _ => None
-      }
-      Some(Meta(struct("partitionSchema"), struct("dataSchema"),
-        str("keyCol"), str("deleteMode")))
+    if (!JFiles.exists(f)) throw new SnapshotMissingFileException(
+      root, SnapshotManifest.head(root), "table.meta")
+    val j = JsonMethods.parse(new String(JFiles.readAllBytes(f), "UTF-8"))
+    def struct(field: String): StructType = (j \ field) match {
+      case JString(s) => DataType.fromJson(s).asInstanceOf[StructType]
+      case other => throw new IllegalStateException(
+        s"table.meta: bad $field: $other")
     }
+    def str(field: String): Option[String] = (j \ field) match {
+      case JString(s) => Some(s)
+      case _ => None
+    }
+    Meta(struct("partitionSchema"), struct("dataSchema"),
+      str("keyCol"), str("deleteMode"))
   }
 }
 
-/** Per-version FILE manifest sidecar (`manifests/v<N>.files`, JSON
-  * lines): one row per data file — partition value, path, bytes, rows,
+/** A store file every published version carries is missing: its
+  * `table.meta` or the stats sidecar its manifest names. The commit
+  * plane writes both before the manifest link, so this is a store no
+  * commit wrote (or one damaged by hand) — refused, never guessed at.
+  */
+final class SnapshotMissingFileException(root: JPath, version: Int,
+    file: String) extends IllegalStateException(
+  s"$root v$version has no $file: a published version always carries " +
+    "table.meta and the stats sidecar its manifest names")
+
+/** Per-version FILE manifest sidecar (`manifests/v<N>-<hex>.files`,
+  * JSON lines, named by its manifest's `#files` header line): one row
+  * per data file — partition value, path, bytes, rows,
   * and per-column min/max for every stats-eligible column. This is the
   * Delta/Iceberg "commit the file list + column stats" shape:
   *
@@ -1125,21 +1067,19 @@ object SnapshotMeta {
   *    call ever runs on the read path (spec-pinned);
   *  - '''any-column range skipping''': a `col >= lit` / `col IN (...)`
   *    data filter drops files whose [min, max] cannot satisfy it
-  *    ([[StatsSkipping]]), beyond the single Bloom key;
-  *  - '''stats-free fallback''': a version without a sidecar (legacy
-  *    store, or a crash between manifest publish and sidecar write)
-  *    lists lazily per SURVIVING partition — never eagerly for the
-  *    whole table.
+  *    ([[StatsSkipping]]), beyond the single Bloom key.
   *
   * A commit never re-reads what it wrote: each new file's entry is
   * folded row by row inside the task that writes it ([[StatsFold]],
   * the combiner discipline), and returns to the driver with that
   * task's result. Entries for UNTOUCHED partitions are copied from the
   * parent version's sidecar, so sidecar maintenance is O(touched
-  * partitions), the same bound as the commit itself. The sidecar is
-  * written by the manifest-CAS WINNER only, after the manifest link: a
-  * reader racing that window falls back to lazy listing, which is
-  * sound.
+  * partitions), the same bound as the commit itself. Each attempt
+  * writes its sidecar under a name of its own BEFORE the manifest
+  * link, and the manifest names it, so the link publishes the file
+  * list and its stats as one unit: a version without its sidecar is
+  * never visible. A losing attempt's sidecar is deleted with its
+  * scratch dirs; vacuum sweeps any sidecar no manifest names.
   */
 object SnapshotFiles {
   /** Stats values are stored as Spark `CAST(x AS STRING)` text; min/max
@@ -1161,13 +1101,21 @@ object SnapshotFiles {
                              rows: Long, stats: Map[String, (String, String)],
                              ndv: Map[String, String] = Map.empty)
 
-  private def file(root: JPath, version: Int): JPath =
-    root.resolve("manifests").resolve(s"v$version.files")
+  /** The manifest header line naming a version's sidecar. */
+  val HeaderTag = "#files\t"
 
-  def exists(root: JPath, version: Int): Boolean =
-    JFiles.exists(file(root, version))
+  /** The sidecar name among one manifest's header lines. */
+  def named(headers: Seq[String]): Option[String] =
+    headers.collectFirst {
+      case l if l.startsWith(HeaderTag) => l.stripPrefix(HeaderTag)
+    }
 
-  def write(root: JPath, version: Int, entries: Seq[FileEntry]): Unit = {
+  /** Write `entries` as a new sidecar for `version` under a name no
+    * other attempt uses (`v<N>-<hex>.files`) and return that name for
+    * the manifest's `#files` line. Nothing reads it until a manifest
+    * names it, so a plain write is enough.
+    */
+  def write(root: JPath, version: Int, entries: Seq[FileEntry]): String = {
     import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
     // under-root file paths store RELATIVE, like the manifest's dirs
@@ -1186,42 +1134,31 @@ object SnapshotFiles {
       }
     val mdir = root.resolve("manifests")
     JFiles.createDirectories(mdir)
-    val tmp = mdir.resolve(
-      s"v$version.files.tmp.${java.util.UUID.randomUUID.toString.take(8)}")
-    JFiles.write(tmp, lines.asJava)
-    // only the manifest-CAS winner reaches this write; link-not-rename
-    // keeps a crash-retry from clobbering an already-published sidecar
-    try JFiles.createLink(file(root, version), tmp)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    finally JFiles.deleteIfExists(tmp)
+    val name =
+      s"v$version-${java.util.UUID.randomUUID.toString.take(8)}.files"
+    JFiles.write(mdir.resolve(name), lines.asJava)
+    name
   }
 
-  /** Publish `from`'s version `fromV` sidecar as `to`'s version `toV`
-    * one, each entry passed through `rewrite` — for the bootstraps of a
-    * new root whose files ARE that version's (branch fork) or hard
-    * links to them (clone). No source sidecar, no copy: readers fall
-    * back to listing.
+  /** partitionValue -> file entries of a published version; a
+    * manifest that names no sidecar, or names one that is gone,
+    * throws [[SnapshotMissingFileException]].
     */
-  def copy(from: JPath, fromV: Int, to: JPath, toV: Int,
-           rewrite: FileEntry => FileEntry = identity): Unit =
-    read(from, fromV).foreach(fm =>
-      write(to, toV, fm.toSeq.sortBy(_._1).flatMap(_._2).map(rewrite)))
-
-  /** partitionValue -> file entries, or None if the version predates
-    * file manifests (reader falls back to lazy listing).
-    */
-  def read(root: JPath, version: Int): Option[Map[String, Seq[FileEntry]]] = {
+  def read(root: JPath, version: Int): Map[String, Seq[FileEntry]] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val f = file(root, version)
-    if (!JFiles.exists(f)) None
-    else Some(JFiles.readAllLines(f).asScala.toSeq.filter(_.nonEmpty).map { l =>
+    val f = named(SnapshotManifest.headerLines(root, version))
+      .map(root.resolve("manifests").resolve(_))
+      .filter(JFiles.exists(_))
+      .getOrElse(throw new SnapshotMissingFileException(
+        root, version, "stats sidecar"))
+    JFiles.readAllLines(f).asScala.toSeq.filter(_.nonEmpty).map { l =>
       val j = JsonMethods.parse(l)
       def str(k: String) = (j \ k).asInstanceOf[JString].s
       def lng(k: String) = (j \ k) match {
         case JInt(v) => v.toLong
         case JLong(v) => v
-        case other => throw new IllegalStateException(s"v$version.files: $other")
+        case other => throw new IllegalStateException(s"${f.getFileName}: $other")
       }
       val stats = (j \ "stats") match {
         case JObject(fields) => fields.collect {
@@ -1237,7 +1174,7 @@ object SnapshotFiles {
       }
       FileEntry(str("pv"), SnapshotManifest.resolvePath(root, str("path")),
         lng("bytes"), lng("rows"), stats, ndv)
-    }.groupBy(_.pv))
+    }.groupBy(_.pv)
   }
 
   /** Nominal `FileStatus` for a sidecar entry — shared by BOTH read
@@ -1250,7 +1187,8 @@ object SnapshotFiles {
     new FileStatus(e.bytes, false, 1, 128L << 20, 0L, new Path(e.path))
 
   /** One real dir listing with the shared hidden-file rule (skip
-    * `_SUCCESS`/dotfiles) — the legacy-store fallback of both doors.
+    * `_SUCCESS`/dotfiles): [[requireExact]]'s check of a write and the
+    * live listing of `#upsert` delta dirs.
     */
   def listDataFiles(conf: org.apache.hadoop.conf.Configuration,
                     dir: String): Array[FileStatus] = {
@@ -1424,14 +1362,14 @@ object SnapshotFiles {
     }
   }
 
-  /** The RETROFIT profile, behind `CALL snap.compute_stats` for files
-    * no commit wrote (legacy and sidecar-less stores): one distributed
+  /** The reference profile of already-written files: one distributed
     * pass over `dirsByPart`'s data dirs -> per-file (bytes, rows,
     * min/max and NDV sketch per stats column). Grouped on
     * `_metadata.file_path`, so cost is a map-side-combined aggregate
     * over exactly the given dirs; the collected result is O(files)
     * driver metadata, the manifest's own class. [[StatsFold]] computes
-    * the same entry at write time.
+    * the same entry at write time; `WriteTimeStatsSpec` rebuilds every
+    * commit path's sidecar with this and requires equality.
     */
   def collect(s: SparkSession, dirsByPart: Seq[(String, String)],
               schema: StructType): Seq[FileEntry] = {
@@ -1680,8 +1618,8 @@ object SnapshotBloom {
     * index), an overwrite REBUILD re-claims the marker (the explicit
     * re-key spelling), and a reader whose `bloomKey` disagrees with
     * the marker gets no skipping (sound) instead of wrong skipping.
-    * A markerless index (pre-marker build) is claimed by the next
-    * build and accepted by readers — the historical contract.
+    * A markerless index (a build that crashed before its marker) is
+    * claimed by the next build and skips nothing until then.
     */
   private def markerPath(out: String): java.nio.file.Path =
     java.nio.file.Paths.get(out + ".key")
@@ -1749,7 +1687,7 @@ object SnapshotBloom {
       .write.mode(if (append) "append" else "overwrite").parquet(out)
     // claim/refresh the column marker AFTER the rows land: a crashed
     // build leaves either the old marker (old rows intact on append)
-    // or no marker at all (legacy contract), never a marker promising
+    // or no marker at all (no skipping), never a marker promising
     // rows that don't exist
     writeMarker(out, keyCol)
   }
@@ -1875,12 +1813,9 @@ object SnapshotPartitionValues {
   *     query's partition filters and evaluates them against each
   *     manifest entry's (typed, possibly multi-column) partition value
   *     — a pruned month's dir is never listed, let alone scanned.
-  *   - '''Zero-listing planning''': when the version has a
-  *     [[SnapshotFiles]] sidecar (every store committed through the
-  *     current write paths), the file listing, sizes, and stats all
-  *     come from the manifest plane — no `listStatus` ever runs.
-  *     Without a sidecar, listing is LAZY and PRUNED: only partitions
-  *     surviving the filters are listed, each at most once.
+  *   - '''Zero-listing planning''': the file listing, sizes, and
+  *     stats all come from the version's [[SnapshotFiles]] sidecar —
+  *     no `listStatus` runs on the base plane.
   *   - '''Min/max range skipping''' ([[StatsSkipping]]) and '''Bloom
   *     file skipping''' ([[SnapshotBloom]]) on the data filters, both
   *     inside the same planning call.
@@ -1922,19 +1857,13 @@ final class SnapshotFileIndex(
     onlyPvs.map(keep => full.filter(e => keep(e._1))).getOrElse(full)
   }
 
-  /** File-manifest sidecar: partitionValue -> entries (None = legacy
-    * version, fall back to lazy listing).
-    */
-  private val sidecar: Option[Map[String, Seq[SnapshotFiles.FileEntry]]] =
+  /** File-manifest sidecar: partitionValue -> entries. */
+  private val entriesOf: Map[String, Seq[SnapshotFiles.FileEntry]] =
     SnapshotFiles.read(root, version)
 
   // ---- observability hooks for specs -------------------------------
   /** (partitions, files) the last `listFiles` call served to the scan. */
   @volatile var lastListing: (Int, Int) = (-1, -1)
-  /** `fs.listStatus` calls made over this index's lifetime — must stay
-    * 0 with a sidecar, == surviving partitions without one.
-    */
-  @volatile var fsListCalls: Int = 0
   /** Bloom bitsets materialized on the driver over this index's
     * lifetime — must stay <= files surviving partition pruning.
     */
@@ -1945,24 +1874,12 @@ final class SnapshotFileIndex(
   private def partRow(pv: String): InternalRow =
     SnapshotPartitionValues.row(pv, partitionSchema)
 
-  private lazy val entriesOf: Map[String, Seq[SnapshotFiles.FileEntry]] =
-    sidecar.getOrElse(Map.empty)
-
-  /** Listed statuses for one partition: sidecar-served (no FS call) or
-    * lazily listed once. Block size is nominal — the local-FS split
-    * logic uses `maxPartitionBytes`, not block boundaries.
+  /** Statuses for one partition, served from the sidecar (no FS
+    * call). Block size is nominal — the local-FS split logic uses
+    * `maxPartitionBytes`, not block boundaries.
     */
-  private def statusesOf(pv: String): Array[FileStatus] = sidecar match {
-    case Some(fm) => fm.getOrElse(pv, Nil).map(SnapshotFiles.status).toArray
-    case None => listedCache.getOrElseUpdate(pv, {
-      if (!manifest.contains(pv)) Array.empty // upsert-delta-only pv
-      else {
-        fsListCalls += 1
-        SnapshotFiles.listDataFiles(
-          spark.sparkContext.hadoopConfiguration, manifest(pv))
-      }
-    })
-  }
+  private def statusesOf(pv: String): Array[FileStatus] =
+    entriesOf.getOrElse(pv, Nil).map(SnapshotFiles.status).toArray
 
   /** `#upsert` delta files of one pv — always listed live (never in
     * the sidecar), cached per index instance like the base listing.
@@ -1984,10 +1901,10 @@ final class SnapshotFileIndex(
     // back to no skipping, which is sound, instead of crashing the scan
     if (!JFiles.exists(p)) None
     // column-identity check: probing column-A hashes against
-    // column-B bitsets would SKIP files containing matching rows —
-    // a marker mismatch degrades to no skipping (sound), and a
-    // markerless legacy index keeps the historical accept
-    else if (SnapshotBloom.indexedColumn(p.toString).exists(_ != k)) None
+    // column-B bitsets would SKIP files containing matching rows — a
+    // marker mismatch or a missing marker degrades to no skipping
+    // (sound)
+    else if (!SnapshotBloom.indexedColumn(p.toString).contains(k)) None
     else Some(p.toString)
   }
 
@@ -2022,8 +1939,7 @@ final class SnapshotFileIndex(
       SnapshotTransforms.translateFilters(dataFilters, partitionSchema))
     val candidateKeys = bloomCandidateKeys(dataFilters)
     val statsKeep: Option[StatsSkipping.Stats => Boolean] =
-      if (sidecar.isEmpty) None
-      else StatsSkipping.compile(dataFilters, dataSchema)
+      StatsSkipping.compile(dataFilters, dataSchema)
     // stage 1 — statuses materialized ONCE per partition, min/max stats
     // applied first (cheap driver-side predicate over sidecar rows)
     val afterStats: Seq[(String, Array[(FileStatus, String)])] =
@@ -2131,67 +2047,39 @@ final class SnapshotFileIndex(
 
   override def refresh(): Unit = () // snapshot versions are immutable
 
-  /** Total bytes of the version. With a sidecar this is pure metadata;
-    * a LEGACY store must list every partition here — `sizeInBytes` is
-    * by definition a whole-table quantity (the planner asks for it
-    * when sizing joins), so the lazy-listing contract is scoped to
-    * `listFiles`. Sidecar-backed stores (every current write path)
-    * never pay this.
+  /** Total bytes of the version: sidecar metadata plus the listed
+    * `#upsert` delta dirs.
     */
-  override def sizeInBytes: Long = {
-    val deltaBytes = upserts.keys.toSeq.sorted.iterator
-      .flatMap(upsertStatusesOf(_)).map(_.getLen).sum
-    deltaBytes + (sidecar match {
-      case Some(fm) => fm.valuesIterator.flatten.map(_.bytes).sum
-      case None =>
-        manifest.keys.toSeq.sorted.iterator
-          .flatMap(statusesOf(_)).map(_.getLen).sum
-    })
-  }
+  override def sizeInBytes: Long =
+    upserts.keys.toSeq.sorted.iterator
+      .flatMap(upsertStatusesOf(_)).map(_.getLen).sum +
+      entriesOf.valuesIterator.flatten.map(_.bytes).sum
 }
 
 /** User-facing constructors for snapshot-version DataFrames backed by
   * [[SnapshotFileIndex]].
   */
 object SnapshotTable {
-  /** Resolved (partitionSchema, dataSchema) for a store: the
-    * [[SnapshotMeta]] sidecar when present; else the legacy layout —
-    * one string partition column named by the caller, data schema
-    * inferred from the version's first data dir.
+  /** Resolved (partitionSchema, dataSchema) for a store from its
+    * [[SnapshotMeta]] with latest-schema semantics: a widening
+    * commit's `#schema` manifest record supersedes the bootstrap meta
+    * for EVERY version read (old files fill the new columns with
+    * NULL), later `#rename` records map on top (old files serve the
+    * renamed column through the coalesce fold), and the partition
+    * schema is the CURRENT spec — single-relation reads only ever
+    * serve versions whose entries all sit under it.
     */
-  private def schemas(s: SparkSession, root: JPath, version: Int,
-                      partitionCol: String): (StructType, StructType) =
-    SnapshotMeta.read(root) match {
-      case Some(m) =>
-        // latest-schema semantics: a widening commit's `#schema`
-        // manifest record supersedes the bootstrap meta for EVERY
-        // version read (old files fill the new columns with NULL),
-        // later `#rename` records map on top (old files serve the
-        // renamed column through the coalesce fold), and the partition
-        // schema is the CURRENT spec — single-relation reads only ever
-        // serve versions whose entries all sit under it
-        (SnapshotManifest.partitionSpecs(root, m.partitionSchema).last,
-          SnapshotManifest.effectiveDataSchema(root, m.dataSchema))
-      case None =>
-        val dataDir = SnapshotManifest.read(root, version)
-          .values.toSeq.sorted.headOption
-          .getOrElse(throw new IllegalArgumentException(
-            s"snapshot v$version of $root has no partitions and no " +
-              "table.meta sidecar to supply a schema"))
-        (StructType(Seq(StructField(partitionCol, StringType, nullable = true))),
-          graft.core.Tables.schemaOf(s, dataDir))
-    }
+  private def schemas(root: JPath): (StructType, StructType) = {
+    val m = SnapshotMeta.read(root)
+    (SnapshotManifest.partitionSpecs(root, m.partitionSchema).last,
+      SnapshotManifest.effectiveDataSchema(root, m.dataSchema))
+  }
 
-  /** The relation (also used by the `graft-snapshot` format). */
   /** Partition specs of a store (bootstrap spec + `#partspec`
     * records); a single-element result means no spec evolution.
     */
   private def specsOf(root: JPath): Seq[StructType] =
-    SnapshotMeta.read(root) match {
-      case Some(m) =>
-        SnapshotManifest.partitionSpecs(root, m.partitionSchema)
-      case None => Seq.empty
-    }
+    SnapshotManifest.partitionSpecs(root, SnapshotMeta.read(root).partitionSchema)
 
   /** True when the VERSION's manifest holds entries not laid out under
     * the current spec — the condition that actually needs the
@@ -2204,9 +2092,9 @@ object SnapshotTable {
       .keys.exists(_.split("/", -1).length != specs.last.length)
   }
 
+  /** The relation (also used by the `graft-snapshot` format). */
   def relation(s: SparkSession, root: JPath, version: Int,
-               bloomKey: Option[String] = None,
-               partitionCol: String = "o_ym_p"): HadoopFsRelation = {
+               bloomKey: Option[String] = None): HadoopFsRelation = {
     // a version spanning TWO layouts can't be one HadoopFsRelation:
     // one partition schema, and serving the appended mirror as NULL
     // for old-spec files would break pruning exactness (partition-only
@@ -2218,7 +2106,7 @@ object SnapshotTable {
       s"$root version $version spans two partition layouts: read it " +
         "through SnapshotTable.read (the union-of-specs door), or " +
         "converge it with CALL migrate_layout")
-    val (partSchema, dataSchema) = schemas(s, root, version, partitionCol)
+    val (partSchema, dataSchema) = schemas(root)
     val index = new SnapshotFileIndex(s, root, version, partSchema,
       dataSchema, bloomKey)
     // rename history swaps in the name-mapping format; live
@@ -2229,7 +2117,7 @@ object SnapshotTable {
     val deleteRecs = SnapshotManifest.deleteRecords(root, version)
     val fmt =
       if (deleteRecs.nonEmpty) {
-        val keyCol = SnapshotMeta.read(root).flatMap(_.keyCol).getOrElse(
+        val keyCol = SnapshotMeta.read(root).keyCol.getOrElse(
           throw new IllegalStateException(
             s"$root carries #delete records but table.meta declares " +
               "no key_column"))
@@ -2246,8 +2134,7 @@ object SnapshotTable {
   }
 
   def read(s: SparkSession, root: JPath, version: Int,
-           bloomKey: Option[String] = None,
-           partitionCol: String = "o_ym_p"): DataFrame =
+           bloomKey: Option[String] = None): DataFrame =
     // the relation's format applies the merge-on-read anti-filter
     // itself; the evolved (union-of-specs) door never serves record-
     // bearing versions (the MoR door refuses evolved stores and
@@ -2255,7 +2142,7 @@ object SnapshotTable {
     if (!hasOldSpecEntries(root, version))
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .baseRelationToDataFrame(
-          relation(s, root, version, bloomKey, partitionCol))
+          relation(s, root, version, bloomKey))
     else readEvolved(s, root, version, bloomKey, specsOf(root))
 
   /** The union-of-specs read for a partition-spec-evolved store: one
@@ -2272,7 +2159,7 @@ object SnapshotTable {
     */
   private def readEvolved(s: SparkSession, root: JPath, version: Int,
       bloomKey: Option[String], specs: Seq[StructType]): DataFrame = {
-    val m = SnapshotMeta.read(root).get
+    val m = SnapshotMeta.read(root)
     val dataSchema = SnapshotManifest.effectiveDataSchema(root, m.dataSchema)
     val chains = SnapshotRename.chainsFor(root, dataSchema)
     val fmt =
@@ -2309,7 +2196,7 @@ object SnapshotTable {
     val recs = SnapshotManifest.deleteRecords(root, version)
     if (recs.isEmpty) out
     else SnapshotDeletes.antiJoin(s, out,
-      SnapshotMeta.read(root).flatMap(_.keyCol).getOrElse(
+      m.keyCol.getOrElse(
         throw new IllegalStateException(
           s"$root carries #delete records but table.meta declares " +
             "no key_column")),
@@ -2429,9 +2316,7 @@ object SnapshotChangefeedSource {
   *
   * Read: `spark.read.format("graft-snapshot").option("version", 2)
   * .option("bloomKey", "o_orderkey").load(root)`. Options: `version`
-  * (default: head), `bloomKey` (default: none), `partitionCol`
-  * (legacy stores only — ignored when `table.meta` exists; default
-  * `o_ym_p`).
+  * (default: head) and `bloomKey` (default: none).
   *
   * Write: `df.write.format("graft-snapshot").mode("append")
   * .option("commitMode", "upsert" | "delete").save(root)` — the frame
@@ -2480,7 +2365,7 @@ final class SnapshotSourceProvider extends RelationProvider
       // never a fixed default (a foreign store's changefeed would
       // silently diff on a column that isn't its key)
       opt(parameters, "keyCol")
-        .orElse(SnapshotMeta.read(root).flatMap(_.keyCol))
+        .orElse(SnapshotMeta.read(root).keyCol)
         .getOrElse(throw new IllegalArgumentException(
           s"changefeed on $root needs a keyCol option: the store's " +
             "table.meta declares no key_column to diff on")),
@@ -2493,8 +2378,7 @@ final class SnapshotSourceProvider extends RelationProvider
     val version = opt(parameters, "version").map(_.toInt)
       .getOrElse(SnapshotManifest.head(root))
     SnapshotTable.relation(ctx.sparkSession, root, version,
-      opt(parameters, "bloomKey"),
-      opt(parameters, "partitionCol").getOrElse("o_ym_p"))
+      opt(parameters, "bloomKey"))
   }
 
   override def createRelation(ctx: SQLContext,
@@ -2510,9 +2394,8 @@ final class SnapshotSourceProvider extends RelationProvider
     // schema-only stub instead of refusing a WRITE that already
     // committed; reads resolve through SnapshotTable.read
     val root = SnapshotDoor.resolveRoot(parameters)
-    val multiSpec = SnapshotMeta.read(root).exists(m =>
-      SnapshotManifest.partitionSpecs(root, m.partitionSchema)
-        .lengthCompare(1) > 0)
+    val multiSpec = SnapshotManifest.partitionSpecs(root,
+      SnapshotMeta.read(root).partitionSchema).lengthCompare(1) > 0
     if (!multiSpec) createRelation(ctx, parameters)
     else new BaseRelation {
       override def sqlContext: SQLContext = ctx
@@ -2570,8 +2453,10 @@ private[sources] object SnapshotDoor {
     // declared at bootstrap. No literal default — a commit that can't
     // name its upsert/delete key must refuse, not bind to a fixed
     // column name that may exist without being the key.
+    val bootstrapped = SnapshotManifest.head(root) > 0
     val keyCol = opt(parameters, "keyCol")
-      .orElse(SnapshotMeta.read(root).flatMap(_.keyCol))
+      .orElse(Option.when(bootstrapped)(SnapshotMeta.read(root).keyCol)
+        .flatten)
       .getOrElse(throw new IllegalArgumentException(
         s"graft-snapshot commit to $root needs a keyCol option: the " +
           "store declares no key_column in table.meta (or is being " +
@@ -2598,7 +2483,7 @@ private[sources] object SnapshotDoor {
     // the delta counts violations of every live check — ANSI
     // semantics, a row passes on TRUE or NULL, fails only on FALSE.
     // Delete deltas are key lists, not rows entering the table.
-    if (insert && java.nio.file.Files.isDirectory(root.resolve("manifests"))) {
+    if (insert && bootstrapped) {
       val checks = SnapshotManifest.effectiveChecks(root)
       if (checks.nonEmpty) {
         import org.apache.spark.sql.functions.{coalesce, count, expr, lit, when, not}
@@ -2620,8 +2505,7 @@ private[sources] object SnapshotDoor {
     // the doomed rows are the head rows whose key the delta names
     // (broadcast semi-join; phantom keys doom nothing), committed at
     // O(delta) with zero partition rewrites. CAS retry lives inside.
-    if (!insert && SnapshotManifest.head(root) > 0 &&
-        SnapshotMeta.read(root).exists(_.mergeOnRead)) {
+    if (!insert && bootstrapped && SnapshotMeta.read(root).mergeOnRead) {
       import org.apache.spark.sql.functions.{broadcast, col}
       val keys = data.select(col(keyCol)).distinct()
       SnapshotTxn.snapshotMorDeleteBy(spark, root,
@@ -2638,8 +2522,7 @@ private[sources] object SnapshotDoor {
     // (records drop with rewrites), so the trade is chosen per
     // writer, not silently.
     if (mode == "upsert-mor") {
-      require(SnapshotManifest.head(root) > 0 &&
-          SnapshotMeta.read(root).exists(_.mergeOnRead),
+      require(bootstrapped && SnapshotMeta.read(root).mergeOnRead,
         "commitMode=upsert-mor needs a bootstrapped " +
           "delete_mode='merge-on-read' store")
       SnapshotTxn.snapshotMorUpsert(spark, root,
@@ -2665,7 +2548,7 @@ private[sources] object SnapshotDoor {
           partCols, bloomIndexKey, txn, keyCol, distribute)
       else
         SnapshotTxn.snapshotCommit(spark, root, a.head,
-          a.version, data, insert, keyCol, partCols, bloomIndexKey, txn,
+          a.version, data, insert, keyCol, bloomIndexKey, txn,
           distribute)
     }
   }

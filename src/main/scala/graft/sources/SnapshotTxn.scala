@@ -116,7 +116,7 @@ object SnapshotTxn {
     * commit with no error). Of N racers publishing the same version,
     * exactly one link succeeds; the rest get
     * [[SnapshotConflictException]] ([[commit]] reclaims their scratch
-    * dirs).
+    * dirs). [[Attempt.publish]] is its one caller.
     */
   private[graft] def writeManifest(root: Path, version: Int,
                                        entries: Map[String, String],
@@ -206,12 +206,12 @@ object SnapshotTxn {
     */
   private[graft] val MaxAttempts = 5
 
-  /** One try of a [[commit]]: it rebases on `head`, aims at `version`,
-    * writes under its [[scratch]] dirs and ends in [[publish]].
+  /** One try of a [[commit]]: it rebases on `head`, aims at `version`
+    * (`head + 1`, or the version a new root bootstraps at), writes
+    * under its [[scratch]] dirs and ends in [[publish]].
     */
   private[graft] final class Attempt private[SnapshotTxn] (
-      val root: Path, val head: Int) {
-    val version: Int = head + 1
+      val root: Path, val head: Int, val version: Int) {
     private var dirs: List[Path] = Nil
     private[SnapshotTxn] var linked = false
 
@@ -219,51 +219,76 @@ object SnapshotTxn {
       * (two racers must never interleave files in one dir), deleted
       * if this attempt loses the link.
       */
-    def scratch(plane: String = "d", tag: String = ""): Path = {
-      val p = root.resolve(
-        s"$plane$version-$tag${java.util.UUID.randomUUID.toString.take(8)}")
-      dirs ::= p
-      p
+    def scratch(plane: String = "d", tag: String = ""): Path =
+      claim(root.resolve(
+        s"$plane$version-$tag${java.util.UUID.randomUUID.toString.take(8)}"))
+
+    /** Make `dir` one of this attempt's scratch paths: its sidecar,
+      * or a dir written for it before it started (a task-written
+      * merge-on-read delta).
+      */
+    def claim(dir: Path): Path = {
+      dirs ::= dir
+      dir
     }
 
     private[SnapshotTxn] def dropScratch(): Unit =
       dirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
 
-    /** Publish `version`: the manifest link (the CAS), then the
-      * [[SnapshotFiles]] sidecar — the `fresh` entries, folded at
-      * write time by the tasks that wrote the files, for every file of
-      * the partitions they name, and entries copied from the parent's
+    /** Publish `version` as one unit: a bootstrap's `meta` and the
+      * [[SnapshotFiles]] sidecar are written first, and the manifest
+      * link (the CAS) that names the sidecar makes all of it visible
+      * at once — a throw anywhere before the link leaves the head as
+      * it was and nothing but unreferenced scratch.
+      *
+      * The sidecar holds the `fresh` entries, folded at write time by
+      * the tasks that wrote the files, for every file of the
+      * partitions they name, and entries copied from the parent's
       * sidecar for every other partition, O(touched) maintenance; no
-      * Spark job runs here. `fresh = None` (the touched files' entries
-      * are unknown) or a parent without a sidecar under carried
-      * partitions (a legacy store) publishes no sidecar: the reader's
-      * lazy-listing fallback is sound. A bootstrap's `table.meta` is
-      * written by the link winner only, before the sidecar.
-      * `carryFrom` names the version whose `#delete`/`#upsert` records
-      * and sidecar entries carry forward in place of the parent's:
-      * RESTORE carries the restored version's whole state.
+      * Spark job runs here. It is written under this attempt's own
+      * name, one of its scratch paths: deleted if the link is lost.
+      *
+      * `meta` is placed with [[SnapshotMeta.writeIfAbsent]]: an
+      * existing `table.meta` with the same declaration on a root with
+      * no published version (a crashed or racing bootstrap of the
+      * same table) is accepted, any other is a
+      * [[SnapshotConflictException]]. `carryFrom` names the version
+      * whose `#delete`/`#upsert` records and sidecar entries carry
+      * forward in place of the parent's: RESTORE carries the restored
+      * version's whole state.
       */
     def publish(entries: Map[String, String],
                 txn: Option[(String, Long)] = None,
                 schemaJson: Option[String] = None,
                 extraMeta: Seq[String] = Nil,
-                fresh: Option[Seq[SnapshotFiles.FileEntry]] = Some(Nil),
+                fresh: Seq[SnapshotFiles.FileEntry] = Nil,
                 meta: Option[SnapshotMeta.Meta] = None,
                 carryFrom: Option[Int] = None): Unit = {
-      writeManifest(root, version, entries, txn, schemaJson, extraMeta,
+      meta.foreach { m =>
+        try SnapshotMeta.writeIfAbsent(root, m)
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException
+            if SnapshotManifest.head(root) == 0 &&
+              SnapshotMeta.read(root) == m => ()
+          case _: java.nio.file.FileAlreadyExistsException =>
+            throw new SnapshotConflictException(version)
+        }
+      }
+      // a bootstrap has no parent: an entry without fresh files has none
+      val parentV = carryFrom.getOrElse(head)
+      val carried = (entries.keySet -- fresh.map(_.pv)).toSeq.sorted
+      val carriedRows =
+        if (carried.isEmpty || parentV == 0) Nil
+        else {
+          val parent = SnapshotFiles.read(root, parentV)
+          carried.flatMap(p => parent.getOrElse(p, Nil))
+        }
+      val sidecar = claim(root.resolve("manifests")
+        .resolve(SnapshotFiles.write(root, version, carriedRows ++ fresh)))
+      writeManifest(root, version, entries, txn, schemaJson,
+        (SnapshotFiles.HeaderTag + sidecar.getFileName) +: extraMeta,
         carryFrom)
       linked = true
-      meta.foreach(SnapshotMeta.write(root, _))
-      fresh.foreach { files =>
-        val carried = entries.keySet -- files.map(_.pv)
-        val carriedRows: Option[Seq[SnapshotFiles.FileEntry]] =
-          if (carried.isEmpty) Some(Nil)
-          else SnapshotFiles.read(root, carryFrom.getOrElse(head))
-            .map(parent =>
-              carried.toSeq.sorted.flatMap(p => parent.getOrElse(p, Nil)))
-        carriedRows.foreach(cr =>
-          SnapshotFiles.write(root, version, cr ++ files))
-      }
     }
   }
 
@@ -271,9 +296,10 @@ object SnapshotTxn {
     * on the current head until one attempt's [[Attempt.publish]] wins
     * the link, up to [[MaxAttempts]]; the last
     * [[SnapshotConflictException]] reaches the caller. A losing
-    * attempt's scratch dirs are deleted — nothing references them. Any
-    * failure after a won link leaves them in place: they may be
-    * published state, and vacuum never sweeps referenced dirs.
+    * attempt's scratch dirs and sidecar are deleted — nothing
+    * references them. Any failure after a won link leaves them in
+    * place: they may be published state, and vacuum never sweeps
+    * referenced dirs.
     *
     * `base` pins a single attempt to that parent, for callers whose
     * delta cannot be rebased (a group replacement, a task-written MoR
@@ -281,13 +307,19 @@ object SnapshotTxn {
     * propagates before any data is written. The write door runs the
     * pinned [[snapshotInit]]/[[snapshotCommit]] inside an unpinned
     * commit, which re-runs them on each new head.
+    *
+    * `at` bootstraps a new root (pinned to head 0) at that version
+    * instead of v1: clone and branch roots continue their source's
+    * version numbering.
     */
-  private[graft] def commit[A](root: Path, base: Option[Int] = None)(
-      body: Attempt => A): A = {
+  private[graft] def commit[A](root: Path, base: Option[Int] = None,
+      at: Option[Int] = None)(body: Attempt => A): A = {
     var failures = 0
+    val pin = if (at.nonEmpty) Some(0) else base
     while (true) {
       val head = SnapshotManifest.head(root)
-      val a = new Attempt(root, base.getOrElse(head))
+      val parent = pin.getOrElse(head)
+      val a = new Attempt(root, parent, at.getOrElse(parent + 1))
       try {
         if (a.head != head) throw new SnapshotConflictException(a.version)
         return body(a)
@@ -295,7 +327,7 @@ object SnapshotTxn {
         case e: SnapshotConflictException if !a.linked =>
           a.dropScratch()
           failures += 1
-          if (base.nonEmpty || failures >= MaxAttempts) throw e
+          if (pin.nonEmpty || failures >= MaxAttempts) throw e
       }
     }
     throw new IllegalStateException("unreachable")
@@ -398,11 +430,9 @@ object SnapshotTxn {
       s"version $v is not published (or was vacuumed) — cannot clone it")
     require(srcRoot.toAbsolutePath != dstRoot.toAbsolutePath,
       "clone target must be a different table")
-    require(!JF.exists(dstRoot.resolve("manifests")),
+    require(SnapshotManifest.head(dstRoot) == 0,
       s"clone target $dstRoot already exists — refusing to overwrite")
-    val meta = SnapshotMeta.read(srcRoot).getOrElse(
-      throw new UnsupportedOperationException(
-        "clone needs a table.meta layout declaration"))
+    val meta = SnapshotMeta.read(srcRoot)
     val mirrors = meta.partitionSchema.fields.map(_.name).toSeq
     val effective = org.apache.spark.sql.types.StructType(
       SnapshotManifest
@@ -410,8 +440,6 @@ object SnapshotTxn {
         .fields.map(_.copy(nullable = true)))
     val manifest = SnapshotManifest.read(srcRoot, v)
     JF.createDirectories(dstRoot)
-    SnapshotMeta.write(dstRoot,
-      meta.copy(dataSchema = effective))
     // under spec evolution a manifest mixes arities: each entry's leaf
     // name derives from ITS spec's mirror names (specs prefix-extend,
     // so the entry's segment count picks the spec)
@@ -546,10 +574,16 @@ object SnapshotTxn {
         .sorted.map(n => s"#drop\t$n") ++
       SnapshotManifest.effectiveChecks(srcRoot)
         .map { case (n, sql) => s"#check\t$n\t$sql" }
-    writeManifest(dstRoot, baseV, entries,
-      extraMeta = cloneMeta ++ carriedDeletes ++ carriedUpserts)
-    SnapshotFiles.copy(srcRoot, v, dstRoot, baseV, e =>
-      e.copy(path = entries(e.pv) + "/" + new java.io.File(e.path).getName))
+    // the source's sidecar entries, re-pathed to the linked names
+    val files = SnapshotFiles.read(srcRoot, v).valuesIterator.flatten
+      .map(e => e.copy(
+        path = entries(e.pv) + "/" + new java.io.File(e.path).getName))
+      .toSeq
+    commit(dstRoot, at = Some(baseV)) {
+      _.publish(entries, extraMeta = cloneMeta ++ carriedDeletes ++
+          carriedUpserts, fresh = files,
+        meta = Some(meta.copy(dataSchema = effective)))
+    }
     (v, entries.size, linked)
   }
 
@@ -582,15 +616,12 @@ object SnapshotTxn {
       root.resolve("manifests").resolve(s"v$base.manifest")),
       s"version $base is not published (or was vacuumed) — cannot " +
         "branch from it")
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "branching needs a table.meta layout declaration"))
+    val meta = SnapshotMeta.read(root)
     val broot = SnapshotBranches.root(root, name)
     java.nio.file.Files.createDirectories(broot)
     val effective = org.apache.spark.sql.types.StructType(
       SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
         .fields.map(_.copy(nullable = true)))
-    SnapshotMeta.write(broot, meta.copy(dataSchema = effective))
     val entries = SnapshotManifest.read(root, base)
     // rename chains re-publish with the checks: fork-shared files keep
     // their written-time footer names, so the branch's readers need the
@@ -624,8 +655,12 @@ object SnapshotTxn {
         SnapshotManifest.deleteRecordsWithCounts(root, base)) ++
       carryPlane("#upsert",
         SnapshotManifest.upsertRecordsWithCounts(root, base))
-    writeManifest(broot, base, entries, extraMeta = checkLines ++ morLines)
-    SnapshotFiles.copy(root, base, broot, base)
+    // the fork version's files are the branch base's, same paths
+    commit(broot, at = Some(base)) {
+      _.publish(entries, extraMeta = checkLines ++ morLines,
+        fresh = SnapshotFiles.read(root, base).valuesIterator.flatten.toSeq,
+        meta = Some(meta.copy(dataSchema = effective)))
+    }
     SnapshotBranches.writeBase(root, name, base)
     (base, entries.size)
   }
@@ -667,7 +702,7 @@ object SnapshotTxn {
     val bHead = SnapshotManifest.head(broot)
     if (bHead == base) return (mainHead, 0, 0) // nothing staged
     val entries = SnapshotManifest.read(broot, bHead)
-    val ffMeta = SnapshotMeta.read(root).get
+    val ffMeta = SnapshotMeta.read(root)
     val ffSpecs = SnapshotManifest.partitionSpecs(
       broot, ffMeta.partitionSchema)
     def mirrorsOf(pv: String): Seq[String] =
@@ -687,9 +722,9 @@ object SnapshotTxn {
       brChecks.filterNot(mainChecks.contains)
         .map { case (n, sql) => s"#check\t$n\t$sql" }
     val mainEff = SnapshotManifest.effectiveDataSchema(root,
-      SnapshotMeta.read(root).get.dataSchema)
+      ffMeta.dataSchema)
     val brEff = SnapshotManifest.effectiveDataSchema(broot,
-      SnapshotMeta.read(broot).get.dataSchema)
+      SnapshotMeta.read(broot).dataSchema)
     val schemaJson =
       if (brEff.fieldNames.sameElements(mainEff.fieldNames)) None
       else Some(org.apache.spark.sql.types.StructType(
@@ -726,12 +761,12 @@ object SnapshotTxn {
       }
       a.publish(rewritten, schemaJson = schemaJson,
         extraMeta = specDelta ++ renameDelta ++ dropDelta ++ checkDelta,
-        fresh = SnapshotFiles.read(broot, bHead).map(_.values.flatten.toSeq
+        fresh = SnapshotFiles.read(broot, bHead).values.flatten.toSeq
           .map { e =>
             val newDir = rewritten(e.pv)
             if (newDir == entries(e.pv)) e
             else e.copy(path = newDir + "/" + new java.io.File(e.path).getName)
-          }))
+          })
       (a.version, rewritten.size, linked)
     }
   }
@@ -747,24 +782,21 @@ object SnapshotTxn {
       root: Path, version: Int): DataFrame = {
     val (base, ups, recs) =
       SnapshotDeletes.versionDirs(root, version)
-    val logical = SnapshotMeta.read(root)
-      .map(m => SnapshotManifest.effectiveDataSchema(
-        root, m.dataSchema))
-    def read(dirs: Seq[String]): DataFrame = logical
-      .filter(l =>
-        SnapshotRename.chainsFor(root, l).nonEmpty ||
+    val meta = SnapshotMeta.read(root)
+    val logical = SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
+    def read(dirs: Seq[String]): DataFrame =
+      if (SnapshotRename.chainsFor(root, logical).nonEmpty ||
           // upsert-delta dirs may carry columns in a different order
           // than older base files; the declared read normalizes
           ups.nonEmpty)
-      .map(l => SnapshotRename.readDirs(s, root, dirs, l))
-      .getOrElse(s.read.parquet(dirs: _*))
+        SnapshotRename.readDirs(s, root, dirs, logical)
+      else s.read.parquet(dirs: _*)
     if (recs.isEmpty && ups.isEmpty) read(base)
     else {
       // merge-on-read records: base dirs anti-join ALL doomed keys,
       // each upsert-delta group only the records newer than its stamp
       // (broadcast, delta-sized both sides)
-      val keyCol = SnapshotMeta.read(root)
-        .flatMap(_.keyCol).getOrElse(throw new IllegalStateException(
+      val keyCol = meta.keyCol.getOrElse(throw new IllegalStateException(
           s"$root carries merge-on-read records but table.meta " +
             "declares no key_column"))
       SnapshotDeletes.scopedUnion(s, keyCol, read,
@@ -794,34 +826,30 @@ object SnapshotTxn {
   private[graft] def snapshotCommit(s: SparkSession,
       root: Path, fromV: Int, toV: Int, delta: DataFrame,
       insertDelta: Boolean, keyCol: String = "o_orderkey",
-      partCols: Seq[String] = Seq("o_ym"),
       bloomIndexKey: Option[String] = None,
       txn: Option[(String, Long)] = None,
       distribute: Boolean = true): Unit = {
     require(toV == fromV + 1, s"v$toV does not follow v$fromV")
     def attempt(a: Attempt): Unit = {
       val parent = SnapshotManifest.read(root, fromV)
+      val meta = SnapshotMeta.read(root)
       // PARTITION-SPEC EVOLUTION: commits always lay out under the
-      // CURRENT spec — the caller's partCols are the bootstrap-time
-      // declaration, superseded once `#partspec` records exist. An
-      // old-spec parent entry whose prefix overlaps a touched partition
-      // MIGRATES: its kept rows rewrite under the current spec (the
-      // store's usual touched-partition rewrite granularity).
-      val specs = SnapshotMeta.read(root).map(m =>
-        SnapshotManifest.partitionSpecs(root, m.partitionSchema))
-        .getOrElse(Seq.empty)
+      // CURRENT spec (the bootstrap declaration, superseded once
+      // `#partspec` records exist). An old-spec parent entry whose
+      // prefix overlaps a touched partition MIGRATES: its kept rows
+      // rewrite under the current spec (the store's usual
+      // touched-partition rewrite granularity). The spec also carries
+      // the hidden-partitioning transform tags (days/bucket mirrors
+      // derive f(source), not source).
+      val specs = SnapshotManifest.partitionSpecs(root, meta.partitionSchema)
       val multiSpec = specs.lengthCompare(1) > 0
-      // the CURRENT spec is the layout authority whenever the store
-      // declares one — it also carries the hidden-partitioning transform
-      // tags (days/bucket mirrors derive f(source), not source); the
-      // caller's `partCols` only drives meta-less legacy stores
-      val curSpec: Option[Seq[org.apache.spark.sql.types.StructField]] =
-        specs.lastOption.map(_.fields.toSeq)
+      val curSpec: Seq[org.apache.spark.sql.types.StructField] =
+        specs.last.fields.toSeq
       val effPartCols: Seq[String] =
-        curSpec.map(_.map(_.name.stripSuffix("_p"))).getOrElse(partCols)
+        curSpec.map(_.name.stripSuffix("_p"))
       def mirrorExpr(frame: DataFrame, c: String)
           : org.apache.spark.sql.Column =
-        curSpec.flatMap(_.find(_.name == s"${c}_p")) match {
+        curSpec.find(_.name == s"${c}_p") match {
           case Some(f)
             if SnapshotTransforms.of(f) !=
               SnapshotTransforms.Identity =>
@@ -891,10 +919,8 @@ object SnapshotTxn {
       // can mix pre- and post-evolution dirs, and inference would take
       // whichever file lists first — a pre-evolution winner would
       // silently NULL the evolved columns of every kept row it rewrites.
-      val tableSchema: Option[org.apache.spark.sql.types.StructType] =
-        SnapshotMeta.read(root).map(m =>
-          SnapshotManifest.effectiveDataSchema(
-            root, m.dataSchema))
+      val tableSchema: org.apache.spark.sql.types.StructType =
+        SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
       // the kept read maps former footer names through the rename fold
       // (readDirs) — `existing` can mix pre- and post-rename dirs, and a
       // plain declared read would NULL a renamed column on every
@@ -926,9 +952,8 @@ object SnapshotTxn {
         touchedPvs.toSeq.flatMap(pv => recs.getOrElse(pv, Nil))
           .distinct.sorted
       }
-      def keptRead(dirs: Seq[String]): DataFrame = tableSchema
-        .map(ts => SnapshotRename.readDirs(s, root, dirs, ts))
-        .getOrElse(s.read.parquet(dirs: _*))
+      def keptRead(dirs: Seq[String]): DataFrame =
+        SnapshotRename.readDirs(s, root, dirs, tableSchema)
       // the bootstrap fast path has nothing to keep — skip the anti-join
       // so the plan carries no pointless broadcast build of the delta's
       // keys over an empty left side
@@ -955,8 +980,7 @@ object SnapshotTxn {
       // commit touching only brand-new partitions has
       // kept = delta.limit(0), whose schema is the delta's own and would
       // mask both the widening and the drop.
-      val tableCols: Set[String] = tableSchema.map(_.fieldNames.toSet)
-        .getOrElse(kept.columns.toSet)
+      val tableCols: Set[String] = tableSchema.fieldNames.toSet
       val dropped = tableCols -- delta.columns.toSet
       require(dropped.isEmpty || !insertDelta,
         s"upsert delta is missing table column(s) ${dropped.mkString(", ")}" +
@@ -999,12 +1023,9 @@ object SnapshotTxn {
             "time and cannot widen the data schema; drop them from the " +
             "delta")
       }
-      val widenedJson: Option[String] = tableSchema match {
-        case Some(ts) if addedCols.nonEmpty =>
-          Some(org.apache.spark.sql.types.StructType(
-            ts.fields ++ addedCols).json)
-        case _ => None // legacy store (no meta): evolution not supported
-      }
+      val widenedJson: Option[String] =
+        Option.when(addedCols.nonEmpty)(org.apache.spark.sql.types
+          .StructType(tableSchema.fields ++ addedCols).json)
       val out = a.scratch().toString
       val pcols = effPartCols.map(c => s"${c}_p")
       // `kept` may lack delta columns even when the TABLE already has
@@ -1044,7 +1065,7 @@ object SnapshotTxn {
       val emptied = touched.filterNot(presentSet)
       val entries =
         (parent -- emptied -- migrating.keys) ++ walked
-      a.publish(entries, txn, widenedJson, fresh = Some(files))
+      a.publish(entries, txn, widenedJson, fresh = files)
       // incremental Bloom maintenance: index only this commit's new dirs
       // (append — parent files are write-once, their rows stay valid)
       bloomIndexKey.foreach { k =>
@@ -1069,7 +1090,7 @@ object SnapshotTxn {
     */
   private[graft] def snapshotReplacePartitions(root: Path, fromV: Int,
       replaced: Set[String], newEntries: Map[String, String],
-      fresh: Option[Seq[SnapshotFiles.FileEntry]]): Unit =
+      fresh: Seq[SnapshotFiles.FileEntry]): Unit =
     commit(root, Some(fromV)) { a =>
       a.publish((SnapshotManifest.read(root, fromV) -- replaced) ++ newEntries,
         fresh = fresh)
@@ -1129,9 +1150,7 @@ object SnapshotTxn {
       root: Path,
       doom: DataFrame => DataFrame,
       txn: Option[(String, Long)] = None): (Int, Long) = {
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "merge-on-read delete needs a table.meta layout declaration"))
+    val meta = SnapshotMeta.read(root)
     val keyCol = meta.keyCol.getOrElse(
       throw new UnsupportedOperationException(
         "merge-on-read delete needs a declared key_column — the " +
@@ -1183,13 +1202,10 @@ object SnapshotTxn {
       // record counts) DROPS from the manifest instead of minting a
       // record — O(1) metadata, no read-amplification, the Delta
       // partition-delete shape; `DELETE FROM t` (truncate) collapses
-      // to an empty manifest with zero records this way. Unknowable
-      // cases (no sidecar, count-less legacy records) keep records —
-      // sound, never wrong.
+      // to an empty manifest with zero records this way.
       val sidecarRows: Map[String, Long] =
-        SnapshotFiles.read(root, head)
-          .map(_.view.mapValues(_.map(_.rows).sum).toMap)
-          .getOrElse(Map.empty)
+        SnapshotFiles.read(root, head).view.mapValues(_.map(_.rows).sum)
+          .toMap
       val prior =
         SnapshotManifest.deleteRecordsWithCounts(root, head)
       // a partition carrying upsert-delta dirs can never prove fully
@@ -1204,10 +1220,8 @@ object SnapshotTxn {
         SnapshotTable.hasOldSpecEntries(root, head)
       def fullyDoomed(pv: String, n: Long): Boolean =
         !evolvedHead && !upsertPvs.contains(pv) &&
-          sidecarRows.get(pv).exists { total =>
-            val pd = prior.getOrElse(pv, Nil).map(_._2)
-            pd.forall(_ >= 0) && n == total - pd.sum
-          }
+          sidecarRows.get(pv).exists(total =>
+            n == total - prior.getOrElse(pv, Nil).map(_._2).sum)
       val (droppedPvs, recordedPvs) = walked.partition {
         case (pv, _) => fullyDoomed(pv, doomed(pv))
       }
@@ -1243,9 +1257,7 @@ object SnapshotTxn {
   private[graft] def snapshotMorUpsert(s: SparkSession,
       root: Path, delta: DataFrame, keyCol: String,
       txn: Option[(String, Long)] = None): (Int, Long) = {
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "merge-on-read upsert needs a table.meta layout declaration"))
+    val meta = SnapshotMeta.read(root)
     require(meta.keyCol.contains(keyCol) || meta.keyCol.isEmpty,
       s"upsert-mor key '$keyCol' disagrees with the declared key " +
         s"'${meta.keyCol.getOrElse("")}'")
@@ -1325,7 +1337,8 @@ object SnapshotTxn {
 
   /** MERGE-ON-READ UPDATE/MERGE commit half
     * ([[SnapshotDeltaWrite]] hands its write tasks' commits here, one
-    * per task and plane): publish parent entries VERBATIM plus
+    * per task and plane, and its two plane roots, which become the
+    * attempt's scratch dirs): publish parent entries VERBATIM plus
     * `#delete` records (matched keys, per old-row partition) and
     * `#upsert` records (updated/inserted rows, per new-row partition) —
     * one CAS version, zero data files touched. Per-leaf row counts,
@@ -1336,10 +1349,9 @@ object SnapshotTxn {
     */
   private[graft] def snapshotMorDeltaCommit(root: Path, fromVersion: Int,
       deletes: Seq[SnapshotReplaceCommit],
-      upserts: Seq[SnapshotReplaceCommit]): Int =
+      upserts: Seq[SnapshotReplaceCommit], planes: Seq[Path]): Int =
     commit(root, Some(fromVersion)) { a =>
-      if (SnapshotMeta.read(root).isEmpty) throw new IllegalStateException(
-        "merge-on-read delta commit on a meta-less store")
+      planes.foreach(a.claim)
       // a leaf's dir is deterministic (shared plane roots): the tasks
       // that wrote under one pv name the same dir, which collapses
       def records(tag: String, cs: Seq[SnapshotReplaceCommit]) =
@@ -1349,46 +1361,6 @@ object SnapshotTxn {
           records("#upsert", upserts))
       a.version
     }
-
-  /** `CALL snap.compute_stats('t')` — BACKFILL the head version's
-    * `v<N>.files` stats sidecar (bytes, rows, per-column min/max) for
-    * stores that predate the sidecar plane or whose sidecar publish
-    * crashed: one scan of the head's files, one link(2) publish. With
-    * it, planning gets zero-`listStatus` listings and min/max range
-    * skipping on a store that never had them — the ANALYZE TABLE
-    * analog for the store's own metadata plane. A version that
-    * already HAS a sidecar is left verbatim (the sidecar is
-    * commit-published and immutable; -1 files reported). Columns with
-    * rename history are excluded from stats (pre-rename footers would
-    * contribute all-NULL min/max — sound but useless; their skipping
-    * recovers as rewrites re-write files under the current name).
-    */
-  private[graft] def snapshotComputeStats(s: SparkSession,
-      root: Path): (Int, Int) = {
-    val head = SnapshotManifest.head(root)
-    require(head >= 1, s"$root has no published versions")
-    if (SnapshotFiles.exists(root, head)) return (head, -1)
-    val entries = SnapshotManifest.read(root, head)
-    val declared = SnapshotMeta.read(root)
-      .map(m => org.apache.spark.sql.types.StructType(
-        SnapshotManifest
-          .effectiveDataSchema(root, m.dataSchema)
-          .fields.map(_.copy(nullable = true))))
-      .getOrElse {
-        val first = entries.values.toSeq.sorted.headOption.getOrElse(
-          throw new IllegalArgumentException(
-            s"head version $head has no partitions to infer a schema " +
-              "from"))
-        graft.core.Tables.schemaOf(s, first)
-      }
-    val chains = SnapshotRename.chainsFor(root, declared)
-    val statSchema = org.apache.spark.sql.types.StructType(
-      declared.fields.filterNot(f => chains.contains(f.name)))
-    val rows = SnapshotFiles.collect(
-      s, entries.toSeq.sorted, statSchema)
-    SnapshotFiles.write(root, head, rows)
-    (head, rows.size)
-  }
 
   /** `CALL snap.build_bloom('t', 'col')` — RETROFIT the per-file
     * Bloom point-lookup index over an existing store's head files
@@ -1405,24 +1377,19 @@ object SnapshotTxn {
       root: Path, keyCol: String): (Int, Int) = {
     val head = SnapshotManifest.head(root)
     require(head >= 1, s"$root has no published versions")
-    val meta = SnapshotMeta.read(root)
-    val eff: Option[org.apache.spark.sql.types.StructType] = meta.map { m =>
-      val e = SnapshotManifest
-        .effectiveDataSchema(root, m.dataSchema)
-      require(e.fieldNames.contains(keyCol),
-        s"column $keyCol does not exist")
-      val hot = SnapshotRename.chainsFor(root, e)
-      require(!hot.contains(keyCol),
-        s"cannot index $keyCol: it has rename history — pre-rename " +
-          "files carry it under a former name and would index as NULL; " +
-          "compact/rewrite first")
-      e
-    }
+    val eff = SnapshotManifest
+      .effectiveDataSchema(root, SnapshotMeta.read(root).dataSchema)
+    require(eff.fieldNames.contains(keyCol),
+      s"column $keyCol does not exist")
+    require(!SnapshotRename.chainsFor(root, eff).contains(keyCol),
+      s"cannot index $keyCol: it has rename history — pre-rename " +
+        "files carry it under a former name and would index as NULL; " +
+        "compact/rewrite first")
     val dirs = SnapshotManifest.read(root, head).values.toSeq.sorted
     require(dirs.nonEmpty, s"head version $head has no partitions")
     SnapshotBloom.build(s, dirs, keyCol,
       root.resolve("bloomidx").toString,
-      dataSchema = eff)
+      dataSchema = Some(eff))
     (head, dirs.size)
   }
 
@@ -1433,42 +1400,23 @@ object SnapshotTxn {
     * exactly one publishes v1; the rest see the conflict and the
     * catalog's existence check). The first INSERT/append then commits
     * v2 through the ordinary door — CTAS is exactly this plus Spark's
-    * append. An empty sidecar rides along so v1 reads list zero files
-    * without falling back to directory listing.
+    * append. [[Attempt.publish]] places `table.meta` and an empty
+    * sidecar before the link and arbitrates racing creators: of two
+    * with DIFFERENT declarations exactly one places its meta, and the
+    * other (or anyone who finds v1 already published) gets
+    * `TableAlreadyExistsException`. A re-run of the SAME declaration
+    * over a wedged half-table (meta placed, crash before the link)
+    * completes it.
     */
   private[graft] def snapshotCreateTable(root: Path,
       dataSchema: org.apache.spark.sql.types.StructType,
       partitionSchema: org.apache.spark.sql.types.StructType,
       keyCol: String, deleteMode: Option[String] = None): Unit = {
     java.nio.file.Files.createDirectories(root)
-    // if-absent meta publish arbitrates racing CREATEs (and a CREATE
-    // racing a df.write bootstrap): of two creators with DIFFERENT
-    // schemas, exactly one places table.meta — a replace-existing
-    // write here would let the LOSER clobber the winner's declared
-    // schema and key after both reported success
-    val wanted = SnapshotMeta.Meta(partitionSchema,
-      dataSchema, Some(keyCol), deleteMode)
-    try SnapshotMeta.writeIfAbsent(root, wanted)
+    try commit(root, Some(0))(_.publish(Map.empty, meta = Some(
+      SnapshotMeta.Meta(partitionSchema, dataSchema, Some(keyCol),
+        deleteMode))))
     catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // a crash between the meta publish and the v1 manifest link
-        // leaves a WEDGED half-table: table.meta exists (CREATE throws
-        // AlreadyExists) but no manifest does (loadTable throws
-        // NoSuchTable) — with no SQL-level way out. A re-run of the
-        // SAME declaration completes the bootstrap below; a DIFFERENT
-        // declaration refuses (the first creator's schema won the CAS)
-        val noManifest = SnapshotManifest.head(root) == 0
-        val sameDecl = SnapshotMeta.read(root)
-          .contains(wanted)
-        if (!(noManifest && sameDecl))
-          throw new org.apache.spark.sql.catalyst.analysis
-            .TableAlreadyExistsException(Seq(root.getFileName.toString))
-    }
-    try commit(root, Some(0))(_.publish(Map.empty))
-    catch {
-      // someone published v1 between our meta write and this link — a
-      // racing bootstrap committed real data; refuse loudly rather
-      // than report a CREATE that didn't happen
       case _: SnapshotConflictException =>
         throw new org.apache.spark.sql.catalyst.analysis
           .TableAlreadyExistsException(Seq(root.getFileName.toString))
@@ -1492,10 +1440,7 @@ object SnapshotTxn {
   private[graft] def snapshotWidenColumn(s: SparkSession,
       root: Path, name: String,
       to: org.apache.spark.sql.types.DataType): Unit = {
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "legacy store without table.meta: type widening needs the " +
-          "declared-schema plane"))
+    val meta = SnapshotMeta.read(root)
     commit(root) { a =>
       // the FULL gate re-runs inside the retry loop, not just
       // existence: a losing racer's retry sees whatever won between
@@ -1545,10 +1490,7 @@ object SnapshotTxn {
   private[graft] def snapshotAddColumns(s: SparkSession,
       root: Path,
       newCols: Seq[org.apache.spark.sql.types.StructField]): Unit = {
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "legacy store without table.meta: schema evolution needs the " +
-          "declared-schema plane"))
+    val meta = SnapshotMeta.read(root)
     commit(root) { a =>
       val effective = SnapshotManifest
         .effectiveDataSchema(root, meta.dataSchema)
@@ -1639,9 +1581,7 @@ object SnapshotTxn {
       filesPerPartition: Option[Int] = None,
       zorderCols: Option[(String, String)] = None): (Int, Int, Int, Int) = {
     require(threshold >= 2, s"threshold must be >= 2, got $threshold")
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "compact needs a table.meta layout declaration"))
+    val meta = SnapshotMeta.read(root)
     // on a spec-evolved store compact operates on CURRENT-spec
     // partitions only (old-spec entries migrate through upserts);
     // mirrors therefore come from the current spec
@@ -1789,7 +1729,7 @@ object SnapshotTxn {
       // dangling dir
       val survived = leaves.filter(l => hot.contains(l._1))
       a.publish((manifestFull -- hot) ++ survived,
-        fresh = Some(files.filter(f => hot.contains(f.pv))))
+        fresh = files.filter(f => hot.contains(f.pv)))
       (hot.size, a.version, filesBefore,
         survived.map(l => parquetCount(l._2)).sum)
     }
@@ -1819,7 +1759,7 @@ object SnapshotTxn {
     val (parts, files) = writeLeaves(s,
       if (distribute) distributeByLayout(mirrored, pcols) else mirrored,
       pcols, d1)
-    a.publish(parts.toMap, txn, fresh = Some(files),
+    a.publish(parts.toMap, txn, fresh = files,
       meta = Some(SnapshotMeta.Meta(
         StructType(partCols.map(c => StructField(s"${c}_p",
           data.schema(c).dataType, nullable = true))),
@@ -1904,10 +1844,7 @@ object SnapshotTxn {
   private[graft] def snapshotEvolvePartitioning(s: SparkSession,
       root: Path, sourceSpec: String): (Int, Int) = {
     refuseLiveDeletes(root, "evolve_partitioning")
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "legacy store without table.meta: partition-spec evolution " +
-          "needs the declared-layout plane"))
+    val meta = SnapshotMeta.read(root)
     val specs = SnapshotManifest.partitionSpecs(
       root, meta.partitionSchema)
     val current = specs.last
@@ -2004,9 +1941,7 @@ object SnapshotTxn {
   private[graft] def snapshotMigrateLayout(s: SparkSession,
       root: Path, maxPartitions: Int): (Int, Int) = {
     require(maxPartitions >= 1, "max_partitions must be >= 1")
-    val meta = SnapshotMeta.read(root).getOrElse(
-      throw new UnsupportedOperationException(
-        "migrate_layout needs a table.meta layout declaration"))
+    val meta = SnapshotMeta.read(root)
     def attempt(a: Attempt): (Int, Int) = {
       val head = a.head
       val manifest = SnapshotManifest.read(root, head)
@@ -2076,7 +2011,7 @@ object SnapshotTxn {
         s"migration derived pv(s) ${clobbered.mkString(", ")} that " +
           "already exist as current-spec entries — store invariant " +
           "violated, refusing to overwrite")
-      a.publish((manifest -- old.map(_._1)) ++ walked, fresh = Some(files))
+      a.publish((manifest -- old.map(_._1)) ++ walked, fresh = files)
       (old.size, a.version)
     }
     commit(root)(attempt)
@@ -2097,6 +2032,7 @@ object SnapshotTxn {
                                 valCol: String = "o_totalprice"): DataFrame = {
     val m1 = SnapshotManifest.read(root, vFrom)
     val m2 = SnapshotManifest.read(root, vTo)
+    val meta = SnapshotMeta.read(root)
     // a merge-on-read DELETE changes a partition's ROWS without
     // touching its dir — the records diff makes those partitions
     // changefeed-visible (their doomed keys surface as delete events)
@@ -2117,12 +2053,12 @@ object SnapshotTxn {
     val recordDiff = d1 != d2 || u1 != u2
     val oldSpecPvs: Set[String] =
       if (!recordDiff) Set.empty
-      else SnapshotMeta.read(root).map { m =>
+      else {
         val curLen = SnapshotManifest
-          .partitionSpecs(root, m.partitionSchema).last.length
+          .partitionSpecs(root, meta.partitionSchema).last.length
         (m1.keySet ++ m2.keySet)
           .filter(_.split("/", -1).length < curLen)
-      }.getOrElse(Set.empty)
+      }
     // the candidate pool includes RECORD pvs too: a record may name a
     // pv with no manifest entry at all (an evolved-head delete whose
     // doomed rows live in old-spec entries, or a delta-only pv) — its
@@ -2136,17 +2072,16 @@ object SnapshotTxn {
     // partitions have no old side; delete-to-empty has no new side;
     // an unchanged pair has neither) — degrade to an empty frame
     // instead of an empty-path parquet read, which throws.
-    // Both sides read under the DECLARED effective schema whenever the
-    // store has one (readDirs also folds rename history): either side
+    // Both sides read under the DECLARED effective schema (readDirs
+    // also folds rename history): either side
     // can mix pre- and post-evolution dirs — including mixed partition
     // ARITIES across an evolve_partitioning boundary — and schema
     // INFERENCE would take whichever file lists first, silently
     // nulling a widened column (or crashing on a renamed one) out of
     // the changefeed. Mirrors never ride in data files, so flat dir
     // reads are arity-agnostic by construction.
-    val declaredLogical = SnapshotMeta.read(root)
-      .map(m => SnapshotManifest.effectiveDataSchema(
-        root, m.dataSchema))
+    val declaredLogical =
+      SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
     def scoped(d: Map[String, Seq[String]]): Seq[String] =
       changed.flatMap(d.get).flatten.distinct.sorted
     // each side serves ITS version's merge-on-read state: base dirs
@@ -2155,9 +2090,8 @@ object SnapshotTxn {
     // into insert/update/delete events
     def side(base: Seq[String], keyAs: String, priceAs: String,
              upsertDirs: Seq[String], doomDirs: Seq[String]): DataFrame = {
-      def read(dirs: Seq[String]): DataFrame = declaredLogical.map(l =>
-          SnapshotRename.readDirs(s, root, dirs, l))
-        .getOrElse(s.read.parquet(dirs: _*))
+      def read(dirs: Seq[String]): DataFrame =
+        SnapshotRename.readDirs(s, root, dirs, declaredLogical)
       SnapshotDeletes.scopedUnion(s, keyCol, read,
           base, upsertDirs, doomDirs)
         .map(_.select(col(keyCol).as(keyAs), col(valCol).as(priceAs)))
@@ -2283,11 +2217,9 @@ object SnapshotTxn {
     // columns vanishing from reads — data invisible, not deleted).
     // A racing widener publishes its superset record in a NEW (kept)
     // manifest, which continues to overlay this floor.
-    for {
-      meta <- SnapshotMeta.read(root)
-      evolved <- SnapshotManifest.evolvedDataSchema(root)
-    } SnapshotMeta.write(root,
-      meta.copy(dataSchema = evolved))
+    SnapshotManifest.evolvedDataSchema(root).foreach(evolved =>
+      SnapshotMeta.write(root,
+        SnapshotMeta.read(root).copy(dataSchema = evolved)))
     // Expiring manifests may ALSO carry commit-coupled metadata whose
     // fold goes dark when the records vanish: live CHECK constraints
     // (`effectiveChecks` folds over surviving manifests only — a
@@ -2328,10 +2260,9 @@ object SnapshotTxn {
       // expiring the manifests that carry them would un-map every
       // pre-rename file's renamed columns / un-parse every
       // mixed-arity entry — silent data invisibility
-      val specLines = SnapshotMeta.read(root).toSeq
-        .flatMap(m => SnapshotManifest
-          .partitionSpecs(root, m.partitionSchema).drop(1)
-          .map(sp => s"#partspec\t${sp.json}"))
+      val specLines = SnapshotManifest
+        .partitionSpecs(root, SnapshotMeta.read(root).partitionSchema)
+        .drop(1).map(sp => s"#partspec\t${sp.json}")
       val normalize =
         specLines ++
         SnapshotRename.renameLines(
@@ -2344,13 +2275,24 @@ object SnapshotTxn {
         everNamed.toSeq.sorted.map(n => s"#checkdrop\t$n") ++
         live.map { case (n, sql) => s"#check\t$n\t$sql" }
       // same bytes as the base version ⇒ its stats sidecar carries
-      // over verbatim (readers fall back to listing if absent)
+      // over verbatim
       a.publish(SnapshotManifest.read(root, a.head), extraMeta = normalize)
     }
+    val headers = SnapshotManifest.allHeaderLines(root).toMap
     versions.filterNot(keep).foreach { v =>
+      val sidecar = SnapshotFiles.named(headers.getOrElse(v, Nil))
       java.nio.file.Files.deleteIfExists(mdir.resolve(s"v$v.manifest"))
-      java.nio.file.Files.deleteIfExists(mdir.resolve(s"v$v.files"))
+      sidecar.foreach(n => java.nio.file.Files.deleteIfExists(mdir.resolve(n)))
     }
+    // any other sidecar no manifest names is a lost or crashed
+    // attempt's (an in-flight attempt's is protected by the same grace
+    // window as its data dirs)
+    val named = SnapshotManifest.allHeaderLines(root)
+      .flatMap(v => SnapshotFiles.named(v._2)).toSet
+    Option(mdir.toFile.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.endsWith(".files") && !named(f.getName) &&
+        oldEnough(f))
+      .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
     removed
   }
 }

@@ -15,8 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `SourceQueries` saves no session conf by hand (`withConfs` does).
   * Every table commit publishes through `SnapshotTxn.commit`: no main
   * file swaps a dir by rename outside the `MrOutSource` committer,
-  * and only the publish and the two new-root bootstraps write a
-  * manifest. Parquet schemas are inferred only in `Tables.schemaOf`,
+  * and only `Attempt.publish` writes a manifest, which publishes the
+  * stats sidecar (and a bootstrap's `table.meta`) with it. Parquet schemas are inferred only in `Tables.schemaOf`,
   * behind its cache. Every store write goes through a writer that folds
   * its files' entries (`SnapshotTxn.writeLeaves` or the v2 task
   * writer), and row counts come from those entries, never from a
@@ -86,13 +86,27 @@ class LayeringSpec extends AnyFunSuite {
       r._1 != "graft/sources/MrOutSource.scala")
     assert(renames.isEmpty, renames.map(r => s"${r._1}: ${r._3.trim}")
       .mkString("dir swap by rename outside MrOutSource:\n", "\n", ""))
-    // the definition, Attempt.publish, and the clone and branch
-    // bootstraps of a new root at the source's version number
+    // the definition and Attempt.publish
     val publishes = lines.filter(_._3.contains("writeManifest("))
       .map(r => s"${r._1}:${r._2}")
-    assert(publishes.sorted === Seq("Attempt", "snapshotBranchCreate",
-        "snapshotClone", "writeManifest")
+    assert(publishes.sorted === Seq("Attempt", "writeManifest")
         .map(o => s"graft/sources/SnapshotTxn.scala:$o"))
+  }
+
+  test("every version publishes whole: no writer skips its sidecar") {
+    def hits(p: ((String, String, String)) => Boolean) =
+      mainLines.filter(p).map(r => s"${r._1}: ${r._3.trim}")
+    val skips = hits(r => r._3.contains("fresh = None") ||
+      r._3.contains("SnapshotFiles.exists"))
+    assert(skips.isEmpty,
+      skips.mkString("a version without its sidecar:\n", "\n", ""))
+    // a plain write laid out by a store mirror column (`<col>_p`) is a
+    // store write that bypasses writeLeaves and its stats fold
+    val mirrorWrite = "\\.partitionBy\\(\\s*\"[^\"]*_p\"".r
+    val plain = hits(r => r._1 != "graft/sources/SnapshotTxn.scala" &&
+      mirrorWrite.findFirstIn(r._3).nonEmpty)
+    assert(plain.isEmpty, plain.mkString(
+      "store layout written outside SnapshotTxn (use snapshotInit):\n", "\n", ""))
   }
 
   test("every parquet schema inference goes through the schema cache") {

@@ -5,17 +5,17 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Tables
-import graft.sources.{SnapshotManifest, SnapshotTable}
+import graft.sources.{SnapshotBloom, SnapshotFiles,
+  SnapshotMissingFileException, SnapshotTable}
 
 /** Pins the snapshot connector's METADATA PLANE — the round-10 rework
   * of planning-time cost (the round-9 verdict's "eager and
   * driver-collected" finding):
   *
-  *  1. sidecar-served listing: a store committed through the current
-  *     write paths plans with ZERO `listStatus` calls;
-  *  2. legacy fallback: a store without sidecars lists LAZILY — FS
-  *     list calls == partitions surviving the filters, never the
-  *     table's partition count;
+  *  1. sidecar-served listing: the scan's files are exactly the
+  *     version's sidecar entries for the surviving partitions;
+  *  2. a version whose manifest names no sidecar is refused with
+  *     [[SnapshotMissingFileException]], never listed;
   *  3. min/max stats skipping: a range predicate on an unindexed
   *     column lists a strict subset of files, values unchanged;
   *  4. scoped Bloom loading: bitsets materialized on the driver ==
@@ -36,26 +36,29 @@ class SnapshotMetadataSpec extends SparkSpec {
       .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
     df.collect()
     val index = SnapshotTable.fileIndexOf(df)
-    assert(index.fsListCalls === 0,
-      s"sidecar present but ${index.fsListCalls} listStatus calls ran")
     assert(index.lastListing._1 === 6)
+    // the base plane has no listing code left: what the scan lists is
+    // exactly the version's sidecar entries
+    val sidecar = SnapshotFiles.read(root, 2)
+    assert(index.lastListing._2 === sidecar.collect {
+      case (pv, es) if pv >= "1995-01" && pv <= "1995-06" => es.size
+    }.sum)
+    assert(index.inputFiles.map(SnapshotBloom.fileKey).toSet ===
+      sidecar.values.flatten.map(e => SnapshotBloom.fileKey(e.path)).toSet)
   }
 
-  test("legacy store (no sidecar) lists lazily: FS calls == survivors") {
-    // same data dirs, fresh root with ONLY a v1 manifest — the
-    // pre-sidecar on-disk layout
-    val legacy = java.nio.file.Files.createTempDirectory("legacy_snap")
-    SnapshotTxn.writeManifest(legacy, 1, SnapshotManifest.read(root, 2))
-    val months = SnapshotManifest.read(legacy, 1).size
-    assert(months >= 70, s"fixture denominator shrank: $months")
-    val df = SnapshotTable.read(spark, legacy, 1)
-      .filter(col("o_ym_p").between("1995-01", "1995-06"))
-      .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-    df.collect()
-    val index = SnapshotTable.fileIndexOf(df)
-    assert(index.fsListCalls === 6,
-      s"expected 6 lazy listings (one per surviving month), " +
-        s"got ${index.fsListCalls} of $months")
+  test("a version whose manifest names no sidecar is refused by name") {
+    // same data dirs and table.meta, fresh root with a hand-written v1
+    // manifest that names no sidecar — the shape no commit writes
+    val bare = java.nio.file.Files.createTempDirectory("bare_snap")
+    java.nio.file.Files.copy(root.resolve("table.meta"),
+      bare.resolve("table.meta"))
+    SnapshotTxn.writeManifest(bare, 1, SnapshotManifest.read(root, 2))
+    val e = intercept[SnapshotMissingFileException] {
+      SnapshotTable.read(spark, bare, 1)
+    }
+    assert(e.getMessage.startsWith(s"$bare v1 has no stats sidecar"),
+      e.getMessage)
   }
 
   test("min/max stats skip files on a range predicate, values exact") {
@@ -69,7 +72,6 @@ class SnapshotMetadataSpec extends SparkSpec {
     val (_, listed) = index.lastListing
     assert(total >= 12, s"fixture too few files ($total) to prove skipping")
     assert(listed < total, s"no stats skipping: $listed of $total files")
-    assert(index.fsListCalls === 0)
     val expect = Tables.orders(spark, sf0001)
       .filter(col("o_totalprice") >= lit(400000.0))
       .select(col("o_orderkey"), col("o_totalprice"))

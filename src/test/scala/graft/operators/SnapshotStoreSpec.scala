@@ -36,16 +36,10 @@ class SnapshotStoreSpec extends SparkSpec {
     val orders = Tables.orders(spark, sf0001)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         date_format(col("o_orderdate"), "yyyy-MM").as("o_ym"))
-    val d1 = root.resolve("d1").toString
-    orders.withColumn("o_ym_p", col("o_ym"))
-      .write.partitionBy("o_ym_p").parquet(d1)
-    val months = new File(d1).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("o_ym_p="))
-      .map(f => f.getName.stripPrefix("o_ym_p=") -> f.getAbsolutePath)
-      .toMap
-    // publish v1 through the production writer so the spec pins the
-    // real manifest format
-    SnapshotTxn.writeManifest(root, 1, months)
+    // v1 through the store's bootstrap: the real manifest, sidecar
+    // and table.meta
+    SnapshotTxn.snapshotInit(spark, root, orders)
+    val months = SnapshotManifest.read(root, 1)
 
     val month = "1996-03"
     assert(months.contains(month), s"fixture month $month missing")
@@ -90,14 +84,10 @@ class SnapshotStoreSpec extends SparkSpec {
     val orders = Tables.orders(spark, sf0001)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         date_format(col("o_orderdate"), "yyyy-MM").as("o_ym"))
-    val d1 = root.resolve("d1").toString
-    orders.withColumn("o_ym_p", col("o_ym"))
-      .write.partitionBy("o_ym_p").parquet(d1)
-    val months = new File(d1).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("o_ym_p="))
-      .map(f => f.getName.stripPrefix("o_ym_p=") -> f.getAbsolutePath)
-      .toMap
-    SnapshotTxn.writeManifest(root, 1, months)
+    // v1 through the store's bootstrap: the real manifest, sidecar
+    // and table.meta
+    SnapshotTxn.snapshotInit(spark, root, orders)
+    val months = SnapshotManifest.read(root, 1)
 
     val month = "1996-03"
     def delta(bump: Double) = orders.filter(col("o_ym") === month)
@@ -164,14 +154,10 @@ class SnapshotStoreSpec extends SparkSpec {
     val orders = Tables.orders(spark, sf0001)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         date_format(col("o_orderdate"), "yyyy-MM").as("o_ym"))
-    val d1 = root.resolve("d1").toString
-    orders.withColumn("o_ym_p", col("o_ym"))
-      .write.partitionBy("o_ym_p").parquet(d1)
-    val months = new File(d1).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("o_ym_p="))
-      .map(f => f.getName.stripPrefix("o_ym_p=") -> f.getAbsolutePath)
-      .toMap
-    SnapshotTxn.writeManifest(root, 1, months)
+    // v1 through the store's bootstrap: the real manifest, sidecar
+    // and table.meta
+    SnapshotTxn.snapshotInit(spark, root, orders)
+    val months = SnapshotManifest.read(root, 1)
     val month = "1996-03"
     val delta = orders.filter(col("o_ym") === month)
       .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))

@@ -88,13 +88,13 @@ class SnapshotVacuumMetadataSpec extends SparkSpec {
     import spark.implicits._
     val root = Paths.get("target/graft-io/vac_txn_spec")
     org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-    val leaf = root.resolve("d1").resolve("a")
-    Seq((1L, 1.0)).toDF("k", "price").write.parquet(leaf.toString)
-    val months = Map("a" -> leaf.toAbsolutePath.toString)
     // v1 = a sink micro-batch (txn marker); v2 = an interleaved batch
     // writer — the app's HIGHEST marker now rides a non-head manifest
-    SnapshotTxn.writeManifest(root, 1, months, txn = Some("appX" -> 7L))
-    SnapshotTxn.writeManifest(root, 2, months)
+    SnapshotTxn.snapshotInit(spark, root,
+      Seq((1L, 1.0, "a")).toDF("k", "price", "g"), partCols = Seq("g"),
+      txn = Some("appX" -> 7L), keyCol = "k")
+    SnapshotTxn.commit(root)(a =>
+      a.publish(graft.sources.SnapshotManifest.read(root, a.head)))
     assert(graft.sources.SnapshotManifest.lastTxnBatch(root, "appX")
       === Some(7L))
     SnapshotTxn.snapshotVacuum(root, Set(2), 0)

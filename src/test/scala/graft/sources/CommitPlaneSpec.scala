@@ -21,23 +21,26 @@ import graft.sources.SnapshotTxn.{commit, writeLeaves, MaxAttempts,
   *  4. a retry rebases on the new head, so the racer's commit survives;
   *  5. publishing a commit's stats sidecar starts no Spark job (the
   *     entries were folded by the write tasks);
-  *  6. a losing attempt's folded entries reach no sidecar.
+  *  6. a losing attempt's folded entries reach no sidecar;
+  *  7. a lost link or a throw before it leaves the head and its
+  *     sidecar as they were, and nothing but unreferenced scratch,
+  *     which vacuum reclaims.
   */
 class CommitPlaneSpec extends SparkSpec {
 
   /** A store at v1 holding one partition. */
   private def store(): Path = {
     val root = Files.createTempDirectory("commit_plane")
-    SnapshotTxn.writeManifest(root, 1, Map("p0" -> root.resolve("d0").toString))
+    commit(root)(_.publish(Map("p0" -> root.resolve("d0").toString)))
     root
   }
 
   /** Publish `version` as another committer would: the parent's entries
     * plus one partition of its own. */
   private def race(root: Path, version: Int): Unit =
-    SnapshotTxn.writeManifest(root, version,
+    commit(root, Some(version - 1))(r => r.publish(
       SnapshotManifest.read(root, version - 1) +
-        (s"racer$version" -> root.resolve(s"r$version").toString))
+        (s"racer$version" -> root.resolve(s"r$version").toString)))
 
   /** An attempt's scratch dir with one data file in it. */
   private def written(a: SnapshotTxn.Attempt): Path = {
@@ -135,7 +138,7 @@ class CommitPlaneSpec extends SparkSpec {
     val root = Files.createTempDirectory("commit_plane_jobs")
     commit(root) { a =>
       val (leaves, files) = writeRows(a, 1L to 20L)
-      a.publish(leaves.toMap, fresh = Some(files))
+      a.publish(leaves.toMap, fresh = files)
     }
     // v2 rewrites partition "1" and carries "0" from v1's sidecar
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -150,15 +153,14 @@ class CommitPlaneSpec extends SparkSpec {
       sc.addSparkListener(listener)
       try {
         a.publish(SnapshotManifest.read(root, a.head) ++ leaves,
-          fresh = Some(files))
+          fresh = files)
         org.apache.spark.GraftListenerDrain.drain(sc)
       } finally sc.removeSparkListener(listener)
     }
     assert(jobs.get === 0, "publish must not re-read what the commit wrote")
-    val sidecar = SnapshotFiles.read(root, 2).getOrElse(
-      fail("the profiled commit published no sidecar"))
+    val sidecar = SnapshotFiles.read(root, 2)
     assert(sidecar.keySet === Set("0", "1"))
-    assert(sidecar("0") === SnapshotFiles.read(root, 1).get("0"),
+    assert(sidecar("0") === SnapshotFiles.read(root, 1)("0"),
       "the untouched partition's entries carry verbatim")
     assert(sidecar("1").map(_.rows).sum === 2L)
   }
@@ -167,7 +169,7 @@ class CommitPlaneSpec extends SparkSpec {
     val root = Files.createTempDirectory("commit_plane_fold")
     commit(root) { a =>
       val (leaves, files) = writeRows(a, 1L to 10L)
-      a.publish(leaves.toMap, fresh = Some(files))
+      a.publish(leaves.toMap, fresh = files)
     }
     val scratch = Seq.newBuilder[Path]
     commit(root) { a =>
@@ -176,17 +178,16 @@ class CommitPlaneSpec extends SparkSpec {
       if (a.head == 1) commit(root) { r => // the racer wins v2
         val (rl, rf) = writeRows(r, Seq(13L))
         r.publish(SnapshotManifest.read(root, r.head) ++ rl,
-          fresh = Some(rf))
+          fresh = rf)
       }
       a.publish(SnapshotManifest.read(root, a.head) ++ leaves,
-        fresh = Some(files))
+        fresh = files)
     }
     val Seq(lost, won) = scratch.result()
     assert(!Files.exists(lost), s"loser's scratch dir survived: $lost")
     assert(SnapshotManifest.head(root) === 3)
     for (v <- 1 to 3) {
-      val entries = SnapshotFiles.read(root, v).getOrElse(
-        fail(s"v$v published no sidecar")).values.flatten.toSeq
+      val entries = SnapshotFiles.read(root, v).values.flatten.toSeq
       entries.foreach { e =>
         assert(!e.path.startsWith(lost.toString),
           s"v$v sidecar names the loser's file ${e.path}")
@@ -199,10 +200,92 @@ class CommitPlaneSpec extends SparkSpec {
           .map(_.getPath.toUri.getPath)).toSet
       assert(entries.map(_.path).toSet === listed, s"v$v")
     }
-    val v3 = SnapshotFiles.read(root, 3).get
+    val v3 = SnapshotFiles.read(root, 3)
     assert(v3("1").map(_.path).forall(_.startsWith(won.toString)))
-    assert(v3("0") === SnapshotFiles.read(root, 1).get("0"),
+    assert(v3("0") === SnapshotFiles.read(root, 1)("0"),
       "partition 0 carries from v1 through the racer's v2")
     assert(v3.values.flatten.map(_.rows).sum === 6L)
+  }
+
+  /** Every visible regular file under `root` that no manifest
+    * references: a live file is a manifest, the sidecar one names,
+    * `table.meta`, or a data file some version's sidecar lists.
+    */
+  private def unreferenced(root: Path): Seq[Path] = {
+    val versions = SnapshotManifest.versionsWithMtime(root).map(_._1)
+    val mdir = root.resolve("manifests")
+    val live = (versions.flatMap { v =>
+      Seq(mdir.resolve(s"v$v.manifest"),
+        mdir.resolve(SnapshotFiles.named(
+          SnapshotManifest.headerLines(root, v)).get)) ++
+        SnapshotFiles.read(root, v).values.flatten.map(e => Path.of(e.path))
+    } :+ root.resolve("table.meta")).map(_.toAbsolutePath.normalize).toSet
+    val st = Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      st.iterator.asScala.filter(Files.isRegularFile(_))
+        .map(_.toAbsolutePath.normalize).filterNot(live).toSeq
+        // the data-file rule's hidden names: checksums, `_SUCCESS`
+        .filterNot(p => p.getFileName.toString.startsWith(".") ||
+          p.getFileName.toString.startsWith("_"))
+    } finally st.close()
+  }
+
+  /** A two-partition store at v1 written through the commit plane. */
+  private def dataStore(name: String): Path = {
+    val root = Files.createTempDirectory(name)
+    commit(root) { a =>
+      val (leaves, files) = writeRows(a, 1L to 10L)
+      a.publish(leaves.toMap, fresh = files)
+    }
+    root
+  }
+
+  test("a lost link leaves the winner's head and sidecar, and no loser file") {
+    val root = dataStore("commit_plane_lost")
+    var scratch: Option[Path] = None
+    intercept[SnapshotConflictException] {
+      commit(root, Some(1)) { a =>
+        val (leaves, files) = writeRows(a, Seq(11L, 12L))
+        scratch = Some(Path.of(leaves.head._2).getParent)
+        commit(root) { r => // the racer wins v2 first
+          val (rl, rf) = writeRows(r, Seq(13L))
+          r.publish(SnapshotManifest.read(root, r.head) ++ rl, fresh = rf)
+        }
+        a.publish(SnapshotManifest.read(root, a.head) ++ leaves,
+          fresh = files)
+      }
+    }
+    assert(SnapshotManifest.head(root) === 2)
+    val headSidecar = SnapshotFiles.read(root, 2)
+    // v1's even ids 2..10 carried, the racer's one row under "1"
+    assert(headSidecar.values.flatten.map(_.rows).sum === 6L,
+      "the head's sidecar is the racer's")
+    assert(!Files.exists(scratch.get), "the loser's scratch dir survived")
+    val sidecars = Files.list(root.resolve("manifests")).toArray.toSeq
+      .map(_.toString).filter(_.endsWith(".files"))
+    assert(sidecars.size === 2, s"a loser's sidecar was left: $sidecars")
+    assert(unreferenced(root).isEmpty, unreferenced(root).mkString(", "))
+    SnapshotTxn.snapshotVacuum(root, keep = Set(1, 2))
+    assert(unreferenced(root).isEmpty, unreferenced(root).mkString(", "))
+    assert(SnapshotFiles.read(root, 2) === headSidecar)
+  }
+
+  test("a throw before the link leaves the head; vacuum reclaims the rest") {
+    val root = dataStore("commit_plane_throw")
+    val before = SnapshotFiles.read(root, 1)
+    val e = intercept[IllegalStateException] {
+      commit(root) { a =>
+        writeRows(a, Seq(11L, 12L))
+        throw new IllegalStateException("failed before publish")
+      }
+    }
+    assert(e.getMessage === "failed before publish")
+    assert(SnapshotManifest.head(root) === 1)
+    assert(SnapshotFiles.read(root, 1) === before)
+    assert(unreferenced(root).nonEmpty, "the failed attempt wrote no scratch")
+    SnapshotTxn.snapshotVacuum(root, keep = Set(1))
+    assert(unreferenced(root).isEmpty, unreferenced(root).mkString(", "))
+    assert(SnapshotFiles.read(root, 1) === before)
   }
 }

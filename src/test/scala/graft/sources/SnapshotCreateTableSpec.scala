@@ -190,7 +190,7 @@ class SnapshotCreateTableSpec extends SparkSpec {
     }
     assert(eHalf.getMessage.toUpperCase.contains("ALREADY EXISTS"),
       eHalf.getMessage)
-    val keptMeta = SnapshotMeta.read(half).get
+    val keptMeta = SnapshotMeta.read(half)
     assert(keptMeta.keyCol === Some("k") &&
       keptMeta.dataSchema.fieldNames.toSeq === Seq("k"),
       "a refused CREATE must not clobber the existing declaration")

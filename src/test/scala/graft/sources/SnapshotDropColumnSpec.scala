@@ -138,7 +138,7 @@ class SnapshotDropColumnSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(
       root.resolve("manifests").resolve("v3.manifest")),
       "the #drop-bearing manifest must actually have expired")
-    val meta = SnapshotMeta.read(root).get
+    val meta = SnapshotMeta.read(root)
     assert(SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
       .fieldNames.toSeq === Seq("id", "etype", "day"),
       "vacuum lost the tombstone: the dropped column resurfaced")
@@ -186,7 +186,7 @@ class SnapshotDropColumnSpec extends SparkSpec {
     spark.sql(s"ALTER TABLE $cat.`t` DROP COLUMN etype")          // v2
     spark.sql(s"CALL $cat.clone('t', 'u')")
     val uroot = root.getParent.resolve("u")
-    val umeta = SnapshotMeta.read(uroot).get
+    val umeta = SnapshotMeta.read(uroot)
     assert(SnapshotManifest.effectiveDataSchema(uroot, umeta.dataSchema)
       .fieldNames.toSeq === Seq("id", "day", "v"))
     intercept[Exception] {

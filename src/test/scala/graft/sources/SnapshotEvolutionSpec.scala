@@ -34,7 +34,7 @@ class SnapshotEvolutionSpec extends SparkSpec {
     frame(Seq((1L, "O", 10.0), (2L, "O", 20.0)), "2024-01")
       .unionByName(frame(Seq((3L, "F", 30.0)), "2024-02"))
       .write.format("graft-snapshot").option("keyCol", "o_orderkey").mode("append").save(root.toString)
-    assert(SnapshotMeta.read(root).get.dataSchema.fieldNames.toSeq ===
+    assert(SnapshotMeta.read(root).dataSchema.fieldNames.toSeq ===
       Seq("o_orderkey", "o_orderstatus", "o_totalprice", "o_ym"))
 
     // v2: upsert key 2 WITH the new column — touches 2024-01 only
@@ -53,7 +53,7 @@ class SnapshotEvolutionSpec extends SparkSpec {
     assert(Files.readAllLines(
       root.resolve("manifests").resolve("v2.manifest")).get(0)
       .startsWith("#schema\t"))
-    assert(SnapshotMeta.read(root).get.dataSchema.fieldNames.toSeq ===
+    assert(SnapshotMeta.read(root).dataSchema.fieldNames.toSeq ===
       Seq("o_orderkey", "o_orderstatus", "o_totalprice", "o_ym"))
 
     def rows(v: Int): Set[(Long, Double, Option[String])] =

@@ -51,7 +51,7 @@ class SnapshotGuardrailsSpec extends SparkSpec {
       .write.format("graft-snapshot").option("keyCol", "o_orderkey")
       .option("partCol", "o_ym").mode("append").save(root.toString)
     // strip the key from table.meta — the legacy/foreign-store shape
-    val m = SnapshotMeta.read(root).get
+    val m = SnapshotMeta.read(root)
     SnapshotMeta.write(root, m.copy(keyCol = None))
 
     // reads don't need a key

@@ -76,7 +76,7 @@ class SnapshotHiddenPartitioningSpec extends SparkSpec {
     assert(spark.table(s"$cat.`hp`").columns.toSeq ===
       Seq("id", "d", "v"))
     // but the layout is declared with transform tags in table.meta
-    val spec = SnapshotMeta.read(root).get.partitionSchema
+    val spec = SnapshotMeta.read(root).partitionSchema
     assert(spec.fieldNames.toSeq === Seq("d_p", "id_p"))
     assert(SnapshotTransforms.of(spec("d_p")) === SnapshotTransforms.Days)
     assert(SnapshotTransforms.of(spec("id_p")) ===
@@ -415,7 +415,7 @@ class SnapshotHiddenPartitioningSpec extends SparkSpec {
     // clone: the transform tags ride the copied meta — the clone
     // derives and prunes exactly like its source
     spark.sql(s"CALL $cat.clone('mx', 'mx2')")
-    val spec2 = SnapshotMeta.read(base.resolve("mx2")).get.partitionSchema
+    val spec2 = SnapshotMeta.read(base.resolve("mx2")).partitionSchema
     assert(SnapshotTransforms.of(spec2("d_p")) === SnapshotTransforms.Days)
     assert(SnapshotTransforms.of(spec2("id_p")) ===
       SnapshotTransforms.Bucket(2))
@@ -461,7 +461,7 @@ class SnapshotHiddenPartitioningSpec extends SparkSpec {
          |PARTITIONED BY (years(d), hours(ts))
          |TBLPROPERTIES ('key_column' = 'eid')""".stripMargin)
     val root = base.resolve("yh")
-    val spec = SnapshotMeta.read(root).get.partitionSchema
+    val spec = SnapshotMeta.read(root).partitionSchema
     assert(SnapshotTransforms.of(spec("d_p")) === SnapshotTransforms.Years)
     assert(SnapshotTransforms.of(spec("ts_p")) === SnapshotTransforms.Hours)
     assert(spark.table(s"$cat.`yh`").columns.toSeq ===
@@ -573,7 +573,7 @@ class SnapshotHiddenPartitioningSpec extends SparkSpec {
     // meaningless) must be ignored, never wrong
     import org.apache.spark.sql.connector.expressions.{Expressions => VE}
     import org.apache.spark.sql.connector.expressions.filter.{Predicate => VP}
-    val spec = SnapshotMeta.read(base.resolve("fact")).get.partitionSchema
+    val spec = SnapshotMeta.read(base.resolve("fact")).partitionSchema
     val range = new VP(">", Array(VE.column("id"),
       VE.literal(java.lang.Long.valueOf(3L))))
     assert(SnapshotTransforms.v2ToSourceExpr(range, spec).isEmpty,

@@ -4,13 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The retrofit half of the maintenance plane (round 12):
-  * `CALL snap.compute_stats('t')` backfills a missing stats sidecar
-  * (legacy / pre-sidecar stores regain zero-`listStatus` planning and
-  * range skipping), and `CALL snap.build_bloom('t', col)` retrofits
-  * the per-file Bloom point-lookup index onto a store bootstrapped
-  * without one. Both are one-scan, publish-once operations; neither
-  * touches data files.
+/** The retrofit half of the maintenance plane (round 12): `CALL
+  * snap.build_bloom('t', col)` retrofits the per-file Bloom
+  * point-lookup index onto a store bootstrapped without one (one scan,
+  * publish-once, no data file touched). Every version carries its
+  * stats sidecar, so a store without one is refused, not backfilled.
   */
 class SnapshotMaintenanceSpec extends SparkSpec {
 
@@ -30,30 +28,22 @@ class SnapshotMaintenanceSpec extends SparkSpec {
     (root, cat)
   }
 
-  test("compute_stats backfills a legacy store's sidecar BYTE-EQUAL to " +
-    "the door-published one; an existing sidecar is left verbatim") {
+  test("a store without its sidecar is refused; compute_stats is gone") {
     val (root, cat) = freshStore("ms_stats")
-    val sidecar = root.resolve("manifests").resolve("v1.files")
-    val original = java.nio.file.Files.readAllLines(sidecar)
-    // simulate a pre-sidecar store
+    val sidecar = root.resolve("manifests").resolve(
+      SnapshotFiles.named(SnapshotManifest.headerLines(root, 1)).get)
+    assert(SnapshotFiles.read(root, 1).values.flatten.map(_.rows).sum ===
+      120L)
     java.nio.file.Files.delete(sidecar)
-    assert(!SnapshotFiles.exists(root, 1))
-    val r = spark.sql(s"CALL $cat.compute_stats('t')").head()
-    assert(r.getInt(0) === 1 && r.getInt(1) === original.size, r.toString)
-    // the backfill recomputes exactly what the commit published: same
-    // files, same rows/bytes, same per-column min/max text
-    val rebuilt = java.nio.file.Files.readAllLines(sidecar)
-    assert(rebuilt.asInstanceOf[java.util.List[String]].toString ===
-      original.asInstanceOf[java.util.List[String]].toString,
-      "backfilled sidecar must equal the door-published one")
-    // second call: immutable sidecar left verbatim, -1 reported
-    val r2 = spark.sql(s"CALL $cat.compute_stats('t')").head()
-    assert(r2.getInt(1) === -1)
-    // and planning is sidecar-served again: zero listStatus calls
-    val df = SnapshotTable.read(spark, root, 1)
-    assert(df.count() === 120L)
-    assert(SnapshotTable.fileIndexOf(df).fsListCalls === 0,
-      "a backfilled sidecar must serve the listing")
+    val e = intercept[SnapshotMissingFileException] {
+      SnapshotTable.read(spark, root, 1)
+    }
+    assert(e.getMessage.startsWith(s"$root v1 has no stats sidecar"),
+      e.getMessage)
+    val gone = intercept[Exception] {
+      spark.sql(s"CALL $cat.compute_stats('t')").collect()
+    }
+    assert(gone.getMessage.contains("compute_stats"), gone.getMessage)
   }
 
   test("build_bloom retrofits point-lookup skipping onto a store " +

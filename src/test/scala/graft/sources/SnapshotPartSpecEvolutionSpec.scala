@@ -212,7 +212,7 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
     // the normalize (v5) republished the #partspec line while v3's
     // copy survives — the fold must still be one spec per arity, or
     // the union read double-serves every new-spec partition
-    val meta = SnapshotMeta.read(root).get
+    val meta = SnapshotMeta.read(root)
     assert(SnapshotManifest.partitionSpecs(root, meta.partitionSchema)
       .map(_.length) === Seq(1, 2))
     val df = SnapshotTable.read(spark, root, SnapshotManifest.head(root))
@@ -408,7 +408,7 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
     // stage the evolution ON THE BRANCH (round 12: dotted procedure
     // args resolve like multipart identifiers) — main stays 1-spec
     spark.sql(s"CALL $cat.evolve_partitioning('t.branch_dev', 'etype')")
-    val meta = SnapshotMeta.read(root).get
+    val meta = SnapshotMeta.read(root)
     assert(SnapshotManifest.partitionSpecs(root, meta.partitionSchema)
       .map(_.length) === Seq(1), "staging must not leak to main")
     // INSERT through the branch table migrates the touched day there
@@ -452,7 +452,7 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(
       root.resolve("manifests").resolve("v2.manifest")),
       "the #partspec-bearing manifest must actually have expired")
-    val meta = SnapshotMeta.read(root).get
+    val meta = SnapshotMeta.read(root)
     assert(SnapshotManifest.partitionSpecs(root, meta.partitionSchema)
       .map(_.length) === Seq(1, 2),
       "vacuum lost the spec fold: mixed-arity entries unreadable")
@@ -506,7 +506,7 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
     import spark.implicits._
     val (root, cat) = freshStore("pse_tf")
     spark.sql(s"CALL $cat.evolve_partitioning('t', 'bucket(4, id)')") // v2
-    val meta = SnapshotMeta.read(root).get
+    val meta = SnapshotMeta.read(root)
     val specs = SnapshotManifest.partitionSpecs(root, meta.partitionSchema)
     assert(specs.map(_.fieldNames.toSeq) ===
       Seq(Seq("day_p"), Seq("day_p", "id_p")))

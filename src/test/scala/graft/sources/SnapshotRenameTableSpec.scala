@@ -10,9 +10,9 @@ import graft.SparkSpec
   * the move: data exactness, time travel, tags, branches (whose
   * manifests reference main dirs `../..`-relative), the stats
   * sidecar's zero-listing planning, Bloom file-skipping (suffix-matched
-  * across the move), and DML under the new name — plus the one-time
-  * migration sweep for LEGACY stores whose metadata still carried
-  * absolute paths.
+  * across the move), and DML under the new name. A store in the old
+  * absolute-path format (no `#files` line, `v<N>.files` beside the
+  * manifest) is refused by name, never moved or rewritten.
   */
 class SnapshotRenameTableSpec extends SparkSpec {
 
@@ -74,13 +74,15 @@ class SnapshotRenameTableSpec extends SparkSpec {
       s"SELECT COUNT(*) AS n FROM $cat.`u` VERSION AS OF 'dev'")
       .head().getLong(0) === 5L)
 
-    // stats sidecar still serves the listing: zero listStatus calls
+    // stats sidecar still serves the listing
     val read = SnapshotTable.read(spark, newRoot, 2,
       bloomKey = Some("o_orderkey"))
       .filter(col("o_orderkey") === 7L).select(col("o_totalprice"))
     assert(read.collect().map(_.getDouble(0)).toSeq === Seq(7.0))
     val idx = SnapshotTable.fileIndexOf(read)
-    assert(idx.fsListCalls === 0,
+    assert(idx.inputFiles.map(SnapshotBloom.fileKey).toSet ===
+      SnapshotFiles.read(newRoot, 2).values.flatten
+        .map(e => SnapshotBloom.fileKey(e.path)).toSet,
       "sidecar-served planning must survive the move")
     // Bloom skipping still fires (suffix-matched across the root move)
     assert(idx.bloomBitsetsLoaded > 0,
@@ -111,52 +113,46 @@ class SnapshotRenameTableSpec extends SparkSpec {
       eDup.getMessage)
   }
 
-  test("legacy store with ABSOLUTE metadata paths: the rename sweep " +
-    "migrates manifests and sidecars in place, mtimes preserved") {
+  test("an old absolute-path store is refused by name at a rename") {
     import scala.jdk.CollectionConverters._
     val (base, cat) = freshCat("rt_legacy")
     val root = base.resolve("t")
     frame(Seq((1L, "O", 10.0), (2L, "F", 20.0)), "2024-01")
       .write.format("graft-snapshot").option("keyCol", "o_orderkey")
       .mode("append").save(root.toString)
-    // devolve the store to the pre-relative era: resolve every stored
-    // path back to its absolute form
-    val mf = root.resolve("manifests").resolve("v1.manifest")
-    val mtime = mf.toFile.lastModified()
-    val absLines = java.nio.file.Files.readAllLines(mf).asScala.map { l =>
-      if (l.startsWith("#")) l
-      else {
-        val i = l.lastIndexOf('\t')
-        l.substring(0, i + 1) +
-          SnapshotManifest.resolvePath(root, l.substring(i + 1))
+    // devolve the store to the pre-relative era: every stored path
+    // back to its absolute form, and the sidecar as `v1.files` with no
+    // `#files` line naming it
+    val mdir = root.resolve("manifests")
+    val mf = mdir.resolve("v1.manifest")
+    val sc = mdir.resolve(
+      SnapshotFiles.named(SnapshotManifest.headerLines(root, 1)).get)
+    val absLines = java.nio.file.Files.readAllLines(mf).asScala
+      .filterNot(_.startsWith(SnapshotFiles.HeaderTag)).map { l =>
+        if (l.startsWith("#")) l
+        else {
+          val i = l.lastIndexOf('\t')
+          l.substring(0, i + 1) +
+            SnapshotManifest.resolvePath(root, l.substring(i + 1))
+        }
       }
-    }
     java.nio.file.Files.write(mf, absLines.asJava)
-    mf.toFile.setLastModified(mtime)
-    val sc = root.resolve("manifests").resolve("v1.files")
     val scLines = java.nio.file.Files.readAllLines(sc).asScala.map(l =>
       l.replace("\"path\":\"", s""""path":"$root/"""))
-    java.nio.file.Files.write(sc, scLines.asJava)
+    java.nio.file.Files.write(mdir.resolve("v1.files"), scLines.asJava)
+    java.nio.file.Files.delete(sc)
     assert(java.nio.file.Files.readString(mf).contains(root.toString),
       "fixture must actually be absolute-path legacy")
 
-    spark.sql(s"ALTER TABLE $cat.`t` RENAME TO `u`")
-    val newRoot = base.resolve("u")
-    // the sweep rewrote the old-root paths; reads are exact and
-    // sidecar-planned (zero listings)
-    val got = SnapshotTable.read(spark, newRoot, 1)
-      .select(col("o_orderkey"), col("o_totalprice")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSet
-    assert(got === Set((1L, 10.0), (2L, 20.0)))
-    val idx = SnapshotTable.fileIndexOf(
-      SnapshotTable.read(spark, newRoot, 1))
-    idx.listFiles(Nil, Nil)
-    assert(idx.fsListCalls === 0, "sidecar must still serve post-sweep")
-    assert(newRoot.resolve("manifests").resolve("v1.manifest")
-      .toFile.lastModified() === mtime,
-      "the sweep must preserve commit instants")
-    assert(!java.nio.file.Files.readString(
-      newRoot.resolve("manifests").resolve("v1.manifest"))
-      .contains(base.toString), "sweep left absolute paths behind")
+    // resolving the table for the rename already refuses it
+    val e = intercept[SnapshotMissingFileException] {
+      spark.sql(s"ALTER TABLE $cat.`t` RENAME TO `u`")
+    }
+    assert(e.getMessage.startsWith(s"$root v1 has no stats sidecar"),
+      e.getMessage)
+    assert(!java.nio.file.Files.exists(base.resolve("u")),
+      "a refused store must not move")
+    assert(java.nio.file.Files.readString(mf).contains(root.toString),
+      "the refused store's manifest must be left as it was")
   }
 }

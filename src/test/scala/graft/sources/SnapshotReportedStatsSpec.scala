@@ -117,16 +117,24 @@ class SnapshotReportedStatsSpec extends SparkSpec {
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.GraftSnapshotCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
-    val sidecar = root.resolve("manifests").resolve("v1.files")
+    val sidecar = root.resolve("manifests").resolve(
+      SnapshotFiles.named(SnapshotManifest.headerLines(root, 1)).get)
     val lines = java.nio.file.Files.readAllLines(sidecar)
     assert(lines.size() > 1, s"need a multi-file sidecar: $lines")
-    // the legacy-upgrade shape: the scan PLANS against a sidecar-less
-    // version (real listing), then a partial sidecar appears (an
-    // upgrade that profiled only part of the history) before stats
-    // are consulted — pre-fix, the two unprofiled files counted as 0
-    // rows and numRows under-reported 90 as 30, flipping join
-    // planning toward broadcasting a large table
+    // a version whose sidecar is gone (the shape no commit writes)
+    // refuses to plan, naming the root and the version
     java.nio.file.Files.delete(sidecar)
+    val gone = intercept[SnapshotMissingFileException] {
+      dppScan(spark.sql(s"SELECT id, v FROM $cat.`t`"))
+    }
+    assert(gone.getMessage.startsWith(s"$root v1 has no stats sidecar"),
+      gone.getMessage)
+    // the scan PLANS against the full sidecar, then it shrinks to one
+    // file's entry (hand-edited) before stats are consulted — pre-fix,
+    // the two unknown files counted as 0 rows and numRows
+    // under-reported 90 as 30, flipping join planning toward
+    // broadcasting a large table
+    java.nio.file.Files.write(sidecar, lines)
     val df = spark.sql(s"SELECT id, v FROM $cat.`t`")
     val scan = dppScan(df)
     java.nio.file.Files.write(sidecar, lines.subList(0, 1))
@@ -224,8 +232,7 @@ class SnapshotReportedStatsSpec extends SparkSpec {
     assert(lo.collect().head.getLong(0) === 2000L)
   }
 
-  test("CALL compute_stats backfills NDV sketches on a sidecar-less " +
-    "store (parity with commit-time profiling)") {
+  test("NDV sketches ride every commit's sidecar; none is refused") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("repstats_bf")
     val root = base.resolve("t")
@@ -238,14 +245,21 @@ class SnapshotReportedStatsSpec extends SparkSpec {
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.GraftSnapshotCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
-    java.nio.file.Files.delete(root.resolve("manifests")
-      .resolve("v1.files")) // the legacy (pre-sidecar) shape
-    spark.sql(s"CALL $cat.compute_stats('t')")
-    val fm = SnapshotFiles.read(root, 1).get
+    val fm = SnapshotFiles.read(root, 1)
     assert(fm.valuesIterator.flatten.forall(_.ndv.contains("id")),
-      "backfilled sidecar must carry the NDV sketches")
+      "the commit's sidecar must carry the NDV sketches")
     val df = spark.sql(s"SELECT id, v FROM $cat.`t`")
     val cs = dppScan(df).estimateStatistics().columnStats()
-    assert(!cs.isEmpty, "backfilled NDV must reach the scan stats")
+    assert(!cs.isEmpty, "the sidecar's NDV must reach the scan stats")
+    java.nio.file.Files.delete(root.resolve("manifests").resolve(
+      SnapshotFiles.named(SnapshotManifest.headerLines(root, 1)).get))
+    val gone = intercept[SnapshotMissingFileException] {
+      dppScan(spark.sql(s"SELECT id, v FROM $cat.`t`"))
+    }
+    assert(gone.getMessage.startsWith(s"$root v1 has no stats sidecar"),
+      gone.getMessage)
+    assert(intercept[Exception] {
+      spark.sql(s"CALL $cat.compute_stats('t')").collect()
+    }.getMessage.contains("compute_stats"))
   }
 }

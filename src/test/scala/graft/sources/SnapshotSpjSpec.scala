@@ -211,12 +211,12 @@ class SnapshotSpjSpec extends SparkSpec {
     SnapshotTxn.snapshotReplacePartitions(rootA,
       SnapshotManifest.head(rootA), Set("0"),
       Map("0" -> hotDir.toString),
-      Some(SnapshotFiles.collect(s, Seq("0" -> hotDir.toString),
+      SnapshotFiles.collect(s, Seq("0" -> hotDir.toString),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id",
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.DoubleType))))))
+            org.apache.spark.sql.types.DoubleType)))))
     assert(Option(hotDir.toFile.listFiles()).get
       .count(_.getName.endsWith(".parquet")) === 3,
       "fixture must really split the hot bucket")

@@ -47,7 +47,7 @@ class SnapshotWidenColumnSpec extends SparkSpec {
     spark.sql(s"ALTER TABLE $cat.`t` ALTER COLUMN x TYPE DOUBLE")  // v3
     assert(SnapshotManifest.read(root, 3) === v1Dirs,
       "widening must move zero files")
-    val meta = SnapshotMeta.read(root).get
+    val meta = SnapshotMeta.read(root)
     val eff = SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
     assert(eff("n").dataType.simpleString === "bigint")
     assert(eff("x").dataType.simpleString === "double")
@@ -114,7 +114,7 @@ class SnapshotWidenColumnSpec extends SparkSpec {
     refuse(s"ALTER TABLE $cat.`t` ALTER COLUMN d TYPE DECIMAL(8,2)",
       "NOT_SUPPORTED_CHANGE_COLUMN")
     spark.sql(s"ALTER TABLE $cat.`t` ALTER COLUMN d TYPE DECIMAL(20,2)")
-    val meta = SnapshotMeta.read(root).get
+    val meta = SnapshotMeta.read(root)
     assert(SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
       ("d").dataType.simpleString === "decimal(20,2)")
     // key column: refused with the Bloom rationale (id is LONG here so
@@ -220,7 +220,7 @@ class SnapshotWidenColumnSpec extends SparkSpec {
       .option("keyCol", "id").option("partCol", "day")
       .mode("append").save(root.toString)                          // v3
     SnapshotTxn.snapshotVacuum(root, Set(3))
-    val meta = SnapshotMeta.read(root).get
+    val meta = SnapshotMeta.read(root)
     assert(SnapshotManifest.effectiveDataSchema(root, meta.dataSchema)
       ("n").dataType.simpleString === "bigint",
       "vacuum lost the widening overlay")

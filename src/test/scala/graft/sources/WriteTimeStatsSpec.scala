@@ -10,11 +10,11 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Every commit path folds its stats sidecar at write time
-  * ([[SnapshotFiles.StatsFold]]); `CALL compute_stats` still profiles
-  * with the distributed re-read ([[SnapshotFiles.collect]]). After each
-  * commit below, the published `v<N>.files` is deleted, rebuilt by
-  * `compute_stats`, and both entry sets must be identical file by
-  * file: bytes, rows, min/max text and the base64 NDV sketch. RESTORE
+  * ([[SnapshotFiles.StatsFold]]); [[SnapshotFiles.collect]] profiles
+  * the same files with a distributed re-read. After each commit below,
+  * the head's published sidecar is rebuilt by `collect` over the
+  * head's partition dirs, and both entry sets must be identical file
+  * by file: bytes, rows, min/max text and the base64 NDV sketch. RESTORE
   * and fast-forward, which carry a sidecar instead of folding one, get
   * the same check; CREATE TABLE's v1 must publish an empty one.
   *
@@ -71,19 +71,27 @@ class WriteTimeStatsSpec extends SparkSpec {
       .option("commitMode", mode).option("distribution", distribution)
       .mode("append").save(root.toString)
 
-  /** Delete the head's published sidecar, rebuild it with
-    * `compute_stats`, and require the same entries file by file.
+  /** Rebuild the head's published sidecar with [[SnapshotFiles
+    * .collect]] over its partition dirs (under the declared effective
+    * schema, columns with rename history left out, as the retired
+    * `compute_stats` did), and require the same entries file by file.
     */
-  private def assertRebuildMatches(root: Path, cat: String,
+  private def assertRebuildMatches(root: Path,
       what: String): Seq[SnapshotFiles.FileEntry] = {
     val v = SnapshotManifest.head(root)
-    val published = SnapshotFiles.read(root, v).getOrElse(
-      fail(s"$what: v$v published no sidecar")).values.flatten.toSeq
-    Files.delete(root.resolve("manifests").resolve(s"v$v.files"))
-    val r = spark.sql(s"CALL $cat.compute_stats('t')").head()
-    assert(r.getInt(0) === v && r.getInt(1) === published.size,
-      s"$what: $r")
-    val rebuilt = SnapshotFiles.read(root, v).get.values.flatten
+    val published = SnapshotFiles.read(root, v).values.flatten.toSeq
+    val declared = org.apache.spark.sql.types.StructType(SnapshotManifest
+      .effectiveDataSchema(root, SnapshotMeta.read(root).dataSchema)
+      .fields.map(_.copy(nullable = true)))
+    val chains = SnapshotRename.chainsFor(root, declared)
+    val rebuiltAll = SnapshotFiles.collect(spark,
+      SnapshotManifest.read(root, v).toSeq.sorted,
+      org.apache.spark.sql.types.StructType(
+        declared.fields.filterNot(f => chains.contains(f.name))))
+    assert(rebuiltAll.size === published.size, s"$what: file counts")
+    // the sidecar's stored-path round trip (relative under the root)
+    val rebuilt = rebuiltAll.map(e => e.copy(path = SnapshotManifest
+        .resolvePath(root, SnapshotManifest.relativizePath(root, e.path))))
       .map(e => e.path -> e).toMap
     assert(published.map(_.path).toSet === rebuilt.keySet,
       s"$what: the sidecars name different files")
@@ -107,7 +115,7 @@ class WriteTimeStatsSpec extends SparkSpec {
     // door bootstrap: 3 input tasks, no re-distribution -> 3 files in
     // every partition
     door(rows(1L to 300L, byMod).repartition(3), distribution = "none")
-    val v1 = assertRebuildMatches(root, cat, "door bootstrap")
+    val v1 = assertRebuildMatches(root, "door bootstrap")
     assert(v1.map(_.pv).toSet === Set("a%3Ab", "50%25", "plain"))
     assert(v1.groupBy(_.pv).values.forall(_.size == 3))
     assert(v1.exists(_.stats.get("f").exists(_._2 == "NaN")))
@@ -118,24 +126,24 @@ class WriteTimeStatsSpec extends SparkSpec {
 
     // 1,000 new keys: this file's sketches leave set mode for HLL mode
     door(rows(Seq(3L, 6L) ++ (1000L to 2000L), _ => lit("plain")))
-    assertRebuildMatches(root, cat, "door upsert")
+    assertRebuildMatches(root, "door upsert")
     door(rows(Seq(1L, 4L), _ => lit("a:b")), mode = "delete")
-    assertRebuildMatches(root, cat, "door delete")
+    assertRebuildMatches(root, "door delete")
 
     // `50%` still holds its 3 bootstrap files: z-order it down to 2,
     // then compact it to 1
     val z = spark.sql(s"CALL $cat.zorder('t', 'id', 'i', 2, 2)").head()
     assert(z.getInt(0) === 1, s"zorder: $z")
-    assertRebuildMatches(root, cat, "zorder")
+    assertRebuildMatches(root, "zorder")
     val c = spark.sql(s"CALL $cat.compact('t', 2)").head()
     assert(c.getInt(0) === 1, s"compact: $c")
-    assertRebuildMatches(root, cat, "compact")
+    assertRebuildMatches(root, "compact")
 
     rows(500L to 520L, _ => lit("plain")).createOrReplaceTempView("wts_src")
     val cols = "id, b, sh, i, f, d, dec, dt, s, nul, g, p"
     spark.sql(s"INSERT OVERWRITE $t PARTITION (p_p = 'plain') " +
       s"SELECT $cols FROM wts_src")
-    assertRebuildMatches(root, cat, "static INSERT OVERWRITE")
+    assertRebuildMatches(root, "static INSERT OVERWRITE")
     rows(600L to 630L, _ => lit("50%")).createOrReplaceTempView("wts_src")
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     try {
@@ -147,10 +155,10 @@ class WriteTimeStatsSpec extends SparkSpec {
       case None =>
         spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
-    assertRebuildMatches(root, cat, "dynamic INSERT OVERWRITE")
+    assertRebuildMatches(root, "dynamic INSERT OVERWRITE")
 
     spark.sql(s"DELETE FROM $t WHERE i % 5 = 0")
-    assertRebuildMatches(root, cat, "copy-on-write DELETE")
+    assertRebuildMatches(root, "copy-on-write DELETE")
     // MERGE moves `plain` rows into `a:b`, which is not a replaced
     // group: its old files hard-link into the new dir as carry- files
     rows(Seq(501L, 502L, 900L), _ => lit("a:b"))
@@ -162,7 +170,7 @@ class WriteTimeStatsSpec extends SparkSpec {
          |  VALUES (src.id, src.b, src.sh, src.i, src.f, src.d, src.dec,
          |    src.dt, src.s, src.nul, src.g, src.p, src.p)
          |""".stripMargin)
-    val merged = assertRebuildMatches(root, cat, "copy-on-write MERGE")
+    val merged = assertRebuildMatches(root, "copy-on-write MERGE")
     assert(merged.exists(e => e.pv == "a%3Ab" &&
       Path.of(e.path).getFileName.toString.startsWith("carry-")),
       "the MERGE must carry a:b's old files by link")
@@ -170,7 +178,7 @@ class WriteTimeStatsSpec extends SparkSpec {
     spark.sql(s"CALL $cat.evolve_partitioning('t', 'g')")
     val m = spark.sql(s"CALL $cat.migrate_layout('t')").head()
     assert(m.getInt(0) === 3, s"migrate_layout: $m")
-    val migrated = assertRebuildMatches(root, cat, "migrate_layout")
+    val migrated = assertRebuildMatches(root, "migrate_layout")
     assert(migrated.map(_.pv).toSet ===
       Set("a%3Ab/0", "a%3Ab/1", "50%25/0", "50%25/1", "plain/0", "plain/1"))
 
@@ -178,7 +186,7 @@ class WriteTimeStatsSpec extends SparkSpec {
     val restored = SnapshotManifest.head(root)
     door(rows(Seq(2L, 5L) ++ (3000L to 3010L), _ => lit("plain")))
     spark.sql(s"CALL $cat.restore('t', $restored)")
-    assertRebuildMatches(root, cat, "RESTORE")
+    assertRebuildMatches(root, "RESTORE")
 
     // fast-forward publishes a branch commit's files, linked under main
     spark.sql(s"CALL $cat.branch('t', 'b')")
@@ -189,13 +197,13 @@ class WriteTimeStatsSpec extends SparkSpec {
     val ff = spark.sql(s"CALL $cat.fastforward('t', 'b')").head()
     assert(ff.getInt(0) === SnapshotManifest.head(root) && ff.getInt(2) > 0,
       s"fastforward: $ff")
-    assertRebuildMatches(root, cat, "fast-forward")
+    assertRebuildMatches(root, "fast-forward")
 
     spark.sql(
       s"""CREATE TABLE $cat.`c` (id BIGINT, v DOUBLE, p STRING, p_p STRING)
          |PARTITIONED BY (p_p)
          |TBLPROPERTIES ('key_column' = 'id')""".stripMargin)
-    assert(SnapshotFiles.read(base.resolve("c"), 1) === Some(Map.empty),
+    assert(SnapshotFiles.read(base.resolve("c"), 1) === Map.empty,
       "CREATE TABLE: v1 must publish an empty sidecar")
   }
 
