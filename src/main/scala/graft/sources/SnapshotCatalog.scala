@@ -3,13 +3,17 @@ package graft.sources
 import java.nio.file.{Files => JFiles, Path => JPath, Paths => JPaths}
 import java.util
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
+import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
+import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, NoopCache, PartitionDirectory, PartitioningAwareFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FileTable
@@ -309,64 +313,22 @@ final class GraftSnapshotCatalog extends TableCatalog
       pinned = v.isDefined)
   }
 
-  /** The maintenance plane as SQL stored procedures (the Iceberg
-    * `CALL catalog.system.…` shape on Spark's connector procedure
-    * API): `CALL snap.history('t')` lists the version chain with
-    * commit instants (the DESCRIBE HISTORY analog, pure metadata),
-    * and `CALL snap.vacuum('t', keep_last)` reclaims data dirs
-    * referenced by no kept manifest — aborted attempt roots and
-    * expired versions — returning what it removed. Procedures resolve
-    * at the catalog level and take the table name as an argument.
+  /** The maintenance plane as SQL stored procedures, one per entry of
+    * [[SnapshotProcedure.registry]] (`CALL snap.history('t')`,
+    * `CALL snap.vacuum('t', keep_last)`, …). Procedures resolve at
+    * the catalog level and take the table name as their first
+    * argument; an unknown name is refused with every procedure's
+    * signature.
     */
   override def listProcedures(namespace: Array[String])
       : Array[Identifier] =
-    Array(Identifier.of(namespace, "history"),
-      Identifier.of(namespace, "vacuum"),
-      Identifier.of(namespace, "restore"),
-      Identifier.of(namespace, "tag"),
-      Identifier.of(namespace, "drop_tag"),
-      Identifier.of(namespace, "compact"),
-      Identifier.of(namespace, "clone"),
-      Identifier.of(namespace, "branch"),
-      Identifier.of(namespace, "drop_branch"),
-      Identifier.of(namespace, "fastforward"),
-      Identifier.of(namespace, "refs"),
-      Identifier.of(namespace, "zorder"),
-      Identifier.of(namespace, "evolve_partitioning"),
-      Identifier.of(namespace, "migrate_layout"),
-      Identifier.of(namespace, "build_bloom"))
+    SnapshotProcedure.registry.keys.map(Identifier.of(namespace, _)).toArray
 
-  override def loadProcedure(ident: Identifier)
-      : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure =
-    ident.name() match {
-      case "history" => new SnapshotHistoryProcedure(this)
-      case "vacuum" => new SnapshotVacuumProcedure(this)
-      case "restore" => new SnapshotRestoreProcedure(this)
-      case "tag" => new SnapshotTagProcedure(this)
-      case "drop_tag" => new SnapshotDropTagProcedure(this)
-      case "compact" => new SnapshotCompactProcedure(this)
-      case "clone" => new SnapshotCloneProcedure(this)
-      case "branch" => new SnapshotBranchProcedure(this)
-      case "drop_branch" => new SnapshotDropBranchProcedure(this)
-      case "fastforward" => new SnapshotFastForwardProcedure(this)
-      case "refs" => new SnapshotRefsProcedure(this)
-      case "zorder" => new SnapshotZorderProcedure(this)
-      case "evolve_partitioning" =>
-        new SnapshotEvolvePartitioningProcedure(this)
-      case "migrate_layout" => new SnapshotMigrateLayoutProcedure(this)
-      case "build_bloom" => new SnapshotBuildBloomProcedure(this)
-      case other => throw new UnsupportedOperationException(
-        s"unknown procedure $other — available: history(table), " +
-          "vacuum(table, keep_last), restore(table, version), " +
-          "tag(table, name, version), drop_tag(table, name), " +
-          "compact(table, threshold), clone(table, target), " +
-          "branch(table, name), drop_branch(table, name), " +
-          "fastforward(table, name), refs(table), " +
-          "zorder(table, col_a, col_b[, threshold, files_per_partition]), " +
-          "evolve_partitioning(table, source_col), " +
-          "migrate_layout(table[, max_partitions]), " +
-          "build_bloom(table, column)")
-    }
+  override def loadProcedure(ident: Identifier): UnboundProcedure =
+    SnapshotProcedure.registry.get(ident.name()).map(_.on(this))
+      .getOrElse(throw new UnsupportedOperationException(
+        s"unknown procedure ${ident.name()} — available: " +
+          SnapshotProcedure.registry.values.map(_.signature).mkString(", ")))
 
   /** Procedure-arg table resolution. The WHOLE string is tried as the
     * table name first — dotted table names are legal (clone targets
@@ -2265,683 +2227,384 @@ final class SnapshotPartitioningIndex(
   override def refresh(): Unit = () // snapshot versions are immutable
 }
 
-/** `CALL snap.history('t')` — the version chain as rows: one per
-  * published version with its commit instant (the manifest link's
-  * mtime — the atomic publish moment, the same clock `TIMESTAMP AS
-  * OF` resolves against) and partition count. Pure metadata plane:
-  * reads manifests, never data.
+/** One CALL procedure of the maintenance plane (the Iceberg
+  * `CALL catalog.system.…` shape on Spark's connector procedure API):
+  * a name, a summary, its parameters, a result schema and a body.
+  * Every procedure takes the table name first; `call` resolves it
+  * ([[GraftSnapshotCatalog.resolveRoot]]), hands the body the catalog,
+  * that root and the input row, and serves the body's rows as a local
+  * scan. A procedure publishes or reads a moving head, so none is
+  * deterministic. The procedures are the entries of
+  * [[SnapshotProcedure.registry]].
   */
-final class SnapshotHistoryProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
+final class SnapshotProcedure private (
+    procName: String,
+    about: String,
+    params: Seq[ProcedureParameter],
+    out: StructType,
+    body: (GraftSnapshotCatalog, JPath, InternalRow) => Array[InternalRow],
+    cat: Option[GraftSnapshotCatalog])
+  extends UnboundProcedure with BoundProcedure {
 
-  override def name(): String = "history"
-  override def description(): String =
-    "version chain of a snapshot store: history(table)"
+  /** This procedure served by catalog `c`. */
+  private[sources] def on(c: GraftSnapshotCatalog): SnapshotProcedure =
+    new SnapshotProcedure(procName, about, params, out, body, Some(c))
+
+  /** `name(arg, …[, defaulted, …])`, from the parameters. */
+  def signature: String = {
+    val (req, opt) = params.partition(_.defaultValue() == null)
+    req.map(_.name()).mkString(s"$procName(", ", ", "") +
+      (if (opt.isEmpty) "" else opt.map(_.name()).mkString("[, ", ", ", "]")) +
+      ")"
+  }
+
+  override def name(): String = procName
+  override def description(): String = s"$about: $signature"
   override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // head moves over time
+  override def isDeterministic: Boolean = false
+  override def parameters(): Array[ProcedureParameter] = params.toArray
 
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build())
-
-  private val outSchema = StructType(Seq(
-    StructField("version", IntegerType, nullable = false),
-    StructField("committed_at", TimestampType, nullable = false),
-    StructField("n_partitions", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        SnapshotMetaTable.historyRows(root))).iterator()
+  override def call(input: InternalRow): java.util.Iterator[Scan] = {
+    val c = cat.getOrElse(throw new IllegalStateException(
+      s"procedure $procName runs only as loaded from a catalog"))
+    java.util.List.of[Scan](new SnapshotProcedureResult(out,
+      body(c, c.resolveRoot(input.getUTF8String(0).toString), input)))
+      .iterator()
   }
 }
 
-/** `CALL snap.refs('t')` — every named ref: tags (immutable, with
-  * their pinned version) and branches (writable, with fork point and
-  * current head). The discovery half of the ref plane — `VERSION AS
-  * OF '<name>'` resolution is only useful if names are listable.
+/** A procedure's or metadata table's result set: local driver rows
+  * behind the DSv2 `LocalScan` shape.
   */
-final class SnapshotRefsProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
+final class SnapshotProcedureResult(schema: StructType,
+    rs: Array[InternalRow]) extends LocalScan {
+  override def readSchema(): StructType = schema
+  override def rows(): Array[InternalRow] = rs
+}
+
+object SnapshotProcedure {
   import org.apache.spark.sql.types._
   import org.apache.spark.unsafe.types.UTF8String
 
-  override def name(): String = "refs"
-  override def description(): String =
-    "list tags and branches: refs(table)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
+  private def arg(name: String, t: DataType): ProcedureParameter =
+    ProcedureParameter.in(name, t).build()
 
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build())
+  private def arg(name: String, t: DataType, default: String)
+      : ProcedureParameter =
+    ProcedureParameter.in(name, t).defaultValue(default).build()
 
-  private val outSchema = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("version", IntegerType, nullable = false),
-    StructField("forked_from", IntegerType, nullable = true)))
+  private def cols(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
 
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        SnapshotMetaTable.refsRows(root))).iterator()
-  }
-}
+  private def str(in: InternalRow, i: Int): String =
+    in.getUTF8String(i).toString
 
-/** `CALL snap.vacuum('t', keep_last)` — reclaim data dirs referenced
-  * by none of the kept (most recent `keep_last`) manifests: expired
-  * versions' private dirs and aborted/CAS-lost attempt roots. Expired
-  * manifests are deleted too, so time travel past the horizon fails
-  * loudly rather than reading half-vacuumed data. Returns what it did.
-  */
-final class SnapshotVacuumProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
+  /** A procedure whose parameters follow the leading `table`. */
+  private def proc(name: String, about: String,
+      params: Seq[ProcedureParameter], out: StructType)(
+      body: (GraftSnapshotCatalog, JPath, InternalRow) => Array[InternalRow])
+      : SnapshotProcedure =
+    new SnapshotProcedure(name, about, arg("table", StringType) +: params,
+      out, body, None)
 
-  override def name(): String = "vacuum"
-  override def description(): String =
-    "reclaim unreferenced data dirs: " +
-      "vacuum(table, keep_last[, retain_seconds, older_than_hours])"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  /** `retain_seconds` is the in-flight-writer grace window: a dir
-    * younger than it is never reclaimed even when unreferenced, since
-    * it may be a concurrent commit's attempt root that no manifest
-    * points at YET. Defaults to an hour (the Delta retention-check
-    * stance); tests pass 0 explicitly for determinism.
-    *
-    * `older_than_hours` is TIME-BASED retention (the Delta
-    * `RETAIN n HOURS` / Iceberg `older_than` shape — operators reason
-    * in hours, not version counts): when >= 0, versions whose manifest
-    * PUBLISH instant (its link mtime — the same clock `TIMESTAMP AS
-    * OF` resolves against) is within the window are kept TOO. The kept
-    * set is the UNION of both retention planes plus the head and every
-    * tagged version — each plane is a promise, and promises only add.
+  /** A clone or branch `version` argument: `-1` is the head (`None`),
+    * digits are a version, and anything else must name a tag — a
+    * non-numeric version resolves or refuses, never silently means
+    * "the head".
     */
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("keep_last", IntegerType).build(),
-      ProcedureParameter.in("retain_seconds", IntegerType)
-        .defaultValue("3600").build(),
-      ProcedureParameter.in("older_than_hours", DoubleType)
-        .defaultValue("-1.0").build())
+  private def versionArg(root: JPath, v: String, refusal: String)
+      : Option[Int] =
+    v.toIntOption match {
+      case Some(-1) => None
+      case Some(n) => Some(n)
+      case None => Some(SnapshotTags.resolve(root, v).getOrElse(
+        throw new IllegalArgumentException(
+          s"unknown tag '$v' — $refusal")))
+    }
 
-  private val outSchema = StructType(Seq(
-    StructField("removed_dirs", IntegerType, nullable = false),
-    StructField("head", IntegerType, nullable = false),
-    StructField("kept_from", IntegerType, nullable = false)))
+  /** `files_per_partition`: `-1` sizes output files at ~256 MB from
+    * the hot partitions' own bytes; any other value is a file count.
+    */
+  private def filesPerPartition(n: Int): Option[Int] = {
+    require(n == -1 || n >= 1,
+      s"files_per_partition must be -1 (size from the bytes) or >= 1, got $n")
+    if (n == -1) None else Some(n)
+  }
 
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val keepLast = input.getInt(1)
-    require(keepLast >= 1, "keep_last must be >= 1 (the head must stay)")
-    val retainMs = input.getInt(2) * 1000L
-    val olderThanHours = input.getDouble(3)
-    val head = SnapshotManifest.head(root)
-    val keptFrom = math.max(1, head - keepLast + 1)
-    // a tag is a promise the snapshot stays readable: tagged versions
-    // survive the horizon (the Iceberg ref-retention rule)
-    val tagged = SnapshotTags.list(root).map(_._2).toSet
-    // time-based plane: anything published inside the age window stays
-    val recent: Set[Int] =
-      if (olderThanHours < 0) Set.empty
-      else {
-        val cutoffMs =
-          System.currentTimeMillis() - (olderThanHours * 3600000L).toLong
-        SnapshotManifest.versionsWithMtime(root)
-          .filter(_._2 >= cutoffMs).map(_._1).toSet
+  /** Every procedure by name, in listing order: `listProcedures`,
+    * `loadProcedure` and its unknown-procedure error all read this.
+    */
+  private[sources] val registry: ListMap[String, SnapshotProcedure] =
+    ListMap(Seq(
+      /** `CALL snap.history('t')` — the version chain as rows: one per
+        * published version with its commit instant (the manifest
+        * link's mtime — the atomic publish moment, the same clock
+        * `TIMESTAMP AS OF` resolves against) and partition count. Pure
+        * metadata plane: reads manifests, never data.
+        */
+      proc("history", "version chain of a snapshot store", Nil,
+        SnapshotMetaTable.historySchema) { (_, root, _) =>
+        SnapshotMetaTable.historyRows(root)
+      },
+      /** `CALL snap.vacuum('t', keep_last)` — reclaim data dirs
+        * referenced by none of the kept (most recent `keep_last`)
+        * manifests: expired versions' private dirs and aborted/CAS-lost
+        * attempt roots. Expired manifests are deleted too, so time
+        * travel past the horizon fails loudly rather than reading
+        * half-vacuumed data. Returns what it did.
+        *
+        * `retain_seconds` is the in-flight-writer grace window: a dir
+        * younger than it is never reclaimed even when unreferenced,
+        * since it may be a concurrent commit's attempt root that no
+        * manifest points at YET. Defaults to an hour (the Delta
+        * retention-check stance); tests pass 0 explicitly for
+        * determinism.
+        *
+        * `older_than_hours` is TIME-BASED retention (the Delta
+        * `RETAIN n HOURS` / Iceberg `older_than` shape — operators
+        * reason in hours, not version counts): when >= 0, versions
+        * whose manifest PUBLISH instant (its link mtime — the same
+        * clock `TIMESTAMP AS OF` resolves against) is within the window
+        * are kept TOO. The kept set is the UNION of both retention
+        * planes plus the head and every tagged version — each plane is
+        * a promise, and promises only add.
+        */
+      proc("vacuum", "reclaim unreferenced data dirs",
+        Seq(arg("keep_last", IntegerType),
+          arg("retain_seconds", IntegerType, "3600"),
+          arg("older_than_hours", DoubleType, "-1.0")),
+        cols("removed_dirs" -> IntegerType, "head" -> IntegerType,
+          "kept_from" -> IntegerType)) { (_, root, in) =>
+        val keepLast = in.getInt(1)
+        require(keepLast >= 1, "keep_last must be >= 1 (the head must stay)")
+        val retainMs = in.getInt(2) * 1000L
+        val olderThanHours = in.getDouble(3)
+        val head = SnapshotManifest.head(root)
+        val keptFrom = math.max(1, head - keepLast + 1)
+        // a tag is a promise the snapshot stays readable: tagged
+        // versions survive the horizon (the Iceberg ref-retention rule)
+        val tagged = SnapshotTags.list(root).map(_._2).toSet
+        // time-based plane: anything published inside the age window
+        // stays
+        val recent: Set[Int] =
+          if (olderThanHours < 0) Set.empty
+          else {
+            val cutoffMs = System.currentTimeMillis() -
+              (olderThanHours * 3600000L).toLong
+            SnapshotManifest.versionsWithMtime(root)
+              .filter(_._2 >= cutoffMs).map(_._1).toSet
+          }
+        val removed = SnapshotTxn.snapshotVacuum(root,
+          (keptFrom to head).toSet ++ tagged ++ recent, retainMs)
+        Array(InternalRow(removed, head, keptFrom))
+      },
+      /** `CALL snap.restore('t', version)` — roll the table back by
+        * publishing a NEW head whose manifest mirrors `version`'s (see
+        * [[SnapshotTxn.snapshotRestore]]): O(manifest), zero data
+        * bytes, every interim version still time-travelable, CAS
+        * conflict with a concurrent commit thrown to the caller.
+        * Returns what it published.
+        */
+      proc("restore", "publish a new head mirroring an old version",
+        Seq(arg("version", IntegerType)),
+        cols("restored_from" -> IntegerType, "new_version" -> IntegerType,
+          "n_partitions" -> IntegerType)) { (_, root, in) =>
+        val from = in.getInt(1)
+        val (newV, nParts) = SnapshotTxn.snapshotRestore(root, from)
+        Array(InternalRow(from, newV, nParts))
+      },
+      /** `CALL snap.tag('t', name[, version])` — pin an immutable name
+        * to a published version ([[SnapshotTags]]): `VERSION AS OF
+        * '<name>'` resolves through it and vacuum retains what it
+        * points at. `version = -1` tags the current head.
+        */
+      proc("tag", "pin a named immutable ref to a version",
+        Seq(arg("name", StringType), arg("version", IntegerType, "-1")),
+        cols("tag" -> StringType, "version" -> IntegerType)) {
+        (_, root, in) =>
+          val tag = str(in, 1)
+          val v0 = in.getInt(2)
+          val v = if (v0 == -1) SnapshotManifest.head(root) else v0
+          SnapshotTags.create(root, tag, v)
+          Array(InternalRow(UTF8String.fromString(tag), v))
+      },
+      /** `CALL snap.drop_tag('t', name)` — remove a ref; reports whether
+        * it existed (idempotent, so automation can call it
+        * unconditionally).
+        */
+      proc("drop_tag", "remove a named ref", Seq(arg("name", StringType)),
+        cols("existed" -> BooleanType)) { (_, root, in) =>
+        Array(InternalRow(SnapshotTags.drop(root, str(in, 1))))
+      },
+      /** `CALL snap.compact('t', threshold[, files_per_partition])` —
+        * layout-generic incremental small-file compaction
+        * ([[SnapshotTxn.snapshotCompact]]): partitions at or above
+        * `threshold` parquet files are rewritten key-clustered into one
+        * CAS version; quiet partitions keep their exact dirs and a
+        * quiet table publishes nothing (the OPTIMIZE shape). Returns
+        * what it did.
+        */
+      proc("compact", "rewrite small-file partitions key-clustered",
+        Seq(arg("threshold", IntegerType),
+          arg("files_per_partition", IntegerType, "-1")),
+        cols("compacted_partitions" -> IntegerType,
+          "version" -> IntegerType, "files_before" -> IntegerType,
+          "files_after" -> IntegerType)) { (_, root, in) =>
+        val perPart = filesPerPartition(in.getInt(2))
+        val (n, v, before, after) = SnapshotTxn.snapshotCompact(
+          SparkSession.active, root, in.getInt(1), perPart)
+        Array(InternalRow(n, v, before, after))
+      },
+      /** `CALL snap.clone('t', 'u'[, version])` — zero-copy hard-link
+        * clone of a published version into a brand-new table in the
+        * same warehouse ([[SnapshotTxn.snapshotClone]]): the cloned
+        * version becomes the target's v1, stats sidecar + effective
+        * schema + live CHECK constraints carry, and — unlike Delta's
+        * shallow clone — vacuum on EITHER table stays safe, because
+        * each side only unlinks its own names. `version = -1` clones
+        * the current head; a tag name resolves like `VERSION AS OF`.
+        */
+      proc("clone", "zero-copy hard-link clone of a version",
+        Seq(arg("target", StringType), arg("version", StringType, "'-1'")),
+        cols("cloned_version" -> IntegerType, "n_partitions" -> IntegerType,
+          "n_files" -> IntegerType)) { (cat, src, in) =>
+        val dst = cat.resolveNewRoot(str(in, 1))
+        val version = versionArg(src, str(in, 2), "cannot clone it")
+        val (v, nParts, nFiles) = SnapshotTxn.snapshotClone(src, dst, version)
+        Array(InternalRow(v, nParts, nFiles))
+      },
+      /** `CALL snap.branch('t', 'dev'[, version])` — fork a writable
+        * branch ([[SnapshotTxn.snapshotBranchCreate]]): the
+        * write-audit-publish staging shape. The branch is a complete
+        * mini-store sharing the fork version's data dirs; write to it
+        * through `df.write.option("branch", "dev")` or SQL DML on
+        * `snap.t.branch_dev`, read it via `VERSION AS OF 'dev'`,
+        * publish with `CALL snap.fastforward`. `version = '-1'` forks
+        * the head; a tag name resolves as for clone.
+        */
+      proc("branch", "fork a writable branch",
+        Seq(arg("name", StringType), arg("version", StringType, "'-1'")),
+        cols("forked_from" -> IntegerType, "n_partitions" -> IntegerType)) {
+        (_, root, in) =>
+          val v = versionArg(root, str(in, 2), "cannot branch from it")
+          val (base, nParts) =
+            SnapshotTxn.snapshotBranchCreate(root, str(in, 1), v)
+          Array(InternalRow(base, nParts))
+      },
+      /** `CALL snap.drop_branch('t', 'dev')` — remove a branch and the
+        * data dirs its commits created (safe after fastforward:
+        * publishing hard-links branch-resident dirs under main-owned
+        * roots). Reports whether it existed (idempotent).
+        */
+      proc("drop_branch", "remove a branch and its staged data",
+        Seq(arg("name", StringType)), cols("existed" -> BooleanType)) {
+        (_, root, in) =>
+          Array(InternalRow(SnapshotBranches.drop(root, str(in, 1))))
+      },
+      /** `CALL snap.fastforward('t', 'dev')` — publish the branch head
+        * as the main table's next version in one CAS commit
+        * ([[SnapshotTxn.snapshotFastForward]]); refuses if main moved
+        * past the fork point.
+        */
+      proc("fastforward", "publish a branch head as the main head",
+        Seq(arg("name", StringType)),
+        cols("version" -> IntegerType, "n_partitions" -> IntegerType,
+          "files_linked" -> IntegerType)) { (_, root, in) =>
+        val (v, nParts, linked) =
+          SnapshotTxn.snapshotFastForward(root, str(in, 1))
+        Array(InternalRow(v, nParts, linked))
+      },
+      /** `CALL snap.refs('t')` — every named ref: tags (immutable, with
+        * their pinned version) and branches (writable, with fork point
+        * and current head). The discovery half of the ref plane —
+        * `VERSION AS OF '<name>'` resolution is only useful if names
+        * are listable.
+        */
+      proc("refs", "list tags and branches", Nil,
+        SnapshotMetaTable.refsSchema) { (_, root, _) =>
+        SnapshotMetaTable.refsRows(root)
+      },
+      /** `CALL snap.zorder('t', 'a', 'b'[, threshold,
+        * files_per_partition])` — the `OPTIMIZE ZORDER BY` shape: hot
+        * partitions (≥ threshold files, default 2) rewrite
+        * Morton-clustered on the two named numeric columns through the
+        * same engine as `compact` ([[SnapshotTxn.snapshotCompact]] with
+        * a z-order strategy), converging the table to the
+        * 2-D-prunable layout one incremental CAS version at a time.
+        * Returns what it did.
+        */
+      proc("zorder", "rewrite hot partitions Morton-clustered",
+        Seq(arg("col_a", StringType), arg("col_b", StringType),
+          arg("threshold", IntegerType, "2"),
+          arg("files_per_partition", IntegerType, "-1")),
+        cols("zordered_partitions" -> IntegerType,
+          "version" -> IntegerType, "files_before" -> IntegerType,
+          "files_after" -> IntegerType)) { (_, root, in) =>
+        val perPart = filesPerPartition(in.getInt(4))
+        val (n, v, before, after) = SnapshotTxn.snapshotCompact(
+          SparkSession.active, root, in.getInt(3), perPart,
+          Some((str(in, 1), str(in, 2))))
+        Array(InternalRow(n, v, before, after))
+      },
+      /** `CALL snap.evolve_partitioning('t', 'source_col')` —
+        * PARTITION-SPEC EVOLUTION
+        * ([[SnapshotTxn.snapshotEvolvePartitioning]], the Iceberg
+        * spec-v2 shape scoped to APPENDED layout columns): publishes
+        * one metadata-only `#partspec` version appending
+        * `<source_col>_p` to the current spec. The second argument is a
+        * bare source column (identity mirror) or TRANSFORM syntax —
+        * `'days(ts)'`, `'months(ts)'`, `'years(ts)'`, `'hours(ts)'`,
+        * `'bucket(16, id)'`, `'truncate(8, s)'` — so a LIVE identity
+        * table can move to a hidden bucket/temporal layout with no
+        * CREATE-time foresight and no rewrite. Zero files move; old
+        * partitions keep reading AND pruning under their own spec (the
+        * DataFrame door's union-of-specs read), new commits lay out
+        * under the new spec, and a commit touching an old-spec
+        * partition migrates it. Non-prefix changes
+        * (drop/reorder/in-place relayout) refuse loudly — those are
+        * rewrites wearing DDL's clothes.
+        */
+      proc("evolve_partitioning",
+        "append a layout column to the partition spec (source_col is a " +
+          "bare column for identity, or a transform: " +
+          "days/months/years/hours(c), bucket(n, c), truncate(w, c))",
+        Seq(arg("source_col", StringType)),
+        cols("version" -> IntegerType, "spec_columns" -> IntegerType)) {
+        (_, root, in) =>
+          val (v, n) = SnapshotTxn.snapshotEvolvePartitioning(
+            SparkSession.active, root, str(in, 1))
+          Array(InternalRow(v, n))
+      },
+      /** `CALL snap.migrate_layout('t'[, max_partitions])` — converge a
+        * spec-evolved table to its current partition spec
+        * ([[SnapshotTxn.snapshotMigrateLayout]]): rewrite up to
+        * `max_partitions` old-spec partitions under the current layout
+        * as one CAS version. Incremental and idempotent; once the head
+        * holds no old-spec entries the SQL door serves the table again.
+        */
+      proc("migrate_layout",
+        "rewrite old-spec partitions under the current layout",
+        Seq(arg("max_partitions", IntegerType, "100")),
+        cols("migrated_partitions" -> IntegerType,
+          "version" -> IntegerType)) { (_, root, in) =>
+        val (n, v) = SnapshotTxn.snapshotMigrateLayout(
+          SparkSession.active, root, in.getInt(1))
+        Array(InternalRow(n, v))
+      },
+      /** `CALL snap.build_bloom('t', 'col')` — retrofit the per-file
+        * Bloom point-lookup index over the head's files
+        * ([[SnapshotTxn.snapshotBuildBloom]]); readers opt in per read
+        * with the `bloomKey` option.
+        */
+      proc("build_bloom", "retrofit the Bloom point-lookup index",
+        Seq(arg("column", StringType)),
+        cols("version" -> IntegerType, "dirs_indexed" -> IntegerType)) {
+        (_, root, in) =>
+          val (v, n) = SnapshotTxn.snapshotBuildBloom(
+            SparkSession.active, root, str(in, 1))
+          Array(InternalRow(v, n))
       }
-    val removed = SnapshotTxn.snapshotVacuum(root,
-      (keptFrom to head).toSet ++ tagged ++ recent, retainMs)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(
-          removed, head, keptFrom)))).iterator()
-  }
-}
-
-/** `CALL snap.build_bloom('t', 'col')` — retrofit the per-file Bloom
-  * point-lookup index over the head's files
-  * ([[SnapshotTxn.snapshotBuildBloom]]); readers
-  * opt in per read with the `bloomKey` option.
-  */
-final class SnapshotBuildBloomProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "build_bloom"
-  override def description(): String =
-    "retrofit the Bloom point-lookup index: build_bloom(table, column)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("column", StringType).build())
-
-  private val outSchema = StructType(Seq(
-    StructField("version", IntegerType, nullable = false),
-    StructField("dirs_indexed", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val (v, n) = SnapshotTxn.snapshotBuildBloom(
-      SparkSession.active, root, input.getUTF8String(1).toString)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(v, n)))).iterator()
-  }
-}
-
-/** `CALL snap.restore('t', version)` — roll the table back by
-  * publishing a NEW head whose manifest mirrors `version`'s (see
-  * [[SnapshotTxn.snapshotRestore]]): O(manifest),
-  * zero data bytes, every interim version still time-travelable, CAS
-  * conflict with a concurrent commit thrown to the caller. Returns
-  * what it published.
-  */
-final class SnapshotRestoreProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "restore"
-  override def description(): String =
-    "publish a new head mirroring an old version: restore(table, version)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // publishes a version
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("version", IntegerType).build())
-
-  private val outSchema = StructType(Seq(
-    StructField("restored_from", IntegerType, nullable = false),
-    StructField("new_version", IntegerType, nullable = false),
-    StructField("n_partitions", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val from = input.getInt(1)
-    val (newV, nParts) =
-      SnapshotTxn.snapshotRestore(root, from)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(
-          from, newV, nParts)))).iterator()
-  }
-}
-
-/** `CALL snap.tag('t', name, version)` — pin an immutable name to a
-  * published version ([[SnapshotTags]]): `VERSION AS OF '<name>'`
-  * resolves through it and vacuum retains what it points at.
-  * `version = -1` tags the current head.
-  */
-final class SnapshotTagProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "tag"
-  override def description(): String =
-    "pin a named immutable ref to a version: tag(table, name, version)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("name", StringType).build(),
-      ProcedureParameter.in("version", IntegerType)
-        .defaultValue("-1").build())
-
-  private val outSchema = StructType(Seq(
-    StructField("tag", StringType, nullable = false),
-    StructField("version", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val tag = input.getUTF8String(1).toString
-    val v0 = input.getInt(2)
-    val v = if (v0 == -1) SnapshotManifest.head(root) else v0
-    SnapshotTags.create(root, tag, v)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(tag), v))))
-      .iterator()
-  }
-}
-
-/** `CALL snap.compact('t', threshold)` — layout-generic incremental
-  * small-file compaction ([[SnapshotTxn
-  * .snapshotCompact]]): partitions at or above `threshold` parquet
-  * files are rewritten key-clustered into one CAS version; quiet
-  * partitions keep their exact dirs and a quiet table publishes
-  * nothing (the OPTIMIZE shape). Returns what it did.
-  */
-final class SnapshotCompactProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "compact"
-  override def description(): String =
-    "rewrite small-file partitions key-clustered: compact(table, threshold)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  /** `files_per_partition = -1` sizes output files at ~256 MB from the
-    * hot partitions' own bytes.
-    */
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("threshold", IntegerType).build(),
-      ProcedureParameter.in("files_per_partition", IntegerType)
-        .defaultValue("-1").build())
-
-  private val outSchema = StructType(Seq(
-    StructField("compacted_partitions", IntegerType, nullable = false),
-    StructField("version", IntegerType, nullable = false),
-    StructField("files_before", IntegerType, nullable = false),
-    StructField("files_after", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val fpp = input.getInt(2)
-    val (n, v, before, after) =
-      SnapshotTxn.snapshotCompact(SparkSession.active,
-        root, input.getInt(1), if (fpp == -1) None else Some(fpp))
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(
-          n, v, before, after)))).iterator()
-  }
-}
-
-/** `CALL snap.zorder('t', 'a', 'b'[, threshold, files_per_partition])`
-  * — the `OPTIMIZE ZORDER BY` shape: hot partitions (≥ threshold
-  * files, default 2) rewrite Morton-clustered on the two named
-  * numeric columns through the same engine as `compact`
-  * ([[SnapshotTxn.snapshotCompact]] with a z-order
-  * strategy), converging the table to the 2-D-prunable layout one
-  * incremental CAS version at a time. Returns what it did.
-  */
-final class SnapshotZorderProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "zorder"
-  override def description(): String =
-    "rewrite hot partitions Morton-clustered: zorder(table, col_a, col_b)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("col_a", StringType).build(),
-      ProcedureParameter.in("col_b", StringType).build(),
-      ProcedureParameter.in("threshold", IntegerType)
-        .defaultValue("2").build(),
-      ProcedureParameter.in("files_per_partition", IntegerType)
-        .defaultValue("-1").build())
-
-  private val outSchema = StructType(Seq(
-    StructField("zordered_partitions", IntegerType, nullable = false),
-    StructField("version", IntegerType, nullable = false),
-    StructField("files_before", IntegerType, nullable = false),
-    StructField("files_after", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val fpp = input.getInt(4)
-    val (n, v, before, after) =
-      SnapshotTxn.snapshotCompact(SparkSession.active,
-        root, input.getInt(3), if (fpp == -1) None else Some(fpp),
-        Some((input.getUTF8String(1).toString,
-          input.getUTF8String(2).toString)))
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(
-          n, v, before, after)))).iterator()
-  }
-}
-
-/** `CALL snap.evolve_partitioning('t', 'source_col')` — PARTITION-SPEC
-  * EVOLUTION ([[SnapshotTxn
-  * .snapshotEvolvePartitioning]], the Iceberg spec-v2 shape scoped to
-  * APPENDED layout columns): publishes one metadata-only `#partspec`
-  * version appending `<source_col>_p` to the current spec. The second
-  * argument is a bare source column (identity mirror) or TRANSFORM
-  * syntax — `'days(ts)'`, `'months(ts)'`, `'years(ts)'`,
-  * `'hours(ts)'`, `'bucket(16, id)'`, `'truncate(8, s)'` — so a LIVE
-  * identity table can move to a hidden bucket/temporal layout with no
-  * CREATE-time foresight and no rewrite. Zero files
-  * move; old partitions keep reading AND pruning under their own spec
-  * (the DataFrame door's union-of-specs read), new commits lay out
-  * under the new spec, and a commit touching an old-spec partition
-  * migrates it. Non-prefix changes (drop/reorder/in-place relayout)
-  * refuse loudly — those are rewrites wearing DDL's clothes.
-  */
-final class SnapshotEvolvePartitioningProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "evolve_partitioning"
-  override def description(): String =
-    "append a layout column to the partition spec: " +
-      "evolve_partitioning(table, source_col) — source_col is a bare " +
-      "column (identity) or a transform: days/months/years/hours(c), " +
-      "bucket(n, c), truncate(w, c)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("source_col", StringType).build())
-
-  private val outSchema = StructType(Seq(
-    StructField("version", IntegerType, nullable = false),
-    StructField("spec_columns", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val (v, n) = SnapshotTxn.snapshotEvolvePartitioning(
-      SparkSession.active, root, input.getUTF8String(1).toString)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(v, n)))).iterator()
-  }
-}
-
-/** `CALL snap.migrate_layout('t'[, max_partitions])` — converge a
-  * spec-evolved table to its current partition spec
-  * ([[SnapshotTxn.snapshotMigrateLayout]]): rewrite
-  * up to `max_partitions` old-spec partitions under the current layout
-  * as one CAS version. Incremental and idempotent; once the head holds
-  * no old-spec entries the SQL door serves the table again.
-  */
-final class SnapshotMigrateLayoutProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "migrate_layout"
-  override def description(): String =
-    "rewrite old-spec partitions under the current layout: " +
-      "migrate_layout(table[, max_partitions])"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("max_partitions", IntegerType)
-        .defaultValue("100").build())
-
-  private val outSchema = StructType(Seq(
-    StructField("migrated_partitions", IntegerType, nullable = false),
-    StructField("version", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val (n, v) = SnapshotTxn.snapshotMigrateLayout(
-      SparkSession.active, root, input.getInt(1))
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(n, v)))).iterator()
-  }
-}
-
-/** `CALL snap.clone('t', 'u'[, version])` — zero-copy hard-link clone
-  * of a published version into a brand-new table in the same warehouse
-  * ([[SnapshotTxn.snapshotClone]]): the cloned
-  * version becomes the target's v1, stats sidecar + effective schema +
-  * live CHECK constraints carry, and — unlike Delta's shallow clone —
-  * vacuum on EITHER table stays safe, because each side only unlinks
-  * its own names. `version = -1` clones the current head; a tag name
-  * resolves like `VERSION AS OF`.
-  */
-final class SnapshotCloneProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "clone"
-  override def description(): String =
-    "zero-copy hard-link clone of a version: clone(table, target[, version])"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("target", StringType).build(),
-      ProcedureParameter.in("version", StringType)
-        .defaultValue("'-1'").build())
-
-  private val outSchema = StructType(Seq(
-    StructField("cloned_version", IntegerType, nullable = false),
-    StructField("n_partitions", IntegerType, nullable = false),
-    StructField("n_files", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val src = cat.resolveRoot(input.getUTF8String(0).toString)
-    val dst = cat.resolveNewRoot(input.getUTF8String(1).toString)
-    val vArg = input.getUTF8String(2).toString
-    val version = vArg.toIntOption match {
-      case Some(-1) => None
-      case Some(n) => Some(n)
-      case None => Some(SnapshotTags.resolve(src, vArg).getOrElse(
-        throw new IllegalArgumentException(
-          s"unknown tag '$vArg' — cannot clone it")))
-    }
-    val (v, nParts, nFiles) =
-      SnapshotTxn.snapshotClone(src, dst, version)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(
-          v, nParts, nFiles)))).iterator()
-  }
-}
-
-/** `CALL snap.branch('t', 'dev'[, version])` — fork a writable branch
-  * ([[SnapshotTxn.snapshotBranchCreate]]): the
-  * write-audit-publish staging shape. The branch is a complete
-  * mini-store sharing the fork version's data dirs; write to it
-  * through `df.write.option("branch", "dev")` or SQL DML on
-  * `snap.t.branch_dev`, read it via `VERSION AS OF 'dev'`, publish
-  * with `CALL snap.fastforward`. `version = '-1'` forks the head.
-  */
-final class SnapshotBranchProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "branch"
-  override def description(): String =
-    "fork a writable branch: branch(table, name[, version])"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("name", StringType).build(),
-      ProcedureParameter.in("version", StringType)
-        .defaultValue("'-1'").build())
-
-  private val outSchema = StructType(Seq(
-    StructField("forked_from", IntegerType, nullable = false),
-    StructField("n_partitions", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val vArg = input.getUTF8String(2).toString
-    val v = vArg.toIntOption match {
-      case Some(-1) => None
-      case Some(n) => Some(n)
-      // same tag resolution as clone — a non-numeric version must
-      // resolve or refuse, never silently mean "the head"
-      case None => Some(SnapshotTags.resolve(root, vArg).getOrElse(
-        throw new IllegalArgumentException(
-          s"unknown tag '$vArg' — cannot branch from it")))
-    }
-    val (base, nParts) = SnapshotTxn
-      .snapshotBranchCreate(root, input.getUTF8String(1).toString, v)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(
-          base, nParts)))).iterator()
-  }
-}
-
-/** `CALL snap.fastforward('t', 'dev')` — publish the branch head as
-  * the main table's next version in one CAS commit
-  * ([[SnapshotTxn.snapshotFastForward]]); refuses if
-  * main moved past the fork point.
-  */
-final class SnapshotFastForwardProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "fastforward"
-  override def description(): String =
-    "publish a branch head as the main head: fastforward(table, name)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("name", StringType).build())
-
-  private val outSchema = StructType(Seq(
-    StructField("version", IntegerType, nullable = false),
-    StructField("n_partitions", IntegerType, nullable = false),
-    StructField("files_linked", IntegerType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val (v, nParts, linked) = SnapshotTxn
-      .snapshotFastForward(root, input.getUTF8String(1).toString)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(
-          v, nParts, linked)))).iterator()
-  }
-}
-
-/** `CALL snap.drop_branch('t', 'dev')` — remove a branch and the data
-  * dirs its commits created (safe after fastforward: publishing
-  * hard-links branch-resident dirs under main-owned roots). Reports
-  * whether it existed (idempotent).
-  */
-final class SnapshotDropBranchProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "drop_branch"
-  override def description(): String =
-    "remove a branch and its staged data: drop_branch(table, name)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("name", StringType).build())
-
-  private val outSchema = StructType(Seq(
-    StructField("existed", BooleanType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val existed = SnapshotBranches.drop(root,
-      input.getUTF8String(1).toString)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(existed))))
-      .iterator()
-  }
-}
-
-/** `CALL snap.drop_tag('t', name)` — remove a ref; reports whether it
-  * existed (idempotent, so automation can call it uncondtionally).
-  */
-final class SnapshotDropTagProcedure(cat: GraftSnapshotCatalog)
-  extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-  with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.types._
-
-  override def name(): String = "drop_tag"
-  override def description(): String =
-    "remove a named ref: drop_tag(table, name)"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("name", StringType).build())
-
-  private val outSchema = StructType(Seq(
-    StructField("existed", BooleanType, nullable = false)))
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val root = cat.resolveRoot(input.getUTF8String(0).toString)
-    val existed = SnapshotTags.drop(root,
-      input.getUTF8String(1).toString)
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new SnapshotProcedureResult(outSchema,
-        Array(org.apache.spark.sql.catalyst.InternalRow(existed))))
-      .iterator()
-  }
-}
-
-/** A procedure's result set: local driver rows behind the DSv2
-  * `LocalScan` shape.
-  */
-final class SnapshotProcedureResult(
-    schema: StructType,
-    rs: Array[org.apache.spark.sql.catalyst.InternalRow])
-  extends org.apache.spark.sql.connector.read.LocalScan {
-  override def readSchema(): StructType = schema
-  override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = rs
+    ).map(p => p.name() -> p): _*)
 }
 
 /** A metadata table (`snap.t.files` / `partitions` / `history` /
@@ -2953,7 +2616,6 @@ final class SnapshotProcedureResult(
 final class SnapshotMetaTable(tableName: String, root: JPath,
                               kind: String, pinned: Option[Int])
   extends Table with org.apache.spark.sql.connector.catalog.SupportsRead {
-  import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.types._
   import org.apache.spark.unsafe.types.UTF8String
 
@@ -2976,15 +2638,8 @@ final class SnapshotMetaTable(tableName: String, root: JPath,
       StructField("n_files", IntegerType, nullable = false),
       StructField("bytes", LongType, nullable = false),
       StructField("row_count", LongType, nullable = true)))
-    case "history" => StructType(Seq(
-      StructField("version", IntegerType, nullable = false),
-      StructField("committed_at", TimestampType, nullable = false),
-      StructField("n_partitions", IntegerType, nullable = false)))
-    case "refs" => StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("kind", StringType, nullable = false),
-      StructField("version", IntegerType, nullable = false),
-      StructField("forked_from", IntegerType, nullable = true)))
+    case "history" => SnapshotMetaTable.historySchema
+    case "refs" => SnapshotMetaTable.refsSchema
     // live merge-on-read delete records of the (pinned or head)
     // version — what a takedown audit or a compaction planner reads
     case "deletes" => StructType(Seq(
@@ -3042,30 +2697,41 @@ final class SnapshotMetaTable(tableName: String, root: JPath,
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder =
     new org.apache.spark.sql.connector.read.ScanBuilder {
-      override def build(): org.apache.spark.sql.connector.read.Scan =
+      override def build(): Scan =
         new SnapshotProcedureResult(SnapshotMetaTable.this.schema(),
           computeRows())
     }
 }
 
 object SnapshotMetaTable {
-  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.types._
   import org.apache.spark.unsafe.types.UTF8String
 
   val Kinds: Set[String] =
     Set("files", "partitions", "history", "refs", "deletes", "upserts")
 
-  /** Single source for the version-chain rows — the `history` meta
-    * table and `CALL snap.history` must never diverge.
+  /** Single source for the version-chain schema and rows — the
+    * `history` meta table and `CALL snap.history` must never diverge.
     */
+  val historySchema: StructType = StructType(Seq(
+    StructField("version", IntegerType, nullable = false),
+    StructField("committed_at", TimestampType, nullable = false),
+    StructField("n_partitions", IntegerType, nullable = false)))
+
   def historyRows(root: JPath): Array[InternalRow] =
     SnapshotManifest.versionsWithMtime(root).map { case (v, mtime) =>
       InternalRow(v, mtime * 1000L, SnapshotManifest.read(root, v).size)
     }.toArray
 
-  /** Single source for the ref rows — the `refs` meta table and
-    * `CALL snap.refs` must never diverge.
+  /** Single source for the ref schema and rows — the `refs` meta
+    * table and `CALL snap.refs` must never diverge.
     */
+  val refsSchema: StructType = StructType(Seq(
+    StructField("name", StringType, nullable = false),
+    StructField("kind", StringType, nullable = false),
+    StructField("version", IntegerType, nullable = false),
+    StructField("forked_from", IntegerType, nullable = true)))
+
   def refsRows(root: JPath): Array[InternalRow] = {
     val tags = SnapshotTags.list(root).map { case (n, v) =>
       InternalRow(UTF8String.fromString(n), UTF8String.fromString("tag"),

@@ -20,7 +20,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * behind its cache. Every store write goes through a writer that folds
   * its files' entries (`SnapshotTxn.writeLeaves` or the v2 task
   * writer), and row counts come from those entries, never from a
-  * footer `SnapshotTxn` re-opens.
+  * footer `SnapshotTxn` re-opens. Every CALL procedure is one entry of
+  * `SnapshotProcedure.registry`.
   */
 class LayeringSpec extends AnyFunSuite {
   test("no file under graft/sources names graft.operators") {
@@ -137,5 +138,19 @@ class LayeringSpec extends AnyFunSuite {
       plain.mkString("store write without a fold (use writeLeaves):\n", "\n", ""))
     val switches = hits(_._3.contains("foldStats"))
     assert(switches.isEmpty, switches.mkString("fold switch:\n", "\n", ""))
+  }
+
+  test("every CALL procedure is an entry of one registry") {
+    // a second implementation of the connector's procedure interfaces
+    // is a hand-written procedure beside SnapshotProcedure.registry
+    for (iface <- Seq("UnboundProcedure", "BoundProcedure")) {
+      val impl = s"\\b(?:extends|with)\\s+(?:[\\w.]+\\.)?$iface\\b".r
+      val sites = mainLines.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
+        case (f, ls) => impl.findAllMatchIn(ls.map(_._3).mkString("\n"))
+          .map(_ => f)
+      }
+      assert(sites === Seq("graft/sources/SnapshotCatalog.scala"),
+        s"$iface implemented in: ${sites.mkString(", ")}")
+    }
   }
 }

@@ -1314,4 +1314,26 @@ class SnapshotCatalogSpec extends SparkSpec {
     assert(SnapshotManifest.head(droot) === 3)
     assert(SnapshotMeta.read(droot).keyCol === Some("event_id"))
   }
+
+  test("an unknown procedure's error names every procedure and all " +
+    "its parameters, defaulted ones in brackets") {
+    import org.apache.spark.sql.connector.catalog.Identifier
+    val c = new GraftSnapshotCatalog
+    c.initialize("procprobe", new org.apache.spark.sql.util
+      .CaseInsensitiveStringMap(java.util.Map.of("warehouse", "/tmp")))
+    val e = intercept[UnsupportedOperationException] {
+      c.loadProcedure(Identifier.of(Array.empty, "nope"))
+    }
+    val names = c.listProcedures(Array.empty).map(_.name())
+    assert(names.length === 15)
+    for (n <- names) {
+      val (req, opt) = c.loadProcedure(Identifier.of(Array.empty, n))
+        .bind(new org.apache.spark.sql.types.StructType()).parameters()
+        .toSeq.partition(_.defaultValue() == null)
+      val sig = s"$n(${req.map(_.name()).mkString(", ")}" +
+        (if (opt.isEmpty) "" else opt.map(_.name()).mkString("[, ", ", ", "]")) +
+        ")"
+      assert(e.getMessage.contains(sig), s"$sig missing from: ${e.getMessage}")
+    }
+  }
 }

@@ -99,4 +99,33 @@ class SnapshotMaintenanceSpec extends SparkSpec {
     assert(SnapshotBloom.indexedColumn(
       cloneRoot.resolve("bloomidx").toString).contains("id"))
   }
+
+  test("files_per_partition other than -1 or >= 1 is refused by name " +
+    "before any rewrite; the head stays") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("ms_fpp")
+    val root = base.resolve("t")
+    // a fragmented leaf: 6 input tasks each write into day d0
+    (1L to 12L).map(id => (id, "d0", id.toDouble)).toDF("id", "day", "v")
+      .repartition(6)
+      .write.format("graft-snapshot")
+      .option("keyCol", "id").option("partCol", "day")
+      .option("distribution", "none")
+      .mode("append").save(root.toString)
+    val cat = "msfpp"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      "graft.sources.GraftSnapshotCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", base.toString)
+    for (call <- Seq("compact('t', 2, 0)", "compact('t', 2, -3)",
+        "zorder('t', 'id', 'v', 2, 0)")) {
+      val e = intercept[Exception] {
+        spark.sql(s"CALL $cat.$call").collect()
+      }
+      assert(e.getMessage.contains("files_per_partition"),
+        s"$call: ${e.getMessage}")
+      assert(SnapshotManifest.head(root) === 1, call)
+    }
+    val r = spark.sql(s"CALL $cat.compact('t', 2, 1)").head()
+    assert((r.getInt(0), r.getInt(1), r.getInt(3)) === ((1, 2, 1)), r.toString)
+  }
 }
