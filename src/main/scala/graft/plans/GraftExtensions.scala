@@ -14,6 +14,10 @@ import graft.functions.{CountMatches, MinKDistinct, QDotLong}
   *     (the idiomatic `SparkSessionExtensions` route);
   *   - programmatic: `GraftExtensions.register(spark)` — idempotent, used
   *     by the query catalog so any driver-created session works.
+  *
+  * `register` also installs the engine's `file:` filesystem
+  * ([[graft.core.LocalFs]]) in the session's Hadoop conf; the
+  * `spark.sql.extensions` route alone does not.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -60,8 +64,12 @@ object GraftExtensions {
       CountMatches(children.head, children(1))
     })
 
-  /** Idempotent per-session registration (re-registering overwrites). */
+  /** Idempotent per-session registration (re-registering overwrites).
+    * The filesystem goes in first: the session state's first use
+    * builds Hadoop's `file:` filesystem, and Hadoop's cache keeps
+    * whichever class was built first. */
   def register(spark: SparkSession): Unit = {
+    graft.core.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     spark.sessionState.functionRegistry.registerFunction(
       minKFunction._1, minKFunction._2, minKFunction._3)
     spark.sessionState.functionRegistry.registerFunction(

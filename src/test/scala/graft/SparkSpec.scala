@@ -25,6 +25,9 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // as the harness sessions: graft's functions and rules, and the
+    // engine's file: filesystem, installed before any file is touched
+    graft.plans.GraftExtensions.register(s)
     s
   }
 }
