@@ -1376,7 +1376,7 @@ object SourceQueries {
   }
 
   /** The snapshot store read through the planner-integrated connector
-    * ([[graft.sources.SnapshotFileIndex]]) with a partition predicate:
+    * ([[graft.sources.SnapshotPartitioningIndex]]) with a partition predicate:
     * the 1995-01..1995-06 month filter is evaluated against the v2
     * MANIFEST inside `listFiles`, so pruned months' dirs are never even
     * listed — where `snapshotRead` unioned every partition dir of the
@@ -1397,7 +1397,7 @@ object SourceQueries {
 
   /** Point lookup on the snapshot's UNCLUSTERED key through the same
     * connector: the literal `o_orderkey IN (...)` predicate reaches
-    * [[graft.sources.SnapshotFileIndex.listFiles]] as a data filter,
+    * [[graft.sources.SnapshotPartitioningIndex.listFiles]] as a data filter,
     * and files whose Bloom bitset excludes every candidate key are
     * dropped DURING planning — the round-8 `source_bloom_lookup`
     * semantics with the driver-mediated matched-file list gone

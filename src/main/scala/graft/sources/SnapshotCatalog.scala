@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files => JFiles, Path => JPath, Paths => JPaths}
 import java.util
 
+import scala.collection.concurrent.TrieMap
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -14,7 +15,7 @@ import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, NoopCache, PartitionDirectory, PartitioningAwareFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.{NoopCache, PartitionDirectory, PartitioningAwareFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FileTable
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
@@ -33,10 +34,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * `VERSION AS OF n` lands in `loadTable(ident, version)`; a bare
   * reference resolves the head. Each table is served by
-  * [[SnapshotV2Table]], whose file listing comes from the SAME
-  * manifest plane as the DataFrame door (the version's stats sidecar —
-  * zero `listStatus` planning), and whose scans are ordinary
-  * DSv2 parquet scans (pushdown, pruning, AQE all apply). DML
+  * [[SnapshotV2Table]] — the store's one read plane, which the
+  * DataFrame door reads too — whose file listing comes from the
+  * manifest plane (the version's stats sidecar — zero `listStatus`
+  * planning), and whose scans are ordinary DSv2 parquet scans
+  * (pushdown, pruning, AQE all apply). DML
   * (`INSERT INTO` as a keyed upsert, `DELETE FROM … WHERE`) routes
   * THROUGH the `graft-snapshot` write door's [[SnapshotDoor]] commit
   * path — same CAS publish, conflict rebase, and sidecar maintenance
@@ -227,26 +229,12 @@ final class GraftSnapshotCatalog extends TableCatalog
           case Some(v) => load(ident, Some(v))
           case None if SnapshotBranches.exists(root, version) =>
             val broot = SnapshotBranches.root(root, version)
-            val meta = SnapshotMeta.read(broot)
             val v = SnapshotManifest.head(broot)
-            // same union-of-specs serving as load(): a branch inherits
-            // (or stages) spec evolution exactly like main
-            if (SnapshotTable.hasOldSpecEntries(broot, v))
-              return new SnapshotEvolvedV2Table(
-                s"$catName.${ident.name()}@$version-v$v",
-                SparkSession.active, broot, v,
-                meta.copy(dataSchema = SnapshotManifest
-                  .effectiveDataSchema(broot, meta.dataSchema, v)),
-                SnapshotManifest.partitionSpecs(broot, meta.partitionSchema),
-                pinned = true)
-            val effective = meta.copy(
-              partitionSchema = SnapshotManifest
-                .partitionSpecs(broot, meta.partitionSchema).last,
-              dataSchema = SnapshotManifest
-                .effectiveDataSchema(broot, meta.dataSchema, v))
-            new SnapshotV2Table(
-              s"$catName.${ident.name()}@$version-v$v",
-              SparkSession.active, broot, v, effective, pinned = true)
+            // same serving as load(): a branch inherits (or stages)
+            // spec evolution exactly like main
+            SnapshotTable.table(SparkSession.active,
+              s"$catName.${ident.name()}@$version-v$v", broot, v,
+              foldAt = v, pinned = true)
           case None => throw new IllegalArgumentException(
             s"no version, tag, or branch named '$version' on " +
               ident.name())
@@ -273,44 +261,20 @@ final class GraftSnapshotCatalog extends TableCatalog
     }
   }
 
+  /** A `VERSION/TIMESTAMP AS OF` reference is a pinned historical
+    * snapshot: reads only — DML must target the bare (head) table. The
+    * schema folds at the SERVED version (head loads fold at the head —
+    * the identical fold): a pinned read serves the pinned version's own
+    * schema, not the head's (the Iceberg time-travel semantics; a
+    * column dropped later is still visible, a later widening/rename has
+    * not happened).
+    */
   private def load(ident: Identifier, v: Option[Int]): Table = {
     val root = rootOf(ident)
     val version = v.getOrElse(SnapshotManifest.head(root))
-    val meta = SnapshotMeta.read(root)
-    // a VERSION spanning two layouts can't be one single-layout DSv2
-    // relation (one partition schema; null-filling the appended mirror
-    // for old-spec files would break pruning exactness) — serve it
-    // through the union-of-specs table instead: reads plan one parquet
-    // arm per spec (the Iceberg transparency); DML on it stays refused
-    // until CALL migrate_layout converges the head.
-    if (SnapshotTable.hasOldSpecEntries(root, version))
-      return new SnapshotEvolvedV2Table(
-        s"$catName.${ident.name()}@v$version", SparkSession.active, root,
-        version,
-        // the fold caps at the SERVING version (head loads cap at the
-        // head — the identical fold): a pinned read serves the pinned
-        // version's own schema, not the head's (VERDICT r13 #7 — the
-        // Iceberg time-travel semantics; a column dropped later is
-        // still visible, a later widening/rename has not happened)
-        meta.copy(dataSchema = SnapshotManifest
-          .effectiveDataSchema(root, meta.dataSchema, version)),
-        SnapshotManifest.partitionSpecs(root, meta.partitionSchema),
-        pinned = v.isDefined)
-    // same latest-schema overlay as the DataFrame door: a widening
-    // commit's `#schema` manifest record supersedes the bootstrap
-    // meta, later `#rename` records map on top, and the partition
-    // schema is the CURRENT spec (this table only serves versions
-    // whose entries all sit under it)
-    val effective = meta.copy(
-      partitionSchema = SnapshotManifest
-        .partitionSpecs(root, meta.partitionSchema).last,
-      dataSchema = SnapshotManifest
-        .effectiveDataSchema(root, meta.dataSchema, version))
-    new SnapshotV2Table(s"$catName.${ident.name()}@v$version",
-      SparkSession.active, root, version, effective,
-      // a `VERSION/TIMESTAMP AS OF` reference is a pinned historical
-      // snapshot: reads only — DML must target the bare (head) table
-      pinned = v.isDefined)
+    SnapshotTable.table(SparkSession.active,
+      s"$catName.${ident.name()}@v$version", root, version,
+      foldAt = version, pinned = v.isDefined)
   }
 
   /** The maintenance plane as SQL stored procedures, one per entry of
@@ -1032,10 +996,16 @@ private[sources] final class StagedSnapshotTable(
 
 /** One snapshot version as a DSv2 table: `FileTable` over a
   * manifest-served [[SnapshotPartitioningIndex]], scans built by the
-  * stock `ParquetScanBuilder` — so SQL gets the identical read path
-  * (partition pruning against manifest values, sidecar-served file
-  * listing, parquet pushdown) that the DataFrame door's
-  * [[SnapshotFileIndex]] provides, without re-implementing a reader.
+  * stock `ParquetScanBuilder` — partition pruning against manifest
+  * values, sidecar-served file listing, stats and Bloom file skipping,
+  * parquet pushdown — without re-implementing a reader. It is the
+  * store's one read plane: `spark.sql` loads it through the catalog,
+  * and the DataFrame door ([[SnapshotTable.read]],
+  * `spark.read.format("graft-snapshot")`) reads it as a
+  * `DataSourceV2Relation`. `foldAt` is the version the data schema
+  * was folded at (`meta`), and rename chains cap at the same value:
+  * the SQL door folds at the served version, the DataFrame door at
+  * the head. `bloomKey` is the DataFrame door's Bloom read option.
   *
   * The SQL DML door rides the SAME commit protocol as the DataFrame
   * write door, never around it:
@@ -1066,7 +1036,9 @@ final class SnapshotV2Table(
     root: JPath,
     snapVersion: Int,
     meta: SnapshotMeta.Meta,
-    pinned: Boolean = false)
+    pinned: Boolean = false,
+    foldAt: Int = Int.MaxValue,
+    bloomKey: Option[String] = None)
   extends Table
   with org.apache.spark.sql.connector.catalog.SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -1139,8 +1111,8 @@ final class SnapshotV2Table(
     * and it would bypass the store's CAS commit entirely), so a
     * FileTable can never reach a custom write path from SQL.
     */
-  private val readTable =
-    new SnapshotReadFileTable(tableName, spark, root, snapVersion, meta)
+  private[sources] val readTable = new SnapshotReadFileTable(tableName,
+    spark, root, snapVersion, meta, foldAt, bloomKey)
 
   /** HIDDEN partitioning: transform mirrors (`days`/`bucket` layout
     * columns) are not part of the SQL schema — users never write or
@@ -1393,18 +1365,21 @@ private[sources] final class SnapshotReadFileTable(
     spark: SparkSession,
     root: JPath,
     version: Int,
-    meta: SnapshotMeta.Meta)
+    meta: SnapshotMeta.Meta,
+    foldAt: Int,
+    bloomKey: Option[String])
   extends FileTable(spark, CaseInsensitiveStringMap.empty(), Nil,
     Some(meta.dataSchema)) {
 
   override def name(): String = tableName
 
-  /** Rename chains over the LOGICAL schema ([[SnapshotRename]]):
-    * non-empty exactly when this table has rename history, in which
-    * case scans read the footer-facing physical names and map back.
+  /** Rename chains over the LOGICAL schema ([[SnapshotRename]]),
+    * capped where the schema was folded: non-empty exactly when this
+    * table has rename history, in which case scans read the
+    * footer-facing physical names and map back.
     */
   private[sources] val renameChains: Map[String, Seq[String]] =
-    SnapshotRename.chainsFor(root, meta.dataSchema, version)
+    SnapshotRename.chainsFor(root, meta.dataSchema, foldAt)
 
   /** Live merge-on-read delete state of the SERVED version (None for
     * the overwhelmingly common record-free case — the read plane then
@@ -1417,9 +1392,9 @@ private[sources] final class SnapshotReadFileTable(
     if (renameChains.isEmpty) meta.dataSchema
     else SnapshotRename.physicalSchema(meta.dataSchema, renameChains)
 
-  override lazy val fileIndex: PartitioningAwareFileIndex =
+  override lazy val fileIndex: SnapshotPartitioningIndex =
     new SnapshotPartitioningIndex(spark, root, version,
-      meta.partitionSchema, physicalData)
+      meta.partitionSchema, physicalData, bloomKey)
 
   override def inferSchema(files: Seq[FileStatus]): Option[StructType] =
     Some(meta.dataSchema)
@@ -2122,92 +2097,209 @@ private[sources] object SnapshotDml {
   }
 }
 
-/** The manifest plane as a `PartitioningAwareFileIndex` — the index
-  * shape the DSv2 file-source machinery plans against. Partition
-  * pruning runs in the PARENT's `listFiles` over the typed manifest
-  * values ([[SnapshotPartitionValues]]); the per-dir file lists come
-  * from the version's stats sidecar (zero `listStatus` calls on the
-  * base plane).
+/** A snapshot version as the planner's file listing: the manifest
+  * plane as a `PartitioningAwareFileIndex`, the index shape the DSv2
+  * file-source machinery plans against, and the store's ONE file
+  * index (both doors read through it). `listFiles` answers the scan's
+  * listing call with every skipping plane the store has, inside the
+  * same planning call:
+  *
+  *   - '''manifest partition pruning''': the partition filters, plus
+  *     SOURCE-column data filters translated onto the mirror columns
+  *     ([[SnapshotTransforms.translateFilters]]: identity verbatim,
+  *     days at day granularity, bucket by hash equality — necessary
+  *     conditions, the data filter still runs post-scan), evaluated
+  *     against each entry's typed partition value
+  *     ([[SnapshotPartitionValues]]). Partition-only filters are not
+  *     re-applied above a file scan, so one that cannot bind fails
+  *     loudly instead of listing extra partitions;
+  *   - '''zero-listing planning''': the base plane's files and sizes
+  *     come from the version's [[SnapshotFiles]] sidecar — no
+  *     `listStatus` runs on it;
+  *   - '''min/max range skipping''' ([[StatsSkipping]]) on the data
+  *     filters;
+  *   - '''Bloom file skipping''' ([[SnapshotBloom]]) on the `bloomKey`
+  *     column: bitsets load only for the files that survive partition
+  *     pruning and the stats cut, and stay cached per index. A store
+  *     without an index, or whose index marker names another column,
+  *     skips nothing (sound).
+  *
+  * Data-filter skipping is sound only for a scan that rewrites no file
+  * it did not read: the copy-on-write row-level scan
+  * ([[SnapshotRowLevelScanBuilder]]) pushes no data filters, so a
+  * replaced partition is always read whole.
+  *
+  * `#upsert` delta dirs of the served version are read ALONGSIDE the
+  * base entry (same partition values; a pv may also exist ONLY there,
+  * when an UPDATE moved rows into a partition the base manifest has
+  * never seen). They are listed live — delta-sized by construction —
+  * and are in neither the sidecar nor the Bloom index, so their files
+  * are never skipped (sound). Each delta dir is its own listing entry,
+  * which keeps the per-task doomed-key probe scope uniform (one dir,
+  * one publish stamp — [[SnapshotDeleteBatch]]).
+  *
+  * `onlyPvs` scopes the index to a subset of the version's entries —
+  * the per-spec ARM of the union-of-specs read
+  * ([[SnapshotEvolvedV2Table]]); `preRead` hands in the version's
+  * already-read manifest so a multi-arm table doesn't re-open it once
+  * per arm. The index is version-pinned and immutable (snapshot data
+  * dirs are write-once; `refresh()` is a no-op), so concurrent commits
+  * never shift a running query.
   */
 final class SnapshotPartitioningIndex(
     spark: SparkSession,
     root: JPath,
     version: Int,
     partSchema: StructType,
-    dataSchema: StructType,
-    cache: FileStatusCache = NoopCache,
+    val dataSchema: StructType,
+    bloomKey: Option[String] = None,
     onlyPvs: Option[Set[String]] = None,
     preRead: Option[Map[String, String]] = None)
   extends PartitioningAwareFileIndex(spark, Map.empty, Some(dataSchema),
-    cache) {
+    NoopCache) {
+  import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Expression, In, InSet, Literal}
 
-  /** `onlyPvs` scopes this index to a subset of the version's entries —
-    * the per-spec ARM of the SQL door's union-of-specs read
-    * ([[SnapshotEvolvedV2Table]]), mirroring [[SnapshotFileIndex]]'s
-    * parameter of the same name on the DataFrame door. `preRead` hands
-    * in the version's already-read manifest so a multi-arm planner
-    * doesn't re-open it once per arm.
-    */
   private val manifest: Map[String, String] = {
     val full = preRead.getOrElse(SnapshotManifest.read(root, version))
     onlyPvs.map(keep => full.filter(e => keep(e._1))).getOrElse(full)
   }
+  // read when the index is built, like the manifest: a version without
+  // its stats sidecar refuses at analysis, and a scan plans against the
+  // sidecar its read was built over
   private val sidecar: Map[String, Seq[SnapshotFiles.FileEntry]] =
     SnapshotFiles.read(root, version)
 
-  /** Live `#upsert` delta dirs of the served version, by pv — extra
-    * leaf dirs the scan reads ALONGSIDE the base entry (same partition
-    * values; a pv may also exist ONLY here, when an UPDATE moved rows
-    * into a partition the base manifest has never seen). Listed live:
-    * delta-sized by construction, outside the stats sidecar (their
-    * files are simply never skipped — sound).
-    */
-  private val upserts: Map[String, Seq[String]] = {
+  /** Live `#upsert` delta dirs of the served version, by pv. */
+  private lazy val upserts: Map[String, Seq[String]] = {
     val full = SnapshotManifest.upsertRecords(root, version)
     onlyPvs.map(keep => full.filter(e => keep(e._1))).getOrElse(full)
   }
+  private lazy val upsertFiles: Map[String, Array[FileStatus]] =
+    upserts.valuesIterator.flatten.map(d => d -> SnapshotFiles
+      .listDataFiles(spark.sparkContext.hadoopConfiguration, d)).toMap
 
-  private lazy val filesByDir: Map[Path, Array[FileStatus]] = {
-    val base = manifest.toSeq.sortBy(_._1).map { case (pv, dir) =>
+  private lazy val filesByDir: Map[Path, Array[FileStatus]] =
+    (manifest.toSeq.map { case (pv, dir) =>
       new Path(dir) ->
         sidecar.getOrElse(pv, Nil).map(SnapshotFiles.status).toArray
-    }
-    val deltas = upserts.toSeq.sortBy(_._1).flatMap { case (_, dirs) =>
-      dirs.sorted.map(d => new Path(d) -> SnapshotFiles.listDataFiles(
-        spark.sparkContext.hadoopConfiguration, d))
-    }
-    (base ++ deltas).toMap
-  }
+    } ++ upsertFiles.map { case (d, sts) => new Path(d) -> sts }).toMap
+
+  // ---- observability hooks for specs -------------------------------
+  /** (partitions, files) the last `listFiles` call served to the scan. */
+  @volatile var lastListing: (Int, Int) = (-1, -1)
+  /** Bloom bitsets materialized on the driver over this index's
+    * lifetime — must stay <= files surviving partition pruning.
+    */
+  @volatile var bloomBitsetsLoaded: Int = 0
+
+  override def partitionSchema: StructType = partSchema
 
   override def partitionSpec(): PartitionSpec = {
-    val base = manifest.keys.toSeq.sorted.map(pv =>
-      PartitionPath(SnapshotPartitionValues.row(pv, partSchema),
-        new Path(manifest(pv))))
-    // one extra PartitionPath per delta dir, SAME partition values:
-    // pruning treats it like any leaf of the pv, and keyed (SPJ)
-    // planning emits it as a same-key input partition Spark's
-    // partition grouping merges back — which is also what keeps the
-    // per-task doomed-key probe scope uniform (one dir, one stamp)
-    val deltas = upserts.toSeq.sortBy(_._1).flatMap { case (pv, dirs) =>
-      dirs.sorted.map(d =>
-        PartitionPath(SnapshotPartitionValues.row(pv, partSchema),
-          new Path(d)))
-    }
-    PartitionSpec(partSchema, base ++ deltas)
+    def part(pv: String, dir: String) =
+      PartitionPath(SnapshotPartitionValues.row(pv, partSchema), new Path(dir))
+    PartitionSpec(partSchema,
+      manifest.keys.toSeq.sorted.map(pv => part(pv, manifest(pv))) ++
+        upserts.toSeq.sortBy(_._1).flatMap { case (pv, dirs) =>
+          dirs.sorted.map(part(pv, _)) })
   }
 
-  /** Transform-plane pruning for the SQL door (the V1 door's twin in
-    * [[SnapshotFileIndex.listFiles]]): SOURCE-column data filters
-    * rewrite onto the mirror columns as extra partition filters —
-    * necessary conditions only, the data filter still runs post-scan.
+  // bitsets cached per index instance; None = file not in the index
+  // (an unindexed file is never skipped)
+  private val bloomCache = TrieMap.empty[String, Option[Array[Long]]]
+  private lazy val bloomIdxPath: Option[String] = bloomKey.flatMap { k =>
+    val p = root.resolve("bloomidx")
+    // a store created through the write door has no index (yet): fall
+    // back to no skipping, which is sound, instead of crashing the scan
+    if (!JFiles.exists(p)) None
+    // column-identity check: probing column-A hashes against
+    // column-B bitsets would SKIP files containing matching rows — a
+    // marker mismatch or a missing marker degrades to no skipping
+    // (sound)
+    else if (!SnapshotBloom.indexedColumn(p.toString).contains(k)) None
+    else Some(p.toString)
+  }
+
+  /** Bitsets for `files`, loading only the uncached ones in one scoped,
+    * in-plan-filtered read.
     */
-  override def listFiles(
-      partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[PartitionDirectory] =
-    super.listFiles(partitionFilters ++
-      SnapshotTransforms.translateFilters(dataFilters, partSchema),
-      dataFilters)
+  private def bloomBitsFor(idx: String, files: Seq[String])
+      : Map[String, Option[Array[Long]]] = {
+    val missing = files.filterNot(bloomCache.contains)
+    if (missing.nonEmpty) {
+      val loaded = SnapshotBloom.load(spark, idx, missing.toSet, Some(root))
+      bloomBitsetsLoaded += loaded.size
+      missing.foreach(f => bloomCache.putIfAbsent(f, loaded.get(f)))
+    }
+    files.map(f => f -> bloomCache.getOrElse(f, None)).toMap
+  }
+
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val kept = SnapshotRowLevel.matchingPvs(partitionFilters ++
+        SnapshotTransforms.translateFilters(dataFilters, partSchema),
+      partSchema, manifest.keySet ++ upserts.keySet).toSeq.sorted
+    // stage 1 — min/max stats over the kept partitions' sidecar rows
+    // (an upsert-only pv has no base files)
+    val statsKeep = StatsSkipping.compile(dataFilters, dataSchema)
+    val afterStats = kept.map(pv => pv -> (if (!manifest.contains(pv)) Nil
+      else sidecar.getOrElse(pv, Nil)
+        .filter(e => statsKeep.forall(keep => keep(e.stats)))
+        .map(e => SnapshotBloom.fileKey(e.path) -> e)))
+    // stage 2 — Bloom bitsets fetched only for the stats SURVIVORS
+    // (loading before the stats cut would move bitsets to the driver
+    // for files the range predicate immediately drops)
+    val candidateKeys = bloomCandidateKeys(dataFilters)
+    val bloomBits = (candidateKeys, bloomIdxPath) match {
+      case (Some(_), Some(idx)) =>
+        bloomBitsFor(idx, afterStats.flatMap(_._2.map(_._1)))
+      case _ => Map.empty[String, Option[Array[Long]]]
+    }
+    // every key-conjunct must have at least one maybe-present key;
+    // an unindexed file is never skipped
+    def mayMatch(fkey: String): Boolean = candidateKeys.forall(conjuncts =>
+      bloomBits.getOrElse(fkey, None).forall(bits =>
+        conjuncts.forall(_.exists(SnapshotBloom.mayContain(bits, _)))))
+    val out = afterStats.map { case (pv, files) =>
+      val values = SnapshotPartitionValues.row(pv, partSchema)
+      pv -> (PartitionDirectory(values, files.collect {
+        case (fkey, e) if mayMatch(fkey) => SnapshotFiles.status(e)
+      }.toArray) +: upserts.getOrElse(pv, Nil).sorted.map(d =>
+        PartitionDirectory(values, upsertFiles(d)))
+      ).filter(_.files.nonEmpty)
+    }.filter(_._2.nonEmpty)
+    val dirs = out.flatMap(_._2)
+    lastListing = (out.size, dirs.map(_.files.length).sum)
+    dirs
+  }
+
+  /** Per-conjunct candidate key sets for the bloom key: `k = lit`,
+    * `k IN (lits)` (and the post-OptimizeIn `InSet` form). A conjunct
+    * that isn't a literal equality on the key contributes nothing —
+    * file skipping only ever uses a sound SUBSET of the filters.
+    */
+  private def bloomCandidateKeys(dataFilters: Seq[Expression])
+      : Option[Seq[Seq[Long]]] = bloomKey.flatMap { kc =>
+    def asLong(v: Any): Option[Long] = v match {
+      case l: Long => Some(l)
+      case i: Int  => Some(i.toLong)
+      case _       => None
+    }
+    val conjuncts = dataFilters.flatMap {
+      case EqualTo(a: AttributeReference, Literal(v, _)) if a.name == kc =>
+        asLong(v).map(Seq(_))
+      case EqualTo(Literal(v, _), a: AttributeReference) if a.name == kc =>
+        asLong(v).map(Seq(_))
+      case In(a: AttributeReference, list) if a.name == kc &&
+          list.forall(_.isInstanceOf[Literal]) =>
+        val ks = list.map { case Literal(v, _) => asLong(v) }
+        if (ks.forall(_.isDefined)) Some(ks.flatten) else None
+      case InSet(a: AttributeReference, hset) if a.name == kc =>
+        val ks = hset.toSeq.map(asLong)
+        if (ks.forall(_.isDefined)) Some(ks.flatten) else None
+      case _ => None
+    }
+    if (conjuncts.isEmpty) None else Some(conjuncts)
+  }
 
   override def leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
     filesByDir
@@ -2558,7 +2650,7 @@ object SnapshotProcedure {
         * table can move to a hidden bucket/temporal layout with no
         * CREATE-time foresight and no rewrite. Zero files move; old
         * partitions keep reading AND pruning under their own spec (the
-        * DataFrame door's union-of-specs read), new commits lay out
+        * union-of-specs read, [[SnapshotEvolvedV2Table]]), new commits lay out
         * under the new spec, and a commit touching an old-spec
         * partition migrates it. Non-prefix changes
         * (drop/reorder/in-place relayout) refuse loudly — those are

@@ -21,7 +21,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * its files' entries (`SnapshotTxn.writeLeaves` or the v2 task
   * writer), and row counts come from those entries, never from a
   * footer `SnapshotTxn` re-opens. Every CALL procedure is one entry of
-  * `SnapshotProcedure.registry`.
+  * `SnapshotProcedure.registry`. The store has one read plane: no
+  * `HadoopFsRelation`, one file index, and no read-side parquet format.
   */
 class LayeringSpec extends AnyFunSuite {
   test("no file under graft/sources names graft.operators") {
@@ -152,5 +153,24 @@ class LayeringSpec extends AnyFunSuite {
       assert(sites === Seq("graft/sources/SnapshotCatalog.scala"),
         s"$iface implemented in: ${sites.mkString(", ")}")
     }
+  }
+
+  test("the store reads through one plane: the SQL door's DSv2 tables") {
+    val sources = mainLines.filter(_._1.startsWith("graft/sources/"))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (f, ls) => f -> ls.map(_._3).mkString("\n") }
+    def classesExtending(parent: String): Seq[String] = {
+      val decl = ("class\\s+(\\w+)[^{}]*?\\b(?:extends|with)\\s+" +
+        s"(?:[\\w.]+\\.)?$parent\\b").r
+      sources.flatMap { case (_, text) =>
+        decl.findAllMatchIn(text).map(_.group(1)) }.sorted
+    }
+    val relations = sources.flatMap { case (f, text) =>
+      "\\bHadoopFsRelation\\b".r.findAllMatchIn(text).map(_ => f) }
+    assert(relations.isEmpty,
+      relations.mkString("HadoopFsRelation in graft/sources:\n", "\n", ""))
+    assert(classesExtending("\\w*FileIndex") === Seq("SnapshotPartitioningIndex"))
+    // the write side's per-file stats fold is the one parquet format
+    assert(classesExtending("ParquetFileFormat") === Seq("StatsParquetFormat"))
   }
 }

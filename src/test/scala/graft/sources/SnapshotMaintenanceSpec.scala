@@ -58,7 +58,8 @@ class SnapshotMaintenanceSpec extends SparkSpec {
       .filter(col("id") === 7L)
     assert(df.count() === 1L)
     val (_, files) = SnapshotTable.fileIndexOf(df).lastListing
-    val all = SnapshotTable.read(spark, root, 1).inputFiles.length
+    val all = SnapshotTable.fileIndexOf(
+      SnapshotTable.read(spark, root, 1)).inputFiles.length
     assert(files < all,
       s"bloom must prune the file list: planned $files of $all")
     // refusals: unknown column; renamed column (pre-rename footers
@@ -92,7 +93,8 @@ class SnapshotMaintenanceSpec extends SparkSpec {
       bloomKey = Some("id")).filter(col("id") === 7L)
     assert(df.collect().map(_.getDouble(2)).toSeq === Seq(7.0))
     val (_, files) = SnapshotTable.fileIndexOf(df).lastListing
-    val all = SnapshotTable.read(spark, cloneRoot, 1).inputFiles.length
+    val all = SnapshotTable.fileIndexOf(
+      SnapshotTable.read(spark, cloneRoot, 1)).inputFiles.length
     assert(files < all,
       s"carried bloom must prune the clone's files: $files of $all")
     // the marker carries too: a mismatched reader still degrades

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -47,12 +46,8 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
     walk(df.queryExecution.executedPlan)
   }
 
-  private def allIndexes(df: DataFrame): Seq[SnapshotFileIndex] =
-    df.queryExecution.analyzed.collect {
-      case LogicalRelation(r: HadoopFsRelation, _, _, _, _)
-        if r.location.isInstanceOf[SnapshotFileIndex] =>
-        r.location.asInstanceOf[SnapshotFileIndex]
-    }
+  private def allIndexes(df: DataFrame): Seq[SnapshotPartitioningIndex] =
+    SnapshotTable.fileIndexesOf(df)
 
   /** 120 rows, 3 day-partitions, 2 event types, keyed by id. */
   private def freshStore(name: String): (java.nio.file.Path, String) = {
@@ -130,8 +125,8 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
       s"expected exactly the (d0, t0) leaf listed: $listings2")
   }
 
-  test("SQL door serves an evolved head via the union scan; raw " +
-    "relation door and bad evolutions still refuse") {
+  test("SQL door serves an evolved head via the union scan; the " +
+    "format door reads it too, and bad evolutions still refuse") {
     val (root, cat) = freshStore("pse_ref")
     spark.sql(s"CALL $cat.evolve_partitioning('t', 'etype')")
     // round 12: the SQL door serves spec-evolved versions through the
@@ -156,11 +151,12 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
     intercept[Exception] {
       spark.sql(s"UPDATE $cat.`t` SET v = 0.0 WHERE id = 1")
     }
-    val e2 = intercept[Exception] {
-      spark.read.format("graft-snapshot").load(root.toString).count()
-    }
-    assert(e2.getMessage.contains("partition layouts"))
-    // the union door still serves it
+    // the format door plans the same union-of-specs table, at the head
+    // and at a pinned version
+    assert(spark.read.format("graft-snapshot").load(root.toString)
+      .count() === 121L)
+    assert(spark.read.format("graft-snapshot").option("version", 2)
+      .load(root.toString).count() === 120L)
     assert(SnapshotTable.read(spark, root, 2).count() === 120L)
     intercept[Exception] {
       spark.sql(s"CALL $cat.evolve_partitioning('t', 'no_such_col')")
@@ -552,15 +548,12 @@ class SnapshotPartSpecEvolutionSpec extends SparkSpec {
     assert(oldArm.dataFilters.exists(_.references.exists(_.name == "id")),
       s"old arm must push id as a data filter: ${oldArm.dataFilters}")
 
-    // V1 (DataFrame) door: appended mirrors on OLD arms derive
-    // f(source) — a plain source copy would put id values where
-    // buckets belong
-    val v1df = SnapshotTable.read(spark, root, 3)
-    val derived = v1df.filter(col("day_p") === "d1").limit(5)
-      .select(col("id"), col("id_p")).collect()
-    derived.foreach(r => assert(r.getInt(1) ===
-      SnapshotTransforms.bucketOfLong(r.getLong(0), 4),
-      s"old-arm mirror must be the xxhash bucket: $r"))
+    // DataFrame door: the SQL door's union table, so the transform
+    // mirror stays hidden there too, and a key lookup is exact
+    val dfDoor = SnapshotTable.read(spark, root, 3)
+    assert(dfDoor.columns.toSeq === Seq("id", "etype", "day", "v", "day_p"))
+    assert(dfDoor.filter(col("id") === 3L).select(col("v")).collect()
+      .map(_.getDouble(0)).toSeq === Seq(1003.0))
 
     // migrate_layout converges the cold remainder under (day, bucket)
     spark.sql(s"CALL $cat.migrate_layout('t', 10)")
